@@ -11,7 +11,7 @@ SHELL := /bin/bash
 SF_DIR ?= /root/testdata/sf0.01
 ROUND  ?= r03
 
-.PHONY: gate bench verify test dist submit-smoke
+.PHONY: gate gate-shacl bench verify test dist submit-smoke
 
 # Package the engine for spark-submit --py-files (north rule: the pipeline
 # must run via spark-submit on a multi-executor cluster).  Single zip
@@ -34,6 +34,11 @@ submit-smoke: dist
 
 gate:
 	python scripts/check_oracle.py $(SF_DIR) 2>&1 | grep -v -E "WARN|FutureWarning|serializers.py" | tee BENCH/full_gate_$(ROUND).log
+
+# SHACL subset of the gate: every shacl_* query against its independent
+# DuckDB reference (covers all built-in constraint components)
+gate-shacl:
+	python scripts/check_oracle.py $(SF_DIR) 'shacl_*' 2>&1 | grep -v -E "WARN|FutureWarning|serializers.py"
 
 bench:
 	python bench.py 2>&1 | tail -1 | tee BENCH/bench_$(ROUND).json

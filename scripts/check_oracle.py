@@ -1,15 +1,21 @@
 """Local stand-in for the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() on DuckDB over the same sf dir, compare
-row count + schema (column names) + order-insensitive value hash."""
+row count + schema (column names) + order-insensitive value hash.
+
+    python scripts/check_oracle.py SF_DIR [QUERY_OR_GLOB ...]
+
+Optional arguments select queries by name or fnmatch glob ('shacl_*').
+Exits 1 when any selected query mismatches or errors, or none is selected."""
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -84,7 +90,7 @@ def main(sf_dir: str, only: list[str]):
     oracles = entry.oracle_sql()
     ok = bad = 0
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, pat) for pat in only):
             continue
         t0 = time.time()
         try:
@@ -127,8 +133,10 @@ def main(sf_dir: str, only: list[str]):
             print(f"match     {name}: {len(rows)} rows ({time.time()-t0:.1f}s)")
             ok += 1
     print(f"== {ok} match, {bad} bad ==")
+    return ok, bad
 
 
 if __name__ == "__main__":
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    main(sf, sys.argv[2:])
+    ok, bad = main(sf, sys.argv[2:])
+    sys.exit(1 if bad or not ok else 0)

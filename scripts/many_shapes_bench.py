@@ -96,17 +96,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # A/B knob: SPARK_GRAFT_NO_FUSE=1 disables cross-shape/row-wise fusion
-    # so the fused vs unfused walls can be compared in the SAME load window
-    # (this host's run-to-run variance swamps cross-window comparisons)
-    no_fuse = os.environ.get("SPARK_GRAFT_NO_FUSE") == "1"
-    if no_fuse:
-        from shacl_js_spark.validation import Engine as _E
-
-        _E._split_fusible = (
-            lambda self, shape, min_fuse=2, pool_counts=False: ([], [], shape.constraints)
-        )
-
     from shacl_js_spark.localgraph import LocalGraph
     from shacl_js_spark.pipeline.canonicalize import (
         alias_edges, canonicalize_triples, connected_components,
@@ -153,8 +142,7 @@ def main() -> None:
         }
 
     out = {"metric": "validation wall vs shape count (report write)",
-           "triples": n, "cpus": CPUS, "replicate": REP,
-           "fusion": not no_fuse, "by_shape_count": {}}
+           "triples": n, "cpus": CPUS, "replicate": REP, "by_shape_count": {}}
     for n_shapes in (2, 10, 50):
         out["by_shape_count"][n_shapes] = run(n_shapes, violating=False)
     # violation-bearing 50-shape run: same corpus, 4 shapes swapped for

@@ -24,7 +24,9 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import functools
 import logging
+import re
 
 import pandas as pd  # module-level: pandas_udf type hints resolve via globals
 
@@ -194,6 +196,30 @@ PROPERTY_DEFAULT_MESSAGES: dict[str, str] = {
 }
 
 
+class _FusePool:
+    """Row-wise and count checks grouped by the frame they scan, for one
+    fused pass per frame (Engine._flush).  groups: id(frame) -> [frame,
+    bubble mapping or None, with_value, entries].  The pool holds a strong
+    ref to every frame it keys, so two live groups never share an id.
+    Views made by under() share the groups and carry the bubble mapping of
+    an sh:property parent; shapes sharing a frame share one logically
+    identical mapping (both derive from the same memoized parent frame)."""
+
+    def __init__(self, groups: dict[int, list] | None = None, mapping=None):
+        self.groups: dict[int, list] = {} if groups is None else groups
+        self.mapping: DataFrame | None = mapping
+
+    def under(self, mapping: DataFrame | None) -> _FusePool:
+        return _FusePool(self.groups, mapping)
+
+    def add(self, frame: DataFrame, entries: list, with_value: bool) -> None:
+        group = self.groups.get(id(frame))
+        if group is None:
+            self.groups[id(frame)] = [frame, self.mapping, with_value, list(entries)]
+        else:
+            group[3].extend(entries)
+
+
 class Engine:
     def __init__(
         self,
@@ -235,17 +261,6 @@ class Engine:
         self._candidates_cache: dict[int, tuple[DataFrame, DataFrame]] = {}
         self._counts_cache: dict[tuple, tuple[DataFrame, DataFrame, DataFrame]] = {}
         self._class_fail_cache: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-        # cross-shape fusion pool (active only inside validate()/report_df()):
-        # id(value frame) -> [values, bubble-mapping-or-None, entries], where
-        # entries collect row-wise checks from EVERY shape sharing that value
-        # frame; the pool flushes as ONE scan + (for property children) ONE
-        # bubble join per frame instead of one per shape.  See _all_violations.
-        self._fuse_pool: dict[int, list] = {}
-        # same idea for min/maxCount: entries pool per shared COUNT frame
-        # (the memoized (focus, _cnt) aggregation), flushing as one pass
-        self._fuse_pool_counts: dict[int, list] = {}
-        self._deferring = False
-        self._pool_mapping: DataFrame | None = None  # set by _property around child calls
 
     def release(self) -> None:
         """Unpersist the engine's memoized target/value frames.  Optional —
@@ -607,54 +622,33 @@ class Engine:
         return self._all_violations()
 
     def _all_violations(self) -> DataFrame:
-        """Report rows for every shape-with-target, with CROSS-SHAPE fusion:
-        row-wise value constraints from different shapes that share a
-        memoized value frame (the dominant pattern of wide shape sets —
-        many property shapes over the same target class and path) are
-        deferred into _fuse_pool during the per-shape walk and flushed here
-        as one fused pass per value frame.  Verdict/row multiplicity parity:
-        the flush applies the exact per-constraint fail predicate, message,
-        and (for property children) the same bubble-mapping inner join the
-        unfused path would have applied — the join distributes over the
-        union, so the emitted row multiset is identical."""
-        shapes = self.ir.shapes_with_target()
-        out = self._empty_viols().select(*RECORD_COLS)
-        self._fuse_pool = {}
-        self._fuse_pool_counts = {}
-        # r6 (r5-verdict "skip pooling below k shapes"): cross-shape pooling
-        # pays only when MULTIPLE top-level shapes can share memoized frames;
-        # for a single-shape report the deferred-flush machinery is pure
-        # overhead over the direct dispatch path.  Row-multiset parity
-        # between the two paths is pinned by the fusion-parity tests.
-        self._deferring = len(shapes) > 1
-        self._pool_mapping = None
-        try:
-            for shape in shapes:
-                targets = self.targets_frame(shape)
-                out = out.unionByName(
-                    self.shape_violations(shape, targets).select(*RECORD_COLS)
-                )
-            for pool, with_value in (
-                (self._fuse_pool, True),
-                (self._fuse_pool_counts, False),
-            ):
-                for frame, mapping, entries in pool.values():
-                    rows = self._fused_rows(frame, entries, with_value=with_value)
-                    if mapping is not None:
-                        rows = rows.join(
-                            mapping, rows["bubble"] == mapping["_pvalue"], "inner"
-                        ).select(F.col("_pfocus").alias("bubble"), *VIOL_COLS[1:])
-                    out = out.unionByName(rows.select(*RECORD_COLS))
-        finally:
-            self._deferring = False
-            self._pool_mapping = None
-            self._fuse_pool = {}
-            self._fuse_pool_counts = {}
-        return out
+        """Report rows for every shape-with-target.  Row-wise and count
+        checks of the top-level shapes and their direct sh:property children
+        go into one pool, grouped by the frame they scan, and flush here as
+        one pass per frame: shapes sharing a memoized value or count frame
+        (the common case in wide shape sets — many property shapes over the
+        same target class and path) cost one scan instead of one per shape.
+        The flush applies each check's own fail predicate and message, and
+        for property children the same bubble-mapping join _property
+        applies to its child's rows; the join distributes over the union,
+        so the emitted row multiset equals the per-shape walk's."""
+        pool = _FusePool()
+        frames = [
+            self.shape_violations(shape, self.targets_frame(shape), pool)
+            for shape in self.ir.shapes_with_target()
+        ]
+        frames += self._flush(pool)
+        return self._union_viols(frames).select(*RECORD_COLS)
 
-    def shape_violations(self, shape: Shape, focus_df: DataFrame) -> DataFrame:
+    def shape_violations(
+        self, shape: Shape, focus_df: DataFrame, pool: _FusePool | None = None
+    ) -> DataFrame:
         """All violation rows for `shape` over the given focus frame
-        (ref: validateNodeAgainstShape, validation-engine.js:201-218)."""
+        (ref: validateNodeAgainstShape, validation-engine.js:201-218).
+
+        The shape's row-wise and count checks are added to `pool` when one
+        is given (their rows then come out of the pool's flush, not this
+        frame); without a pool they flush here at once."""
         if shape.deactivated:
             return self._empty_viols()
         if self._stack.count(shape.node) >= self.max_shape_recursion:
@@ -703,149 +697,106 @@ class Engine:
                     self._cached_values_ids[id(values)] = values
                 elif len(shape.constraints) > 1 and self.persist_values:
                     values = values.persist()
-            # cross-shape pooling: inside validate()/report_df(), at depth
-            # <= 2 (a top-level shape or its direct sh:property child — the
-            # bubble mapping composes one level), row-wise checks defer into
-            # the pool so shapes sharing a value frame flush as ONE pass.
-            pooling = self._deferring and len(self._stack) <= 2
-            fused, fused_counts, rest = self._split_fusible(
-                shape, min_fuse=1 if pooling else 2, pool_counts=pooling
-            )
-            out = self._empty_viols()
-            if fused:
-                if pooling:
-                    self._pool_add(self._fuse_pool, values, fused)
-                else:
-                    out = out.unionByName(
-                        self._fused_rows(values, fused).select(*VIOL_COLS)
-                    )
-            if fused_counts:  # pooling-only by construction
-                cf = _count_frame(self, focus_df, values)
-                self._pool_add(self._fuse_pool_counts, cf, fused_counts)
+            row_checks, count_checks, rest = self._split_checks(shape)
+            sink = pool if pool is not None else _FusePool()
+            if row_checks:
+                sink.add(values, row_checks, with_value=True)
+            if count_checks:
+                sink.add(_count_frame(self, focus_df, values), count_checks, with_value=False)
+            frames = [] if pool is not None else self._flush(sink)
             for constraint in rest:
-                v = self._dispatch(shape, constraint, focus_df, values)
+                v = self._dispatch(shape, constraint, focus_df, values, pool)
                 if v is not None:
-                    out = out.unionByName(v.select(*VIOL_COLS))
-            return out
+                    frames.append(v.select(*VIOL_COLS))
+            return self._union_viols(frames)
         finally:
             self._stack.pop()
 
-    def _fusible_message(self, shape: Shape, c: Constraint) -> tuple[str | None, bool]:
-        """(message, fusible): message parity with _dispatch — shape-level
-        sh:message wins, else the component default (constant per constraint
-        here).  fusible=False when the default needs row-level {?path}
-        substitution, which only the unfused path implements."""
-        if shape.messages:
-            msg = self.MESSAGE_SEP.join(m.value for m in shape.messages)
-        else:
-            msg = self._default_message(shape, c)
-        return msg, not (msg is not None and "{?path}" in msg)
-
-    def _split_fusible(
-        self, shape: Shape, min_fuse: int = 2, pool_counts: bool = False
-    ) -> tuple[list, list, list[Constraint]]:
-        """Partition a shape's constraints into (fused row-wise value checks,
-        fused count checks, everything else).  A constraint fuses when its
-        component is valid for this shape kind (style check parity with
-        _dispatch: invalid usage must reach _dispatch and raise), has an
-        _OK_CONDS / _COUNT_OKS condition builder that yields a Column, and
-        its resolved message needs no row-level {?path} substitution.
-        Outside the cross-shape pool, fusion fires only for >=2 value-check
-        candidates — a lone constraint keeps the plain filter path (same
-        plan, fewer moving parts); pooled contexts pass min_fuse=1 since
-        other shapes may join the same group.  Count checks pool only when
-        pool_counts (they fuse over the shared count frame, which only the
-        report-walk flush knows how to emit)."""
-        fused: list = []
-        fused_counts: list = []
+    def _split_checks(self, shape: Shape) -> tuple[list, list, list[Constraint]]:
+        """Partition a shape's constraints into (row-wise value checks,
+        count checks, everything else) — the first two as (shape,
+        constraint, OK Column) entries for _fused_rows.  Custom components
+        and components invalid for this shape kind stay with _dispatch
+        (which runs the registry validator or raises)."""
+        row_checks: list = []
+        count_checks: list = []
+        rest: list[Constraint] = []
         for c in shape.constraints:
             style = (
                 c.component.property_style
                 if shape.is_property_shape
                 else c.component.node_style
             )
-            if c.component.custom or style is None:
-                continue
-            if pool_counts and c.component.iri in _COUNT_OKS:
-                msg, fusible = self._fusible_message(shape, c)
-                if fusible:
-                    fused_counts.append(
-                        (shape, c, _COUNT_OKS[c.component.iri](self, shape, c), msg)
-                    )
-                continue
-            cond_fn = _OK_CONDS.get(c.component.iri)
-            ok = cond_fn(self, shape, c) if cond_fn is not None else None
-            if ok is None:
-                continue
-            msg, fusible = self._fusible_message(shape, c)
-            if fusible:
-                fused.append((shape, c, ok, msg))
-        if len(fused) < min_fuse:
-            fused = []
-        taken = {id(c) for (_s, c, _o, _m) in fused}
-        taken |= {id(c) for (_s, c, _o, _m) in fused_counts}
-        rest = [c for c in shape.constraints if id(c) not in taken]
-        return fused, fused_counts, rest
+            builtin = not c.component.custom and style is not None
+            iri_ = c.component.iri
+            if builtin and iri_ in _OK_CONDS:
+                row_checks.append((shape, c, _OK_CONDS[iri_](self, shape, c)))
+            elif builtin and iri_ in _COUNT_OKS:
+                count_checks.append((shape, c, _COUNT_OKS[iri_](self, shape, c)))
+            else:
+                rest.append(c)
+        return row_checks, count_checks, rest
 
-    def _pool_add(self, pool: dict[int, list], frame: DataFrame, entries: list) -> None:
-        """Add fused entries to `frame`'s pool group.  The bubble mapping is
-        captured from the CURRENT _property context at group creation; all
-        shapes sharing a frame share one logically-identical mapping (both
-        derive from the same memoized parent value frame)."""
-        group = pool.get(id(frame))
-        if group is None:
-            pool[id(frame)] = [frame, self._pool_mapping, list(entries)]
-        elif group[0] is not frame:
-            # unreachable while the pool holds a strong ref to group[0]
-            # (live id() collision impossible in CPython) — but if a future
-            # change ever breaks that invariant, silently REPLACING the
-            # group would drop already-pooled shapes' violation rows from
-            # the report; fail loudly instead (code-review r5)
-            raise ShaclValidationError(
-                "fusion pool identity collision: two live frames share id(); "
-                "pool keying must be made collision-safe"
-            )
-        else:
-            group[2].extend(entries)
+    def _flush(self, pool: _FusePool) -> list[DataFrame]:
+        """One fused pass per pooled frame; rows of property children are
+        bubbled to the parent focus through the group's mapping."""
+        frames = []
+        for frame, mapping, with_value, entries in pool.groups.values():
+            rows = self._fused_rows(frame, entries, with_value=with_value)
+            if mapping is not None:
+                rows = rows.join(
+                    mapping, rows["bubble"] == mapping["_pvalue"], "inner"
+                ).select(F.col("_pfocus").alias("bubble"), *VIOL_COLS[1:])
+            frames.append(rows)
+        return frames
+
+    def _union_viols(self, frames: list[DataFrame]) -> DataFrame:
+        if not frames:
+            return self._empty_viols()
+        return functools.reduce(DataFrame.unionByName, frames)
 
     def _fused_rows(
         self,
         values: DataFrame,
-        fused: list[tuple[Shape, Constraint, Column, str | None]],
+        entries: list[tuple[Shape, Constraint, Column]],
         with_value: bool = True,
     ) -> DataFrame:
-        """ONE pass over the shared value frame evaluates every fused
-        row-wise constraint: per-constraint fail structs (component +
-        constant message/severity/source-shape/path) collect into an array,
-        nulls are compacted out, and the array explodes into violation rows
-        — k constraints (possibly from k different shapes sharing this
-        value frame) cost one scan branch instead of k filter+union
-        branches over the (persisted) frame.  This is the VERDICT-r4 #4
-        fusion: with target/value/count frames already memoized, per-shape
-        value checks were the remaining marginal cost in wide shape sets
-        (50-shape bench)."""
-        entries = []
-        for shape, c, ok, msg in fused:
+        """ONE pass over a value (or count) frame evaluates every check in
+        `entries`: rows where any check fails are kept, each check's fail
+        struct (component, message, severity, source shape, path) collects
+        into an array, nulls are compacted out, and the array explodes into
+        violation rows.  k checks — possibly from k shapes sharing the frame
+        — cost one scan branch instead of k filter+union branches.  The
+        any-fail filter comes first, so the optimizer pushes it below the
+        path join like a plain per-constraint filter, and only failing rows
+        reach the explode."""
+        any_fail = None
+        structs = []
+        for shape, c, ok in entries:
             path_col = (
                 F.lit(shape.path_node.encoded())
                 if shape.path_node is not None
                 else _NULL()
             )
-            entries.append(
+            fail = ~ok
+            any_fail = fail if any_fail is None else any_fail | fail
+            structs.append(
                 F.when(
-                    ~ok,
+                    fail,
                     F.struct(
                         F.lit(c.component.iri).alias("comp"),
-                        (F.lit(msg) if msg is not None else _NULL()).alias("msg"),
+                        self._message_col(
+                            shape, c, self._shape_message(shape), path_col
+                        ).alias("msg"),
                         F.lit(shape.severity.value).alias("sev"),
                         F.lit(shape.node.encoded()).alias("src"),
                         path_col.alias("pth"),
                     ),
                 )
             )
-        viol = F.explode(F.filter(F.array(*entries), lambda x: x.isNotNull()))
-        exploded = values.select("*", viol.alias("_viol"))
-        # count-frame groups have no value columns (createResult parity with
+        viol = F.explode(F.filter(F.array(*structs), lambda x: x.isNotNull()))
+        exploded = values.filter(any_fail).select("*", viol.alias("_viol"))
+        # count frames have no value columns (createResult parity with
         # _rows(with_value=False): value stays null on count violations)
         value_cols = (
             [F.col(cn) for cn in term_cols("value")]
@@ -885,14 +836,8 @@ class Engine:
                 return self.spark.range(0).select(
                     F.lit(None).cast("string").alias("node")
                 )
-        # conformance needs the COMPLETE violation set for this shape NOW —
-        # cross-shape deferral would leak its rows into the report flush
-        prev_deferring = self._deferring
-        self._deferring = False
-        try:
-            viols = self.shape_violations(shape, nodes_df)
-        finally:
-            self._deferring = prev_deferring
+        # no pool: conformance needs this shape's COMPLETE violation set now
+        viols = self.shape_violations(shape, nodes_df)
         return viols.select(F.col("bubble").alias("node")).dropDuplicates(["node"])
 
     # --------------------------------------------------------------- helpers
@@ -958,12 +903,17 @@ class Engine:
 
     # -------------------------------------------------------------- dispatch
     def _dispatch(
-        self, shape: Shape, c: Constraint, targets: DataFrame, values: DataFrame
+        self,
+        shape: Shape,
+        c: Constraint,
+        targets: DataFrame,
+        values: DataFrame,
+        pool: _FusePool | None = None,
     ) -> DataFrame | None:
         comp = c.component
         style = comp.property_style if shape.is_property_shape else comp.node_style
         if comp.iri == SH + "PropertyConstraintComponent":
-            return self._property(shape, c, targets, values)
+            return self._property(shape, c, targets, values, pool)
         if style is None:
             raise ShaclValidationError(
                 f"Cannot find validator for constraint component {comp.iri}"
@@ -976,21 +926,27 @@ class Engine:
                 f"Cannot find validator for constraint component {comp.iri}"
             )
         rows = impl(self, shape, c, targets, values)
-        if rows is not None:
-            default = self._default_message(shape, c)
-            if default is not None:
-                if "{?path}" in default:
-                    # row-level substitution: closed/closedByTypes record the
-                    # OFFENDING predicate in the path column
-                    default_col = F.replace(
-                        F.lit(default), F.lit("{?path}"), self._label_col(F.col("path"))
-                    )
-                else:
-                    default_col = F.lit(default)
-                rows = rows.withColumn(
-                    "message", F.coalesce(F.col("message"), default_col)
-                )
-        return rows
+        if rows is None:
+            return None
+        return rows.withColumn(
+            "message", self._message_col(shape, c, F.col("message"), F.col("path"))
+        )
+
+    def _message_col(
+        self, shape: Shape, c: Constraint, message: Column, path: Column
+    ) -> Column:
+        """`message` (the shape's sh:message, or a validator's own message),
+        else the component default; a {?path} in the default becomes the
+        row's path label — closed/closedByTypes record the OFFENDING
+        predicate in the path column."""
+        default = self._default_message(shape, c)
+        if default is None:
+            return message
+        if "{?path}" in default:
+            default_col = F.replace(F.lit(default), F.lit("{?path}"), self._label_col(path))
+        else:
+            default_col = F.lit(default)
+        return F.coalesce(message, default_col)
 
     def _param_label(self, val: Term) -> str:
         """nodeLabel (validation-engine.js:6-29) incl. the Collection branch:
@@ -1008,14 +964,12 @@ class Engine:
     def _label_col(self, col: Column) -> Column:
         """Per-row nodeLabel for ENCODED terms ('<iri>' form): prefix-shorten
         against the shapes-graph namespaces, else keep the <iri> rendering."""
-        import re as _re
-
         bare = F.regexp_extract(col, "^<(.*)>$", 1)
         out = col  # non-IRI encodings pass through
         for p, ns in self.shapes.prefixes.items():
             out = F.when(
                 bare.startswith(ns),
-                F.regexp_replace(bare, "^" + _re.escape(ns), p + ":"),
+                F.regexp_replace(bare, "^" + re.escape(ns), p + ":"),
             ).otherwise(out)
         return out
 
@@ -1042,7 +996,7 @@ class Engine:
     # Each returns a violation frame or None. Citations point at the verdict
     # logic being reproduced (shared/dash.js).
 
-    def _property(self, shape, c, targets, values):
+    def _property(self, shape, c, targets, values, pool=None):
         # sh:property — native recursion; child focus = parent value nodes
         # (validation-engine.js:224-232). Violations recorded with the CHILD's
         # focus/severity/shape; bubbled to the parent focus for conformance.
@@ -1087,14 +1041,11 @@ class Engine:
                 F.col("focus").alias("_pfocus"), F.col("value").alias("_pvalue")
             )
         )
-        # pooled child checks bypass this mapping join (they flush in
-        # _all_violations), so hand the child's pool entries THIS mapping
-        prev_mapping = self._pool_mapping
-        self._pool_mapping = mapping
-        try:
-            child_viols = self.shape_violations(child, candidates)
-        finally:
-            self._pool_mapping = prev_mapping
+        # the pool reaches a top-level shape's direct children only (depth
+        # <= 2): a pooled group bubbles through ONE mapping at flush time,
+        # and deeper levels would need the mappings composed
+        child_pool = pool.under(mapping) if pool is not None and len(self._stack) == 1 else None
+        child_viols = self.shape_violations(child, candidates, child_pool)
         if identity_mapping:
             return child_viols
         return (
@@ -1147,10 +1098,6 @@ def _cond_datatype(eng, shape, c):
     return ok
 
 
-def _impl_datatype(eng, shape, c, targets, values):
-    return eng._rows(values.filter(~_cond_datatype(eng, shape, c)), shape, c.component.iri)
-
-
 _NODEKIND_ALLOWED = {
     SH + "BlankNode": ["bnode"],
     SH + "IRI": ["iri"],
@@ -1166,55 +1113,37 @@ def _cond_nodekind(eng, shape, c):
     return F.col("value_kind").isin(allowed)
 
 
-def _impl_nodekind(eng, shape, c, targets, values):
-    fail = values.filter(~_cond_nodekind(eng, shape, c))
-    return eng._rows(fail, shape, c.component.iri)
-
-
 def _cond_pattern(eng, shape, c):
-    """OK column for the Java-regex fast path; None when the pattern needs
-    the Arrow/Python fallback (not fusible — it stays on the unfused path)."""
-    flags = c.params.get("flags")
-    flag_str = flags.value if flags else None
-    java_re = _js_regex_to_java(c.params["pattern"].value, flag_str)
-    if not _java_regex_compiles(eng.spark, java_re):
-        return None
-    return (F.col("value_kind") != "bnode") & F.col("value_v").rlike(java_re)
-
-
-def _impl_pattern(eng, shape, c, targets, values):
     # validatePattern (dash.js:305-311): bnode fails; regex over value.value
     # (IRIs included). JS RegExp -> Java regex with inline flags (rlike,
     # whole-stage codegen fast path). Patterns Java rejects (JS-only syntax
     # like a dangling '{') fall back to an Arrow-vectorized Python re —
     # Python shares JS's lenient treatment of those constructs.
-    ok = _cond_pattern(eng, shape, c)
-    if ok is None:
-        flags = c.params.get("flags")
-        flag_str = flags.value if flags else None
-        raw = c.params["pattern"].value
-        import re as _re
+    flags = c.params.get("flags")
+    flag_str = flags.value if flags else None
+    raw = c.params["pattern"].value
+    java_re = _js_regex_to_java(raw, flag_str)
+    if _java_regex_compiles(eng.spark, java_re):
+        return (F.col("value_kind") != "bnode") & F.col("value_v").rlike(java_re)
+    from pyspark.sql.functions import pandas_udf
 
-        from pyspark.sql.functions import pandas_udf
+    pyflags = 0
+    for ch, fl in (("i", re.I), ("m", re.M), ("s", re.S)):
+        if flag_str and ch in flag_str:
+            pyflags |= fl
+    try:
+        rx = re.compile(raw, pyflags)
+    except re.error as e:
+        raise ShaclValidationError(
+            f"invalid sh:pattern {raw!r}: rejected by both Java regex "
+            f"and the Python fallback ({e})"
+        ) from e
 
-        pyflags = 0
-        for ch, fl in (("i", _re.I), ("m", _re.M), ("s", _re.S)):
-            if flag_str and ch in flag_str:
-                pyflags |= fl
-        try:
-            rx = _re.compile(raw, pyflags)
-        except _re.error as e:
-            raise ShaclValidationError(
-                f"invalid sh:pattern {raw!r}: rejected by both Java regex "
-                f"and the Python fallback ({e})"
-            ) from e
+    @pandas_udf("boolean")
+    def _js_match(v: pd.Series) -> pd.Series:
+        return v.map(lambda x: x is not None and rx.search(x) is not None)
 
-        @pandas_udf("boolean")
-        def _js_match(v: pd.Series) -> pd.Series:
-            return v.map(lambda x: x is not None and rx.search(x) is not None)
-
-        ok = (F.col("value_kind") != "bnode") & _js_match(F.col("value_v"))
-    return eng._rows(values.filter(~ok), shape, c.component.iri)
+    return (F.col("value_kind") != "bnode") & _js_match(F.col("value_v"))
 
 
 def _cond_minlength(eng, shape, c):
@@ -1222,17 +1151,9 @@ def _cond_minlength(eng, shape, c):
     return (F.col("value_kind") != "bnode") & (F.length("value_v") >= F.lit(n))
 
 
-def _impl_minlength(eng, shape, c, targets, values):
-    return eng._rows(values.filter(~_cond_minlength(eng, shape, c)), shape, c.component.iri)
-
-
 def _cond_maxlength(eng, shape, c):
     n = eng._num_param(c.param_value)
     return (F.col("value_kind") != "bnode") & (F.length("value_v") <= F.lit(n))
-
-
-def _impl_maxlength(eng, shape, c, targets, values):
-    return eng._rows(values.filter(~_cond_maxlength(eng, shape, c)), shape, c.component.iri)
 
 
 def _range_cond(op):
@@ -1248,24 +1169,10 @@ def _range_cond(op):
     return cond
 
 
-def _range_impl(op):
-    cond = _range_cond(op)
-
-    def impl(eng, shape, c, targets, values):
-        return eng._rows(values.filter(~cond(eng, shape, c)), shape, c.component.iri)
-
-    return impl
-
-
 def _cond_in(eng, shape, c):
     # validateIn (dash.js:163-167): term-identity membership in shapes-graph list
     members = [t.encoded() for t in eng.shapes.rdf_list(c.param_value)]
     return F.col("value").isin(members)
-
-
-def _impl_in(eng, shape, c, targets, values):
-    fail = values.filter(~_cond_in(eng, shape, c))
-    return eng._rows(fail, shape, c.component.iri)
 
 
 def _cond_languagein(eng, shape, c):
@@ -1283,16 +1190,8 @@ def _cond_languagein(eng, shape, c):
     )
 
 
-def _impl_languagein(eng, shape, c, targets, values):
-    return eng._rows(values.filter(~_cond_languagein(eng, shape, c)), shape, c.component.iri)
-
-
 def _cond_stem(eng, shape, c):
     return (F.col("value_kind") == "iri") & F.col("value_v").startswith(c.param_value.value)
-
-
-def _impl_stem(eng, shape, c, targets, values):
-    return eng._rows(values.filter(~_cond_stem(eng, shape, c)), shape, c.component.iri)
 
 
 def _impl_rootclass(eng, shape, c, targets, values):
@@ -1381,18 +1280,6 @@ def _count_frame(eng, targets: DataFrame, values: DataFrame) -> DataFrame:
         out = out.persist()
         eng._counts_cache[key] = (targets, values, out)
     return out
-
-
-def _impl_mincount(eng, shape, c, targets, values):
-    n = eng._num_param(c.param_value)
-    fail = _count_frame(eng, targets, values).filter(~(F.col("_cnt") >= F.lit(n)))
-    return eng._rows(fail, shape, c.component.iri, with_value=False)
-
-
-def _impl_maxcount(eng, shape, c, targets, values):
-    n = eng._num_param(c.param_value)
-    fail = _count_frame(eng, targets, values).filter(~(F.col("_cnt") <= F.lit(n)))
-    return eng._rows(fail, shape, c.component.iri, with_value=False)
 
 
 def _impl_uniquelang(eng, shape, c, targets, values):
@@ -1768,11 +1655,9 @@ def _qualified_impl(is_min: bool):
     return impl
 
 
-#: row-wise value-constraint OK conditions usable by the fused single-pass
-#: evaluator (Engine._fused_rows): each builder returns the per-row OK
-#: Column over a (focus5, value5) frame, or None when this instance cannot
-#: be fused (e.g. a pattern needing the Arrow/Python fallback) — those go
-#: down the ordinary _dispatch path.
+#: row-wise value-constraint OK conditions, evaluated only by the fused
+#: single-pass evaluator (Engine._fused_rows): each builder returns the
+#: per-row OK Column over a (focus5, value5) frame.
 _OK_CONDS = {
     SH + "DatatypeConstraintComponent": _cond_datatype,
     SH + "NodeKindConstraintComponent": _cond_nodekind,
@@ -1788,9 +1673,9 @@ _OK_CONDS = {
     DASH + "StemConstraintComponent": _cond_stem,
 }
 
-#: count-constraint OK conditions over the shared COUNT frame ((focus5,
-#: _cnt) from _count_frame) for the cross-shape pool: min/maxCount shapes
-#: sharing (targets, path) flush as one pass over one persisted aggregation.
+#: count-constraint OK conditions over the COUNT frame ((focus5, _cnt) from
+#: _count_frame), evaluated by the same fused evaluator: min/maxCount
+#: shapes sharing (targets, path) flush as one pass over one aggregation.
 _COUNT_OKS = {
     SH + "MinCountConstraintComponent": (
         lambda eng, shape, c: F.col("_cnt") >= F.lit(eng._num_param(c.param_value))
@@ -1802,21 +1687,8 @@ _COUNT_OKS = {
 
 _IMPLS = {
     SH + "ClassConstraintComponent": _impl_class,
-    SH + "DatatypeConstraintComponent": _impl_datatype,
-    SH + "NodeKindConstraintComponent": _impl_nodekind,
-    SH + "PatternConstraintComponent": _impl_pattern,
-    SH + "MinLengthConstraintComponent": _impl_minlength,
-    SH + "MaxLengthConstraintComponent": _impl_maxlength,
-    SH + "MinInclusiveConstraintComponent": _range_impl(lambda a, b: a >= b),
-    SH + "MinExclusiveConstraintComponent": _range_impl(lambda a, b: a > b),
-    SH + "MaxInclusiveConstraintComponent": _range_impl(lambda a, b: a <= b),
-    SH + "MaxExclusiveConstraintComponent": _range_impl(lambda a, b: a < b),
-    SH + "InConstraintComponent": _impl_in,
-    SH + "LanguageInConstraintComponent": _impl_languagein,
     SH + "UniqueLangConstraintComponent": _impl_uniquelang,
     SH + "HasValueConstraintComponent": _impl_hasvalue,
-    SH + "MinCountConstraintComponent": _impl_mincount,
-    SH + "MaxCountConstraintComponent": _impl_maxcount,
     SH + "EqualsConstraintComponent": _impl_equals,
     SH + "DisjointConstraintComponent": _impl_disjoint,
     SH + "LessThanConstraintComponent": _lessthan_impl(strict=True),
@@ -1836,7 +1708,6 @@ _IMPLS = {
     DASH + "UniqueValueForClassConstraintComponent": _impl_uniquevalueforclass,
     DASH + "PrimaryKeyConstraintComponent": _impl_primarykey,
     DASH + "RootClassConstraintComponent": _impl_rootclass,
-    DASH + "StemConstraintComponent": _impl_stem,
     DASH + "SubSetOfConstraintComponent": _impl_subsetof,
 }
 

@@ -140,6 +140,24 @@ ex:y a ex:T ; ex:v "nope" .
 """
     report = _engine(spark, ttl).validate()
     assert sorted(r.focusNode() for r in report.results()) == ["http://e/y"]
+    # a second shape on the same ex:v path puts the pandas-UDF condition in
+    # a two-entry fused group: one pass over the shared value frame
+    ttl2 = ttl + """
+ex:S2 a sh:NodeShape ; sh:targetClass ex:T ;
+  sh:property [ sh:path ex:v ; sh:minLength 2 ] .
+ex:z a ex:T ; ex:v "q" .
+"""
+    report_df = _engine(spark, ttl2).report_df()
+    plan = report_df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Generate ") == 1, plan
+    got = sorted(
+        (r["focus_v"], r["component"].rsplit("#", 1)[1]) for r in report_df.collect()
+    )
+    assert got == [
+        ("http://e/y", "PatternConstraintComponent"),
+        ("http://e/z", "MinLengthConstraintComponent"),
+        ("http://e/z", "PatternConstraintComponent"),
+    ]
 
 
 def test_duplicate_source_triples_are_set_semantics(spark):

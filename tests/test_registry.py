@@ -6,10 +6,18 @@ The fixture declares two custom components in the shapes graph; here their
 validators are vectorized Python functions registered under the same
 sh:jsFunctionName, replacing eval()'d JS libraries."""
 
+import os
+
+import pytest
+
 from shacl_js_spark.conformance import run_fixture
 from shacl_js_spark.registry import ValidatorRegistry
 
-DATA = open("/root/reference/test/data/functionregistry/jsconstraintcomponent/data.ttl").read()
+# the shacl-js source checkout, kept next to this repository
+REF = os.path.join(os.path.dirname(os.path.abspath(__file__)), os.pardir, os.pardir, "reference")
+DATA_PATH = os.path.normpath(
+    os.path.join(REF, "test/data/functionregistry/jsconstraintcomponent/data.ttl")
+)
 EX = "http://datashapes.org/sh/tests/functionregistry/jsconstraintcomponent/data#"
 
 
@@ -35,7 +43,11 @@ def _registry():
 
 
 def test_function_registration(spark):
-    report, _ = run_fixture(spark, DATA, registry=_registry())
+    if not os.path.exists(DATA_PATH):
+        pytest.skip(f"shacl-js reference fixture not found: {DATA_PATH}")
+    with open(DATA_PATH) as f:
+        data = f.read()
+    report, _ = run_fixture(spark, data, registry=_registry())
     assert report.conforms() is False
     results = report.results()
     assert len(results) == 2

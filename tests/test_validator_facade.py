@@ -471,9 +471,10 @@ def test_jsonld_prefix_map_skips_keyword_aliases(spark):
 
 
 def test_cross_shape_fusion_parity(spark):
-    # report_df() pools row-wise checks from shapes sharing a value frame
-    # into one fused pass; the emitted row MULTISET must equal the unfused
-    # per-shape walk (same predicates, messages, severities, bubble joins)
+    # report_df() pools row-wise and count checks from shapes sharing a
+    # value (or count) frame into one fused pass per frame; the emitted row
+    # MULTISET must be exactly the per-constraint verdicts below, derived by
+    # hand from dash.js semantics, and equal to the pool-free per-shape walk
     from shacl_js_spark.graph import turtle_df
     from shacl_js_spark.localgraph import LocalGraph
     from shacl_js_spark.validation import RECORD_COLS, Engine
@@ -504,32 +505,89 @@ def test_cross_shape_fusion_parity(spark):
       sh:property [ sh:path ex:q ; sh:minCount 2 ; sh:severity sh:Info ] .
     """
     shapes = LocalGraph.from_turtle(shapes_ttl)
+    P, Q = "<http://e/p>", "<http://e/q>"
+    # (focus, value, path, component, severity, message); count rows carry
+    # no value.  S1 minLength 2 passes everywhere ("12" has 2 characters),
+    # S5 nodeKind IRI passes (every focus is an IRI), ex:c q 3 is <= 4.
+    expected = sorted([
+        ("b", "12", P, "Datatype", "Violation", "Value does not have datatype xsd:string"),
+        ("a", "Xyz", P, "Pattern", "Violation", "lower!"),
+        ("b", "12", P, "Pattern", "Violation", "lower!"),
+        ("a", "5", Q, "MaxInclusive", "Warning", "Value is not <= 4"),
+        ("b", "no", Q, "MaxInclusive", "Warning", "Value is not <= 4"),  # NaN fails
+        ("c", None, P, "MinCount", "Violation", "Less than 1 values"),
+        ("a", None, P, "MaxCount", "Violation", "too many p"),
+        ("a", None, Q, "MinCount", "Info", "Less than 2 values"),
+        ("b", None, Q, "MinCount", "Info", "Less than 2 values"),
+        ("c", None, Q, "MinCount", "Info", "Less than 2 values"),
+    ], key=repr)
 
-    def key(r):  # None-safe: count rows carry null value/message columns
-        return tuple((v is None, v) for v in r)
+    def rows(df):
+        return sorted((
+            (r["focus_v"].rsplit("/", 1)[1], r["value_v"], r["path"],
+             r["component"].rsplit("#", 1)[1].replace("ConstraintComponent", ""),
+             r["severity"].rsplit("#", 1)[1], r["message"])
+            for r in df.collect()
+        ), key=repr)
 
-    fused = Engine(spark, data, shapes)
-    got = sorted((tuple(r) for r in fused.report_df().collect()), key=key)
-    assert fused._fuse_pool == {}  # pools drained and reset after the walk
-    assert fused._fuse_pool_counts == {}
-    fused.release()
-
-    unfused = Engine(spark, data, shapes)
-    out = None
-    for shape in unfused.ir.shapes_with_target():
-        t = unfused.targets_frame(shape)
-        v = unfused.shape_violations(shape, t).select(*RECORD_COLS)
-        out = v if out is None else out.unionByName(v)
-    expected = sorted((tuple(r) for r in out.collect()), key=key)
-    unfused.release()
-
+    eng = Engine(spark, data, shapes)
+    report = eng.report_df()
+    got = rows(report)
     assert got == expected
-    assert len(got) >= 4  # non-trivial: datatype+minLength+pattern+range hits
-    # the COUNT pool fired too: S4 minCount (ex:c has no ex:p), S6 maxCount
-    # with a shape-level message (ex:a has two ex:p), S7 minCount 2 at Info
+    # every row names the property shape that produced it, never the parent
+    assert all(r["source_shape"].startswith("_:") for r in report.collect())
+    # the pool is owned by one report walk: a second report on the SAME
+    # engine (warm memos, fresh pool) emits the same rows, none carried over
+    assert rows(eng.report_df()) == expected
+    eng.release()
+
+    # the pool-free walk (no pool: each shape flushes its own groups and
+    # sh:property applies the bubble join itself) emits the same multiset
+    walk = Engine(spark, data, shapes)
+    out = None
+    for shape in walk.ir.shapes_with_target():
+        v = walk.shape_violations(shape, walk.targets_frame(shape)).select(*RECORD_COLS)
+        out = v if out is None else out.unionByName(v)
+    assert rows(out) == expected
+    walk.release()
+
+    # the COUNT pool fired: S4 minCount (ex:c has no ex:p), S6 maxCount with
+    # a shape-level message (ex:a has two ex:p), S7 minCount 2 at Info
     msgs = {r[-1] for r in got}
     assert "too many p" in msgs
     assert any("Less than 1 value" in (m or "") for m in msgs)
+
+
+def test_single_check_filter_pushed_below_path_join(spark):
+    # a one-shape, one-constraint report still goes through the fused
+    # evaluator; its any-fail filter must plan as the plain pushed-down
+    # Filter on the triple side of the path join, so only failing rows are
+    # joined and exploded (this is why single-shape reports need no bypass)
+    from shacl_js_spark.graph import turtle_df
+    from shacl_js_spark.localgraph import LocalGraph
+    from shacl_js_spark.validation import Engine
+
+    data = turtle_df(spark, """
+    @prefix ex: <http://e/> .
+    ex:a a ex:T ; ex:p "abcdef" .
+    ex:b a ex:T ; ex:p "ab" .
+    """)
+    shapes = LocalGraph.from_turtle("""
+    @prefix sh: <http://www.w3.org/ns/shacl#> .
+    @prefix ex: <http://e/> .
+    ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+      sh:property [ sh:path ex:p ; sh:maxLength 3 ] .
+    """)
+    report = Engine(spark, data, shapes, persist_values=False).report_df()
+    plan = report._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    joins = [i for i, line in enumerate(plan) if "Join " in line]
+    fails = [i for i, line in enumerate(plan) if "Filter " in line and "length(" in line]
+    assert len(joins) == 1 and fails, "\n".join(plan)
+    # tree strings list children below their parent: the fail predicate
+    # sits under the join, on the raw triple columns
+    assert all(i > joins[0] for i in fails), "\n".join(plan)
+    assert all("o_v" in plan[i] for i in fails), "\n".join(plan)
+    assert [r["focus_v"] for r in report.collect()] == ["http://e/a"]
 
 
 def test_class_fail_frame_memoized_across_shapes(spark):
