@@ -247,44 +247,51 @@ class Engine:
         self._sub_children: dict[str, list[str]] | None = subclass_edges
         self._distinct_types: list[str] | None = None  # cached once per Engine
         self._stack: list[Term] = []  # shape recursion guard (compile-time cycle reject)
-        # shared-scan memos (see targets_frame / shape_violations): many
-        # shapes target the same classes and walk the same paths — compute
-        # each distinct target frame and (focus, path) value frame once
-        self._targets_cache: dict[tuple, DataFrame] = {}
-        # identity index of every SHARED focus frame (cached target frames
-        # AND memoized property-candidate frames): a focus frame listed here
-        # is handed out repeatedly by the engine, so per-(focus, path) memos
-        # downstream are safe and profitable
-        self._cached_target_ids: dict[int, DataFrame] = {}
-        self._values_cache: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-        self._cached_values_ids: dict[int, DataFrame] = {}
-        self._candidates_cache: dict[int, tuple[DataFrame, DataFrame]] = {}
-        self._counts_cache: dict[tuple, tuple[DataFrame, DataFrame, DataFrame]] = {}
-        self._class_fail_cache: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+        # shared-scan memo (see _memo): many shapes target the same classes
+        # and walk the same paths, so each distinct target, value,
+        # candidate, count and class-fail frame is built once.  Keys say
+        # what a frame computes: ("targets", spec), ("values", focus key,
+        # path), ("candidates", values key), ("counts", focus key, path),
+        # ("class_fail", values key, class).  _keys maps the id of every
+        # memoized frame back to its key, so a frame the engine handed out
+        # keys the frames derived from it.
+        self._frames: dict[tuple, DataFrame] = {}
+        self._keys: dict[int, tuple] = {}
 
     def release(self) -> None:
-        """Unpersist the engine's memoized target/value frames.  Optional —
-        dropped references are eventually cleaned by Spark's context
-        cleaner — but long-lived processes creating many engines (e.g. a
-        streaming re-validator, one engine per batch) should release
-        eagerly rather than wait for GC."""
-        for df in self._targets_cache.values():
+        """Unpersist the engine's memoized frames.  Optional — dropped
+        references are eventually cleaned by Spark's context cleaner — but
+        long-lived processes creating many engines (e.g. a streaming
+        re-validator, one engine per batch) should release eagerly rather
+        than wait for GC."""
+        for df in self._frames.values():
             df.unpersist()
-        for _focus, df in self._values_cache.values():
-            df.unpersist()
-        for _v, df in self._candidates_cache.values():
-            df.unpersist()
-        for _t, _v, df in self._counts_cache.values():
-            df.unpersist()
-        for _v, df in self._class_fail_cache.values():
-            df.unpersist()
-        self._targets_cache.clear()
-        self._cached_target_ids.clear()
-        self._values_cache.clear()
-        self._cached_values_ids.clear()
-        self._candidates_cache.clear()
-        self._counts_cache.clear()
-        self._class_fail_cache.clear()
+        self._frames.clear()
+        self._keys.clear()
+
+    def _memo(self, key: tuple | None, build) -> DataFrame:
+        """The frame named by `key`, built once per engine and persisted
+        when persist_values is set.  key None (a frame derived from one the
+        engine did not hand out, e.g. a recursion-level focus frame from
+        nonconforming) builds a fresh, unpinned frame: those identities
+        never recur, and pinning them would hold dead frames per level."""
+        if key is None:
+            return build()
+        df = self._frames.get(key)
+        if df is None:
+            df = build()
+            if self.persist_values:
+                df = df.persist()
+            self._frames[key] = df
+            self._keys[id(df)] = key
+        return df
+
+    def _key(self, kind: str, parent: DataFrame, *rest) -> tuple | None:
+        """Memo key of the `kind` frame derived from `parent`, or None when
+        the engine did not hand `parent` out.  The memo holds a strong ref
+        to every indexed frame, so no other live frame can share its id."""
+        parent_key = self._keys.get(id(parent))
+        return None if parent_key is None else (kind, parent_key, *rest)
 
     # ------------------------------------------------------------------ data
     def _empty_viols(self) -> DataFrame:
@@ -387,28 +394,18 @@ class Engine:
     def targets_frame(self, shape: Shape) -> DataFrame:
         """Focus-node frame for the shape's targets.  MEMOIZED by the
         target spec's content: real shape sets pile dozens of shapes onto
-        the same few target classes, and without the cache each shape
+        the same few target classes, and without the memo each shape
         re-scanned rdf:type and re-deduped an identical frame (measured
-        ~linear wall growth in shape count at 50 shapes; the cache makes
-        the marginal shape pay only its own constraint joins).  Cached
-        frames persist for the Engine's life — call release() when done
-        with a long-lived engine."""
+        ~linear wall growth in shape count at 50 shapes; the memo makes
+        the marginal shape pay only its own constraint joins).  Memoized
+        frames live for the Engine's life — call release() when done with
+        a long-lived engine."""
         spec = self.ir.target_spec(shape.node)
-        key = (
-            tuple(sorted(t.encoded() for t in spec.classes)),
-            tuple(sorted(t.encoded() for t in spec.nodes)),
-            tuple(sorted(t.encoded() for t in spec.subjects_of)),
-            tuple(sorted(t.encoded() for t in spec.objects_of)),
-        )
-        hit = self._targets_cache.get(key)
-        if hit is not None:
-            return hit
-        out = self._targets_frame_uncached(spec)
-        if self.persist_values:
-            out = out.persist()
-        self._targets_cache[key] = out
-        self._cached_target_ids[id(out)] = out
-        return out
+        key = ("targets", tuple(
+            tuple(sorted(t.encoded() for t in terms))
+            for terms in (spec.classes, spec.nodes, spec.subjects_of, spec.objects_of)
+        ))
+        return self._memo(key, lambda: self._targets_frame_uncached(spec))
 
     def _targets_frame_uncached(self, spec) -> DataFrame:
         # fast path (r6): when every target piece is subject-derived
@@ -478,13 +475,6 @@ class Engine:
             *term_cols("focus"),
             *[F.col(c.replace("value", "cur")).alias(c) for c in term_cols("value")],
         )
-        if path.is_simple_pred:
-            # breadcrumb for _count_frame (r6): a simple-pred value frame is
-            # focus ⋈ trips(pred), so counts-per-focus can be computed by
-            # aggregating the (filtered) triple side FIRST and left-joining
-            # the focus frame once — "aggregate before you shuffle".  The
-            # strong focus-frame ref makes the identity check GC-safe.
-            renamed._graft_count_src = (focus_df, f"<{path.pred}>")
         # r6: only SEQ roots can emit duplicate (focus, value) pairs — two
         # intermediate routes reaching the same value.  pred/inverse hops
         # over a set-semantics triple frame are distinct per (focus, value)
@@ -668,41 +658,22 @@ class Engine:
             )
         self._stack.append(shape.node)
         try:
-            # value-frame memo: keyed by (focus-frame identity, path value),
-            # and ONLY for focus frames served by the target cache — target
-            # memoization hands every shape of a target spec the SAME frame
-            # object, so shapes sharing (targets, path) reuse one persisted
-            # path join.  Recursion-level frames (nonconforming passes a
-            # fresh lineage-cut frame per level) are deliberately NOT
-            # memoized: their identities never recur, and pinning them in
-            # the dict would hold ~max_shape_recursion dead persisted
-            # frames per recursive shape that the context cleaner could
-            # otherwise reclaim mid-run.  Identity is re-checked against
-            # the stored ref (id() alone could collide after GC).
-            memoizable = self._cached_target_ids.get(id(focus_df)) is focus_df
-            vkey = (id(focus_df), shape.path)
-            hit = self._values_cache.get(vkey) if memoizable else None
-            if hit is not None and hit[0] is focus_df:
-                values = hit[1]
-            else:
-                values = self.values_frame(shape, focus_df)
-                # several constraint branches (and, with the memo, several
-                # shapes) consume the same value frame; persist so the
-                # (possibly multi-hop) path join runs once.  Non-memoized
-                # frames keep the pre-memo policy (persist only when >1
-                # constraint shares them, released by scope like before).
-                if memoizable and self.persist_values:
-                    values = values.persist()
-                    self._values_cache[vkey] = (focus_df, values)
-                    self._cached_values_ids[id(values)] = values
-                elif len(shape.constraints) > 1 and self.persist_values:
-                    values = values.persist()
+            # value-frame memo: shapes sharing (focus frame, path) reuse one
+            # path join, but only over focus frames the engine handed out
+            # (memoized targets and candidates).  Several constraint
+            # branches consume the same value frame, so an un-keyed frame
+            # is persisted when more than one constraint reads it.
+            key = self._key("values", focus_df, shape.path)
+            values = self._memo(key, lambda: self.values_frame(shape, focus_df))
+            if key is None and len(shape.constraints) > 1 and self.persist_values:
+                values = values.persist()
             row_checks, count_checks, rest = self._split_checks(shape)
             sink = pool if pool is not None else _FusePool()
             if row_checks:
                 sink.add(values, row_checks, with_value=True)
             if count_checks:
-                sink.add(_count_frame(self, focus_df, values), count_checks, with_value=False)
+                counts = _count_frame(self, focus_df, values, shape.path)
+                sink.add(counts, count_checks, with_value=False)
             frames = [] if pool is not None else self._flush(sink)
             for constraint in rest:
                 v = self._dispatch(shape, constraint, focus_df, values, pool)
@@ -850,7 +821,6 @@ class Engine:
         path_col: Column | None = None,
         value_cols: list[Column] | None = None,
         message_col: Column | None = None,
-        bubble_col: Column | None = None,
     ) -> DataFrame:
         """Normalize a failure frame into violation rows
         (ref: createResult, validation-engine.js:50-64)."""
@@ -866,7 +836,7 @@ class Engine:
         if message_col is None:
             message_col = self._shape_message(shape)
         return df.select(
-            (bubble_col if bubble_col is not None else F.col("focus")).alias("bubble"),
+            F.col("focus").alias("bubble"),
             *[F.col(c) for c in term_cols("focus")],
             *[c.alias(n) if not isinstance(c, str) else F.col(c).alias(n)
               for c, n in zip(value_cols, term_cols("value"))],
@@ -1003,29 +973,22 @@ class Engine:
         child = self.ir.get_shape(c.param_value)
         # candidates memo: when `values` is one of the engine's shared value
         # frames (same (targets, path) across parent shapes), every parent's
-        # sh:property dispatch hands the SAME candidates frame to its child —
-        # which registers as a shared focus frame, so the CHILD's value/count
-        # memos fire too.  Without this, each of N parent shapes over one
-        # target class rebuilt the child focus frame and re-ran every child
-        # path join (the dominant cost of wide shape sets).
-        shared_vals = self._cached_values_ids.get(id(values)) is values
-        hit = self._candidates_cache.get(id(values)) if shared_vals else None
-        if hit is not None and hit[0] is values:
-            candidates = hit[1]
-        else:
+        # sh:property dispatch hands the SAME candidates frame to its child,
+        # so the CHILD's value/count memos fire too.  Without this, each of
+        # N parent shapes over one target class rebuilt the child focus
+        # frame and re-ran every child path join (the dominant cost of wide
+        # shape sets).
+        def build():
             if shape.path is None:
                 # node shape: values IS the focus frame, which is distinct by
                 # construction (targets_frame ends in a dedup) — renaming is
                 # enough, no third dedup pass over the same rows
-                candidates = values.select(
+                return values.select(
                     *[F.col(c_).alias(c_.replace("value", "focus")) for c_ in term_cols("value")]
                 )
-            else:
-                candidates = self._values_as_candidates(values)
-            if shared_vals and self.persist_values:
-                candidates = candidates.persist()
-                self._candidates_cache[id(values)] = (values, candidates)
-                self._cached_target_ids[id(candidates)] = candidates
+            return self._values_as_candidates(values)
+
+        candidates = self._memo(self._key("candidates", values), build)
         # r6: a path-less parent's value frame is the identity over its
         # distinct focus set, so the bubble mapping is (x -> x) with
         # multiplicity 1 — the join neither filters nor re-multiplies nor
@@ -1053,34 +1016,26 @@ class Engine:
             .select(F.col("_pfocus").alias("bubble"), *VIOL_COLS[1:])
         )
 
-    def _class(self, shape, c, targets, values):
-        # validateClass (dash.js:27-29): instance-of incl. data-graph subclass
-        # closure — broadcast-joined type closure.  The FAIL frame is memoized
-        # per (shared value frame, class): N shapes asserting the same class
-        # over the same (targets, path) — common in wide shape sets — share
-        # one persisted anti-join instead of N scans of the value frame.
-        cls = c.param_value
-        shared = self._cached_values_ids.get(id(values)) is values
-        key = (id(values), cls.encoded())
-        hit = self._class_fail_cache.get(key) if shared else None
-        if hit is not None and hit[0] is values:
-            fail = hit[1]
-        else:
-            instances = self.class_instances_df(cls, "node").select("node")
-            fail = values.join(
-                F.broadcast(instances), values["value"] == instances["node"], "left_anti"
-            )
-            if shared and self.persist_values:
-                fail = fail.persist()
-                self._class_fail_cache[key] = (values, fail)
-        return self._rows(fail, shape, c.component.iri)
-
 # --------------------------------------------------------------------------
 # Constraint implementations (module-level for a flat dispatch table).
 # --------------------------------------------------------------------------
 
 def _impl_class(eng: Engine, shape, c, targets, values):
-    return eng._class(shape, c, targets, values)
+    # validateClass (dash.js:27-29): instance-of incl. data-graph subclass
+    # closure — broadcast-joined type closure.  The FAIL frame is memoized
+    # per (shared value frame, class): N shapes asserting the same class
+    # over the same (targets, path) — common in wide shape sets — share
+    # one anti-join instead of N scans of the value frame.
+    cls = c.param_value
+
+    def build():
+        instances = eng.class_instances_df(cls, "node").select("node")
+        return values.join(
+            F.broadcast(instances), values["value"] == instances["node"], "left_anti"
+        )
+
+    fail = eng._memo(eng._key("class_fail", values, cls), build)
+    return eng._rows(fail, shape, c.component.iri)
 
 
 def _cond_datatype(eng, shape, c):
@@ -1244,42 +1199,36 @@ def _impl_hasvaluewithclass(eng, shape, c, targets, values):
     return eng._rows(fail, shape, c.component.iri, with_value=False)
 
 
-def _count_frame(eng, targets: DataFrame, values: DataFrame) -> DataFrame:
-    """(focus5, _cnt) per target.  MEMOIZED per (targets, values) identity
-    when the focus frame came from the engine's target cache: minCount and
-    maxCount shapes sharing (targets, path) — e.g. "at least 1" and "at
-    most 1" over the same property across a wide shape set — reuse one
-    persisted aggregation instead of re-shuffling the value frame each."""
-    memoizable = eng._cached_target_ids.get(id(targets)) is targets
-    key = (id(targets), id(values))
-    if memoizable:
-        hit = eng._counts_cache.get(key)
-        if hit is not None and hit[0] is targets and hit[1] is values:
-            return hit[2]
-    src = getattr(values, "_graft_count_src", None)
-    if src is not None and src[0] is targets:
-        # r6 "aggregate before you shuffle": the value frame is
-        # targets ⋈ trips(pred), so per-focus value counts equal the
-        # per-subject row counts of the filtered triple side — aggregate
-        # that side directly (map-side partial agg over the narrow (p, s)
-        # projection) and left-join targets once, skipping the wide
-        # values SortMergeJoin entirely.  Join-multiplicity parity: values
-        # rows per focus == trips rows with t_s == focus, and `value` (the
-        # triple object) is never null, so count("value") == count(*).
-        counts = (
-            eng.data.filter(F.col("p") == src[1])
-            .groupBy(F.col("s").alias("focus"))
-            .agg(F.count("*").alias("_cnt"))
+def _count_frame(eng, targets: DataFrame, values: DataFrame, path: Path | None) -> DataFrame:
+    """(focus5, _cnt) per target, where `values` is the value frame of
+    `path` over `targets`.  MEMOIZED per (targets, path): minCount and
+    maxCount shapes sharing them — e.g. "at least 1" and "at most 1" over
+    the same property across a wide shape set — reuse one aggregation
+    instead of re-shuffling the value frame each."""
+
+    def build():
+        if path is not None and path.is_simple_pred:
+            # r6 "aggregate before you shuffle": the value frame is
+            # targets ⋈ trips(pred), so per-focus value counts equal the
+            # per-subject row counts of the filtered triple side — aggregate
+            # that side directly (map-side partial agg over the narrow
+            # (p, s) projection) and left-join targets once, skipping the
+            # wide values SortMergeJoin entirely.  Join-multiplicity parity:
+            # values rows per focus == trips rows with t_s == focus, and
+            # `value` (the triple object) is never null, so count("value")
+            # == count(*).
+            counts = (
+                eng.data.filter(F.col("p") == f"<{path.pred}>")
+                .groupBy(F.col("s").alias("focus"))
+                .agg(F.count("*").alias("_cnt"))
+            )
+        else:
+            counts = values.groupBy("focus").agg(F.count("value").alias("_cnt"))
+        return targets.join(counts, "focus", "left").withColumn(
+            "_cnt", F.coalesce(F.col("_cnt"), F.lit(0))
         )
-    else:
-        counts = values.groupBy("focus").agg(F.count("value").alias("_cnt"))
-    out = targets.join(counts, "focus", "left").withColumn(
-        "_cnt", F.coalesce(F.col("_cnt"), F.lit(0))
-    )
-    if memoizable and eng.persist_values:
-        out = out.persist()
-        eng._counts_cache[key] = (targets, values, out)
-    return out
+
+    return eng._memo(eng._key("counts", targets, path), build)
 
 
 def _impl_uniquelang(eng, shape, c, targets, values):
@@ -1532,7 +1481,7 @@ def _impl_primarykey(eng, shape, c, targets, values):
     # exact message strings; encodeURIComponent parity stays JVM-side
     # (vectorized url_encode + finite fix-ups, no Python in the path).
     uri_start = c.param_value.value
-    cnt = _count_frame(eng, targets, values)
+    cnt = _count_frame(eng, targets, values, shape.path)
     first_val = values.groupBy("focus").agg(F.min("value_v").alias("_val"))
     frame = cnt.join(first_val, "focus", "left")
     expected = F.concat(F.lit(uri_start), _encode_uri_component(F.col("_val")))

@@ -2,12 +2,23 @@
 through the Spark engine (ref: test/integration_tests.js)."""
 
 import glob
+import os
 
 import pytest
 
 from shacl_js_spark.conformance import compare_reports, run_fixture
 
-CORE = sorted(glob.glob("/root/reference/test/data/core/**/*.ttl", recursive=True))
+# the shacl-js source checkout, kept next to this repository
+REF = os.path.normpath(
+    os.path.join(os.path.dirname(os.path.abspath(__file__)), os.pardir, os.pardir, "reference")
+)
+CORE = sorted(glob.glob(os.path.join(REF, "test/data/core/**/*.ttl"), recursive=True))
+if not CORE:
+    pytest.skip(
+        f"no shacl-js golden fixtures under {REF}/test/data/core (the shacl-js "
+        "checkout is not next to this repository)",
+        allow_module_level=True,
+    )
 
 
 @pytest.mark.parametrize("path", CORE, ids=lambda p: "/".join(p.split("/")[-2:]))

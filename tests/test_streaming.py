@@ -292,12 +292,13 @@ def test_engine_memoizes_targets_values_and_counts(spark):
     report = eng.validate()
     focus = sorted(r.focusNode() for r in report.results())
     assert focus == ["http://e/b", "http://e/c"]  # b: maxCount, c: minCount
-    assert len(eng._targets_cache) == 1           # one spec, one frame
+    kinds = [key[0] for key in eng._frames]
+    assert kinds.count("targets") == 1            # one spec, one frame
     # property shapes walk the same (targets, path): one shared value frame
     # and one shared count frame between the minCount and maxCount branches
-    assert len(eng._counts_cache) == 1
-    cached = list(eng._targets_cache.values())[0]
-    assert cached.is_cached
+    assert kinds.count("counts") == 1
+    frames = list(eng._frames.values())
+    assert all(df.is_cached for df in frames)
     eng.release()
-    assert not cached.is_cached
-    assert not eng._targets_cache and not eng._counts_cache and not eng._values_cache
+    assert not any(df.is_cached for df in frames)
+    assert not eng._frames

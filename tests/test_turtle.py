@@ -1,12 +1,21 @@
 import glob
+import os
+
+import pytest
 
 from shacl_js_spark.localgraph import LocalGraph
 from shacl_js_spark.terms import XSD_BOOLEAN, iri, literal
 from shacl_js_spark.turtle import parse_turtle
 
-FIXTURES = sorted(glob.glob("/root/reference/test/data/**/*.ttl", recursive=True))
+# the shacl-js source checkout, kept next to this repository
+REF = os.path.normpath(
+    os.path.join(os.path.dirname(os.path.abspath(__file__)), os.pardir, os.pardir, "reference")
+)
+FIXTURES = sorted(glob.glob(os.path.join(REF, "test/data/**/*.ttl"), recursive=True))
+MINCOUNT_001 = os.path.join(REF, "test/data/core/property/minCount-001.test.ttl")
 
 
+@pytest.mark.skipif(not FIXTURES, reason=f"no shacl-js fixtures under {REF}/test/data")
 def test_all_reference_fixtures_parse():
     assert len(FIXTURES) == 85
     for f in FIXTURES:
@@ -14,10 +23,9 @@ def test_all_reference_fixtures_parse():
         assert triples, f
 
 
+@pytest.mark.skipif(not os.path.exists(MINCOUNT_001), reason=f"{MINCOUNT_001} not found")
 def test_exact_triple_count_mincount001():
-    t, _ = parse_turtle(
-        open("/root/reference/test/data/core/property/minCount-001.test.ttl").read()
-    )
+    t, _ = parse_turtle(open(MINCOUNT_001).read())
     assert len(t) == 29
 
 

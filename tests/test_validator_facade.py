@@ -619,11 +619,83 @@ def test_class_fail_frame_memoized_across_shapes(spark):
         ("http://e/x", "http://www.w3.org/ns/shacl#Violation"),
         ("http://e/x", "http://www.w3.org/ns/shacl#Warning"),
     ]
-    assert len(eng._class_fail_cache) == 1  # one (value frame, class) entry
-    cached = next(iter(eng._class_fail_cache.values()))[1]
-    assert cached.is_cached
+    fails = [df for key, df in eng._frames.items() if key[0] == "class_fail"]
+    assert len(fails) == 1  # one (value frame, class) entry
+    assert fails[0].is_cached
     eng.release()
-    assert not cached.is_cached and not eng._class_fail_cache
+    assert not fails[0].is_cached and not eng._frames
+
+
+def test_count_aggregates_triple_side_below_target_join(spark):
+    # a minCount over a simple predicate counts values by aggregating the
+    # filtered triple side per subject, then left-joins the targets once:
+    # the optimized plan has no path (value) join, only targets ⟕ counts
+    from shacl_js_spark.graph import turtle_df
+    from shacl_js_spark.localgraph import LocalGraph
+    from shacl_js_spark.validation import Engine
+
+    data = turtle_df(spark, """
+    @prefix ex: <http://e/> .
+    ex:a a ex:T ; ex:p "x" .
+    ex:b a ex:T .
+    """)
+    shapes = LocalGraph.from_turtle("""
+    @prefix sh: <http://www.w3.org/ns/shacl#> .
+    @prefix ex: <http://e/> .
+    ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+      sh:property [ sh:path ex:p ; sh:minCount 1 ] .
+    """)
+    report = Engine(spark, data, shapes, persist_values=False).report_df()
+    plan = report._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    joins = [line for line in plan if "Join " in line]
+    assert len(joins) == 1 and "LeftOuter" in joins[0], "\n".join(plan)
+    agg = [i for i, line in enumerate(plan) if "Aggregate " in line and "_cnt" in line]
+    assert len(agg) == 1, "\n".join(plan)
+    # tree strings list children below their parent: the count Aggregate's
+    # subtree is the (s)-projection of the ex:p-filtered triple scan
+    below = [line.lstrip(" :+-") for line in plan[agg[0] + 1:agg[0] + 4]]
+    assert below[0].startswith("Project "), "\n".join(plan)
+    assert below[1].startswith("Filter ") and "<http://e/p>" in below[1], "\n".join(plan)
+    assert below[2].startswith("LogicalRDD "), "\n".join(plan)
+    assert [r["focus_v"] for r in report.collect()] == ["http://e/b"]
+
+
+def test_persist_values_changes_only_persistence(spark):
+    # persist_values=False memoizes the same frames without pinning them;
+    # the report rows are identical to the default (persisting) engine's
+    from shacl_js_spark.graph import turtle_df
+    from shacl_js_spark.localgraph import LocalGraph
+    from shacl_js_spark.validation import Engine
+
+    data = turtle_df(spark, """
+    @prefix ex: <http://e/> .
+    ex:d1 a ex:Doc ; ex:ref ex:e1 , ex:x ; ex:title "a" .
+    ex:d2 a ex:Doc ; ex:ref ex:e1 .
+    ex:d3 a ex:Doc .
+    ex:e1 a ex:Entity .
+    """)
+    shapes = LocalGraph.from_turtle("""
+    @prefix sh: <http://www.w3.org/ns/shacl#> .
+    @prefix ex: <http://e/> .
+    ex:A a sh:NodeShape ; sh:targetClass ex:Doc ;
+      sh:property [ sh:path ex:ref ; sh:class ex:Entity ; sh:minCount 1 ] .
+    ex:B a sh:NodeShape ; sh:targetClass ex:Doc ;
+      sh:property [ sh:path ex:ref ; sh:maxCount 1 ; sh:nodeKind sh:IRI ;
+                    sh:severity sh:Warning ] .
+    """)
+
+    def rows(eng):
+        return sorted((tuple(r) for r in eng.report_df().collect()), key=repr)
+
+    persisted = Engine(spark, data, shapes)
+    expected = rows(persisted)
+    persisted.release()
+    assert len(expected) == 3  # d1 ex:x class, d1 maxCount, d3 minCount
+    eng = Engine(spark, data, shapes, persist_values=False)
+    assert rows(eng) == expected
+    kinds = {key[0] for key in eng._frames}
+    assert {"targets", "values", "candidates", "counts", "class_fail"} <= kinds
+    assert not any(df.is_cached for df in eng._frames.values())
 
 
 def test_resolve_iri_fully_collapsed_path_keeps_slash():
