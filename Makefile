@@ -35,10 +35,11 @@ submit-smoke: dist
 gate:
 	python scripts/check_oracle.py $(SF_DIR) 2>&1 | grep -v -E "WARN|FutureWarning|serializers.py" | tee BENCH/full_gate_$(ROUND).log
 
-# SHACL subset of the gate: every shacl_* query against its independent
-# DuckDB reference (covers all built-in constraint components)
+# SHACL subset of the gate: every shacl_* and dash_* query against its
+# independent DuckDB reference (covers every Engine-backed constraint
+# component, built-in and DASH)
 gate-shacl:
-	python scripts/check_oracle.py $(SF_DIR) 'shacl_*' 2>&1 | grep -v -E "WARN|FutureWarning|serializers.py"
+	python scripts/check_oracle.py $(SF_DIR) 'shacl_*' 'dash_*' 2>&1 | grep -v -E "WARN|FutureWarning|serializers.py"
 
 bench:
 	python bench.py 2>&1 | tail -1 | tee BENCH/bench_$(ROUND).json

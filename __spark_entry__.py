@@ -245,7 +245,6 @@ def _shacl_violations(spark, sf_dir, shapes_ttl: str) -> DataFrame:
     engine = Engine(
         spark, data, LocalGraph.from_turtle(shapes_ttl),
         subclass_edges={f"<{EX}BigCustomer>": [f"<{EX}VIP>"]},
-        persist_values=False,  # one-shot report: frames are read <=2x (r6)
     )
     return engine.report_df()
 
@@ -369,8 +368,7 @@ ex:LineShape a sh:NodeShape ; sh:targetClass ex:Line ;
 """
     # this graph has no rdfs:subClassOf edges — say so, instead of having
     # the engine scan+collect to discover it
-    engine = Engine(spark, data, LocalGraph.from_turtle(ttl), subclass_edges={},
-                    persist_values=False)
+    engine = Engine(spark, data, LocalGraph.from_turtle(ttl), subclass_edges={})
     return engine.report_df().select(
         F.col("focus_v").alias("line"), F.col("value_v").alias("qty_lex")
     )
@@ -510,8 +508,7 @@ def _tag_triples(spark, sf_dir) -> DataFrame:
 
 def _tag_violations(spark, sf_dir, ttl_body: str) -> DataFrame:
     data = _cached_triples("tag_triples", spark, sf_dir, lambda: _tag_triples(spark, sf_dir))
-    return Engine(spark, data, LocalGraph.from_turtle(_SHAPES_PREFIX + ttl_body),
-                  persist_values=False).report_df()
+    return Engine(spark, data, LocalGraph.from_turtle(_SHAPES_PREFIX + ttl_body)).report_df()
 
 
 def q_shacl_equals(spark, sf_dir):
@@ -583,8 +580,7 @@ def q_shacl_nodekind(spark, sf_dir):
 ex:OrderShape a sh:NodeShape ; sh:targetClass ex:Order ;
   sh:property [ sh:path ex:ref ; sh:nodeKind sh:IRI ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl),
-               persist_values=False).report_df()
+    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"), F.col("value_v").alias("value"))
 
 
@@ -627,8 +623,7 @@ def q_shacl_lessthan(spark, sf_dir):
 ex:LineShape a sh:NodeShape ; sh:targetClass ex:Line ;
   sh:property [ sh:path ex:qty ; sh:lessThan ex:tax ] .
 """
-    v = Engine(spark, data, LocalGraph.from_turtle(ttl), subclass_edges={},
-               persist_values=False).report_df()
+    v = Engine(spark, data, LocalGraph.from_turtle(ttl), subclass_edges={}).report_df()
     return v.select(F.col("focus_v").alias("line"), F.col("value_v").alias("qty_lex"))
 
 
@@ -643,8 +638,7 @@ def q_shacl_lessthanorequals(spark, sf_dir):
 ex:LineShape a sh:NodeShape ; sh:targetClass ex:Line ;
   sh:property [ sh:path ex:qty ; sh:lessThanOrEquals ex:tax ] .
 """
-    v = Engine(spark, data, LocalGraph.from_turtle(ttl), subclass_edges={},
-               persist_values=False).report_df()
+    v = Engine(spark, data, LocalGraph.from_turtle(ttl), subclass_edges={}).report_df()
     return v.select(F.col("focus_v").alias("line"), F.col("value_v").alias("qty_lex"))
 
 
@@ -671,8 +665,7 @@ def q_shacl_datatype(spark, sf_dir):
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:bal ; sh:datatype xsd:integer ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl),
-               persist_values=False).report_df()
+    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"), F.col("value_v").alias("value"))
 
 
@@ -756,8 +749,7 @@ def q_dash_coexistswith(spark, sf_dir):
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:order ; dash:coExistsWith ex:nick ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl),
-               persist_values=False).report_df()
+    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"))
 
 
@@ -769,8 +761,7 @@ def q_dash_subsetof(spark, sf_dir):
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:tag2 ; dash:subSetOf ex:tag1 ] .
 """
-    v = Engine(spark, data, LocalGraph.from_turtle(ttl),
-               persist_values=False).report_df()
+    v = Engine(spark, data, LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"), F.col("value_v").alias("value"))
 
 
@@ -848,8 +839,7 @@ def q_dash_nonrecursive(spark, sf_dir):
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:knows ; dash:nonRecursive true ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl),
-               persist_values=False).report_df()
+    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"))
 
 
@@ -876,8 +866,7 @@ def q_dash_hasvaluewithclass(spark, sf_dir):
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:order ; dash:hasValueWithClass ex:BigOrder ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl),
-               persist_values=False).report_df()
+    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"))
 
 
@@ -903,8 +892,7 @@ def q_dash_uniquevalueforclass(spark, sf_dir):
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:phone ; dash:uniqueValueForClass ex:Customer ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl),
-               persist_values=False).report_df()
+    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"), F.col("value_v").alias("value"))
 
 

@@ -133,8 +133,8 @@ def main() -> None:
         engine.report_df().write.mode("overwrite").parquet(report_dir)
         wall = time.time() - t0
         n_viol = spark.read.parquet(report_dir).count()  # untimed readback
-        # free this engine's memoized target/value frames before the next
-        # shape count runs, so earlier engines' caches can't distort it
+        # drop this engine's frame memo (plan references only; the engine
+        # never persists) before the next shape count builds its own
         engine.release()
         return {
             "wall_sec": round(wall, 2), "violations": n_viol,

@@ -2,8 +2,9 @@
 iterative hash-partitioned min-label propagation (north rule).
 
 Alias edges here: entities that share a surface form (the `_a`/`_b` candidate
-split of the lexicon), i.e. (ent_x_a, ent_x_b) — plus any extra edges the
-caller supplies (e.g. cross-surface sameAs evidence).
+split of the lexicon), i.e. (ent_x_a, ent_x_b).  Other evidence (e.g.
+cross-surface sameAs edges) is passed to connected_components as a
+DataFrame.
 
 Algorithm (the standard DataFrame CC skeleton, same family as
 large-star/small-star):
@@ -36,42 +37,37 @@ from ..graph import cut_lineage
 from .synth import ENTITY_LEXICON
 
 
-def alias_edges(spark: SparkSession, extra: DataFrame | None = None) -> DataFrame:
-    """(src, dst) undirected alias evidence from the lexicon candidate groups."""
+def alias_edges(spark: SparkSession) -> list[tuple[str, str]]:
+    """(src, dst) undirected alias evidence from the lexicon candidate groups,
+    as a deduplicated driver-side list.  It stays a list: wrapping it in a
+    DataFrame would cost connected_components a Spark job to collect it back
+    (a PySpark local-list DataFrame is RDD-backed — even collecting 25 rows
+    launches a many-partition pickle job, ~0.7 s of fixed latency).  `spark`
+    is unused; existing callers pass it."""
     rows = []
     for surface, cands in ENTITY_LEXICON.items():
         ids = [c[0] for c in cands]
         for a, b in zip(ids, ids[1:]):
             rows.append((a, b))
-    # dedup the driver-built list in Python: a .distinct() here costs a full
-    # Spark shuffle job (ca. 0.3 s of fixed latency per pipeline run) to
-    # dedup a lexicon-sized list that is already in driver memory
-    local = list(dict.fromkeys(rows))
-    edges = spark.createDataFrame(local, "src string, dst string")
-    if extra is not None:
-        # caller-supplied evidence is distributed and of unknown size — the
-        # set-semantics dedup must stay in Spark on this path
-        edges = edges.unionByName(extra).distinct()
-    else:
-        # the rows are driver-born: carry them on the frame so
-        # connected_components can skip the collect round-trip (a PySpark
-        # local-list DataFrame is RDD-backed — even collecting 25 rows
-        # launches a many-partition pickle job, ~0.7 s of fixed latency)
-        edges._graft_local_rows = local
-    return edges
+    # dedup in Python: a .distinct() costs a full Spark shuffle job to dedup
+    # a lexicon-sized list that is already in driver memory
+    return list(dict.fromkeys(rows))
 
 
 def connected_components(
-    spark: SparkSession, edges: DataFrame, max_iter: int = 25,
+    spark: SparkSession, edges: DataFrame | list[tuple[str, str]], max_iter: int = 25,
     driver_threshold: int = 1_000_000,
 ) -> DataFrame:
     """-> (entity_id, canonical_id) with canonical_id = min member id.
 
-    Alias-evidence graphs are usually entity-universe-sized (≪ corpus); when
-    the edge list fits comfortably on the driver, a union-find there beats
-    paying ~2 Spark jobs per propagation round.  Past `driver_threshold`
-    edges the distributed min-label fixpoint below takes over (the path a
-    10^12-doc corpus with mined sameAs edges would exercise)."""
+    `edges` is a (src, dst) DataFrame or a driver-side list of (src, dst)
+    pairs.  A list is already on the driver and goes straight to the
+    union-find, with no Spark job.  Alias-evidence graphs are usually
+    entity-universe-sized (≪ corpus); when a DataFrame's edge list fits
+    comfortably on the driver, a union-find there beats paying ~2 Spark jobs
+    per propagation round.  Past `driver_threshold` edges the distributed
+    min-label fixpoint below takes over (the path a 10^12-doc corpus with
+    mined sameAs edges would exercise)."""
     if max_iter < 1:
         # with no propagation round the function would silently return
         # identity labels, skipping the non-convergence verifier entirely
@@ -80,14 +76,11 @@ def connected_components(
     # + a collect job): limit(threshold) bounds the driver transfer exactly
     # like the old count did — len(rows) == threshold means "at least
     # threshold edges", taking the distributed path with rows discarded.
-    # Driver-born edge frames (alias_edges without extra evidence) carry
-    # their rows and skip the Spark round-trip entirely.
-    local = getattr(edges, "_graft_local_rows", None)
-    if local is not None:
-        rows = local[:driver_threshold]
+    if isinstance(edges, list):
+        rows = edges
     else:
         rows = edges.limit(driver_threshold).collect() if driver_threshold > 0 else []
-    if len(rows) < driver_threshold:
+    if isinstance(edges, list) or len(rows) < driver_threshold:
         parent: dict[str, str] = {}
 
         def find(x: str) -> str:

@@ -154,13 +154,10 @@ class IncrementalValidator:
             v = engine.shape_violations(shape, targets).select(*VIOL_COLS)
             out = v if out is None else out.unionByName(v)
         if out is None:
-            engine.release()
             return
-        new_rows = (
-            out.withColumn("_batch", F.lit(batch_id))
-            .withColumn("bucket", self._bucket(F.col("bubble")))
-            .persist()
-        )
+        # only the staged write reads new_rows; reval is read twice (the
+        # bucket collect below and the upsert's anti-join), so it is pinned
+        new_rows = out.withColumn("bucket", self._bucket(F.col("bubble")))
         reval = (
             revalidated.dropDuplicates(["focus"])
             .withColumnRenamed("focus", "bubble")
@@ -176,9 +173,7 @@ class IncrementalValidator:
         )
 
         if not affected:  # batch touched no target of any shape
-            new_rows.unpersist()
             reval.unpersist()
-            engine.release()
             return
 
         # upsert only the affected buckets: read them (partition-pruned),
@@ -191,8 +186,11 @@ class IncrementalValidator:
                 if any(os.path.isdir(f"{self.report_dir}/bucket={b}") for b in affected)
                 else None
             )
+            # select: buckets written before the _batch column was retired
+            # still carry it, and the union below matches columns by name
             kept = (
-                prev.join(reval.select("bubble"), "bubble", "left_anti")
+                prev.select(*VIOL_COLS, "bucket")
+                .join(reval.select("bubble"), "bubble", "left_anti")
                 if prev is not None
                 else None
             )
@@ -221,11 +219,7 @@ class IncrementalValidator:
             if os.path.isdir(aside):
                 shutil.rmtree(aside)
         shutil.rmtree(staging, ignore_errors=True)
-        new_rows.unpersist()
         reval.unpersist()
-        # one engine per batch: release its memoized target/value frames
-        # eagerly instead of waiting for the context cleaner
-        engine.release()
 
     # -- stream wiring ---------------------------------------------------
     def start(self, stream_df: DataFrame, checkpoint_dir: str, trigger_available_now: bool = True):
@@ -248,4 +242,6 @@ class IncrementalValidator:
                 [StructField(c, StringType(), True) for c in VIOL_COLS]
             )
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(self.report_dir).drop("bucket")
+        # select, not drop("bucket"): stores written before the _batch
+        # column was retired still carry it
+        return self.spark.read.parquet(self.report_dir).select(*VIOL_COLS)

@@ -228,7 +228,6 @@ class Engine:
         shapes: LocalGraph,
         registry=None,
         error_batch: int = -1,
-        persist_values: bool = True,
         subclass_edges: dict | None = None,
         max_driver_results: int = 100_000,
         max_shape_recursion: int = 25,
@@ -241,7 +240,6 @@ class Engine:
         self.error_batch = error_batch
         self.max_driver_results = max_driver_results
         self.max_shape_recursion = max_shape_recursion
-        self.persist_values = persist_values
         # parent enc -> child encs; callers that already hold the graph
         # driver-side (fixture harness) can pass the edges to skip a collect
         self._sub_children: dict[str, list[str]] | None = subclass_edges
@@ -259,29 +257,25 @@ class Engine:
         self._keys: dict[int, tuple] = {}
 
     def release(self) -> None:
-        """Unpersist the engine's memoized frames.  Optional — dropped
-        references are eventually cleaned by Spark's context cleaner — but
-        long-lived processes creating many engines (e.g. a streaming
-        re-validator, one engine per batch) should release eagerly rather
-        than wait for GC."""
-        for df in self._frames.values():
-            df.unpersist()
+        """Empty the engine's frame memo.  The memo never persists, so this
+        only drops driver-side plan references; a long-lived process that
+        keeps one engine across many reports can call it between them."""
         self._frames.clear()
         self._keys.clear()
 
     def _memo(self, key: tuple | None, build) -> DataFrame:
-        """The frame named by `key`, built once per engine and persisted
-        when persist_values is set.  key None (a frame derived from one the
-        engine did not hand out, e.g. a recursion-level focus frame from
-        nonconforming) builds a fresh, unpinned frame: those identities
-        never recur, and pinning them would hold dead frames per level."""
+        """The frame named by `key`, built once per engine.  Never
+        persisted: a report is read by one action, and Spark's exchange
+        reuse already shares the memo's identical sub-plans within it.  key
+        None (a frame derived from one the engine did not hand out, e.g. a
+        recursion-level focus frame from nonconforming) builds a fresh
+        frame: those identities never recur, and memoizing them would hold
+        dead frames per level."""
         if key is None:
             return build()
         df = self._frames.get(key)
         if df is None:
             df = build()
-            if self.persist_values:
-                df = df.persist()
             self._frames[key] = df
             self._keys[id(df)] = key
         return df
@@ -660,13 +654,9 @@ class Engine:
         try:
             # value-frame memo: shapes sharing (focus frame, path) reuse one
             # path join, but only over focus frames the engine handed out
-            # (memoized targets and candidates).  Several constraint
-            # branches consume the same value frame, so an un-keyed frame
-            # is persisted when more than one constraint reads it.
+            # (memoized targets and candidates).
             key = self._key("values", focus_df, shape.path)
             values = self._memo(key, lambda: self.values_frame(shape, focus_df))
-            if key is None and len(shape.constraints) > 1 and self.persist_values:
-                values = values.persist()
             row_checks, count_checks, rest = self._split_checks(shape)
             sink = pool if pool is not None else _FusePool()
             if row_checks:

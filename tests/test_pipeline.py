@@ -135,6 +135,13 @@ def test_connected_components_vs_union_find(spark):
         for r in connected_components(spark, df, driver_threshold=0).collect()
     }
     assert got == got_dist
+    # a driver-side edge list (what alias_edges returns) takes the same
+    # union-find as a collected frame
+    got_list = {
+        (r["entity_id"], r["canonical_id"])
+        for r in connected_components(spark, edges).collect()
+    }
+    assert got == got_list
     # union-find oracle
     parent = {}
     def find(x):

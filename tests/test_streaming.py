@@ -1,6 +1,7 @@
 """Structured Streaming: incremental re-validation + watermarked windows."""
 
 import os
+import shutil
 
 from shacl_js_spark.graph import TRIPLE_SCHEMA, triples_df
 from shacl_js_spark.localgraph import LocalGraph
@@ -42,6 +43,31 @@ def test_incremental_validation_batches(spark, tmp_path):
     iv.process_batch(_batch_df(spark, BATCH2), 1)
     r2 = {row["focus_v"] for row in iv.report().collect()}
     assert r2 == {"http://e/c"}
+
+
+def test_incremental_report_columns_fixed(spark, tmp_path):
+    # report() has one schema whatever the store holds: exactly the
+    # violation record columns, before and after the first batch
+    from shacl_js_spark.validation import VIOL_COLS
+
+    iv = IncrementalValidator(spark, LocalGraph.from_turtle(SHAPES), str(tmp_path / "cols"))
+    before = iv.report().columns
+    iv.process_batch(_batch_df(spark, BATCH1), 0)
+    after = iv.report()
+    assert before == after.columns == list(VIOL_COLS)
+    assert after.count() == 1
+    # a store whose rows still carry the retired _batch column reads with
+    # the same columns, and a batch upserts into it
+    from pyspark.sql import functions as F
+
+    old = iv.report_dir + "-old-layout"
+    (spark.read.parquet(iv.report_dir).withColumn("_batch", F.lit(0))
+     .write.partitionBy("bucket").parquet(old))
+    shutil.rmtree(iv.report_dir)
+    os.rename(old, iv.report_dir)
+    assert iv.report().columns == list(VIOL_COLS)
+    iv.process_batch(_batch_df(spark, BATCH2), 1)
+    assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/c"}
 
 
 NESTED_SHAPES = """
@@ -270,7 +296,8 @@ def test_incremental_staging_sweep_only_at_batch_start(spark, tmp_path):
 def test_engine_memoizes_targets_values_and_counts(spark):
     # shapes sharing a target class must reuse ONE focus frame; shapes
     # sharing (targets, path) one value frame; minCount+maxCount over the
-    # same (targets, path) one count frame — and release() drops them all
+    # same (targets, path) one count frame.  The memo holds plans, never
+    # caches, and release() empties it
     from shacl_js_spark.validation import Engine
     from shacl_js_spark.graph import turtle_df
 
@@ -281,10 +308,12 @@ def test_engine_memoizes_targets_values_and_counts(spark):
       sh:property [ sh:path ex:name ; sh:minCount 1 ] .
     ex:S2 a sh:NodeShape ; sh:targetClass ex:Person ;
       sh:property [ sh:path ex:name ; sh:maxCount 1 ] .
+    ex:S3 a sh:NodeShape ; sh:targetClass ex:Person ;
+      sh:property [ sh:path ex:knows ; sh:class ex:Person ] .
     """)
     data = turtle_df(spark, """
     @prefix ex: <http://e/> .
-    ex:a a ex:Person ; ex:name "x" .
+    ex:a a ex:Person ; ex:name "x" ; ex:knows ex:b .
     ex:b a ex:Person ; ex:name "y", "z" .
     ex:c a ex:Person .
     """)
@@ -293,12 +322,11 @@ def test_engine_memoizes_targets_values_and_counts(spark):
     focus = sorted(r.focusNode() for r in report.results())
     assert focus == ["http://e/b", "http://e/c"]  # b: maxCount, c: minCount
     kinds = [key[0] for key in eng._frames]
+    assert {"targets", "values", "candidates", "counts", "class_fail"} <= set(kinds)
     assert kinds.count("targets") == 1            # one spec, one frame
     # property shapes walk the same (targets, path): one shared value frame
     # and one shared count frame between the minCount and maxCount branches
     assert kinds.count("counts") == 1
-    frames = list(eng._frames.values())
-    assert all(df.is_cached for df in frames)
+    assert not any(df.is_cached for df in eng._frames.values())
     eng.release()
-    assert not any(df.is_cached for df in frames)
     assert not eng._frames

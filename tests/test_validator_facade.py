@@ -578,7 +578,7 @@ def test_single_check_filter_pushed_below_path_join(spark):
     ex:S a sh:NodeShape ; sh:targetClass ex:T ;
       sh:property [ sh:path ex:p ; sh:maxLength 3 ] .
     """)
-    report = Engine(spark, data, shapes, persist_values=False).report_df()
+    report = Engine(spark, data, shapes).report_df()
     plan = report._jdf.queryExecution().optimizedPlan().toString().splitlines()
     joins = [i for i, line in enumerate(plan) if "Join " in line]
     fails = [i for i, line in enumerate(plan) if "Filter " in line and "length(" in line]
@@ -592,7 +592,7 @@ def test_single_check_filter_pushed_below_path_join(spark):
 
 def test_class_fail_frame_memoized_across_shapes(spark):
     # N shapes asserting the same sh:class over the same (targets, path)
-    # share ONE persisted anti-join fail frame; release() drops it
+    # share ONE anti-join fail frame, never cached; release() drops it
     from shacl_js_spark.graph import turtle_df
     from shacl_js_spark.localgraph import LocalGraph
     from shacl_js_spark.validation import Engine
@@ -621,9 +621,9 @@ def test_class_fail_frame_memoized_across_shapes(spark):
     ]
     fails = [df for key, df in eng._frames.items() if key[0] == "class_fail"]
     assert len(fails) == 1  # one (value frame, class) entry
-    assert fails[0].is_cached
+    assert not fails[0].is_cached
     eng.release()
-    assert not fails[0].is_cached and not eng._frames
+    assert not eng._frames
 
 
 def test_count_aggregates_triple_side_below_target_join(spark):
@@ -645,7 +645,7 @@ def test_count_aggregates_triple_side_below_target_join(spark):
     ex:S a sh:NodeShape ; sh:targetClass ex:T ;
       sh:property [ sh:path ex:p ; sh:minCount 1 ] .
     """)
-    report = Engine(spark, data, shapes, persist_values=False).report_df()
+    report = Engine(spark, data, shapes).report_df()
     plan = report._jdf.queryExecution().optimizedPlan().toString().splitlines()
     joins = [line for line in plan if "Join " in line]
     assert len(joins) == 1 and "LeftOuter" in joins[0], "\n".join(plan)
@@ -660,9 +660,11 @@ def test_count_aggregates_triple_side_below_target_join(spark):
     assert [r["focus_v"] for r in report.collect()] == ["http://e/b"]
 
 
-def test_persist_values_changes_only_persistence(spark):
-    # persist_values=False memoizes the same frames without pinning them;
-    # the report rows are identical to the default (persisting) engine's
+def test_default_report_plan_reads_no_cache(spark):
+    # the engine never persists: a default report's optimized plan reads
+    # the triples and nothing cached, for keyed frames (targets, values,
+    # candidates, counts, class_fail) and for the un-keyed value frame of a
+    # multi-constraint sh:node shape evaluated over a recursion-level focus
     from shacl_js_spark.graph import turtle_df
     from shacl_js_spark.localgraph import LocalGraph
     from shacl_js_spark.validation import Engine
@@ -672,7 +674,7 @@ def test_persist_values_changes_only_persistence(spark):
     ex:d1 a ex:Doc ; ex:ref ex:e1 , ex:x ; ex:title "a" .
     ex:d2 a ex:Doc ; ex:ref ex:e1 .
     ex:d3 a ex:Doc .
-    ex:e1 a ex:Entity .
+    ex:e1 a ex:Entity ; ex:label "e" .
     """)
     shapes = LocalGraph.from_turtle("""
     @prefix sh: <http://www.w3.org/ns/shacl#> .
@@ -680,22 +682,27 @@ def test_persist_values_changes_only_persistence(spark):
     ex:A a sh:NodeShape ; sh:targetClass ex:Doc ;
       sh:property [ sh:path ex:ref ; sh:class ex:Entity ; sh:minCount 1 ] .
     ex:B a sh:NodeShape ; sh:targetClass ex:Doc ;
-      sh:property [ sh:path ex:ref ; sh:maxCount 1 ; sh:nodeKind sh:IRI ;
-                    sh:severity sh:Warning ] .
+      sh:property [ sh:path ex:ref ; sh:maxCount 1 ; sh:node ex:Labelled ] .
+    ex:Labelled a sh:NodeShape ;
+      sh:property [ sh:path ex:label ; sh:minCount 1 ; sh:maxLength 5 ] .
     """)
-
-    def rows(eng):
-        return sorted((tuple(r) for r in eng.report_df().collect()), key=repr)
-
-    persisted = Engine(spark, data, shapes)
-    expected = rows(persisted)
-    persisted.release()
-    assert len(expected) == 3  # d1 ex:x class, d1 maxCount, d3 minCount
-    eng = Engine(spark, data, shapes, persist_values=False)
-    assert rows(eng) == expected
-    kinds = {key[0] for key in eng._frames}
-    assert {"targets", "values", "candidates", "counts", "class_fail"} <= kinds
+    eng = Engine(spark, data, shapes)
+    report = eng.report_df()
+    plan = report._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan, plan
     assert not any(df.is_cached for df in eng._frames.values())
+    # d1: ex:x fails sh:class and sh:node (no label), and d1 has 2 refs;
+    # d3 has no ref
+    got = sorted(
+        (r["focus_v"].rsplit("/", 1)[1], r["component"].rsplit("#", 1)[1])
+        for r in report.collect()
+    )
+    assert got == [
+        ("d1", "ClassConstraintComponent"),
+        ("d1", "MaxCountConstraintComponent"),
+        ("d1", "NodeConstraintComponent"),
+        ("d3", "MinCountConstraintComponent"),
+    ]
 
 
 def test_resolve_iri_fully_collapsed_path_keeps_slash():
