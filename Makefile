@@ -44,7 +44,10 @@ gate-shacl:
 bench:
 	python bench.py 2>&1 | tail -1 | tee BENCH/bench_$(ROUND).json
 
+# the tier-1 command of ROADMAP.md: the whole suite, run past failures and
+# collection errors, with one Spark core per host core
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 verify: gate bench

@@ -103,19 +103,6 @@ def _cached_input(name: str, spark: SparkSession, sf_dir: str, build) -> DataFra
     return df
 
 
-def _cached_triples(name: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    """Shared persisted triple-graph inputs.
-
-    r6: the r5 design additionally hash-partitioned the cache by subject so
-    downstream s-keyed joins could reuse the partitioning — but in this
-    Spark version a cached plan's outputPartitioning is NOT exposed to the
-    outer planner (AQE-planned InMemoryRelation), so every keyed join/agg
-    re-exchanges regardless (verified: groupBy on the exact cache key still
-    plans an Exchange).  The build-time s-shuffle of the widest frame in
-    each query family was therefore pure cost on the cold path; dropped."""
-    return _cached_input(name, spark, sf_dir, build)
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared interleaved-docs corpus (persisted once per sf_dir/session;
     feeds the kg_* stage queries and the flagship entry)."""
@@ -239,7 +226,7 @@ def _shacl_violations(spark, sf_dir, shapes_ttl: str) -> DataFrame:
     # them several times (target scan, per-constraint joins) and ~10 queries
     # share this exact graph; the class hierarchy is known statically here,
     # so pass it instead of collecting it from the data
-    data = _cached_triples(
+    data = _cached_input(
         "customer_triples", spark, sf_dir, lambda: _customer_triples(spark, sf_dir)
     )
     engine = Engine(
@@ -361,7 +348,7 @@ def _line_qty_report(spark, sf_dir, constraint: str) -> DataFrame:
 
     # the biggest derived graph in the suite (~2x lineitem rows) and shared
     # by four range queries: build+dedup once, persist s-partitioned
-    data = _cached_triples("line_qty_triples", spark, sf_dir, build)
+    data = _cached_input("line_qty_triples", spark, sf_dir, build)
     ttl = _SHAPES_PREFIX + f"""
 ex:LineShape a sh:NodeShape ; sh:targetClass ex:Line ;
   sh:property [ sh:path ex:qty ; {constraint} ] .
@@ -507,7 +494,7 @@ def _tag_triples(spark, sf_dir) -> DataFrame:
 
 
 def _tag_violations(spark, sf_dir, ttl_body: str) -> DataFrame:
-    data = _cached_triples("tag_triples", spark, sf_dir, lambda: _tag_triples(spark, sf_dir))
+    data = _cached_input("tag_triples", spark, sf_dir, lambda: _tag_triples(spark, sf_dir))
     return Engine(spark, data, LocalGraph.from_turtle(_SHAPES_PREFIX + ttl_body)).report_df()
 
 
@@ -614,7 +601,7 @@ def _line_qty_tax_triples(spark, sf_dir) -> DataFrame:
 
 
 def q_shacl_lessthan(spark, sf_dir):
-    data = _cached_triples(
+    data = _cached_input(
         "line_qty_tax_triples", spark, sf_dir,
         lambda: _line_qty_tax_triples(spark, sf_dir),
     )
@@ -630,7 +617,7 @@ ex:LineShape a sh:NodeShape ; sh:targetClass ex:Line ;
 def q_shacl_lessthanorequals(spark, sf_dir):
     # validateLessThanOrEqualsProperty (ref shared/dash.js:205-216): string
     # compare; violation when qty > tax lexically
-    data = _cached_triples(
+    data = _cached_input(
         "line_qty_tax_triples", spark, sf_dir,
         lambda: _line_qty_tax_triples(spark, sf_dir),
     )
@@ -756,7 +743,7 @@ ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
 def q_dash_subsetof(spark, sf_dir):
     # validateSubSetOf (ref shared/dash.js:373-375): every ex:tag2 value must
     # also be an ex:tag1 value of the same focus; tag2='NONE' iff acctbal<=0
-    data = _cached_triples("tag_triples", spark, sf_dir, lambda: _tag_triples(spark, sf_dir))
+    data = _cached_input("tag_triples", spark, sf_dir, lambda: _tag_triples(spark, sf_dir))
     ttl = _DASH_PREFIX + """
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:tag2 ; dash:subSetOf ex:tag1 ] .
@@ -902,7 +889,7 @@ def q_dash_functions(spark, sf_dir):
     # term-to-lexical scalar, tagged by which side produced the term.
     from shacl_js_spark.functions import all_objects, all_subjects, dash_to_string
 
-    data = _cached_triples("geo_triples", spark, sf_dir, lambda: _geo_triples(spark, sf_dir))
+    data = _cached_input("geo_triples", spark, sf_dir, lambda: _geo_triples(spark, sf_dir))
     objs = all_objects(data).select(
         dash_to_string("focus").alias("str"), F.lit("object").alias("side")
     )
@@ -933,7 +920,7 @@ def _geo_triples(spark, sf_dir) -> DataFrame:
 
 
 def q_rdf_bgp(spark, sf_dir):
-    data = _cached_triples("geo_triples", spark, sf_dir, lambda: _geo_triples(spark, sf_dir))
+    data = _cached_input("geo_triples", spark, sf_dir, lambda: _geo_triples(spark, sf_dir))
     q = (
         RDFQueryDF(spark, data)
         .match("?c", f"<{EX}inNation>", "?n")
@@ -948,7 +935,7 @@ def q_rdf_bgp(spark, sf_dir):
 
 
 def q_rdf_path_seq(spark, sf_dir):
-    data = _cached_triples("geo_triples", spark, sf_dir, lambda: _geo_triples(spark, sf_dir))
+    data = _cached_input("geo_triples", spark, sf_dir, lambda: _geo_triples(spark, sf_dir))
     p = Path("seq", children=(Path("pred", pred=EX + "inNation"), Path("pred", pred=EX + "inRegion")))
     q = RDFQueryDF(spark, data).match("?c", f"<{EX}inNation>", None).distinct().path("?c", p, "?r")
     return q.sols.select(F.col("c_v").alias("customer"), F.col("r_v").alias("region"))
@@ -971,14 +958,14 @@ def q_rdf_path_zero_or_more(spark, sf_dir):
     # r6: cache like the other path queries' geo_triples — the zeroOrMore
     # fixpoint re-reads the data frame once per round, so an uncached input
     # re-scanned parquet and rebuilt the triple projection every round
-    data = _cached_triples("parent_triples", spark, sf_dir, build)
+    data = _cached_input("parent_triples", spark, sf_dir, build)
     p = Path("zeroOrMore", children=(Path("pred", pred=EX + "parent"),))
     q = RDFQueryDF(spark, data).match("?x", f"<{EX}parent>", None).distinct().path("?x", p, "?y")
     return q.sols.select(F.col("x_v").alias("start"), F.col("y_v").alias("reached"))
 
 
 def q_rdf_path_alt_inverse(spark, sf_dir):
-    data = _cached_triples("geo_triples", spark, sf_dir, lambda: _geo_triples(spark, sf_dir))
+    data = _cached_input("geo_triples", spark, sf_dir, lambda: _geo_triples(spark, sf_dir))
     # alternative(inverse(inNation) | inRegion) from each nation: customers + region
     p = Path("alt", children=(Path("inverse", pred=EX + "inNation"), Path("pred", pred=EX + "inRegion")))
     q = RDFQueryDF(spark, data).match("?n", f"<{EX}inRegion>", None).distinct().path("?n", p, "?v")

@@ -36,7 +36,7 @@ def main(argv=None) -> int:
     ap.add_argument("--snapshots", action="store_true",
                     help="materialize stages via the Iceberg-style snapshot "
                          "catalog (atomic commits, time travel) instead of "
-                         "_SUCCESS-marker dirs")
+                         "parquet dirs committed by a _metrics marker")
     args = ap.parse_args(argv)
     if args.shuffle_partitions is not None and args.shuffle_partitions < 1:
         ap.error("--shuffle-partitions must be >= 1")

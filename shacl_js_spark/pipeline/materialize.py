@@ -4,26 +4,82 @@ metrics").
 
 Layout under ``out_dir``:
     <stage>/            parquet output of the stage
-    _lineage/           parquet: one row per (stage, partition_id) with
-                        output_rows, checksum, wall_ms, status, run_id
-    _metrics/           parquet: one row per stage with totals
+    _lineage/<stage>/   parquet: one row per non-empty partition with stage,
+                        partition_id, output_rows, checksum, wall_ms, status
+                        ("SUCCESS"), run_id
+    _metrics/<stage>/   parquet: exactly one row of stage totals (stage,
+                        output_rows, checksum, wall_ms, run_id); an empty
+                        stage records 0 rows and checksum "0"
 
-Resume contract: a stage whose _lineage rows all say SUCCESS and whose output
-directory exists is NOT recomputed — ``run()`` reads the committed parquet
-back instead.  Partition-level checksums (sum of xxhash64 over all columns)
+A stage is its write plus one stats aggregation (``write_stage``; a shuffle
+and a result job under AQE); ``_lineage`` and ``_metrics`` are derived from
+its rows on the driver and written by pyarrow.
+``_metrics/<stage>`` is written last and renamed into place: it is the commit
+marker.  Resume contract: a stage whose output, ``_lineage`` and ``_metrics``
+dirs all exist is NOT recomputed (a filesystem check) — ``run()`` reads the
+committed parquet back instead.  Checksums (sum of xxhash64 over all columns)
 make cross-run equality auditable without re-reading inputs.
 
 Written as plain parquet directories; on a cluster these map 1:1 onto Iceberg
-tables (atomic snapshot commit replaces the _SUCCESS-marker protocol).
+tables (an atomic snapshot commit replaces the renamed marker).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+# the column types Spark gave these tables when it wrote them
+LINEAGE_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("partition_id", pa.int32()), ("output_rows", pa.int64()),
+    ("checksum", pa.string()), ("wall_ms", pa.int32()), ("status", pa.string()),
+    ("run_id", pa.string()),
+])
+METRICS_SCHEMA = pa.schema(
+    [LINEAGE_SCHEMA.field(c) for c in ("stage", "output_rows", "checksum", "wall_ms", "run_id")]
+)
+
+
+def write_stage(df: DataFrame, path: str, mode: str) -> tuple[DataFrame, list[Row]]:
+    """Write `df` as parquet at `path`; return it read back with the schema
+    it was written with (no inference job) and its (partition_id,
+    output_rows, checksum) rows, one per non-empty partition, from a single
+    aggregation."""
+    df.write.mode(mode).parquet(path)
+    out = df.sparkSession.read.schema(df.schema).parquet(path)
+    parts = (
+        out.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(
+            F.count("*").alias("output_rows"),
+            # decimal accumulator: overflow-safe at any row count (ANSI mode)
+            F.sum(F.xxhash64(*out.columns).cast("decimal(38,0)")).cast("string").alias("checksum"),
+        )
+        .collect()
+    )
+    return out, parts
+
+
+def stage_totals(parts: list[Row]) -> tuple[int, str]:
+    """(rows, checksum) of a stage from its ``write_stage`` rows; an empty
+    stage gets (0, "0"), so every committed stage has a comparable total."""
+    return sum(p["output_rows"] for p in parts), str(sum(int(p["checksum"]) for p in parts))
+
+
+def _replace_parquet(rows: list[dict], schema: pa.Schema, path: str) -> None:
+    """Replace the dir `path` with one parquet file of `rows`, written into a
+    hidden temp dir that is then renamed into place."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    pq.write_table(pa.Table.from_pylist(rows, schema), os.path.join(tmp, "part-0.parquet"))
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp, path)
 
 
 class PipelineRunner:
@@ -33,72 +89,35 @@ class PipelineRunner:
         self.run_id = run_id
         os.makedirs(out_dir, exist_ok=True)
 
-    # ------------------------------------------------------------- lineage
-    def _lineage_path(self, stage: str) -> str:
-        return os.path.join(self.out_dir, "_lineage", stage)
-
-    def _stage_path(self, stage: str) -> str:
-        return os.path.join(self.out_dir, stage)
+    def _path(self, *parts: str) -> str:
+        return os.path.join(self.out_dir, *parts)
 
     def stage_committed(self, stage: str) -> bool:
-        lp = self._lineage_path(stage)
-        sp = self._stage_path(stage)
-        if not (os.path.isdir(lp) and os.path.isdir(sp)):
-            return False
-        try:
-            lin = self.spark.read.parquet(lp)
-            n_bad = lin.filter(F.col("status") != "SUCCESS").limit(1).count()
-            n_all = lin.limit(1).count()
-            return n_all > 0 and n_bad == 0
-        except Exception:
-            return False
+        paths = (self._path(stage), self._path("_lineage", stage), self._path("_metrics", stage))
+        return all(os.path.isdir(p) for p in paths)
 
     def run(self, stage: str, build, force: bool = False) -> DataFrame:
         """Execute `build() -> DataFrame` unless the stage is already
-        committed; returns the committed DataFrame either way."""
-        sp = self._stage_path(stage)
+        committed; returns the committed DataFrame either way.  wall_ms
+        covers the build, the write and the stats aggregation."""
         if not force and self.stage_committed(stage):
-            return self.spark.read.parquet(sp)
+            return self.spark.read.parquet(self._path(stage))
+        # un-commit first: a crash while rewriting must not leave the old
+        # marker vouching for a half-written stage
+        shutil.rmtree(self._path("_metrics", stage), ignore_errors=True)
         t0 = time.time()
-        df = build()
-        df.write.mode("overwrite").parquet(sp)
+        out, parts = write_stage(build(), self._path(stage), "overwrite")
         wall_ms = int((time.time() - t0) * 1000)
-        out = self.spark.read.parquet(sp)
-        cols = out.columns
-        per_part = (
-            out.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .agg(
-                F.count("*").alias("output_rows"),
-                # decimal accumulator: overflow-safe at any row count (ANSI mode)
-                F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).cast("string").alias("checksum"),
-            )
-            .select(
-                F.lit(stage).alias("stage"),
-                F.col("_pid").alias("partition_id"),
-                "output_rows",
-                "checksum",
-                F.lit(wall_ms).alias("wall_ms"),
-                F.lit("SUCCESS").alias("status"),
-                F.lit(self.run_id).alias("run_id"),
-            )
-        )
-        per_part.write.mode("overwrite").parquet(self._lineage_path(stage))
-        metrics = per_part.groupBy("stage").agg(
-            F.sum("output_rows").alias("output_rows"),
-            F.sum(F.col("checksum").cast("decimal(38,0)")).cast("string").alias("checksum"),
-            F.max("wall_ms").alias("wall_ms"),
-        ).withColumn("run_id", F.lit(self.run_id))
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, "_metrics", stage)
-        )
+        common = {"stage": stage, "wall_ms": wall_ms, "status": "SUCCESS", "run_id": self.run_id}
+        lineage = [{**p.asDict(), **common} for p in parts]
+        _replace_parquet(lineage, LINEAGE_SCHEMA, self._path("_lineage", stage))
+        rows, checksum = stage_totals(parts)
+        total = {**common, "output_rows": rows, "checksum": checksum}
+        _replace_parquet([total], METRICS_SCHEMA, self._path("_metrics", stage))
         return out
 
-    def lineage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._lineage_path(stage))
-
     def metrics(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.out_dir, "_metrics", stage))
+        return self.spark.read.parquet(self._path("_metrics", stage))
 
 
 def write_bucketed_triples(
@@ -152,8 +171,9 @@ def run_pipeline(
 
     snapshots=True materializes each stage through the Iceberg-style
     SnapshotCatalog (atomic pointer-swap commits, time-travel, rollback —
-    pipeline/snapshots.py) instead of the _SUCCESS-marker PipelineRunner;
-    the stage graph and resume contract are identical."""
+    pipeline/snapshots.py) instead of PipelineRunner's parquet directories
+    with a ``_metrics`` commit marker; the stage graph and resume contract
+    are identical."""
     from ..localgraph import LocalGraph
     from ..validation import Engine
     from .canonicalize import alias_edges, canonicalize_triples, connected_components

@@ -10,8 +10,8 @@ Iceberg paper / iceberg.apache.org/spec):
     <root>/<table>/
         data/snap-<uuid>/           immutable parquet data files, one dir
                                     per snapshot (never rewritten)
-        metadata/snap-<uuid>.json   snapshot manifest: row count, checksum,
-                                    lineage stats, parent pointer, run_id
+        metadata/snap-<uuid>.json   snapshot manifest: schema, row count,
+                                    checksum, wall_ms, parent pointer, run_id
         metadata/current            the ONLY mutable file: name of the
                                     current snapshot manifest, swapped via
                                     os.replace (atomic on POSIX)
@@ -26,8 +26,9 @@ snapshot chain.  A reader never sees a half-written table because `current`
 is only ever swapped onto a fully-written manifest.
 
 On a real cluster this maps 1:1 onto Iceberg snapshot commits (the catalog
-swap becomes the metastore/REST-catalog CAS); the PipelineRunner lineage
-protocol rides along unchanged inside the manifest.
+swap becomes the metastore/REST-catalog CAS).  The data is written and its
+stats taken by the same ``write_stage`` as PipelineRunner's stages; the
+manifest keeps only the stage totals, not the per-partition lineage.
 """
 
 from __future__ import annotations
@@ -38,7 +39,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .materialize import stage_totals, write_stage
 
 
 class SnapshotError(RuntimeError):
@@ -109,28 +111,16 @@ class SnapshotCatalog:
         data_path = self._data(table, snap)
         os.makedirs(self._meta(table), exist_ok=True)
         t0 = time.time()
-        df.write.mode("errorifexists").parquet(data_path)  # immutable dir
-        out = self.spark.read.parquet(data_path)
-        cols = out.columns
-        stats = out.agg(
-            F.count("*").alias("rows"),
-            # decimal accumulator: overflow-safe at any row count (ANSI mode).
-            # coalesce: sum() over zero rows is NULL, which would make every
-            # empty snapshot checksum-equal regardless of schema (r5 advice) —
-            # empty tables get a stable '0' instead.
-            F.coalesce(
-                F.sum(F.xxhash64(*cols).cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).cast("string").alias("checksum"),
-        ).collect()[0]
+        out, parts = write_stage(df, data_path, "errorifexists")  # immutable dir
+        rows, checksum = stage_totals(parts)
         manifest = {
             "snapshot_id": snap,
             "parent": self.current_snapshot(table),
             "table": table,
             "data_path": data_path,
             "schema": out.schema.jsonValue(),
-            "rows": int(stats["rows"]),
-            "checksum": stats["checksum"],
+            "rows": rows,
+            "checksum": checksum,
             "wall_ms": int((time.time() - t0) * 1000),
             "run_id": run_id,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -207,8 +197,8 @@ class SnapshotRunner:
     """PipelineRunner-compatible facade that materializes each stage as a
     SnapshotCatalog table: `run()` resumes from the last committed snapshot
     (same contract as PipelineRunner.run, but the commit is a single atomic
-    pointer swap instead of a _SUCCESS-marker directory, and every historical
-    stage output stays time-travel readable until gc())."""
+    pointer swap instead of a renamed ``_metrics`` directory, and every
+    historical stage output stays time-travel readable until gc())."""
 
     def __init__(self, spark: SparkSession, out_dir: str, run_id: str = "r0"):
         self.catalog = SnapshotCatalog(spark, out_dir)

@@ -5,9 +5,14 @@ delta (new triples).  Rather than re-validating the world per batch (the
 reference's updateDataGraph does exactly that, index.js:235-248), each batch
 re-validates only the focus nodes it can affect — the subjects and objects
 appearing in the batch — against all target shapes, and upserts their report
-rows.  This is sound for constraints whose value nodes are within one path
-hop of the focus (all core constraints; recursive paths widen the affected
-set by the batch's reachable frontier, handled by the `extra_hops` knob).
+rows.  That covers a focus whose own triples changed.  It misses a focus
+whose result depends on triples of its value nodes: `sh:class` reads the
+value node's own rdf:type, so a node whose type arrives in a later batch
+leaves stale rows on its referrers unless `extra_hops >= 1`; deep paths and
+`sh:node` over k hops need `extra_hops >= k`.  `extra_hops` adds every
+subject that reaches an affected node within that many hops.  It defaults to
+0: a batch's objects include the classes it types nodes with, so one hop
+adds every instance of each such class to the batch.
 
 Plumbing: foreachBatch (exactly-once per epoch with checkpointing), graph
 accumulates as parquet (Iceberg append at cluster scale), report maintained

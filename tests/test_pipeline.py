@@ -4,6 +4,7 @@ components vs a union-find oracle, idempotent resume, and that the SHACL
 validate stage actually rejects corrupt graphs."""
 
 import shutil
+import time
 
 import pandas as pd
 import pytest
@@ -175,6 +176,19 @@ def test_resume_skips_committed_stages(spark, tmp_path):
     runner = PipelineRunner(spark, out)
     assert runner.stage_committed("triples")
     chk1 = runner.metrics("triples").collect()[0]["checksum"]
+    # the bookkeeping tables keep the columns and Spark types they had when
+    # Spark itself wrote them
+    assert spark.read.parquet(f"{out}/_lineage/triples").dtypes == [
+        ("stage", "string"), ("partition_id", "int"), ("output_rows", "bigint"),
+        ("checksum", "string"), ("wall_ms", "int"), ("status", "string"), ("run_id", "string"),
+    ]
+    assert runner.metrics("triples").dtypes == [
+        ("stage", "string"), ("output_rows", "bigint"), ("checksum", "string"),
+        ("wall_ms", "int"), ("run_id", "string"),
+    ]
+    lineage = spark.read.parquet(f"{out}/_lineage/triples").collect()
+    assert sum(r["output_rows"] for r in lineage) == n1
+    assert str(sum(int(r["checksum"]) for r in lineage)) == chk1
     # re-run: all stages committed -> must read back, not recompute
     calls = {"n": 0}
     def must_not_run():
@@ -189,6 +203,41 @@ def test_resume_skips_committed_stages(spark, tmp_path):
     # force recompute after deleting lineage -> identical checksum (idempotent)
     shutil.rmtree(f"{out}/_lineage/triples")
     assert not runner.stage_committed("triples")
+
+
+def test_empty_stage_commits_and_resumes(spark, tmp_path):
+    """An empty stage commits like any other: one (0, "0") metrics row, a
+    commit check that launches no Spark job, and a resume that returns the
+    committed empty frame instead of rebuilding."""
+    out = str(tmp_path / "kg")
+    runner = PipelineRunner(spark, out)
+    runner.run("empty", lambda: spark.createDataFrame([], "id long, v string"))
+    assert [tuple(r) for r in runner.metrics("empty").select("output_rows", "checksum").collect()] == [
+        (0, "0")
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("test-stage-committed", "stage_committed")
+    try:
+        committed = runner.stage_committed("empty")
+        # control job: the status listener handles jobs in order, so once it
+        # sees this one it has seen any job stage_committed launched
+        sc.setJobGroup("test-stage-committed-control", "control")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("test-stage-committed-control") and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("test-stage-committed-control")
+    assert committed
+    assert tracker.getJobIdsForGroup("test-stage-committed") == []
+
+    def must_not_run():
+        raise AssertionError("committed empty stage rebuilt")
+
+    df = PipelineRunner(spark, out).run("empty", must_not_run)
+    assert df.columns == ["id", "v"] and df.count() == 0
 
 
 def test_validation_catches_corrupt_graph(spark, docs):

@@ -107,7 +107,7 @@ def test_checksum_is_content_addressed(spark, root):
 def test_full_pipeline_on_snapshot_catalog(spark, root):
     # run_pipeline(snapshots=True): same stage graph, snapshot commits;
     # a second run resumes from committed snapshots (and both runs agree
-    # with the _SUCCESS-marker PipelineRunner's triples output)
+    # with PipelineRunner's triples output)
     from shacl_js_spark.pipeline.materialize import run_pipeline
 
     sf = "/root/testdata/sf0.001"

@@ -101,6 +101,30 @@ ex:p ex:child ex:c2 .
     assert sorted(r2) == ["http://e/c1", "http://e/c2"], r2
 
 
+CLASS_SHAPES = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://e/> .
+ex:DocShape a sh:NodeShape ; sh:targetClass ex:Doc ;
+  sh:property [ sh:path ex:mentions ; sh:class ex:Ent ] .
+"""
+
+
+def test_incremental_extra_hops_retracts_class_violation(spark, tmp_path):
+    # sh:class reads the value node's own rdf:type: when ex:e's type arrives
+    # in a later batch, its referrer ex:d is neither subject nor object of
+    # that batch, so only extra_hops=1 re-validates it
+    from shacl_js_spark.validation import Engine
+
+    shapes = LocalGraph.from_turtle(CLASS_SHAPES)
+    iv = IncrementalValidator(spark, shapes, str(tmp_path / "hops"), extra_hops=1)
+    iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\n"
+                                      "ex:d a ex:Doc ; ex:mentions ex:e ."), 0)
+    assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/d"}
+    iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\nex:e a ex:Ent ."), 1)
+    full = Engine(spark, spark.read.parquet(iv.graph_dir), shapes).report_df()
+    assert iv.report().count() == full.count() == 0
+
+
 def test_incremental_bucketed_upsert_leaves_other_buckets_untouched(spark, tmp_path):
     # the report store is bucket-partitioned by hash(bubble); a batch must
     # rewrite ONLY the buckets its re-validated targets hash into — every
