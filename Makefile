@@ -11,7 +11,7 @@ SHELL := /bin/bash
 SF_DIR ?= /root/testdata/sf0.01
 ROUND  ?= r03
 
-.PHONY: gate gate-shacl bench verify test dist submit-smoke
+.PHONY: gate gate-shacl bench verify test dist submit-smoke many-shapes
 
 # Package the engine for spark-submit --py-files (north rule: the pipeline
 # must run via spark-submit on a multi-executor cluster).  Single zip
@@ -43,6 +43,11 @@ gate-shacl:
 
 bench:
 	python bench.py 2>&1 | tail -1 | tee BENCH/bench_$(ROUND).json
+
+# SHACL report wall and report_df() plan-build time at 2 / 10 / 50 shapes
+# (plus a violation-bearing 50) over one replicated KG corpus
+many-shapes:
+	python scripts/many_shapes_bench.py 2>&1 | tail -1 | tee BENCH/many_shapes_$(ROUND).json
 
 # the tier-1 command of ROADMAP.md: the whole suite, run past failures and
 # collection errors, with one Spark core per host core

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 REP = int(os.environ.get("SPARK_GRAFT_SCALE_REP", "50"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 
 
 def main() -> None:

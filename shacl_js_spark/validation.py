@@ -3,12 +3,20 @@
 Behavioral reference: /root/reference/src/validation-engine.js (result
 creation/multiplicity, nested-result suppression) and /root/reference/shared/
 dash.js (per-component verdict logic).  Architecture is NOT a port of the
-per-node recursive walk: each shape compiles to one lazy DataFrame plan
-(joins/aggregations over the whole focus-node set at once); the report is a
-union of per-shape violation frames collected once.  Nested conformance
-(sh:and/or/not/node/qualified*) maps to semi/anti-joins against the child
-shape's non-conforming node set — only the boolean escapes, mirroring the
-reference's recordErrorsLevel suppression (validation-engine.js:251-282).
+per-node recursive walk.  A report runs in two steps:
+  * compile (Engine._compile): a driver-only walk over the ShapesIR, no
+    Spark call, flattens every shape-with-target into a list of checks —
+    one per constraint, sh:property expanded in place — each naming the
+    frame it scans by a content key and the chain of parent (focus ->
+    value) mappings that lifts its rows to the target focus;
+  * plan (Engine._plan): row-wise and count checks sharing (frame, bubble
+    chain) become ONE fused pass over that frame; every other check runs
+    its own lazy plan (joins/aggregations over the whole focus-node set at
+    once).  The report is the union of those legs, read by one action.
+Nested conformance (sh:and/or/not/node/qualified*) maps to semi/anti-joins
+against the child shape's non-conforming node set — only the boolean
+escapes, mirroring the reference's recordErrorsLevel suppression
+(validation-engine.js:251-282).
 
 Scale notes (100 TB design):
   * every constraint is built-in Column expressions + equi-joins — no
@@ -27,6 +35,7 @@ from __future__ import annotations
 import functools
 import logging
 import re
+from typing import NamedTuple
 
 import pandas as pd  # module-level: pandas_udf type hints resolve via globals
 
@@ -196,31 +205,46 @@ PROPERTY_DEFAULT_MESSAGES: dict[str, str] = {
 }
 
 
-class _FusePool:
-    """Row-wise and count checks grouped by the frame they scan, for one
-    fused pass per frame (Engine._flush).  groups: id(frame) -> [frame,
-    bubble mapping or None, with_value, entries].  The pool holds a strong
-    ref to every frame it keys, so two live groups never share an id.
-    Views made by under() share the groups and carry the bubble mapping of
-    an sh:property parent; shapes sharing a frame share one logically
-    identical mapping (both derive from the same memoized parent frame)."""
+#: base key of an explicit focus frame (shape_violations' focus_df): frames
+#: keyed under it are never memoized on the engine
+_ROOT = ("root",)
 
-    def __init__(self, groups: dict[int, list] | None = None, mapping=None):
-        self.groups: dict[int, list] = {} if groups is None else groups
-        self.mapping: DataFrame | None = mapping
 
-    def under(self, mapping: DataFrame | None) -> _FusePool:
-        return _FusePool(self.groups, mapping)
+def _rooted(key: tuple) -> bool:
+    while key[0] not in ("targets", "root"):
+        key = key[1]
+    return key == _ROOT
 
-    def add(self, frame: DataFrame, entries: list, with_value: bool) -> None:
-        group = self.groups.get(id(frame))
-        if group is None:
-            self.groups[id(frame)] = [frame, self.mapping, with_value, list(entries)]
-        else:
-            group[3].extend(entries)
+
+class _Check(NamedTuple):
+    """One compiled constraint: constraint `c` of `shape`, of kind "row"
+    (_OK_CONDS), "count" (_COUNT_OKS) or "other", over the focus frame
+    keyed `focus`.  `chain` holds the value-frame keys of its path-bearing
+    sh:property ancestors, innermost first; `stack` the shape nodes from
+    the outermost ancestor down to `shape` (the recursion guard)."""
+
+    shape: Shape
+    c: Constraint
+    kind: str
+    focus: tuple
+    chain: tuple
+    stack: tuple
 
 
 class Engine:
+    """Compiles shapes to checks once per report, then plans them over the
+    data graph (module docstring).
+
+    Shared frames live in one memo, `_frames`, keyed by what they compute;
+    the keys are fixed at compile time: ("targets", classes, nodes,
+    subjectsOf, objectsOf), ("values", focus key, path), ("candidates",
+    values key), ("counts", focus key, path), ("class_fail", values key,
+    class).  A frame under an explicit root (_ROOT) is never memoized.
+
+    Precondition: `data` holds distinct (s, p, o) triples.  eval_path
+    dedups only seq-path results, and _count_frame counts a simple path's
+    values on the triple side; both rely on it."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -244,59 +268,35 @@ class Engine:
         # driver-side (fixture harness) can pass the edges to skip a collect
         self._sub_children: dict[str, list[str]] | None = subclass_edges
         self._distinct_types: list[str] | None = None  # cached once per Engine
-        self._stack: list[Term] = []  # shape recursion guard (compile-time cycle reject)
+        # shape nodes of the check being planned (shape recursion guard)
+        self._stack: tuple = ()
         # shared-scan memo (see _memo): many shapes target the same classes
         # and walk the same paths, so each distinct target, value,
-        # candidate, count and class-fail frame is built once.  Keys say
-        # what a frame computes: ("targets", spec), ("values", focus key,
-        # path), ("candidates", values key), ("counts", focus key, path),
-        # ("class_fail", values key, class).  _keys maps the id of every
-        # memoized frame back to its key, so a frame the engine handed out
-        # keys the frames derived from it.
+        # candidate, count and class-fail frame is built once
         self._frames: dict[tuple, DataFrame] = {}
-        self._keys: dict[int, tuple] = {}
 
     def release(self) -> None:
         """Empty the engine's frame memo.  The memo never persists, so this
         only drops driver-side plan references; a long-lived process that
         keeps one engine across many reports can call it between them."""
         self._frames.clear()
-        self._keys.clear()
 
-    def _memo(self, key: tuple | None, build) -> DataFrame:
+    def _memo(self, key: tuple, build) -> DataFrame:
         """The frame named by `key`, built once per engine.  Never
         persisted: a report is read by one action, and Spark's exchange
-        reuse already shares the memo's identical sub-plans within it.  key
-        None (a frame derived from one the engine did not hand out, e.g. a
-        recursion-level focus frame from nonconforming) builds a fresh
+        reuse already shares the memo's identical sub-plans within it.  A
+        key under an explicit root (a recursion-level focus frame from
+        nonconforming, an incremental affected-target frame) builds a fresh
         frame: those identities never recur, and memoizing them would hold
         dead frames per level."""
-        if key is None:
+        if _rooted(key):
             return build()
         df = self._frames.get(key)
         if df is None:
-            df = build()
-            self._frames[key] = df
-            self._keys[id(df)] = key
+            df = self._frames[key] = build()
         return df
 
-    def _key(self, kind: str, parent: DataFrame, *rest) -> tuple | None:
-        """Memo key of the `kind` frame derived from `parent`, or None when
-        the engine did not hand `parent` out.  The memo holds a strong ref
-        to every indexed frame, so no other live frame can share its id."""
-        parent_key = self._keys.get(id(parent))
-        return None if parent_key is None else (kind, parent_key, *rest)
-
     # ------------------------------------------------------------------ data
-    def _empty_viols(self) -> DataFrame:
-        # range(0)-backed: the optimizer's PropagateEmptyRelation folds this
-        # into an empty LocalRelation and prunes it out of report unions
-        # entirely.  createDataFrame([], schema) is RDD-backed in PySpark and
-        # every empty accumulator leg scheduled real (no-op) tasks per union.
-        return self.spark.range(0).select(
-            *[F.lit(None).cast("string").alias(c) for c in VIOL_COLS]
-        )
-
     def trips(self, pred_enc: str | None = None) -> DataFrame:
         """Triples projected to fresh attribute ids (t_*) so repeated
         self-joins of the data graph stay unambiguous."""
@@ -367,7 +367,7 @@ class Engine:
     def class_instances_df(
         self, cls: Term, prefix: str = "focus", dedup: bool = True
     ) -> DataFrame:
-        encs = list(self.data_subclasses(cls.encoded()) | {cls.encoded()})
+        encs = sorted(self.data_subclasses(cls.encoded()) | {cls.encoded()})
         out = self.data.filter(
             (F.col("p") == RDF_TYPE_ENC) & F.col("o").isin(encs)
         )
@@ -394,14 +394,17 @@ class Engine:
         the marginal shape pay only its own constraint joins).  Memoized
         frames live for the Engine's life — call release() when done with
         a long-lived engine."""
+        key = self._targets_key(shape)
+        return self._memo(key, lambda: self._targets_frame_uncached(*key[1:]))
+
+    def _targets_key(self, shape: Shape) -> tuple:
         spec = self.ir.target_spec(shape.node)
-        key = ("targets", tuple(
-            tuple(sorted(t.encoded() for t in terms))
+        return ("targets", *(
+            tuple(sorted(terms, key=Term.encoded))
             for terms in (spec.classes, spec.nodes, spec.subjects_of, spec.objects_of)
         ))
-        return self._memo(key, lambda: self._targets_frame_uncached(spec))
 
-    def _targets_frame_uncached(self, spec) -> DataFrame:
+    def _targets_frame_uncached(self, classes, nodes, subjects_of, objects_of) -> DataFrame:
         # fast path (r6): when every target piece is subject-derived
         # (targetClass / targetSubjectsOf), the 4 decomposed columns are pure
         # functions of the encoded subject — union the 1-column encoded
@@ -409,16 +412,16 @@ class Engine:
         # first(string) buffers, narrow exchange), decompose once after.
         # Node/objectsOf targets carry literal dt/lang that cannot be
         # re-derived from the encoded form, so they keep the 5-column dedup.
-        if not spec.nodes and not spec.objects_of and (spec.classes or spec.subjects_of):
+        if not nodes and not objects_of and (classes or subjects_of):
             enc_pieces: list[DataFrame] = []
-            for cls in spec.classes:
-                encs = list(self.data_subclasses(cls.encoded()) | {cls.encoded()})
+            for cls in classes:
+                encs = sorted(self.data_subclasses(cls.encoded()) | {cls.encoded()})
                 enc_pieces.append(
                     self.data.filter(
                         (F.col("p") == RDF_TYPE_ENC) & F.col("o").isin(encs)
                     ).select(F.col("s").alias("focus"))
                 )
-            for pred in spec.subjects_of:
+            for pred in subjects_of:
                 enc_pieces.append(
                     self.data.filter(F.col("p") == pred.encoded()).select(
                         F.col("s").alias("focus")
@@ -431,17 +434,17 @@ class Engine:
                 *subject_decomposed("focus", "focus")
             )
         pieces: list[DataFrame] = []
-        for cls in spec.classes:
+        for cls in classes:
             pieces.append(self.class_instances_df(cls, dedup=False))
-        if spec.nodes:
-            pieces.append(terms_frame(self.spark, spec.nodes, "focus"))
-        for pred in spec.subjects_of:
+        if nodes:
+            pieces.append(terms_frame(self.spark, nodes, "focus"))
+        for pred in subjects_of:
             pieces.append(
                 self.data.filter(F.col("p") == pred.encoded()).select(
                     *subject_decomposed("s", "focus")
                 )
             )
-        for pred in spec.objects_of:
+        for pred in objects_of:
             pieces.append(
                 self.data.filter(F.col("p") == pred.encoded()).select(
                     *object_decomposed("focus")
@@ -553,17 +556,6 @@ class Engine:
             return acc
         raise ValueError(f"unknown path kind {path.kind}")
 
-    # ----------------------------------------------------------- value nodes
-    def values_frame(self, shape: Shape, focus_df: DataFrame) -> DataFrame:
-        """(focus5, value5); node shapes use the focus itself
-        (ref: shapes-graph.js:348-355)."""
-        if shape.path is None:
-            return focus_df.select(
-                *term_cols("focus"),
-                *[F.col(c).alias(c.replace("focus", "value")) for c in term_cols("focus")],
-            )
-        return self.eval_path(shape.path, focus_df)
-
     # ------------------------------------------------------------ validation
     def validate(self) -> ValidationReport:
         """Driver-side report (ref validateAll, validation-engine.js).
@@ -606,36 +598,31 @@ class Engine:
         return self._all_violations()
 
     def _all_violations(self) -> DataFrame:
-        """Report rows for every shape-with-target.  Row-wise and count
-        checks of the top-level shapes and their direct sh:property children
-        go into one pool, grouped by the frame they scan, and flush here as
-        one pass per frame: shapes sharing a memoized value or count frame
-        (the common case in wide shape sets — many property shapes over the
-        same target class and path) cost one scan instead of one per shape.
-        The flush applies each check's own fail predicate and message, and
-        for property children the same bubble-mapping join _property
-        applies to its child's rows; the join distributes over the union,
-        so the emitted row multiset equals the per-shape walk's."""
-        pool = _FusePool()
-        frames = [
-            self.shape_violations(shape, self.targets_frame(shape), pool)
-            for shape in self.ir.shapes_with_target()
-        ]
-        frames += self._flush(pool)
-        return self._union_viols(frames).select(*RECORD_COLS)
+        """Report rows for every shape-with-target: all shapes compile into
+        one check list, so checks of different shapes that scan the same
+        memoized value or count frame (the common case in wide shape sets —
+        many property shapes over the same target class and path) share
+        one fused pass instead of one scan per shape."""
+        checks = [chk for shape in self.ir.shapes_with_target()
+                  for chk in self._compile(shape, self._targets_key(shape))]
+        return self._union_viols(self._plan(checks)).select(*RECORD_COLS)
 
-    def shape_violations(
-        self, shape: Shape, focus_df: DataFrame, pool: _FusePool | None = None
-    ) -> DataFrame:
+    def shape_violations(self, shape: Shape, focus_df: DataFrame) -> DataFrame:
         """All violation rows for `shape` over the given focus frame
-        (ref: validateNodeAgainstShape, validation-engine.js:201-218).
+        (ref: validateNodeAgainstShape, validation-engine.js:201-218)."""
+        return self._union_viols(self._plan(self._compile(shape, _ROOT), focus_df))
 
-        The shape's row-wise and count checks are added to `pool` when one
-        is given (their rows then come out of the pool's flush, not this
-        frame); without a pool they flush here at once."""
+    def _compile(self, shape: Shape, focus: tuple, chain=(), stack=None) -> list[_Check]:
+        """Flatten `shape` over the focus frame keyed `focus` into checks —
+        a driver-only walk, no Spark call.  sh:property expands here: the
+        child's focus is the parent's value nodes (validation-engine.js:
+        224-232), and a path-bearing parent appends its value frame to the
+        child's bubble chain (a path-less parent's mapping is the identity
+        over its distinct focus set, so it adds none)."""
+        stack = self._stack if stack is None else stack
         if shape.deactivated:
-            return self._empty_viols()
-        if self._stack.count(shape.node) >= self.max_shape_recursion:
+            return []
+        if stack.count(shape.node) >= self.max_shape_recursion:
             # A well-founded recursive schema (PersonShape -> sh:property ->
             # sh:node PersonShape) bottoms out via the empty-frontier check
             # in nonconforming() — but only once the data's recursion depth
@@ -650,71 +637,115 @@ class Engine:
                 "exceeds the cap — raise Engine(max_shape_recursion=...) for "
                 "deeper finite data"
             )
-        self._stack.append(shape.node)
-        try:
-            # value-frame memo: shapes sharing (focus frame, path) reuse one
-            # path join, but only over focus frames the engine handed out
-            # (memoized targets and candidates).
-            key = self._key("values", focus_df, shape.path)
-            values = self._memo(key, lambda: self.values_frame(shape, focus_df))
-            row_checks, count_checks, rest = self._split_checks(shape)
-            sink = pool if pool is not None else _FusePool()
-            if row_checks:
-                sink.add(values, row_checks, with_value=True)
-            if count_checks:
-                counts = _count_frame(self, focus_df, values, shape.path)
-                sink.add(counts, count_checks, with_value=False)
-            frames = [] if pool is not None else self._flush(sink)
-            for constraint in rest:
-                v = self._dispatch(shape, constraint, focus_df, values, pool)
-                if v is not None:
-                    frames.append(v.select(*VIOL_COLS))
-            return self._union_viols(frames)
-        finally:
-            self._stack.pop()
-
-    def _split_checks(self, shape: Shape) -> tuple[list, list, list[Constraint]]:
-        """Partition a shape's constraints into (row-wise value checks,
-        count checks, everything else) — the first two as (shape,
-        constraint, OK Column) entries for _fused_rows.  Custom components
-        and components invalid for this shape kind stay with _dispatch
-        (which runs the registry validator or raises)."""
-        row_checks: list = []
-        count_checks: list = []
-        rest: list[Constraint] = []
+        stack += (shape.node,)
+        values = ("values", focus, shape.path)
+        checks = []
         for c in shape.constraints:
-            style = (
-                c.component.property_style
-                if shape.is_property_shape
-                else c.component.node_style
+            comp = c.component
+            if comp.iri == SH + "PropertyConstraintComponent":
+                checks += self._compile(
+                    self.ir.get_shape(c.param_value), ("candidates", values),
+                    chain if shape.path is None else (values, *chain), stack,
+                )
+                continue
+            # custom components and components invalid for this shape kind
+            # are "other": _dispatch runs the registry validator or raises
+            style = comp.property_style if shape.is_property_shape else comp.node_style
+            builtin = not comp.custom and style is not None
+            kind = (
+                "row" if builtin and comp.iri in _OK_CONDS
+                else "count" if builtin and comp.iri in _COUNT_OKS
+                else "other"
             )
-            builtin = not c.component.custom and style is not None
-            iri_ = c.component.iri
-            if builtin and iri_ in _OK_CONDS:
-                row_checks.append((shape, c, _OK_CONDS[iri_](self, shape, c)))
-            elif builtin and iri_ in _COUNT_OKS:
-                count_checks.append((shape, c, _COUNT_OKS[iri_](self, shape, c)))
-            else:
-                rest.append(c)
-        return row_checks, count_checks, rest
+            checks.append(_Check(shape, c, kind, focus, chain, stack))
+        return checks
 
-    def _flush(self, pool: _FusePool) -> list[DataFrame]:
-        """One fused pass per pooled frame; rows of property children are
-        bubbled to the parent focus through the group's mapping."""
-        frames = []
-        for frame, mapping, with_value, entries in pool.groups.values():
-            rows = self._fused_rows(frame, entries, with_value=with_value)
-            if mapping is not None:
+    def _plan(self, checks: list[_Check], root: DataFrame | None = None) -> list[DataFrame]:
+        """Violation frames for compiled checks (`root` is the frame of
+        _ROOT).  Row-wise and count checks group by (frame, bubble chain)
+        into one _fused_rows pass each; every other check is dispatched
+        with its ancestors on _stack, so recursion through nonconforming
+        sees the same depth as a nested walk.  All legs sharing a chain are
+        lifted through it once; the join distributes over the union, so the
+        row multiset equals a per-shape walk's.  Frames under _ROOT are
+        shared within this plan only."""
+        local = {} if root is None else {_ROOT: root}
+
+        def frame(key: tuple) -> DataFrame:
+            df = local.get(key)
+            if df is None:
+                df = local[key] = self._memo(key, lambda: self._build(key, frame))
+            return df
+
+        groups: dict[tuple, list] = {}
+        legs: dict[tuple, list[DataFrame]] = {}
+        saved = self._stack
+        try:
+            for chk in checks:
+                if chk.kind == "other":
+                    self._stack = chk.stack
+                    v = self._dispatch(chk, frame)
+                    if v is not None:
+                        legs.setdefault(chk.chain, []).append(v.select(*VIOL_COLS))
+                else:
+                    kind = "values" if chk.kind == "row" else "counts"
+                    ok = (_OK_CONDS if chk.kind == "row" else _COUNT_OKS)[chk.c.component.iri]
+                    groups.setdefault(((kind, chk.focus, chk.shape.path), chk.chain), []).append(
+                        (chk.shape, chk.c, ok(self, chk.shape, chk.c))
+                    )
+        finally:
+            self._stack = saved
+        for (key, chain), entries in groups.items():
+            rows = self._fused_rows(frame(key), entries, with_value=key[0] == "values")
+            legs.setdefault(chain, []).append(rows)
+        out = []
+        for chain, frames in legs.items():
+            rows = self._union_viols(frames)
+            for values_key in chain:
+                mapping = frame(values_key).select(
+                    F.col("focus").alias("_pfocus"), F.col("value").alias("_pvalue")
+                )
                 rows = rows.join(
                     mapping, rows["bubble"] == mapping["_pvalue"], "inner"
                 ).select(F.col("_pfocus").alias("bubble"), *VIOL_COLS[1:])
-            frames.append(rows)
-        return frames
+            out.append(rows)
+        return out
+
+    def _build(self, key: tuple, frame) -> DataFrame:
+        """Build the frame named by `key`; `frame` resolves its parents."""
+        kind = key[0]
+        if kind == "targets":
+            return self._targets_frame_uncached(*key[1:])
+        if kind == "values":  # node shapes use the focus itself (shapes-graph.js:348-355)
+            focus, path = frame(key[1]), key[2]
+            if path is None:
+                return focus.select(
+                    *term_cols("focus"),
+                    *[F.col(c).alias(c.replace("focus", "value")) for c in term_cols("focus")],
+                )
+            return self.eval_path(path, focus)
+        if kind == "candidates":
+            values = frame(key[1])
+            if key[1][2] is None:
+                # node shape: values IS the focus frame, which is distinct by
+                # construction (targets_frame ends in a dedup) — renaming is
+                # enough, no third dedup pass over the same rows
+                return values.select(
+                    *[F.col(c).alias(c.replace("value", "focus")) for c in term_cols("value")]
+                )
+            return self._values_as_candidates(values)
+        if kind == "counts":
+            return _count_frame(self, frame(key[1]), frame(("values", *key[1:])), key[2])
+        raise ValueError(f"unknown frame kind {kind}")
 
     def _union_viols(self, frames: list[DataFrame]) -> DataFrame:
-        if not frames:
-            return self._empty_viols()
-        return functools.reduce(DataFrame.unionByName, frames)
+        if frames:
+            return functools.reduce(DataFrame.unionByName, frames)
+        # range(0)-backed: the optimizer's PropagateEmptyRelation folds this
+        # into an empty LocalRelation and prunes it out of report unions
+        # entirely.  createDataFrame([], schema) is RDD-backed in PySpark and
+        # every empty accumulator leg scheduled real (no-op) tasks per union.
+        return self.spark.range(0).select(*[_NULL().alias(c) for c in VIOL_COLS])
 
     def _fused_rows(
         self,
@@ -797,7 +828,6 @@ class Engine:
                 return self.spark.range(0).select(
                     F.lit(None).cast("string").alias("node")
                 )
-        # no pool: conformance needs this shape's COMPLETE violation set now
         viols = self.shape_violations(shape, nodes_df)
         return viols.select(F.col("bubble").alias("node")).dropDuplicates(["node"])
 
@@ -862,30 +892,21 @@ class Engine:
         ).dropDuplicates(["focus"])
 
     # -------------------------------------------------------------- dispatch
-    def _dispatch(
-        self,
-        shape: Shape,
-        c: Constraint,
-        targets: DataFrame,
-        values: DataFrame,
-        pool: _FusePool | None = None,
-    ) -> DataFrame | None:
-        comp = c.component
+    def _dispatch(self, chk: _Check, frame) -> DataFrame | None:
+        """Violation frame of one "other" check: its _IMPLS entry, or the
+        registry validator of a custom component."""
+        shape, c, comp = chk.shape, chk.c, chk.c.component
         style = comp.property_style if shape.is_property_shape else comp.node_style
-        if comp.iri == SH + "PropertyConstraintComponent":
-            return self._property(shape, c, targets, values, pool)
-        if style is None:
+        impl = _IMPLS.get(comp.iri)
+        if style is None or (impl is None and not comp.custom):
             raise ShaclValidationError(
                 f"Cannot find validator for constraint component {comp.iri}"
             )
+        key = ("values", chk.focus, shape.path)
+        targets, values = frame(chk.focus), frame(key)
         if comp.custom:
             return self._custom(shape, c, targets, values, style)
-        impl = _IMPLS.get(comp.iri)
-        if impl is None:
-            raise ShaclValidationError(
-                f"Cannot find validator for constraint component {comp.iri}"
-            )
-        rows = impl(self, shape, c, targets, values)
+        rows = impl(self, shape, c, targets, values, key)
         if rows is None:
             return None
         return rows.withColumn(
@@ -923,15 +944,14 @@ class Engine:
 
     def _label_col(self, col: Column) -> Column:
         """Per-row nodeLabel for ENCODED terms ('<iri>' form): prefix-shorten
-        against the shapes-graph namespaces, else keep the <iri> rendering."""
+        against the shapes-graph namespaces, else keep the <iri> rendering.
+        The first declared matching prefix wins, as in _node_label."""
         bare = F.regexp_extract(col, "^<(.*)>$", 1)
-        out = col  # non-IRI encodings pass through
+        out = None
         for p, ns in self.shapes.prefixes.items():
-            out = F.when(
-                bare.startswith(ns),
-                F.regexp_replace(bare, "^" + re.escape(ns), p + ":"),
-            ).otherwise(out)
-        return out
+            branch = (bare.startswith(ns), F.regexp_replace(bare, "^" + re.escape(ns), p + ":"))
+            out = F.when(*branch) if out is None else out.when(*branch)
+        return col if out is None else out.otherwise(col)  # non-IRIs pass through
 
     def _default_message(self, shape: Shape, c: Constraint) -> str | None:
         """Component default message with {$param}/{?param} substitution
@@ -952,65 +972,14 @@ class Engine:
             msg = msg.replace("{$" + lname + "}", label).replace("{?" + lname + "}", label)
         return msg
 
-    # ---------------------------------------------------- constraint impls --
-    # Each returns a violation frame or None. Citations point at the verdict
-    # logic being reproduced (shared/dash.js).
-
-    def _property(self, shape, c, targets, values, pool=None):
-        # sh:property — native recursion; child focus = parent value nodes
-        # (validation-engine.js:224-232). Violations recorded with the CHILD's
-        # focus/severity/shape; bubbled to the parent focus for conformance.
-        child = self.ir.get_shape(c.param_value)
-        # candidates memo: when `values` is one of the engine's shared value
-        # frames (same (targets, path) across parent shapes), every parent's
-        # sh:property dispatch hands the SAME candidates frame to its child,
-        # so the CHILD's value/count memos fire too.  Without this, each of
-        # N parent shapes over one target class rebuilt the child focus
-        # frame and re-ran every child path join (the dominant cost of wide
-        # shape sets).
-        def build():
-            if shape.path is None:
-                # node shape: values IS the focus frame, which is distinct by
-                # construction (targets_frame ends in a dedup) — renaming is
-                # enough, no third dedup pass over the same rows
-                return values.select(
-                    *[F.col(c_).alias(c_.replace("value", "focus")) for c_ in term_cols("value")]
-                )
-            return self._values_as_candidates(values)
-
-        candidates = self._memo(self._key("candidates", values), build)
-        # r6: a path-less parent's value frame is the identity over its
-        # distinct focus set, so the bubble mapping is (x -> x) with
-        # multiplicity 1 — the join neither filters nor re-multiplies nor
-        # changes any bubble value (child bubbles are drawn from candidates
-        # = parent focus).  Skip it (one SortMergeJoin + two sorts per
-        # NodeShape->sh:property query removed); pooled entries get a None
-        # mapping and flush join-free for the same reason.
-        identity_mapping = shape.path is None
-        mapping = (
-            None
-            if identity_mapping
-            else values.select(
-                F.col("focus").alias("_pfocus"), F.col("value").alias("_pvalue")
-            )
-        )
-        # the pool reaches a top-level shape's direct children only (depth
-        # <= 2): a pooled group bubbles through ONE mapping at flush time,
-        # and deeper levels would need the mappings composed
-        child_pool = pool.under(mapping) if pool is not None and len(self._stack) == 1 else None
-        child_viols = self.shape_violations(child, candidates, child_pool)
-        if identity_mapping:
-            return child_viols
-        return (
-            child_viols.join(mapping, child_viols["bubble"] == mapping["_pvalue"], "inner")
-            .select(F.col("_pfocus").alias("bubble"), *VIOL_COLS[1:])
-        )
-
 # --------------------------------------------------------------------------
-# Constraint implementations (module-level for a flat dispatch table).
+# Constraint implementations (module-level for a flat dispatch table).  Each
+# _IMPLS entry takes (engine, shape, constraint, targets, values, key of
+# values) and returns a violation frame or None.  Citations point at the
+# verdict logic being reproduced (shared/dash.js).
 # --------------------------------------------------------------------------
 
-def _impl_class(eng: Engine, shape, c, targets, values):
+def _impl_class(eng: Engine, shape, c, targets, values, key):
     # validateClass (dash.js:27-29): instance-of incl. data-graph subclass
     # closure — broadcast-joined type closure.  The FAIL frame is memoized
     # per (shared value frame, class): N shapes asserting the same class
@@ -1024,7 +993,7 @@ def _impl_class(eng: Engine, shape, c, targets, values):
             F.broadcast(instances), values["value"] == instances["node"], "left_anti"
         )
 
-    fail = eng._memo(eng._key("class_fail", values, cls), build)
+    fail = eng._memo(("class_fail", key, cls), build)
     return eng._rows(fail, shape, c.component.iri)
 
 
@@ -1139,33 +1108,29 @@ def _cond_stem(eng, shape, c):
     return (F.col("value_kind") == "iri") & F.col("value_v").startswith(c.param_value.value)
 
 
-def _impl_rootclass(eng, shape, c, targets, values):
+def _impl_rootclass(eng, shape, c, targets, values, key):
     # validateRootClass (dash.js:365-367): zeroOrMore(subClassOf) reachability
     root = c.param_value.encoded()
-    reach = list(eng.data_subclasses(root) | {root})
+    reach = sorted(eng.data_subclasses(root) | {root})
     fail = values.filter(~F.col("value").isin(reach))
     return eng._rows(fail, shape, c.component.iri)
 
 
-def _impl_subsetof(eng, shape, c, targets, values):
-    # validateSubSetOf (dash.js:373-375): (focus, subSetOf, value) must exist
-    trips = eng.trips(c.param_value.encoded())
-    fail = values.join(
-        trips, (values["focus"] == trips["t_s"]) & (values["value"] == trips["t_o"]), "left_anti"
-    )
-    return eng._rows(fail, shape, c.component.iri)
+def _triple_impl(how: str):
+    def impl(eng, shape, c, targets, values, key):
+        # validateSubSetOf (dash.js:373-375): (focus, subSetOf, value) must
+        # exist (left_anti); validateDisjoint (dash.js:101-103): violation if
+        # (focus, disjoint, value) exists (left_semi)
+        trips = eng.trips(c.param_value.encoded())
+        fail = values.join(
+            trips, (values["focus"] == trips["t_s"]) & (values["value"] == trips["t_o"]), how
+        )
+        return eng._rows(fail, shape, c.component.iri)
+
+    return impl
 
 
-def _impl_disjoint(eng, shape, c, targets, values):
-    # validateDisjoint (dash.js:101-103): violation if (focus, disjoint, value) exists
-    trips = eng.trips(c.param_value.encoded())
-    fail = values.join(
-        trips, (values["focus"] == trips["t_s"]) & (values["value"] == trips["t_o"]), "left_semi"
-    )
-    return eng._rows(fail, shape, c.component.iri)
-
-
-def _impl_hasvalue(eng, shape, c, targets, values):
+def _impl_hasvalue(eng, shape, c, targets, values, key):
     want = c.param_value.encoded()
     if shape.is_property_shape:
         # validateHasValueProperty (dash.js:151-154): ∃ path value == hasValue
@@ -1177,7 +1142,7 @@ def _impl_hasvalue(eng, shape, c, targets, values):
     return eng._rows(fail, shape, c.component.iri, with_value=False)
 
 
-def _impl_hasvaluewithclass(eng, shape, c, targets, values):
+def _impl_hasvaluewithclass(eng, shape, c, targets, values, key):
     # validateHasValueWithClass (dash.js:156-161)
     instances = eng.class_instances_df(c.param_value, "node").select("node")
     have = (
@@ -1191,37 +1156,33 @@ def _impl_hasvaluewithclass(eng, shape, c, targets, values):
 
 def _count_frame(eng, targets: DataFrame, values: DataFrame, path: Path | None) -> DataFrame:
     """(focus5, _cnt) per target, where `values` is the value frame of
-    `path` over `targets`.  MEMOIZED per (targets, path): minCount and
-    maxCount shapes sharing them — e.g. "at least 1" and "at most 1" over
-    the same property across a wide shape set — reuse one aggregation
-    instead of re-shuffling the value frame each."""
-
-    def build():
-        if path is not None and path.is_simple_pred:
-            # r6 "aggregate before you shuffle": the value frame is
-            # targets ⋈ trips(pred), so per-focus value counts equal the
-            # per-subject row counts of the filtered triple side — aggregate
-            # that side directly (map-side partial agg over the narrow
-            # (p, s) projection) and left-join targets once, skipping the
-            # wide values SortMergeJoin entirely.  Join-multiplicity parity:
-            # values rows per focus == trips rows with t_s == focus, and
-            # `value` (the triple object) is never null, so count("value")
-            # == count(*).
-            counts = (
-                eng.data.filter(F.col("p") == f"<{path.pred}>")
-                .groupBy(F.col("s").alias("focus"))
-                .agg(F.count("*").alias("_cnt"))
-            )
-        else:
-            counts = values.groupBy("focus").agg(F.count("value").alias("_cnt"))
-        return targets.join(counts, "focus", "left").withColumn(
-            "_cnt", F.coalesce(F.col("_cnt"), F.lit(0))
+    `path` over `targets`.  Memoized by callers under ("counts", focus key,
+    path): minCount and maxCount shapes sharing them — e.g. "at least 1"
+    and "at most 1" over the same property across a wide shape set — reuse
+    one aggregation instead of re-shuffling the value frame each."""
+    if path is not None and path.is_simple_pred:
+        # r6 "aggregate before you shuffle": the value frame is
+        # targets ⋈ trips(pred), so per-focus value counts equal the
+        # per-subject row counts of the filtered triple side — aggregate
+        # that side directly (map-side partial agg over the narrow
+        # (p, s) projection) and left-join targets once, skipping the
+        # wide values SortMergeJoin entirely.  Join-multiplicity parity:
+        # values rows per focus == trips rows with t_s == focus, and
+        # `value` (the triple object) is never null, so count("value")
+        # == count(*).
+        counts = (
+            eng.data.filter(F.col("p") == f"<{path.pred}>")
+            .groupBy(F.col("s").alias("focus"))
+            .agg(F.count("*").alias("_cnt"))
         )
+    else:
+        counts = values.groupBy("focus").agg(F.count("value").alias("_cnt"))
+    return targets.join(counts, "focus", "left").withColumn(
+        "_cnt", F.coalesce(F.col("_cnt"), F.lit(0))
+    )
 
-    return eng._memo(eng._key("counts", targets, path), build)
 
-
-def _impl_uniquelang(eng, shape, c, targets, values):
+def _impl_uniquelang(eng, shape, c, targets, values, key):
     # validateUniqueLangProperty (dash.js:377-404): per overused language one
     # violation with the exact message string; no value recorded.
     if c.param_value != TRUE:
@@ -1252,7 +1213,7 @@ def _equals_prop_frames(eng, c, targets, values):
     )
 
 
-def _impl_equals(eng, shape, c, targets, values):
+def _impl_equals(eng, shape, c, targets, values, key):
     comp_iri = c.component.iri
     if shape.is_property_shape:
         # validateEqualsProperty (dash.js:105-125): symmetric difference,
@@ -1277,7 +1238,7 @@ def _impl_equals(eng, shape, c, targets, values):
 
 
 def _lessthan_impl(strict: bool):
-    def impl(eng, shape, c, targets, values):
+    def impl(eng, shape, c, targets, values, key):
         # validateLessThan(/OrEquals)Property (dash.js:186-216): cross product
         # of path values × other-prop values per focus; incomparable (mixed
         # datatypes) or cmp >= 0 (> 0) is a violation; string comparison.
@@ -1295,7 +1256,7 @@ def _lessthan_impl(strict: bool):
     return impl
 
 
-def _impl_closed(eng, shape, c, targets, values):
+def _impl_closed(eng, shape, c, targets, values, key):
     # validateClosed (dash.js:31-54): allowed = IRI paths of this shape's
     # property shapes + sh:ignoredProperties; one violation per offending
     # (predicate, object) with custom path/value. rdf:type NOT auto-ignored.
@@ -1322,7 +1283,7 @@ def _impl_closed(eng, shape, c, targets, values):
     )
 
 
-def _impl_closedbytypes(eng, shape, c, targets, values):
+def _impl_closedbytypes(eng, shape, c, targets, values, key):
     # validateClosedByTypesNode (dash.js:56-83): allowed props come from the
     # focus node's rdf:type closure joined to shapes-graph property paths.
     if c.param_value != TRUE:
@@ -1351,10 +1312,6 @@ def _impl_closedbytypes(eng, shape, c, targets, values):
                     stack.append(par)
         return out
 
-    # allowed (type -> preds) expanded over the data-graph superclass closure
-    allowed_rows = []
-    for cls_enc, preds in cls_props.items():
-        allowed_rows.append((cls_enc, preds))
     typed = eng.data.filter(F.col("p") == RDF_TYPE_ENC).select(
         F.col("s").alias("_n"), F.col("o").alias("_t")
     )
@@ -1401,7 +1358,7 @@ def _impl_closedbytypes(eng, shape, c, targets, values):
     )
 
 
-def _impl_coexistswith(eng, shape, c, targets, values):
+def _impl_coexistswith(eng, shape, c, targets, values, key):
     # validateCoExistsWith (dash.js:85-90): (∃ path value) must equal (∃ coProp value)
     has1 = values.select("focus").dropDuplicates().withColumn("_h1", F.lit(1))
     has2 = (
@@ -1417,7 +1374,7 @@ def _impl_coexistswith(eng, shape, c, targets, values):
     return eng._rows(fail, shape, c.component.iri, with_value=False)
 
 
-def _impl_uniquevalueforclass(eng, shape, c, targets, values):
+def _impl_uniquevalueforclass(eng, shape, c, targets, values, key):
     # validateUniqueValueForClass (dash.js:406-424): violation per (other
     # instance of the class sharing a path value, value) pair.  Self-join on
     # the value column — the skew-prone join SURVEY §2.6 flags; the instance
@@ -1444,7 +1401,7 @@ def _impl_uniquevalueforclass(eng, shape, c, targets, values):
     return eng._rows(fail, shape, c.component.iri)
 
 
-def _impl_nonrecursive(eng, shape, c, targets, values):
+def _impl_nonrecursive(eng, shape, c, targets, values, key):
     # validateNonRecursiveProperty (dash.js:280-289)
     if c.param_value != TRUE:
         return None
@@ -1466,12 +1423,14 @@ def _encode_uri_component(col):
     return out
 
 
-def _impl_primarykey(eng, shape, c, targets, values):
+def _impl_primarykey(eng, shape, c, targets, values, key):
     # validatePrimaryKeyProperty (dash.js:313-325): three failure modes with
     # exact message strings; encodeURIComponent parity stays JVM-side
     # (vectorized url_encode + finite fix-ups, no Python in the path).
     uri_start = c.param_value.value
-    cnt = _count_frame(eng, targets, values, shape.path)
+    cnt = eng._memo(
+        ("counts", *key[1:]), lambda: _count_frame(eng, targets, values, shape.path)
+    )
     first_val = values.groupBy("focus").agg(F.min("value_v").alias("_val"))
     frame = cnt.join(first_val, "focus", "left")
     expected = F.concat(F.lit(uri_start), _encode_uri_component(F.col("_val")))
@@ -1487,7 +1446,7 @@ def _impl_primarykey(eng, shape, c, targets, values):
 
 # ---- logical components (conformance joins) ----
 
-def _impl_and(eng, shape, c, targets, values):
+def _impl_and(eng, shape, c, targets, values, key):
     # validateAnd (dash.js:17-25): value fails if ANY member shape rejects it
     members = eng.shapes.rdf_list(c.param_value)
     candidates = eng._values_as_candidates(values)
@@ -1502,7 +1461,7 @@ def _impl_and(eng, shape, c, targets, values):
     return eng._rows(fail, shape, c.component.iri)
 
 
-def _impl_or(eng, shape, c, targets, values):
+def _impl_or(eng, shape, c, targets, values, key):
     # validateOr (dash.js:295-303): value fails if ALL member shapes reject it
     members = eng.shapes.rdf_list(c.param_value)
     candidates = eng._values_as_candidates(values)
@@ -1514,7 +1473,7 @@ def _impl_or(eng, shape, c, targets, values):
     return eng._rows(fail, shape, c.component.iri)
 
 
-def _impl_not(eng, shape, c, targets, values):
+def _impl_not(eng, shape, c, targets, values, key):
     # validateNot (dash.js:291-293): value fails if it CONFORMS
     candidates = eng._values_as_candidates(values)
     nc = eng.nonconforming(c.param_value, candidates)
@@ -1523,7 +1482,7 @@ def _impl_not(eng, shape, c, targets, values):
     return eng._rows(fail, shape, c.component.iri)
 
 
-def _impl_xone(eng, shape, c, targets, values):
+def _impl_xone(eng, shape, c, targets, values, key):
     # validateXone (dash.js:426-435): exactly one member must conform
     members = eng.shapes.rdf_list(c.param_value)
     candidates = eng._values_as_candidates(values)
@@ -1550,7 +1509,7 @@ def _impl_xone(eng, shape, c, targets, values):
     return eng._rows(fail, shape, c.component.iri)
 
 
-def _impl_node(eng, shape, c, targets, values):
+def _impl_node(eng, shape, c, targets, values, key):
     # validateNode (dash.js:276-278)
     candidates = eng._values_as_candidates(values)
     nc = eng.nonconforming(c.param_value, candidates)
@@ -1559,7 +1518,7 @@ def _impl_node(eng, shape, c, targets, values):
 
 
 def _qualified_impl(is_min: bool):
-    def impl(eng, shape, c, targets, values):
+    def impl(eng, shape, c, targets, values, key):
         # validateQualifiedMin/MaxCountProperty + helper (dash.js:327-363)
         qshape = c.params["qualifiedValueShape"]
         bound = eng._num_param(
@@ -1629,7 +1588,7 @@ _IMPLS = {
     SH + "UniqueLangConstraintComponent": _impl_uniquelang,
     SH + "HasValueConstraintComponent": _impl_hasvalue,
     SH + "EqualsConstraintComponent": _impl_equals,
-    SH + "DisjointConstraintComponent": _impl_disjoint,
+    SH + "DisjointConstraintComponent": _triple_impl("left_semi"),
     SH + "LessThanConstraintComponent": _lessthan_impl(strict=True),
     SH + "LessThanOrEqualsConstraintComponent": _lessthan_impl(strict=False),
     SH + "ClosedConstraintComponent": _impl_closed,
@@ -1647,7 +1606,7 @@ _IMPLS = {
     DASH + "UniqueValueForClassConstraintComponent": _impl_uniquevalueforclass,
     DASH + "PrimaryKeyConstraintComponent": _impl_primarykey,
     DASH + "RootClassConstraintComponent": _impl_rootclass,
-    DASH + "SubSetOfConstraintComponent": _impl_subsetof,
+    DASH + "SubSetOfConstraintComponent": _triple_impl("left_anti"),
 }
 
 
@@ -1693,12 +1652,8 @@ def _custom_default_message(self: Engine, shape, c) -> str | None:
 
 
 def _custom(self: Engine, shape, c, targets, values, style):
-    if self.registry is None:
-        raise ShaclValidationError(
-            f"Cannot find validator for constraint component {c.component.iri}"
-        )
     fn_name = self.ir.validator_function_name(c.component, shape.is_property_shape)
-    validator = self.registry.resolve(c.component.iri, fn_name)
+    validator = None if self.registry is None else self.registry.resolve(c.component.iri, fn_name)
     if validator is None:
         raise ShaclValidationError(
             f"Cannot find validator for constraint component {c.component.iri}"

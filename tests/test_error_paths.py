@@ -96,11 +96,13 @@ ex:a a ex:T .
 
 def test_default_message_parity(spark):
     # vocab-default messages (vocabularies/dash.ttl): property-form hasValue,
-    # list-param rendering for sh:in, per-row {?path} for sh:closed, and one
-    # result message per shape-level sh:message
+    # list-param rendering for sh:in, per-row {?path} for sh:closed (the
+    # first declared matching prefix wins, as in nodeLabel), and one result
+    # message per shape-level sh:message
     ttl = """
 @prefix sh: <http://www.w3.org/ns/shacl#> .
 @prefix ex: <http://e/> .
+@prefix exa: <http://e/a/> .
 ex:HV a sh:NodeShape ; sh:targetNode ex:a ;
   sh:property [ sh:path ex:v ; sh:hasValue "needed" ] .
 ex:IN a sh:NodeShape ; sh:targetNode ex:a ;
@@ -111,7 +113,7 @@ ex:CL a sh:NodeShape ; sh:targetNode ex:a ; sh:closed true ;
 ex:MM a sh:NodeShape ; sh:targetNode ex:a ;
   sh:property [ sh:path ex:missing ; sh:minCount 1 ;
                 sh:message "first" ; sh:message "second" ] .
-ex:a ex:v "other" ; ex:w "bad" ; ex:extra "boom" .
+ex:a ex:v "other" ; ex:w "bad" ; ex:extra "boom" ; exa:p 1 .
 """
     report = _engine(spark, ttl).validate()
     by_comp = {}
@@ -121,8 +123,10 @@ ex:a ex:v "other" ; ex:w "bad" ; ex:extra "boom" .
         "Missing expected value needed"
     assert by_comp["InConstraintComponent"][0].resultMessage() == \
         "Value is not in x, ex:y"
-    assert by_comp["ClosedConstraintComponent"][0].resultMessage() == \
-        "Predicate ex:extra is not allowed (closed shape)"
+    assert sorted(r.resultMessage() for r in by_comp["ClosedConstraintComponent"]) == [
+        "Predicate ex:a/p is not allowed (closed shape)",
+        "Predicate ex:extra is not allowed (closed shape)",
+    ]
     mm = sorted(m for r in by_comp["MinCountConstraintComponent"] for m in r.messages())
     assert mm == ["first", "second"]
 

@@ -471,10 +471,10 @@ def test_jsonld_prefix_map_skips_keyword_aliases(spark):
 
 
 def test_cross_shape_fusion_parity(spark):
-    # report_df() pools row-wise and count checks from shapes sharing a
+    # report_df() groups row-wise and count checks from shapes sharing a
     # value (or count) frame into one fused pass per frame; the emitted row
     # MULTISET must be exactly the per-constraint verdicts below, derived by
-    # hand from dash.js semantics, and equal to the pool-free per-shape walk
+    # hand from dash.js semantics, and equal to the per-shape plans
     from shacl_js_spark.graph import turtle_df
     from shacl_js_spark.localgraph import LocalGraph
     from shacl_js_spark.validation import RECORD_COLS, Engine
@@ -536,13 +536,17 @@ def test_cross_shape_fusion_parity(spark):
     assert got == expected
     # every row names the property shape that produced it, never the parent
     assert all(r["source_shape"].startswith("_:") for r in report.collect())
-    # the pool is owned by one report walk: a second report on the SAME
-    # engine (warm memos, fresh pool) emits the same rows, none carried over
+    # one fused pass per (frame, kind) group: values(T, p), values(T, q),
+    # values(T, no path), counts(T, p) and counts(T, q)
+    plan = report._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Generate ") == 5, plan
+    # groups belong to one report: a second report on the SAME engine
+    # (warm memos) emits the same rows, none carried over
     assert rows(eng.report_df()) == expected
     eng.release()
 
-    # the pool-free walk (no pool: each shape flushes its own groups and
-    # sh:property applies the bubble join itself) emits the same multiset
+    # planning each shape on its own (one check list per shape) emits the
+    # same multiset
     walk = Engine(spark, data, shapes)
     out = None
     for shape in walk.ir.shapes_with_target():
@@ -551,7 +555,7 @@ def test_cross_shape_fusion_parity(spark):
     assert rows(out) == expected
     walk.release()
 
-    # the COUNT pool fired: S4 minCount (ex:c has no ex:p), S6 maxCount with
+    # the count groups fired: S4 minCount (ex:c has no ex:p), S6 maxCount with
     # a shape-level message (ex:a has two ex:p), S7 minCount 2 at Info
     msgs = {r[-1] for r in got}
     assert "too many p" in msgs
@@ -624,6 +628,81 @@ def test_class_fail_frame_memoized_across_shapes(spark):
     assert not fails[0].is_cached
     eng.release()
     assert not eng._frames
+
+
+def test_class_closure_in_list_sorted(spark):
+    # the subclass-closure IN list is sorted, so the plan text is the same
+    # in every process (a set iterates in string-hash order, which varies)
+    import re
+
+    from shacl_js_spark.graph import turtle_df
+    from shacl_js_spark.localgraph import LocalGraph
+    from shacl_js_spark.terms import iri
+    from shacl_js_spark.validation import Engine
+
+    data = turtle_df(spark, """
+    @prefix ex: <http://e/> .
+    @prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+    ex:D rdfs:subClassOf ex:A . ex:B rdfs:subClassOf ex:A .
+    ex:E rdfs:subClassOf ex:B . ex:C rdfs:subClassOf ex:A .
+    ex:x a ex:E .
+    """)
+    eng = Engine(spark, data, LocalGraph.from_turtle("@prefix ex: <http://e/> ."))
+    df = eng.class_instances_df(iri("http://e/A"))
+    plan = df._jdf.queryExecution().analyzed().toString()
+    listed = re.search(r" IN \(([^)]*)\)", plan).group(1).split(",")
+    assert listed == sorted(listed) and len(listed) == 5, plan
+    assert [r["focus_v"] for r in df.collect()] == ["http://e/x"]
+
+
+def test_nested_property_depth3_and_cycle(spark):
+    # three sh:property levels: each parent focus re-validates the shared
+    # value node (validation-engine.js:224-232), so the two targets a, b
+    # reaching ex:m each report the failing grandchild values once
+    import pytest
+
+    from shacl_js_spark.graph import turtle_df
+    from shacl_js_spark.localgraph import LocalGraph
+    from shacl_js_spark.terms import iri
+    from shacl_js_spark.validation import Engine, ShaclValidationError
+
+    data = turtle_df(spark, """
+    @prefix ex: <http://e/> .
+    ex:a a ex:T ; ex:p ex:m .
+    ex:b a ex:T ; ex:p ex:m .
+    ex:m ex:q ex:n1 , ex:n2 .
+    ex:n1 ex:r "xy" .
+    ex:n2 ex:r "xy" , "xyz" .
+    """)
+    prefix = """
+    @prefix sh: <http://www.w3.org/ns/shacl#> .
+    @prefix ex: <http://e/> .
+    """
+    shapes = LocalGraph.from_turtle(prefix + """
+    ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+      sh:property [ sh:path ex:p ;
+        sh:property [ sh:path ex:q ;
+          sh:property [ sh:path ex:r ; sh:minLength 3 ] ] ] .
+    """)
+    eng = Engine(spark, data, shapes)
+    got = sorted(
+        (r["focus_v"], r["value_v"]) for r in eng.report_df().collect()
+    )
+    n1, n2 = "http://e/n1", "http://e/n2"
+    assert got == [(n1, "xy"), (n1, "xy"), (n2, "xy"), (n2, "xy")]
+    # the bubble column lifts every row to the target focus it came from
+    shape = eng.ir.get_shape(iri("http://e/S"))
+    bubbles = sorted(
+        r["bubble"] for r in eng.shape_violations(shape, eng.targets_frame(shape)).collect()
+    )
+    assert bubbles == ["<http://e/a>"] * 2 + ["<http://e/b>"] * 2
+
+    cyclic = LocalGraph.from_turtle(prefix + """
+    ex:S a sh:NodeShape ; sh:targetClass ex:T ; sh:property ex:P .
+    ex:P sh:path ex:knows ; sh:property ex:P .
+    """)
+    with pytest.raises(ShaclValidationError, match="max_shape_recursion=4"):
+        Engine(spark, data, cyclic, max_shape_recursion=4).report_df()
 
 
 def test_count_aggregates_triple_side_below_target_join(spark):
