@@ -111,11 +111,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mk_triples(spark, rows_df) -> DataFrame:
-    """rows_df: (s_v, p_v, o enc parts) pre-built columns -> TRIPLE_SCHEMA."""
-    return rows_df.select(*TRIPLE_FIELDS)
-
-
 def _iri_triple(df, s_col, p_iri, o_col) -> DataFrame:
     return df.select(
         F.concat(F.lit("<"), s_col, F.lit(">")).alias("s"),

@@ -1,16 +1,19 @@
 """Write the formatted physical plan of oracle queries to text files.
 
     python scripts/dump_plans.py --sf /path/to/sf0.1 --out plans/pr2 --tag after \
-        shacl_mincount shacl_class shacl_range
+        shacl_mincount 'shacl_qualified*'
 
-Each query's plan goes to <out>/<query>_<tag>.txt (`explain("formatted")`
-output), and one summary line per query reports its Exchange and join node
-counts, so two checkouts' plans can be compared without a diff tool.
+Queries are selected by name or fnmatch glob, as in check_oracle.py; a
+pattern that selects no query is an error (exit 1).  Each query's plan
+goes to <out>/<query>_<tag>.txt (`explain("formatted")` output), and one
+summary line per query reports its Exchange and join node counts, so two
+checkouts' plans can be compared without a diff tool.
 """
 
 from __future__ import annotations
 
 import argparse
+import fnmatch
 import os
 import re
 import sys
@@ -36,8 +39,16 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="directory for the plan files")
     ap.add_argument("--tag", required=True, help="file suffix, e.g. before/after")
     ap.add_argument("--cpus", type=int, default=4)
-    ap.add_argument("queries", nargs="+")
+    ap.add_argument("queries", nargs="+", help="query names or fnmatch globs")
     args = ap.parse_args()
+
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    unmatched = [p for p in args.queries if not any(fnmatch.fnmatchcase(n, p) for n in qs)]
+    if unmatched:
+        sys.exit(f"no query matches {' '.join(unmatched)}")
+    names = [n for n in qs if any(fnmatch.fnmatchcase(n, p) for p in args.queries)]
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
@@ -49,11 +60,8 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
     os.makedirs(args.out, exist_ok=True)
-    for name in args.queries:
+    for name in names:
         df = qs[name](spark, args.sf)
         plan = spark._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

@@ -164,19 +164,6 @@ def term_cols(prefix: str) -> list[str]:
     return [prefix, f"{prefix}_v", f"{prefix}_kind", f"{prefix}_dt", f"{prefix}_lang"]
 
 
-def select_term_as(df: DataFrame, src: str, dst: str, extra: list[str] | None = None) -> DataFrame:
-    """Project the 5-column group `src` to name `dst` (plus extra passthrough cols)."""
-    cols = [F.col(c) for c in (extra or [])]
-    cols += [
-        F.col(src).alias(dst),
-        F.col(f"{src}_v").alias(f"{dst}_v"),
-        F.col(f"{src}_kind").alias(f"{dst}_kind"),
-        F.col(f"{src}_dt").alias(f"{dst}_dt"),
-        F.col(f"{src}_lang").alias(f"{dst}_lang"),
-    ]
-    return df.select(*cols)
-
-
 def subject_decomposed(col: str = "s", prefix: str = "focus") -> list[Column]:
     """Decompose an encoded subject column (iri/bnode only) into a 5-col group."""
     c = F.col(col)
@@ -204,10 +191,6 @@ def terms_frame(spark: SparkSession, terms: list[Term], prefix: str = "focus") -
     schema = StructType([StructField(n, StringType(), True) for n in term_cols(prefix)])
     rows = [term_to_row_parts(t) for t in terms]
     return spark.createDataFrame(rows, schema)
-
-
-def enc_iri(value: str) -> str:
-    return f"<{value}>"
 
 
 def ntriples_lines(df: DataFrame) -> DataFrame:

@@ -15,8 +15,9 @@ large-star/small-star):
         label(v) = min(label(v), msg(v))
     until no label changes
 
-Each round is one shuffle on the edge list; lineage is cut every round with
-localCheckpoint.  Convergence in O(max component diameter) rounds — alias
+Each round is one shuffle on the edge list; lineage is cut every round
+(cut_lineage: a reliable checkpoint when a checkpoint dir is set, else
+localCheckpoint).  Convergence in O(max component diameter) rounds — alias
 graphs are shallow (star-like), so 2-3 rounds in practice.
 
 Skew: a hot entity (one surface in 10% of docs) concentrates edges on one

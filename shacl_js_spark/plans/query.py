@@ -25,16 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph import term_cols
+from ..graph import subject_decomposed, term_cols
 from ..terms import T, Term, decode_term
-
-
-def _tt_name(kind_col):
-    return (
-        F.when(kind_col == "bnode", F.lit("BlankNode"))
-        .when(kind_col == "literal", F.lit("Literal"))
-        .otherwise(F.lit("NamedNode"))
-    )
+from ..validation import Engine, _tt_name
 
 
 def _as_term(arg) -> Term:
@@ -106,16 +99,7 @@ class RDFQueryDF:
                     trips["t_o_lang"].alias(f"{var}_lang"),
                 ]
             else:
-                enc = trips["t_s"] if pos == "s" else trips["t_p"]
-                is_b = enc.startswith("_:")
-                src = "t_s" if pos == "s" else "t_p"
-                keep += [
-                    enc.alias(var),
-                    F.when(is_b, enc).otherwise(F.expr(f"substring({src}, 2, length({src}) - 2)")).alias(f"{var}_v"),
-                    F.when(is_b, F.lit("bnode")).otherwise(F.lit("iri")).alias(f"{var}_kind"),
-                    F.lit(None).cast("string").alias(f"{var}_dt"),
-                    F.lit(None).cast("string").alias(f"{var}_lang"),
-                ]
+                keep += subject_decomposed("t_s" if pos == "s" else "t_p", var)
         return self._with(joined.select(*keep), tuple(v for v, _ in new_vars))
 
     def filter(self, cond) -> "RDFQueryDF":
@@ -181,11 +165,11 @@ class RDFQueryDF:
         """Property-path traversal (ref PathQuery, rdfquery.js:780-859).
         `s` must be a bound var or term; `o` a fresh var.  Uses the engine's
         path algebra (fixpoint joins for zeroOrMore/oneOrMore)."""
-        from ..validation import Engine
         from ..localgraph import LocalGraph
         from ..shapes import Path as PathAST
 
-        assert isinstance(o, str) and o.startswith("?"), "path object must be a variable"
+        if not (isinstance(o, str) and o.startswith("?")):
+            raise ValueError(f"path object must be a variable, got {o!r}")
         ov = o[1:]
         eng = Engine(self.spark, self.data, LocalGraph([]))
         if isinstance(s, str) and s.startswith("?"):

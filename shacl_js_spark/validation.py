@@ -13,10 +13,10 @@ per-node recursive walk.  A report runs in two steps:
     chain) become ONE fused pass over that frame; every other check runs
     its own lazy plan (joins/aggregations over the whole focus-node set at
     once).  The report is the union of those legs, read by one action.
-Nested conformance (sh:and/or/not/node/qualified*) maps to semi/anti-joins
-against the child shape's non-conforming node set — only the boolean
-escapes, mirroring the reference's recordErrorsLevel suppression
-(validation-engine.js:251-282).
+Nested conformance (sh:and/or/not/xone/node/qualified*) counts, per value
+node, the member shapes whose non-conforming node set holds it (_rejected)
+— only that count escapes, mirroring the reference's recordErrorsLevel
+suppression (validation-engine.js:251-282).
 
 Scale notes (100 TB design):
   * every constraint is built-in Column expressions + equi-joins — no
@@ -26,8 +26,9 @@ Scale notes (100 TB design):
     as broadcast joins — the "broadcast-joined type closure" of the north rule
   * focus/value frames key on a single encoded-term string column, so all
     joins are 1-column equi-joins AQE can re-plan (skew → AQE skew join)
-  * zeroOrMore/oneOrMore paths run as an iterative fixpoint with
-    localCheckpoint per round to cut lineage (SURVEY.md §4)
+  * zeroOrMore/oneOrMore paths run as an iterative fixpoint that cuts
+    lineage every round (cut_lineage: a reliable checkpoint when a
+    checkpoint dir is set, else localCheckpoint; SURVEY.md §4)
 """
 
 from __future__ import annotations
@@ -496,15 +497,7 @@ class Engine:
             ]
         else:
             joined = df.join(trips, df["cur"] == trips["t_o"], "inner")
-            s = trips["t_s"]
-            is_b = s.startswith("_:")
-            new_cur = [
-                s.alias("cur"),
-                F.when(is_b, s).otherwise(F.expr("substring(t_s, 2, length(t_s) - 2)")).alias("cur_v"),
-                F.when(is_b, F.lit("bnode")).otherwise(F.lit("iri")).alias("cur_kind"),
-                _NULL().alias("cur_dt"),
-                _NULL().alias("cur_lang"),
-            ]
+            new_cur = subject_decomposed("t_s", "cur")
         return joined.select(*[df[c] for c in term_cols("focus")], *new_cur)
 
     def _walk(self, path: Path, df: DataFrame) -> DataFrame:
@@ -1201,24 +1194,12 @@ def _impl_uniquelang(eng, shape, c, targets, values, key):
     return eng._rows(langs, shape, c.component.iri, with_value=False, message_col=msg)
 
 
-def _equals_prop_frames(eng, c, targets, values):
-    trips = eng.trips(c.param_value.encoded())
-    return targets.join(trips, targets["focus"] == trips["t_s"], "inner").select(
-        *[targets[x] for x in term_cols("focus")],
-        F.col("t_o").alias("value"),
-        F.col("t_o_v").alias("value_v"),
-        F.col("t_o_kind").alias("value_kind"),
-        F.col("t_o_dt").alias("value_dt"),
-        F.col("t_o_lang").alias("value_lang"),
-    )
-
-
 def _impl_equals(eng, shape, c, targets, values, key):
     comp_iri = c.component.iri
+    other = eng.eval_path(Path("pred", pred=c.param_value.value), targets)
     if shape.is_property_shape:
         # validateEqualsProperty (dash.js:105-125): symmetric difference,
         # one violation per missing member on either side.
-        other = _equals_prop_frames(eng, c, targets, values)
         # anti-join on (focus, value) both directions
         a = values.select(*term_cols("focus"), *term_cols("value"))
         b = other.select(*term_cols("focus"), *term_cols("value"))
@@ -1227,7 +1208,6 @@ def _impl_equals(eng, shape, c, targets, values, key):
         return eng._rows(miss1.unionByName(miss2), shape, comp_iri)
     # validateEqualsNode (dash.js:127-145): every value of the equals
     # predicate must equal the focus; zero values -> one violation (value=focus)
-    other = _equals_prop_frames(eng, c, targets, values)
     neq = other.filter(F.col("value") != F.col("focus"))
     empty = targets.join(other.select("focus").dropDuplicates(), "focus", "left_anti")
     self_val = empty.select(
@@ -1242,7 +1222,7 @@ def _lessthan_impl(strict: bool):
         # validateLessThan(/OrEquals)Property (dash.js:186-216): cross product
         # of path values × other-prop values per focus; incomparable (mixed
         # datatypes) or cmp >= 0 (> 0) is a violation; string comparison.
-        other = _equals_prop_frames(eng, c, targets, values).select(
+        other = eng.eval_path(Path("pred", pred=c.param_value.value), targets).select(
             F.col("focus").alias("_f2"),
             *[F.col(x).alias(x.replace("value", "_o")) for x in term_cols("value")],
         )
@@ -1444,91 +1424,47 @@ def _impl_primarykey(eng, shape, c, targets, values, key):
     return eng._rows(fail, shape, c.component.iri, with_value=False, message_col=F.col("_msg"))
 
 
-# ---- logical components (conformance joins) ----
+# ---- nested conformance (rejection counts) ----
 
-def _impl_and(eng, shape, c, targets, values, key):
-    # validateAnd (dash.js:17-25): value fails if ANY member shape rejects it
-    members = eng.shapes.rdf_list(c.param_value)
-    candidates = eng._values_as_candidates(values)
-    nc_union = None
-    for m in members:
-        nc = eng.nonconforming(m, candidates)
-        nc_union = nc if nc_union is None else nc_union.unionByName(nc)
-    if nc_union is None:
-        return None
-    nc_union = nc_union.dropDuplicates(["node"])
-    fail = values.join(nc_union, values["value"] == nc_union["node"], "left_semi")
-    return eng._rows(fail, shape, c.component.iri)
-
-
-def _impl_or(eng, shape, c, targets, values, key):
-    # validateOr (dash.js:295-303): value fails if ALL member shapes reject it
-    members = eng.shapes.rdf_list(c.param_value)
-    candidates = eng._values_as_candidates(values)
-    fail_set = candidates.select(F.col("focus").alias("node"))
-    for m in members:
-        nc = eng.nonconforming(m, candidates)
-        fail_set = fail_set.join(nc, "node", "left_semi")
-    fail = values.join(fail_set, values["value"] == fail_set["node"], "left_semi")
-    return eng._rows(fail, shape, c.component.iri)
-
-
-def _impl_not(eng, shape, c, targets, values, key):
-    # validateNot (dash.js:291-293): value fails if it CONFORMS
-    candidates = eng._values_as_candidates(values)
-    nc = eng.nonconforming(c.param_value, candidates)
-    conforming = candidates.select(F.col("focus").alias("node")).join(nc, "node", "left_anti")
-    fail = values.join(conforming, values["value"] == conforming["node"], "left_semi")
-    return eng._rows(fail, shape, c.component.iri)
-
-
-def _impl_xone(eng, shape, c, targets, values, key):
-    # validateXone (dash.js:426-435): exactly one member must conform
-    members = eng.shapes.rdf_list(c.param_value)
-    candidates = eng._values_as_candidates(values)
-    conf_union = None
-    for m in members:
-        nc = eng.nonconforming(m, candidates)
-        conf = candidates.select(F.col("focus").alias("node")).join(nc, "node", "left_anti")
-        conf_union = conf if conf_union is None else conf_union.unionByName(conf)
-    counts = (
-        conf_union.groupBy("node").agg(F.count("*").alias("_n"))
-        if conf_union is not None
-        else None
+def _rejected(eng: Engine, frame: DataFrame, members: list[Term], fails) -> DataFrame:
+    """Rows of `frame` whose value node fails `fails(n, k)`: n counts the
+    `members` shapes that reject the node, k = len(members) — the
+    reference's per-node count of conforming members (dash.js:17-25,
+    276-303, 426-435).  Each nonconforming set is distinct per node, so one
+    count over their union gives n; no members give an empty count."""
+    candidates = eng._values_as_candidates(frame)
+    rejects = [eng.nonconforming(m, candidates) for m in members]
+    counts = functools.reduce(
+        DataFrame.unionByName, rejects, eng.spark.range(0).select(_NULL().alias("node"))
+    ).groupBy("node").agg(F.count("*").alias("_n"))
+    n = F.coalesce(F.col("_n"), F.lit(0))
+    return (
+        frame.join(counts, frame["value"] == counts["node"], "left")
+        .filter(fails(n, len(members)))
+        .select(*frame.columns)
     )
-    cand_nodes = candidates.select(F.col("focus").alias("node"))
-    if counts is None:
-        fail_set = cand_nodes
-    else:
-        fail_set = (
-            cand_nodes.join(counts, "node", "left")
-            .filter(F.coalesce(F.col("_n"), F.lit(0)) != 1)
-            .select("node")
-        )
-    fail = values.join(fail_set, values["value"] == fail_set["node"], "left_semi")
-    return eng._rows(fail, shape, c.component.iri)
 
 
-def _impl_node(eng, shape, c, targets, values, key):
-    # validateNode (dash.js:276-278)
-    candidates = eng._values_as_candidates(values)
-    nc = eng.nonconforming(c.param_value, candidates)
-    fail = values.join(nc, values["value"] == nc["node"], "left_semi")
-    return eng._rows(fail, shape, c.component.iri)
+def _logical_impl(fails, listed: bool = True):
+    """sh:and/or/xone (a list of member shapes) or sh:not/node (one)."""
+    def impl(eng, shape, c, targets, values, key):
+        members = eng.shapes.rdf_list(c.param_value) if listed else [c.param_value]
+        fail = _rejected(eng, values, members, fails)
+        return eng._rows(fail, shape, c.component.iri)
+
+    return impl
 
 
 def _qualified_impl(is_min: bool):
     def impl(eng, shape, c, targets, values, key):
-        # validateQualifiedMin/MaxCountProperty + helper (dash.js:327-363)
+        # validateQualifiedMin/MaxCountProperty + helper (dash.js:327-363):
+        # count the values conforming to the qualified shape and, when the
+        # shapes are disjoint, to none of the sibling qualified shapes
         qshape = c.params["qualifiedValueShape"]
         bound = eng._num_param(
             c.params["qualifiedMinCount" if is_min else "qualifiedMaxCount"]
         )
-        candidates = eng._values_as_candidates(values)
-        nc = eng.nonconforming(qshape, candidates)
-        cand_nodes = candidates.select(F.col("focus").alias("node"))
-        conf = cand_nodes.join(nc, "node", "left_anti")
-        qualified = values.join(conf, values["value"] == conf["node"], "left_semi")
+        qualified = _rejected(eng, values, [qshape], lambda n, k: n == 0)
         disjoint = c.params.get("qualifiedValueShapesDisjoint")
         if disjoint == TRUE:
             siblings = []
@@ -1537,12 +1473,7 @@ def _qualified_impl(is_min: bool):
                     for sib_q in eng.shapes.objects(sib, iri(SH + "qualifiedValueShape")):
                         if sib_q != qshape:
                             siblings.append(sib_q)
-            for sib_q in siblings:
-                sib_nc = eng.nonconforming(sib_q, candidates)
-                sib_conf = cand_nodes.join(sib_nc, "node", "left_anti")
-                qualified = qualified.join(
-                    sib_conf, qualified["value"] == sib_conf["node"], "left_anti"
-                )
+            qualified = _rejected(eng, qualified, siblings, lambda n, k: n == k)
         counts = qualified.groupBy("focus").agg(F.count("*").alias("_cnt"))
         frame = targets.join(counts, "focus", "left").withColumn(
             "_cnt", F.coalesce(F.col("_cnt"), F.lit(0))
@@ -1592,11 +1523,13 @@ _IMPLS = {
     SH + "LessThanConstraintComponent": _lessthan_impl(strict=True),
     SH + "LessThanOrEqualsConstraintComponent": _lessthan_impl(strict=False),
     SH + "ClosedConstraintComponent": _impl_closed,
-    SH + "AndConstraintComponent": _impl_and,
-    SH + "OrConstraintComponent": _impl_or,
-    SH + "NotConstraintComponent": _impl_not,
-    SH + "XoneConstraintComponent": _impl_xone,
-    SH + "NodeConstraintComponent": _impl_node,
+    # validateAnd/Or/Not/Xone/Node (dash.js:17-25, 276-303, 426-435)
+    # n of k members reject the value (_rejected); dash.js:17-25, 276-303, 426-435
+    SH + "AndConstraintComponent": _logical_impl(lambda n, k: n > 0),
+    SH + "OrConstraintComponent": _logical_impl(lambda n, k: n == k),
+    SH + "NotConstraintComponent": _logical_impl(lambda n, k: n == 0, listed=False),
+    SH + "XoneConstraintComponent": _logical_impl(lambda n, k: k - n != 1),
+    SH + "NodeConstraintComponent": _logical_impl(lambda n, k: n > 0, listed=False),
     SH + "QualifiedMinCountConstraintComponent": _qualified_impl(is_min=True),
     SH + "QualifiedMaxCountConstraintComponent": _qualified_impl(is_min=False),
     DASH + "ClosedByTypesConstraintComponent": _impl_closedbytypes,

@@ -67,3 +67,11 @@ def test_terminals(spark, data):
     assert len(q.node_set("?x")) == 3
     assert q.first("?x") is not None
     assert not RDFQueryDF(spark, data).match("?x", "<http://e/missing>", None).has_solution()
+
+
+def test_path_object_must_be_variable(spark, data):
+    # a checked error, not an assert: under `python -O` a term object would
+    # otherwise bind a column named after the IRI
+    q = RDFQueryDF(spark, data).match("?x", "rdfs:label", "A")
+    with pytest.raises(ValueError, match="path object must be a variable"):
+        q.path("?x", Path("pred", pred="http://e/knows"), "<http://e/x>")

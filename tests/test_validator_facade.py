@@ -705,6 +705,70 @@ def test_nested_property_depth3_and_cycle(spark):
         Engine(spark, data, cyclic, max_shape_recursion=4).report_df()
 
 
+def test_nested_conformance_components(spark):
+    # x1 conforms to P only, x2 to P and Q, x3 to R only; verdicts derived
+    # by hand from dash.js (and/or/not/xone/node: 17-25, 276-303, 426-435;
+    # qualified*: 327-363)
+    from shacl_js_spark.graph import turtle_df
+    from shacl_js_spark.localgraph import LocalGraph
+    from shacl_js_spark.validation import Engine
+
+    data = turtle_df(spark, """
+    @prefix ex: <http://e/> .
+    ex:a a ex:T ; ex:v ex:x1 , ex:x2 , ex:x3 .
+    ex:b a ex:T ; ex:v ex:x1 .
+    ex:x1 ex:p 1 .
+    ex:x2 ex:p 1 ; ex:q 1 .
+    ex:x3 ex:r 1 .
+    """)
+    shapes = LocalGraph.from_turtle("""
+    @prefix sh: <http://www.w3.org/ns/shacl#> .
+    @prefix ex: <http://e/> .
+    ex:P sh:property [ sh:path ex:p ; sh:minCount 1 ] .
+    ex:Q sh:property [ sh:path ex:q ; sh:minCount 1 ] .
+    ex:R sh:property [ sh:path ex:r ; sh:minCount 1 ] .
+    ex:S a sh:NodeShape ; sh:targetClass ex:T ; sh:property
+      ex:And , ex:Or , ex:Not , ex:Xone , ex:XoneDup , ex:Node , ex:OrEmpty ,
+      ex:QP , ex:QQ .
+    ex:And sh:path ex:v ; sh:and ( ex:P ex:Q ) .
+    ex:Or sh:path ex:v ; sh:or ( ex:P ex:Q ) .
+    ex:Not sh:path ex:v ; sh:not ex:P .
+    ex:Xone sh:path ex:v ; sh:xone ( ex:P ex:Q ex:R ) .
+    ex:XoneDup sh:path ex:v ; sh:xone ( ex:P ex:P ) .
+    ex:Node sh:path ex:v ; sh:node ex:Q .
+    ex:OrEmpty sh:path ex:v ; sh:or () .
+    ex:QP sh:path ex:v ; sh:qualifiedValueShape ex:P ; sh:qualifiedMinCount 2 ;
+      sh:qualifiedValueShapesDisjoint true .
+    ex:QQ sh:path ex:v ; sh:qualifiedValueShape ex:Q ; sh:qualifiedMinCount 1 ;
+      sh:qualifiedValueShapesDisjoint true .
+    """)
+
+    def name(enc):
+        return enc.rsplit("/", 1)[1].rstrip(">") if enc else ""
+
+    got = sorted(
+        (name(r["focus"]), name(r["source_shape"]), name(r["value"]))
+        for r in Engine(spark, data, shapes).report_df().collect()
+    )
+    expected = [
+        ("a", "And", "x1"), ("a", "And", "x3"), ("b", "And", "x1"),
+        ("a", "Or", "x3"),
+        ("a", "Not", "x1"), ("a", "Not", "x2"), ("b", "Not", "x1"),
+        ("a", "Xone", "x2"),
+        # a duplicated member is never "exactly one"
+        ("a", "XoneDup", "x1"), ("a", "XoneDup", "x2"), ("a", "XoneDup", "x3"),
+        ("b", "XoneDup", "x1"),
+        ("a", "Node", "x1"), ("a", "Node", "x3"), ("b", "Node", "x1"),
+        # no member can accept a value
+        ("a", "OrEmpty", "x1"), ("a", "OrEmpty", "x2"), ("a", "OrEmpty", "x3"),
+        ("b", "OrEmpty", "x1"),
+        # disjoint: x2 conforms to both P and Q, so it counts for neither —
+        # a keeps 1 of 2 P-values and 0 of 1 Q-values
+        ("a", "QP", ""), ("a", "QQ", ""), ("b", "QP", ""), ("b", "QQ", ""),
+    ]
+    assert got == sorted(expected)
+
+
 def test_count_aggregates_triple_side_below_target_join(spark):
     # a minCount over a simple predicate counts values by aggregating the
     # filtered triple side per subject, then left-joins the targets once:
