@@ -9,7 +9,12 @@ SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -c
 
 SF_DIR ?= /root/testdata/sf0.01
-ROUND  ?= r03
+
+# targets that write BENCH/*_$(ROUND).* name their evidence explicitly
+# (make gate ROUND=<tag>): a default would overwrite committed logs
+define need_round
+$(if $(ROUND),,$(error ROUND is not set: run e.g. `make $@ ROUND=<tag>`; the log goes to BENCH/ under that tag))
+endef
 
 .PHONY: gate gate-shacl bench verify test dist submit-smoke many-shapes
 
@@ -33,6 +38,7 @@ submit-smoke: dist
 	grep -E '^\{"input"' BENCH/submit_smoke.log | tail -1
 
 gate:
+	$(need_round)
 	python scripts/check_oracle.py $(SF_DIR) 2>&1 | grep -v -E "WARN|FutureWarning|serializers.py" | tee BENCH/full_gate_$(ROUND).log
 
 # SHACL subset of the gate: every shacl_* and dash_* query against its
@@ -42,11 +48,13 @@ gate-shacl:
 	python scripts/check_oracle.py $(SF_DIR) 'shacl_*' 'dash_*' 2>&1 | grep -v -E "WARN|FutureWarning|serializers.py"
 
 bench:
+	$(need_round)
 	python bench.py 2>&1 | tail -1 | tee BENCH/bench_$(ROUND).json
 
 # SHACL report wall and report_df() plan-build time at 2 / 10 / 50 shapes
 # (plus a violation-bearing 50) over one replicated KG corpus
 many-shapes:
+	$(need_round)
 	python scripts/many_shapes_bench.py 2>&1 | tail -1 | tee BENCH/many_shapes_$(ROUND).json
 
 # the tier-1 command of ROADMAP.md: the whole suite, run past failures and

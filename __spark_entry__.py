@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shacl_js_spark.graph import TRIPLE_FIELDS, TRIPLE_SCHEMA
+from shacl_js_spark.graph import TRIPLE_FIELDS, iri_cols, literal_cols, triple_cols
 from shacl_js_spark.localgraph import LocalGraph
 from shacl_js_spark.ops.dedup import (
     LSH_BANDS,
@@ -46,6 +46,7 @@ from shacl_js_spark.pipeline.synth import ENTITY_LEXICON, interleaved_documents,
 from shacl_js_spark.graph import ordered_pairs
 from shacl_js_spark.plans.query import RDFQueryDF
 from shacl_js_spark.shapes import Path
+from shacl_js_spark.terms import XSD_STRING
 from shacl_js_spark.validation import Engine
 
 EX = "http://ex/"
@@ -111,58 +112,26 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _spo(s_col, p_iri, o_cols) -> list:
+    """One triple row about the IRI `s_col`, in the gate graph "g"."""
+    return triple_cols(iri_cols(s_col)[0], p_iri, o_cols, "g")
+
+
 def _iri_triple(df, s_col, p_iri, o_col) -> DataFrame:
-    return df.select(
-        F.concat(F.lit("<"), s_col, F.lit(">")).alias("s"),
-        F.lit(f"<{p_iri}>").alias("p"),
-        F.concat(F.lit("<"), o_col, F.lit(">")).alias("o"),
-        o_col.alias("o_v"),
-        F.lit("iri").alias("o_kind"),
-        F.lit(None).cast("string").alias("o_dt"),
-        F.lit(None).cast("string").alias("o_lang"),
-        F.lit("g").alias("g"),
-    )
+    return df.select(*_spo(s_col, p_iri, iri_cols(o_col)))
 
 
-def _lit_triple(df, s_col, p_iri, o_col, dt="http://www.w3.org/2001/XMLSchema#string") -> DataFrame:
-    suffix = "" if dt.endswith("#string") else f"^^<{dt}>"
-    return df.select(
-        F.concat(F.lit("<"), s_col, F.lit(">")).alias("s"),
-        F.lit(f"<{p_iri}>").alias("p"),
-        F.concat(F.lit('"'), o_col, F.lit('"'), F.lit(suffix)).alias("o"),
-        o_col.alias("o_v"),
-        F.lit("literal").alias("o_kind"),
-        F.lit(dt).alias("o_dt"),
-        F.lit(None).cast("string").alias("o_lang"),
-        F.lit("g").alias("g"),
-    )
-
-
-def _triple_struct(s_col, p_iri, o, o_v, o_kind, o_dt, cond=None):
-    st = F.struct(
-        F.concat(F.lit("<"), s_col, F.lit(">")).alias("s"),
-        F.lit(f"<{p_iri}>").alias("p"),
-        o.alias("o"),
-        o_v.alias("o_v"),
-        F.lit(o_kind).alias("o_kind"),
-        F.lit(o_dt).cast("string").alias("o_dt"),
-        F.lit(None).cast("string").alias("o_lang"),
-        F.lit("g").alias("g"),
-    )
-    return st if cond is None else F.when(cond, st)
+def _lit_triple(df, s_col, p_iri, o_col, dt=XSD_STRING) -> DataFrame:
+    return df.select(*_spo(s_col, p_iri, literal_cols(o_col, dt)))
 
 
 def _iri_struct(s_col, p_iri, o_col, cond=None):
-    return _triple_struct(
-        s_col, p_iri, F.concat(F.lit("<"), o_col, F.lit(">")), o_col, "iri", None, cond
-    )
+    st = F.struct(*_spo(s_col, p_iri, iri_cols(o_col)))
+    return st if cond is None else F.when(cond, st)
 
 
-def _lit_struct(s_col, p_iri, o_col, cond=None):
-    return _triple_struct(
-        s_col, p_iri, F.concat(F.lit('"'), o_col, F.lit('"')), o_col, "literal",
-        "http://www.w3.org/2001/XMLSchema#string", cond,
-    )
+def _lit_struct(s_col, p_iri, o_col):
+    return F.struct(*_spo(s_col, p_iri, literal_cols(o_col)))
 
 
 def _inline_triples(df, structs) -> DataFrame:
@@ -463,24 +432,12 @@ def _tag_triples(spark, sf_dir) -> DataFrame:
     lang1 = F.lit("en")
     lang2 = F.when(F.col("c_acctbal") > 5000, F.lit("en")).otherwise(F.lit("de"))
 
-    def lang_triple(o_col, lang_col):
-        return cust.select(
-            F.concat(F.lit("<"), c_iri, F.lit(">")).alias("s"),
-            F.lit(f"<{EX}label>").alias("p"),
-            F.concat(F.lit('"'), o_col, F.lit('"@'), lang_col).alias("o"),
-            o_col.alias("o_v"),
-            F.lit("literal").alias("o_kind"),
-            F.lit("http://www.w3.org/1999/02/22-rdf-syntax-ns#langString").alias("o_dt"),
-            lang_col.alias("o_lang"),
-            F.lit("g").alias("g"),
-        ).select(*TRIPLE_FIELDS)
-
     parts = [
         _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer")),
         _lit_triple(cust, c_iri, EX + "tag1", F.col("c_mktsegment")),
         _lit_triple(cust, c_iri, EX + "tag2", tag2),
-        lang_triple(F.col("c_name"), lang1),
-        lang_triple(F.col("c_mktsegment"), lang2),
+        cust.select(*_spo(c_iri, EX + "label", literal_cols(F.col("c_name"), lang=lang1))),
+        cust.select(*_spo(c_iri, EX + "label", literal_cols(F.col("c_mktsegment"), lang=lang2))),
     ]
     out = parts[0]
     for p in parts[1:]:
@@ -540,29 +497,25 @@ ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
 
 
 def q_shacl_nodekind(spark, sf_dir):
-    orders = _pq(spark, sf_dir, "orders")
-    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    o_iri = F.concat(F.lit(EX + "o/"), F.col("o_orderkey").cast("string"))
-    is_f = F.col("o_orderstatus") == "F"
-    ref = orders.select(
-        F.concat(F.lit("<"), o_iri, F.lit(">")).alias("s"),
-        F.lit(f"<{EX}ref>").alias("p"),
-        F.when(is_f, F.concat(F.lit("<"), F.lit(EX + "r/"), F.col("o_orderkey").cast("string"), F.lit(">")))
-        .otherwise(F.concat(F.lit('"'), F.col("o_orderstatus"), F.lit('"'))).alias("o"),
-        F.when(is_f, F.concat(F.lit(EX + "r/"), F.col("o_orderkey").cast("string")))
-        .otherwise(F.col("o_orderstatus")).alias("o_v"),
-        F.when(is_f, F.lit("iri")).otherwise(F.lit("literal")).alias("o_kind"),
-        F.when(is_f, F.lit(None).cast("string"))
-        .otherwise(F.lit("http://www.w3.org/2001/XMLSchema#string")).alias("o_dt"),
-        F.lit(None).cast("string").alias("o_lang"),
-        F.lit("g").alias("g"),
-    ).select(*TRIPLE_FIELDS)
-    data = _iri_triple(orders, o_iri, rdf_type, F.lit(EX + "Order")).unionByName(ref)
+    def build():
+        orders = _pq(spark, sf_dir, "orders")
+        rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+        o_iri = F.concat(F.lit(EX + "o/"), F.col("o_orderkey").cast("string"))
+        r_iri = F.concat(F.lit(EX + "r/"), F.col("o_orderkey").cast("string"))
+        # ex:ref is an IRI for status F, else the status as a plain literal
+        is_f = F.col("o_orderstatus") == "F"
+        ref = [F.when(is_f, i).otherwise(lit) for i, lit in
+               zip(iri_cols(r_iri), literal_cols(F.col("o_orderstatus")))]
+        return _iri_triple(orders, o_iri, rdf_type, F.lit(EX + "Order")).unionByName(
+            orders.select(*_spo(o_iri, EX + "ref", ref))
+        )
+
+    data = _cached_input("nodekind_triples", spark, sf_dir, build)
     ttl = _SHAPES_PREFIX + """
 ex:OrderShape a sh:NodeShape ; sh:targetClass ex:Order ;
   sh:property [ sh:path ex:ref ; sh:nodeKind sh:IRI ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
+    v = Engine(spark, data, LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"), F.col("value_v").alias("value"))
 
 
@@ -628,26 +581,29 @@ def q_shacl_datatype(spark, sf_dir):
     # validateDatatype + isValidForDatatype (ref shared/dash.js:92-99,
     # 526-541): exact datatype IRI equality, then JS parseInt lexical check
     # for xsd:integer. Three-way data: valid / wrong datatype IRI / bad lexical.
-    cust = _pq(spark, sf_dir, "customer")
-    c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
-    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    int_dt = "http://www.w3.org/2001/XMLSchema#integer"
-    bal_lex = F.floor("c_acctbal").cast("string")
-    data = (
-        _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer"))
-        .unionByName(_lit_triple(
-            cust.filter(F.col("c_acctbal") > 2000), c_iri, EX + "bal", bal_lex, dt=int_dt))
-        .unionByName(_lit_triple(  # xsd:string where integer is required
-            cust.filter((F.col("c_acctbal") > 0) & (F.col("c_acctbal") <= 2000)),
-            c_iri, EX + "bal", bal_lex))
-        .unionByName(_lit_triple(  # parseInt('N/A') is NaN
-            cust.filter(F.col("c_acctbal") <= 0), c_iri, EX + "bal", F.lit("N/A"), dt=int_dt))
-    )
+    def build():
+        cust = _pq(spark, sf_dir, "customer")
+        c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
+        rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+        int_dt = "http://www.w3.org/2001/XMLSchema#integer"
+        bal_lex = F.floor("c_acctbal").cast("string")
+        return (
+            _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer"))
+            .unionByName(_lit_triple(
+                cust.filter(F.col("c_acctbal") > 2000), c_iri, EX + "bal", bal_lex, dt=int_dt))
+            .unionByName(_lit_triple(  # xsd:string where integer is required
+                cust.filter((F.col("c_acctbal") > 0) & (F.col("c_acctbal") <= 2000)),
+                c_iri, EX + "bal", bal_lex))
+            .unionByName(_lit_triple(  # parseInt('N/A') is NaN
+                cust.filter(F.col("c_acctbal") <= 0), c_iri, EX + "bal", F.lit("N/A"), dt=int_dt))
+        )
+
+    data = _cached_input("datatype_triples", spark, sf_dir, build)
     ttl = _SHAPES_PREFIX + """
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:bal ; sh:datatype xsd:integer ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
+    v = Engine(spark, data, LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"), F.col("value_v").alias("value"))
 
 
@@ -715,23 +671,26 @@ def q_dash_coexistswith(spark, sf_dir):
     # validateCoExistsWith (ref shared/dash.js:85-90): existence of ex:order
     # values must equal existence of ex:nick values. Nicks exist only for
     # custkey % 3 != 0, so violations are (has orders) XOR (has nick).
-    cust = _pq(spark, sf_dir, "customer")
-    orders = _pq(spark, sf_dir, "orders")
-    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
-    o_cust_iri = F.concat(F.lit(EX + "c/"), F.col("o_custkey").cast("string"))
-    o_iri = F.concat(F.lit(EX + "o/"), F.col("o_orderkey").cast("string"))
-    data = (
-        _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer"))
-        .unionByName(_lit_triple(
-            cust.filter(F.col("c_custkey") % 3 != 0), c_iri, EX + "nick", F.col("c_name")))
-        .unionByName(_iri_triple(orders, o_cust_iri, EX + "order", o_iri))
-    )
+    def build():
+        cust = _pq(spark, sf_dir, "customer")
+        orders = _pq(spark, sf_dir, "orders")
+        rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+        c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
+        o_cust_iri = F.concat(F.lit(EX + "c/"), F.col("o_custkey").cast("string"))
+        o_iri = F.concat(F.lit(EX + "o/"), F.col("o_orderkey").cast("string"))
+        return (
+            _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer"))
+            .unionByName(_lit_triple(
+                cust.filter(F.col("c_custkey") % 3 != 0), c_iri, EX + "nick", F.col("c_name")))
+            .unionByName(_iri_triple(orders, o_cust_iri, EX + "order", o_iri))
+        )
+
+    data = _cached_input("nick_triples", spark, sf_dir, build)
     ttl = _DASH_PREFIX + """
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:order ; dash:coExistsWith ex:nick ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
+    v = Engine(spark, data, LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"))
 
 
@@ -807,21 +766,24 @@ def q_dash_nonrecursive(spark, sf_dir):
     # validateNonRecursiveProperty (ref shared/dash.js:280-289): violation
     # when a path value IS the focus node. Self-loops planted on
     # custkey % 7 == 0; everyone else points at custkey + 1.
-    cust = _pq(spark, sf_dir, "customer")
-    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
-    knows = F.when(F.col("c_custkey") % 7 == 0, F.col("c_custkey")).otherwise(
-        F.col("c_custkey") + 1
-    )
-    k_iri = F.concat(F.lit(EX + "c/"), knows.cast("string"))
-    data = _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer")).unionByName(
-        _iri_triple(cust, c_iri, EX + "knows", k_iri)
-    )
+    def build():
+        cust = _pq(spark, sf_dir, "customer")
+        rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+        c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
+        knows = F.when(F.col("c_custkey") % 7 == 0, F.col("c_custkey")).otherwise(
+            F.col("c_custkey") + 1
+        )
+        k_iri = F.concat(F.lit(EX + "c/"), knows.cast("string"))
+        return _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer")).unionByName(
+            _iri_triple(cust, c_iri, EX + "knows", k_iri)
+        )
+
+    data = _cached_input("knows_triples", spark, sf_dir, build)
     ttl = _DASH_PREFIX + """
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:knows ; dash:nonRecursive true ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
+    v = Engine(spark, data, LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"))
 
 
@@ -830,25 +792,28 @@ def q_dash_hasvaluewithclass(spark, sf_dir):
     # iff at least one ex:order value is an instance of ex:BigOrder; only
     # orders with o_totalprice > 350000 are typed BigOrder, so the class
     # membership join (not mere value existence) decides the verdict.
-    cust = _pq(spark, sf_dir, "customer")
-    orders = _pq(spark, sf_dir, "orders")
-    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
-    o_cust_iri = F.concat(F.lit(EX + "c/"), F.col("o_custkey").cast("string"))
-    o_iri = F.concat(F.lit(EX + "o/"), F.col("o_orderkey").cast("string"))
-    data = (
-        _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer"))
-        .unionByName(_iri_triple(orders, o_cust_iri, EX + "order", o_iri))
-        .unionByName(_iri_triple(
-            orders.filter(F.col("o_totalprice") > 350000),
-            o_iri, rdf_type, F.lit(EX + "BigOrder"),
-        ))
-    )
+    def build():
+        cust = _pq(spark, sf_dir, "customer")
+        orders = _pq(spark, sf_dir, "orders")
+        rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+        c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
+        o_cust_iri = F.concat(F.lit(EX + "c/"), F.col("o_custkey").cast("string"))
+        o_iri = F.concat(F.lit(EX + "o/"), F.col("o_orderkey").cast("string"))
+        return (
+            _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer"))
+            .unionByName(_iri_triple(orders, o_cust_iri, EX + "order", o_iri))
+            .unionByName(_iri_triple(
+                orders.filter(F.col("o_totalprice") > 350000),
+                o_iri, rdf_type, F.lit(EX + "BigOrder"),
+            ))
+        )
+
+    data = _cached_input("big_order_triples", spark, sf_dir, build)
     ttl = _DASH_PREFIX + """
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:order ; dash:hasValueWithClass ex:BigOrder ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
+    v = Engine(spark, data, LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"))
 
 
@@ -857,24 +822,27 @@ def q_dash_uniquevalueforclass(spark, sf_dir):
     # row per (focus, value) × other-instance sharing that ex:phone value.
     # phone = custkey % 100 plants small collision groups, so the self-join
     # output is bounded (group size ≈ |customer| / 100).
-    cust = _pq(spark, sf_dir, "customer")
-    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
-    # SCALE-AWARE collision planting: a fixed %100 makes group size grow
-    # with the corpus, so the (focus, value) violation OUTPUT is quadratic
-    # (22.5e9 rows at sf1 — the row silently OOMed at scale in r4/r5).
-    # modulus = n/15 keeps groups at ~15 members at EVERY sf, linear output;
-    # at sf0.01 (1500 customers) this is exactly the old %100.
-    mod = max(1, cust.count() // 15)
-    phone = (F.col("c_custkey") % mod).cast("string")
-    data = _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer")).unionByName(
-        _lit_triple(cust, c_iri, EX + "phone", phone)
-    )
+    def build():
+        cust = _pq(spark, sf_dir, "customer")
+        rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+        c_iri = F.concat(F.lit(EX + "c/"), F.col("c_custkey").cast("string"))
+        # SCALE-AWARE collision planting: a fixed %100 makes group size grow
+        # with the corpus, so the (focus, value) violation OUTPUT is quadratic
+        # (22.5e9 rows at sf1 — the row silently OOMed at scale in r4/r5).
+        # modulus = n/15 keeps groups at ~15 members at EVERY sf, linear
+        # output; at sf0.01 (1500 customers) this is exactly the old %100.
+        mod = max(1, cust.count() // 15)
+        phone = (F.col("c_custkey") % mod).cast("string")
+        return _iri_triple(cust, c_iri, rdf_type, F.lit(EX + "Customer")).unionByName(
+            _lit_triple(cust, c_iri, EX + "phone", phone)
+        )
+
+    data = _cached_input("phone_triples", spark, sf_dir, build)
     ttl = _DASH_PREFIX + """
 ex:CustShape a sh:NodeShape ; sh:targetClass ex:Customer ;
   sh:property [ sh:path ex:phone ; dash:uniqueValueForClass ex:Customer ] .
 """
-    v = Engine(spark, data.persist(), LocalGraph.from_turtle(ttl)).report_df()
+    v = Engine(spark, data, LocalGraph.from_turtle(ttl)).report_df()
     return v.select(F.col("focus_v").alias("focus"), F.col("value_v").alias("value"))
 
 
@@ -1044,11 +1012,12 @@ def q_kg_triples_full(spark, sf_dir):
     value-hash-checked against a full DuckDB replica (_kg_full_sql)."""
     from shacl_js_spark.pipeline.canonicalize import canonicalize_triples
     from shacl_js_spark.pipeline.emit import EX as KG_EX, emit_triples
-    from shacl_js_spark.pipeline.extract import extract_mentions
     from shacl_js_spark.pipeline.link import link_entities
 
     docs = _docs(spark, sf_dir)
-    links = link_entities(spark, extract_mentions(spark, docs)).persist()
+    links = _cached_input(
+        "links", spark, sf_dir, lambda: link_entities(spark, _mentions(spark, sf_dir))
+    )
     mapping = connected_components(spark, alias_edges(spark))
     return canonicalize_triples(
         spark, emit_triples(spark, docs, links), mapping, KG_EX + "entity/"

@@ -13,9 +13,15 @@ reference's rdflib statement store (src/rdflib-graph.js:34-44):
     g       graph uri
 
 Single-string encoded terms give 1-column equi-joins; decomposed o_* columns
-keep constraint predicates JVM-side (no re-parsing).  At 100 TB this layout is
-Parquet/Iceberg-friendly: filters on `p` prune row groups, and only the
+keep constraint predicates JVM-side (no re-parsing).  At 100 TB this layout
+is Parquet/Iceberg-friendly: filters on `p` prune row groups, and only the
 columns a constraint touches are read.
+
+The encoding is the injective N-Triples-style one of terms.encode_term:
+<iri>, _:id, "lex", "lex"@lang, "lex"^^<dt>, where lex escapes backslash,
+'"', LF, CR and tab (terms._ESCAPES, in that order).  Spark code builds
+encoded terms only through iri_cols / literal_cols / triple_cols below, the
+Column twin of encode_term, so driver and executors agree on every join key.
 
 Term frames (focus/value sets flowing through validation) use 5-column groups
 with a prefix: {x}, {x}_v, {x}_kind, {x}_dt, {x}_lang.
@@ -27,7 +33,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .terms import Term
+from .terms import (
+    _ESCAPES,
+    IRI_KIND,
+    LITERAL_KIND,
+    RDF_LANGSTRING,
+    XSD_STRING,
+    Term,
+    encode_term,
+)
 from .turtle import Triple, parse_turtle
 
 TRIPLE_FIELDS = ["s", "p", "o", "o_v", "o_kind", "o_dt", "o_lang", "g"]
@@ -160,6 +174,10 @@ def turtle_df(spark: SparkSession, text: str, g: str = DEFAULT_GRAPH) -> DataFra
 
 # --- column helpers -------------------------------------------------------
 
+def _null() -> Column:
+    return F.lit(None).cast("string")
+
+
 def term_cols(prefix: str) -> list[str]:
     return [prefix, f"{prefix}_v", f"{prefix}_kind", f"{prefix}_dt", f"{prefix}_lang"]
 
@@ -172,8 +190,8 @@ def subject_decomposed(col: str = "s", prefix: str = "focus") -> list[Column]:
         c.alias(prefix),
         F.when(is_bnode, c).otherwise(F.expr(f"substring({col}, 2, length({col}) - 2)")).alias(f"{prefix}_v"),
         F.when(is_bnode, F.lit("bnode")).otherwise(F.lit("iri")).alias(f"{prefix}_kind"),
-        F.lit(None).cast("string").alias(f"{prefix}_dt"),
-        F.lit(None).cast("string").alias(f"{prefix}_lang"),
+        _null().alias(f"{prefix}_dt"),
+        _null().alias(f"{prefix}_lang"),
     ]
 
 
@@ -185,6 +203,53 @@ def object_decomposed(prefix: str = "value") -> list[Column]:
         F.col("o_dt").alias(f"{prefix}_dt"),
         F.col("o_lang").alias(f"{prefix}_lang"),
     ]
+
+
+def _as_col(x) -> Column:
+    """A Column as is; a str as a constant."""
+    return x if isinstance(x, Column) else F.lit(x)
+
+
+def iri_cols(value) -> list[Column]:
+    """The object group (o, o_v, o_kind, o_dt, o_lang) of the IRI `value`
+    (a Column, or a str constant), unaliased."""
+    v = _as_col(value)
+    return [F.concat(F.lit("<"), v, F.lit(">")), v, F.lit(IRI_KIND), _null(), _null()]
+
+
+def literal_cols(value, datatype: str = XSD_STRING, lang=None) -> list[Column]:
+    """The object group (o, o_v, o_kind, o_dt, o_lang) of a literal with
+    lexical form `value` (a Column, or a str constant), unaliased — the
+    Column twin of terms.encode_term.  A `lang` (a Column or str, non-empty
+    on every row) makes it rdf:langString; otherwise the datatype is
+    `datatype`, and only a non-xsd:string one is written into `o`."""
+    v = _as_col(value)
+    lex = v
+    for raw, esc in _ESCAPES:
+        lex = F.replace(lex, F.lit(raw), F.lit(esc))
+    if lang is not None:
+        tag = _as_col(lang)
+        return [F.concat(F.lit('"'), lex, F.lit('"@'), tag), v, F.lit(LITERAL_KIND),
+                F.lit(RDF_LANGSTRING), tag]
+    suffix = '"' if datatype == XSD_STRING else f'"^^<{datatype}>'
+    return [F.concat(F.lit('"'), lex, F.lit(suffix)), v, F.lit(LITERAL_KIND),
+            F.lit(datatype), _null()]
+
+
+def triple_cols(s_enc: Column, p, o_cols: list[Column], g: str) -> list[Column]:
+    """One row in TRIPLE_FIELDS order: the encoded subject, the predicate
+    (an IRI string, or a Column that is already encoded), a 5-column object
+    group (iri_cols, literal_cols or any term group) and the graph name.
+    The columns are aliased, so they serve both `select` and `F.struct`."""
+    p_enc = p if isinstance(p, Column) else F.lit(encode_term(p, IRI_KIND, None, None))
+    return [c.alias(n) for c, n in zip([s_enc, p_enc, *o_cols, F.lit(g)], TRIPLE_FIELDS)]
+
+
+def t_triples(df: DataFrame) -> DataFrame:
+    """The triples projected to fresh attribute ids (t_s, t_p, t_o, t_o_v,
+    t_o_kind, t_o_dt, t_o_lang) so repeated self-joins of the data graph
+    stay unambiguous."""
+    return df.select(*[F.col(c).alias("t_" + c) for c in TRIPLE_FIELDS if c != "g"])
 
 
 def terms_frame(spark: SparkSession, terms: list[Term], prefix: str = "focus") -> DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from .terms import Term, iri, T
+from .terms import Term, iri
 from .turtle import RDF_FIRST, RDF_NIL, RDF_REST, RDF_TYPE, Triple, parse_turtle
 
 RDFS_SUBCLASSOF = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
@@ -132,7 +132,3 @@ class LocalGraph:
                 return True
         return False
 
-
-def TT(ttl: str) -> Term:
-    """Shortcut term (module-level convenience mirroring the reference's T)."""
-    return T(ttl)

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph import cut_lineage
+from ..graph import cut_lineage, iri_cols
 from .synth import ENTITY_LEXICON
 
 
@@ -160,10 +160,11 @@ def canonicalize_triples(
 
     mapping is entity-universe-sized (≪ corpus) -> broadcast joins; only IRIs
     under entity_prefix are rewritten."""
+    new = iri_cols(F.concat(F.lit(entity_prefix), F.col("canonical_id")))
     m = mapping.select(
-        F.concat(F.lit(f"<{entity_prefix}"), "entity_id", F.lit(">")).alias("_old"),
-        F.concat(F.lit(f"<{entity_prefix}"), "canonical_id", F.lit(">")).alias("_new"),
-        F.concat(F.lit(entity_prefix), F.col("canonical_id")).alias("_new_v"),
+        iri_cols(F.concat(F.lit(entity_prefix), F.col("entity_id")))[0].alias("_old"),
+        new[0].alias("_new"),
+        new[1].alias("_new_v"),
     )
     out = (
         triples.join(F.broadcast(m), triples["s"] == m["_old"], "left")

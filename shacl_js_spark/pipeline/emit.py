@@ -24,49 +24,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph import TRIPLE_FIELDS, ensure_object_agg_headroom, ordered_pairs
+from ..graph import ensure_object_agg_headroom, iri_cols, literal_cols, ordered_pairs, triple_cols
 from ..terms import NAMESPACES
 
 EX = "http://example.org/kg#"
 RDF_TYPE = NAMESPACES["rdf"] + "type"
 RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
-XSD_STRING = NAMESPACES["xsd"] + "string"
 
 G = "urn:x-shacl:dataGraph"
 
 
-def _iri(col):
-    return F.concat(F.lit("<"), col, F.lit(">"))
-
-
-def _lit_cols(value_col):
-    """o-columns for a plain string literal object."""
-    return [
-        F.concat(F.lit('"'), F.regexp_replace(value_col, '(["\\\\])', r"\\$1"), F.lit('"')).alias("o"),
-        value_col.alias("o_v"),
-        F.lit("literal").alias("o_kind"),
-        F.lit(XSD_STRING).alias("o_dt"),
-        F.lit(None).cast("string").alias("o_lang"),
-    ]
-
-
-def _iri_cols(value_col):
-    return [
-        _iri(value_col).alias("o"),
-        value_col.alias("o_v"),
-        F.lit("iri").alias("o_kind"),
-        F.lit(None).cast("string").alias("o_dt"),
-        F.lit(None).cast("string").alias("o_lang"),
-    ]
-
-
 def _triple(df, s_col, p_iri: str, o_cols) -> DataFrame:
-    return df.select(
-        _iri(s_col).alias("s"),
-        F.lit(f"<{p_iri}>").alias("p"),
-        *o_cols,
-        F.lit(G).alias("g"),
-    ).select(*TRIPLE_FIELDS)
+    return df.select(*triple_cols(iri_cols(s_col)[0], p_iri, o_cols, G))
 
 
 def emit_triples(
@@ -80,11 +49,11 @@ def emit_triples(
 
     doc_meta = docs.select("doc_id", "lang", "source")
     parts = [
-        _triple(doc_meta, doc_iri, RDF_TYPE, _iri_cols(F.lit(EX + "Document"))),
-        _triple(doc_meta, doc_iri, EX + "language", _lit_cols(F.col("lang"))),
+        _triple(doc_meta, doc_iri, RDF_TYPE, iri_cols(EX + "Document")),
+        _triple(doc_meta, doc_iri, EX + "language", literal_cols(F.col("lang"))),
         _triple(
             doc_meta, doc_iri, EX + "source",
-            _iri_cols(F.concat(F.lit(EX + "source/"), F.col("source"))),
+            iri_cols(F.concat(F.lit(EX + "source/"), F.col("source"))),
         ),
     ]
 
@@ -105,11 +74,11 @@ def emit_triples(
         F.sort_array(F.collect_set("entity_id")).alias("ents")
     )
     doc_ents = grouped.select("doc_id", F.explode("ents").alias("entity_id"))
-    parts.append(_triple(doc_ents, doc_iri, EX + "mentions", _iri_cols(ent_iri)))
+    parts.append(_triple(doc_ents, doc_iri, EX + "mentions", iri_cols(ent_iri)))
 
     ents = links.select("entity_id", "surface").distinct()
-    parts.append(_triple(ents, ent_iri, RDF_TYPE, _iri_cols(F.lit(EX + "Entity"))))
-    parts.append(_triple(ents, ent_iri, RDFS_LABEL, _lit_cols(F.col("surface"))))
+    parts.append(_triple(ents, ent_iri, RDF_TYPE, iri_cols(EX + "Entity")))
+    parts.append(_triple(ents, ent_iri, RDFS_LABEL, literal_cols(F.col("surface"))))
 
     # media spans: filter the ARRAY before exploding — text spans are 2/3 of
     # all spans and carry the heavy text payload strings; exploding them into
@@ -129,13 +98,13 @@ def emit_triples(
     )
     # md5 (not sha1): portable across engines so the oracle can rebuild it
     media_iri = F.concat(F.lit(EX + "media/"), F.md5(F.col("media_ref")))
-    parts.append(_triple(media, doc_iri, EX + "hasMedia", _iri_cols(media_iri)))
+    parts.append(_triple(media, doc_iri, EX + "hasMedia", iri_cols(media_iri)))
     # media node typing is per media object, not per referencing doc — the
     # narrow distinct collapses the shared-media fan-in before widening
     parts.append(
         _triple(
             media.select("media_ref", "media_kind").distinct(), media_iri, RDF_TYPE,
-            _iri_cols(F.concat(F.lit(EX), F.col("media_kind"))),
+            iri_cols(F.concat(F.lit(EX), F.col("media_kind"))),
         )
     )
 
@@ -147,7 +116,7 @@ def emit_triples(
     ).select(F.col("pair.ea").alias("ea"), F.col("pair.eb").alias("eb")).distinct()
     ea_iri = F.concat(F.lit(EX + "entity/"), F.col("ea"))
     eb_iri = F.concat(F.lit(EX + "entity/"), F.col("eb"))
-    parts.append(_triple(pairs, ea_iri, EX + "coOccursWith", _iri_cols(eb_iri)))
+    parts.append(_triple(pairs, ea_iri, EX + "coOccursWith", iri_cols(eb_iri)))
 
     out = parts[0]
     for p in parts[1:]:

@@ -120,23 +120,6 @@ class PipelineRunner:
         return self.spark.read.parquet(self._path("_metrics", stage))
 
 
-def write_bucketed_triples(
-    spark: SparkSession, triples: DataFrame, table: str, buckets: int = 64
-) -> None:
-    """Materialize a triples table bucketed+sorted by subject: self-joins and
-    path hops on `s` become shuffle-free on the bucketed side (SURVEY §4
-    partitioning design: hash-partition triples by s so focus-joins are
-    cheap).  Maps to Iceberg `bucket(N, s)` partition transforms on a real
-    cluster."""
-    (
-        triples.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(buckets, "s")
-        .sortBy("s")
-        .saveAsTable(table)
-    )
-
-
 # SHACL shapes applied to the materialized graph (validate stage): every
 # entity needs >=1 rdfs:label, IRIs must be under the kg namespace, every
 # document mentions only Entity-typed nodes (sh:class via broadcast type

@@ -25,7 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph import subject_decomposed, term_cols
+from ..graph import (
+    literal_cols,
+    subject_decomposed,
+    t_triples,
+    term_cols,
+    term_to_row_parts,
+    triple_cols,
+)
 from ..terms import T, Term, decode_term
 from ..validation import Engine, _tt_name
 
@@ -52,23 +59,12 @@ class RDFQueryDF:
     def _with(self, sols: DataFrame, new_vars: tuple = ()) -> "RDFQueryDF":
         return RDFQueryDF(self.spark, self.data, sols, tuple(dict.fromkeys(self.vars + new_vars)))
 
-    def _trips(self) -> DataFrame:
-        return self.data.select(
-            F.col("s").alias("t_s"),
-            F.col("p").alias("t_p"),
-            F.col("o").alias("t_o"),
-            F.col("o_v").alias("t_o_v"),
-            F.col("o_kind").alias("t_o_kind"),
-            F.col("o_dt").alias("t_o_dt"),
-            F.col("o_lang").alias("t_o_lang"),
-        )
-
     # ------------------------------------------------------------- operators
     def match(self, s, p, o) -> "RDFQueryDF":
         """Triple-pattern match joined against input solutions — the
         index-nested-loop join of MatchQuery (rdfquery.js:655-744) becomes a
         relational equi-join Catalyst plans (broadcast/sort-merge)."""
-        trips = self._trips()
+        trips = t_triples(self.data)
         conds = []
         new_vars: list[tuple[str, str]] = []  # (var, position)
         for pos, arg in (("s", s), ("p", p), ("o", o)):
@@ -91,13 +87,7 @@ class RDFQueryDF:
         keep = [self.sols[c] for c in self.sols.columns]
         for var, pos in new_vars:
             if pos == "o":
-                keep += [
-                    trips["t_o"].alias(var),
-                    trips["t_o_v"].alias(f"{var}_v"),
-                    trips["t_o_kind"].alias(f"{var}_kind"),
-                    trips["t_o_dt"].alias(f"{var}_dt"),
-                    trips["t_o_lang"].alias(f"{var}_lang"),
-                ]
+                keep += [trips[c].alias(n) for c, n in zip(term_cols("t_o"), term_cols(var))]
             else:
                 keep += subject_decomposed("t_s" if pos == "s" else "t_p", var)
         return self._with(joined.select(*keep), tuple(v for v, _ in new_vars))
@@ -117,25 +107,14 @@ class RDFQueryDF:
 
     def bind(self, var: str, col_fn) -> "RDFQueryDF":
         """Compute a new variable (ref BindQuery, rdfquery.js:556-588).
-        col_fn: fn(sols)->Column producing an ENCODED term, or a 5-tuple of
-        Columns for full term groups; simple string results are treated as
-        plain literals."""
+        col_fn: fn(sols) (or a value) giving a Column that holds a plain
+        literal's lexical form, or a 5-tuple of Columns for a full term
+        group (enc, v, kind, dt, lang)."""
         v = var[1:]
         sols = self.sols
         res = col_fn(sols) if callable(col_fn) else col_fn
-        if isinstance(res, (list, tuple)):
-            enc, vv, kind, dt, lang = res
-        else:
-            # assume plain-literal value
-            enc = F.concat(F.lit('"'), res, F.lit('"'))
-            vv, kind = res, F.lit("literal")
-            dt = F.lit("http://www.w3.org/2001/XMLSchema#string")
-            lang = F.lit(None).cast("string")
-        out = sols.select(
-            "*",
-            enc.alias(v), vv.alias(f"{v}_v"), kind.alias(f"{v}_kind"),
-            dt.alias(f"{v}_dt"), lang.alias(f"{v}_lang"),
-        )
+        group = res if isinstance(res, (list, tuple)) else literal_cols(res)
+        out = sols.select("*", *[c.alias(n) for c, n in zip(group, term_cols(v))])
         return self._with(out, (v,))
 
     def order_by(self, var: str) -> "RDFQueryDF":
@@ -175,11 +154,7 @@ class RDFQueryDF:
         if isinstance(s, str) and s.startswith("?"):
             sv = s[1:]
             focus = self.sols.select(
-                F.col(sv).alias("focus"),
-                F.col(f"{sv}_v").alias("focus_v"),
-                F.col(f"{sv}_kind").alias("focus_kind"),
-                F.col(f"{sv}_dt").alias("focus_dt"),
-                F.col(f"{sv}_lang").alias("focus_lang"),
+                *[F.col(c).alias(n) for c, n in zip(term_cols(sv), term_cols("focus"))]
             ).dropDuplicates(["focus"])
         else:
             from ..graph import terms_frame
@@ -188,11 +163,7 @@ class RDFQueryDF:
         pv = eng.eval_path(path if isinstance(path, PathAST) else PathAST("pred", pred=_as_term(path).value), focus)
         pv = pv.select(
             F.col("focus").alias("_pf"),
-            F.col("value").alias(ov),
-            F.col("value_v").alias(f"{ov}_v"),
-            F.col("value_kind").alias(f"{ov}_kind"),
-            F.col("value_dt").alias(f"{ov}_dt"),
-            F.col("value_lang").alias(f"{ov}_lang"),
+            *[F.col(c).alias(n) for c, n in zip(term_cols("value"), term_cols(ov))],
         )
         if sv is not None:
             joined = self.sols.join(pv, self.sols[sv] == pv["_pf"], "inner").drop("_pf")
@@ -204,30 +175,17 @@ class RDFQueryDF:
         """Triple-emission terminal (ref: construct, rdfquery.js:311-357):
         each template is an (s, p, o) tuple of '?var' or Terms; returns a
         TRIPLE_SCHEMA DataFrame — the KG triple-emit stage shape."""
-        from ..graph import TRIPLE_FIELDS
+        def group(arg) -> list:
+            if isinstance(arg, str) and arg.startswith("?"):
+                return [F.col(c) for c in term_cols(arg[1:])]
+            return [F.lit(x).cast("string") for x in term_to_row_parts(_as_term(arg))]
 
-        parts = []
-        for (s, p, o) in templates:
-            def enc_col(arg, kind_needed=False):
-                if isinstance(arg, str) and arg.startswith("?"):
-                    v = arg[1:]
-                    return (F.col(v), F.col(f"{v}_v"), F.col(f"{v}_kind"),
-                            F.col(f"{v}_dt"), F.col(f"{v}_lang"))
-                t = _as_term(arg)
-                return (F.lit(t.encoded()), F.lit(t.value), F.lit(t.kind),
-                        F.lit(t.datatype).cast("string"), F.lit(t.lang).cast("string"))
-
-            se, _, _, _, _ = enc_col(s)
-            pe, _, _, _, _ = enc_col(p)
-            oe, ov, ok, od, ol = enc_col(o)
-            parts.append(
-                self.sols.select(
-                    se.alias("s"), pe.alias("p"), oe.alias("o"),
-                    ov.alias("o_v"), ok.alias("o_kind"),
-                    od.alias("o_dt"), ol.alias("o_lang"),
-                    F.lit("urn:x-shacl:constructed").alias("g"),
-                ).select(*TRIPLE_FIELDS)
+        parts = [
+            self.sols.select(
+                *triple_cols(group(s)[0], group(p)[0], group(o), "urn:x-shacl:constructed")
             )
+            for s, p, o in templates
+        ]
         out = parts[0]
         for pdf in parts[1:]:
             out = out.unionByName(pdf)

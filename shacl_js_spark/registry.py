@@ -14,10 +14,11 @@ Two registration kinds:
 
       fn(values: pd.DataFrame, params: dict[str, Term]) -> pd.Series
 
-  where ``values`` has columns value/value_v/value_kind/value_dt/value_lang/
-  focus/focus_v (one row per (focus, value) pair) and the returned Series
-  holds: None/True = pass, False = violation, str = violation with message —
-  the reference's return protocol minus the object form.
+  where ``values`` holds the focus and value term groups (focus, focus_v,
+  focus_kind, focus_dt, focus_lang, value, value_v, ..., value_lang), one
+  row per (focus, value) pair, and the returned Series holds: None/True =
+  pass, False = violation, str = violation with message — the reference's
+  return protocol minus the object form.
 
 * ``kind='frame'`` — full power: fn(engine, shape, constraint, targets_df,
   values_df, style) -> violations DataFrame | None.  Used when the verdict
@@ -31,6 +32,8 @@ from typing import Callable
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
+
+from .graph import term_cols
 
 
 class ValidatorRegistry:
@@ -63,9 +66,7 @@ def _wrap_value_validator(fn: Callable):
     def impl(eng, shape, c, targets, values, style):
         params = dict(c.params)
 
-        value_cols = [
-            "focus", "focus_v", "value", "value_v", "value_kind", "value_dt", "value_lang",
-        ]
+        value_cols = term_cols("focus") + term_cols("value")
 
         def verdict_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             verdicts = fn(pdf, params)
@@ -81,18 +82,6 @@ def _wrap_value_validator(fn: Callable):
             lambda it: (verdict_batch(pdf) for pdf in it), schema=schema
         )
         fails = fails.withColumn("_msg", F.when(F.col("_verdict") == "", None).otherwise(F.col("_verdict")))
-        # rebuild the 5-col focus group (dt/lang null: custom components see
-        # iri/bnode focus in practice; full fidelity via kind='frame')
-        frame = fails.select(
-            F.col("focus"),
-            F.col("focus_v"),
-            F.when(F.col("focus").startswith("_:"), "bnode").otherwise(
-                F.when(F.col("focus").startswith("<"), "iri").otherwise("literal")
-            ).alias("focus_kind"),
-            F.lit(None).cast("string").alias("focus_dt"),
-            F.lit(None).cast("string").alias("focus_lang"),
-            "value", "value_v", "value_kind", "value_dt", "value_lang", "_msg",
-        )
-        return eng._rows(frame, shape, c.component.iri, message_col=F.col("_msg"))
+        return eng._rows(fails, shape, c.component.iri, message_col=F.col("_msg"))
 
     return impl

@@ -118,7 +118,8 @@ def report_triples_df(spark, report_df):
     result node, ref index.js:157-164)."""
     from pyspark.sql import functions as F
 
-    from .graph import TRIPLE_FIELDS
+    from .graph import iri_cols, literal_cols, subject_decomposed, term_cols, triple_cols
+    from .terms import XSD_BOOLEAN
 
     SH = "http://www.w3.org/ns/shacl#"
     RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -141,83 +142,37 @@ def report_triples_df(spark, report_df):
         .persist()
     )
 
-    def trip(s_col, p_iri, o_col, o_v, o_kind, o_dt=None, o_lang=None):
-        kind_col = F.lit(o_kind) if isinstance(o_kind, str) else o_kind
-        return rows.select(
-            s_col.alias("s"),
-            F.lit(f"<{p_iri}>").alias("p"),
-            o_col.alias("o"),
-            o_v.alias("o_v"),
-            kind_col.alias("o_kind"),
-            F.lit(o_dt).cast("string").alias("o_dt"),
-            F.lit(o_lang).cast("string").alias("o_lang"),
-            F.lit(G).alias("g"),
-        ).select(*TRIPLE_FIELDS)
+    def trip(df, s_enc, p_iri, o_cols):
+        return df.select(*triple_cols(s_enc, p_iri, o_cols, G))
 
+    # path and source_shape hold encoded IRIs or bnodes; focus and value are
+    # whole term groups
     rid = F.col("_rid")
-    iri_of = lambda c: F.concat(F.lit("<"), c, F.lit(">"))
     parts = [
-        trip(rid, RDF_TYPE, F.lit(f"<{SH}ValidationResult>"), F.lit(SH + "ValidationResult"), "iri"),
-        trip(rid, SH + "focusNode", F.col("focus"), F.col("focus_v"), F.col("focus_kind")),
-        trip(rid, SH + "resultSeverity", iri_of(F.col("severity")), F.col("severity"), "iri"),
-        trip(rid, SH + "sourceConstraintComponent", iri_of(F.col("component")), F.col("component"), "iri"),
-        trip(rid, SH + "sourceShape", F.col("source_shape"), F.col("source_shape"), "iri"),
-        trip(F.lit("_:report"), SH + "result", rid, rid, "bnode"),
+        trip(rows, rid, RDF_TYPE, iri_cols(SH + "ValidationResult")),
+        trip(rows, rid, SH + "focusNode", [F.col(c) for c in term_cols("focus")]),
+        trip(rows, rid, SH + "resultSeverity", iri_cols(F.col("severity"))),
+        trip(rows, rid, SH + "sourceConstraintComponent", iri_cols(F.col("component"))),
+        trip(rows, rid, SH + "sourceShape", subject_decomposed("source_shape")),
+        trip(rows, F.lit("_:report"), SH + "result", subject_decomposed("_rid")),
+        trip(rows.filter(F.col("path").isNotNull()), rid, SH + "resultPath",
+             subject_decomposed("path")),
+        trip(rows.filter(F.col("value").isNotNull()), rid, SH + "value",
+             [F.col(c) for c in term_cols("value")]),
     ]
-    parts.append(
-        rows.filter(F.col("path").isNotNull()).select(
-            rid.alias("s"), F.lit(f"<{SH}resultPath>").alias("p"),
-            F.col("path").alias("o"), F.col("path").alias("o_v"),
-            F.lit("iri").alias("o_kind"), F.lit(None).cast("string").alias("o_dt"),
-            F.lit(None).cast("string").alias("o_lang"), F.lit(G).alias("g"),
-        ).select(*TRIPLE_FIELDS)
-    )
-    parts.append(
-        rows.filter(F.col("value").isNotNull()).select(
-            rid.alias("s"), F.lit(f"<{SH}value>").alias("p"),
-            F.col("value").alias("o"), F.col("value_v").alias("o_v"),
-            F.col("value_kind").alias("o_kind"), F.col("value_dt").alias("o_dt"),
-            F.col("value_lang").alias("o_lang"), F.lit(G).alias("g"),
-        ).select(*TRIPLE_FIELDS)
-    )
     # one sh:resultMessage triple per sh:message value (MESSAGE_SEP-joined
     # in the message column; ref validation-engine.js:149-173)
-    msg = F.explode(
-        F.split(F.col("message"), ValidationResult.MESSAGE_SEP)
-    ).alias("_m")
-    esc = F.regexp_replace(F.col("_m"), '(["\\\\])', r"\\$1")
-    parts.append(
-        rows.filter(F.col("message").isNotNull())
-        .select(rid.alias("s"), msg)
-        .select(
-            F.col("s"), F.lit(f"<{SH}resultMessage>").alias("p"),
-            F.concat(F.lit('"'), esc, F.lit('"')).alias("o"),
-            F.col("_m").alias("o_v"), F.lit("literal").alias("o_kind"),
-            F.lit("http://www.w3.org/2001/XMLSchema#string").alias("o_dt"),
-            F.lit(None).cast("string").alias("o_lang"), F.lit(G).alias("g"),
-        ).select(*TRIPLE_FIELDS)
+    msgs = rows.filter(F.col("message").isNotNull()).select(
+        rid, F.explode(F.split(F.col("message"), ValidationResult.MESSAGE_SEP)).alias("_m")
     )
+    parts.append(trip(msgs, rid, SH + "resultMessage", literal_cols(F.col("_m"))))
+    # header rows: conforms is false iff any result row exists, read from an
+    # aggregate so no action runs here
+    header = rows.groupBy().agg(F.count("*").alias("_n"))
+    conforms = F.when(F.col("_n") > 0, F.lit("false")).otherwise(F.lit("true"))
+    parts.append(trip(header, F.lit("_:report"), SH + "conforms", literal_cols(conforms, XSD_BOOLEAN)))
+    parts.append(trip(header, F.lit("_:report"), RDF_TYPE, iri_cols(SH + "ValidationReport")))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    # header rows (conforms depends on emptiness — computed lazily via count
-    # would force an action; emit conforms=false iff any result rows exist by
-    # unioning a header derived from an aggregate)
-    header = rows.groupBy().agg(F.count("*").alias("_n")).select(
-        F.lit("_:report").alias("s"),
-        F.lit(f"<{SH}conforms>").alias("p"),
-        F.when(F.col("_n") > 0, F.lit('"false"^^<http://www.w3.org/2001/XMLSchema#boolean>'))
-        .otherwise(F.lit('"true"^^<http://www.w3.org/2001/XMLSchema#boolean>')).alias("o"),
-        F.when(F.col("_n") > 0, F.lit("false")).otherwise(F.lit("true")).alias("o_v"),
-        F.lit("literal").alias("o_kind"),
-        F.lit("http://www.w3.org/2001/XMLSchema#boolean").alias("o_dt"),
-        F.lit(None).cast("string").alias("o_lang"),
-        F.lit(G).alias("g"),
-    ).select(*TRIPLE_FIELDS)
-    type_row = header.select(
-        F.lit("_:report").alias("s"), F.lit(f"<{RDF_TYPE}>").alias("p"),
-        F.lit(f"<{SH}ValidationReport>").alias("o"), F.lit(SH + "ValidationReport").alias("o_v"),
-        F.lit("iri").alias("o_kind"), F.lit(None).cast("string").alias("o_dt"),
-        F.lit(None).cast("string").alias("o_lang"), F.lit(G).alias("g"),
-    ).select(*TRIPLE_FIELDS)
-    return out.unionByName(header).unionByName(type_row)
+    return out

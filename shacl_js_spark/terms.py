@@ -45,14 +45,6 @@ LITERAL_KIND = "literal"
 _TERMTYPE_NAME = {BNODE_KIND: "BlankNode", LITERAL_KIND: "Literal", IRI_KIND: "NamedNode"}
 
 
-def expand_qname(qname: str) -> str:
-    prefix, _, local = qname.partition(":")
-    ns = NAMESPACES.get(prefix)
-    if ns is None:
-        raise ValueError(f"unknown prefix in {qname!r}")
-    return ns + local
-
-
 @dataclass(frozen=True)
 class Term:
     """One RDF term: kind in {'iri','bnode','literal'}; literals carry

@@ -49,6 +49,7 @@ from .graph import (
     js_number,
     object_decomposed,
     subject_decomposed,
+    t_triples,
     term_cols,
     terms_frame,
 )
@@ -302,15 +303,7 @@ class Engine:
         """Triples projected to fresh attribute ids (t_*) so repeated
         self-joins of the data graph stay unambiguous."""
         df = self.data if pred_enc is None else self.data.filter(F.col("p") == pred_enc)
-        return df.select(
-            F.col("s").alias("t_s"),
-            F.col("p").alias("t_p"),
-            F.col("o").alias("t_o"),
-            F.col("o_v").alias("t_o_v"),
-            F.col("o_kind").alias("t_o_kind"),
-            F.col("o_dt").alias("t_o_dt"),
-            F.col("o_lang").alias("t_o_lang"),
-        )
+        return t_triples(df)
 
     def _subclass_children(self) -> dict[str, list[str]]:
         """Collect rdfs:subClassOf edges from the DATA graph once (ontology is
@@ -488,13 +481,7 @@ class Engine:
         trips = self.trips(f"<{pred_iri}>")
         if not inverse:
             joined = df.join(trips, df["cur"] == trips["t_s"], "inner")
-            new_cur = [
-                trips["t_o"].alias("cur"),
-                trips["t_o_v"].alias("cur_v"),
-                trips["t_o_kind"].alias("cur_kind"),
-                trips["t_o_dt"].alias("cur_dt"),
-                trips["t_o_lang"].alias("cur_lang"),
-            ]
+            new_cur = [trips[c].alias(n) for c, n in zip(term_cols("t_o"), term_cols("cur"))]
         else:
             joined = df.join(trips, df["cur"] == trips["t_o"], "inner")
             new_cur = subject_decomposed("t_s", "cur")
@@ -1259,7 +1246,7 @@ def _impl_closed(eng, shape, c, targets, values, key):
         shape,
         c.component.iri,
         path_col=F.col("t_p"),
-        value_cols=[F.col("t_o"), F.col("t_o_v"), F.col("t_o_kind"), F.col("t_o_dt"), F.col("t_o_lang")],
+        value_cols=[F.col(c) for c in term_cols("t_o")],
     )
 
 
@@ -1334,7 +1321,7 @@ def _impl_closedbytypes(eng, shape, c, targets, values, key):
         shape,
         c.component.iri,
         path_col=F.col("t_p"),
-        value_cols=[F.col("t_o"), F.col("t_o_v"), F.col("t_o_kind"), F.col("t_o_dt"), F.col("t_o_lang")],
+        value_cols=[F.col(c) for c in term_cols("t_o")],
     )
 
 

@@ -75,3 +75,13 @@ def test_path_object_must_be_variable(spark, data):
     q = RDFQueryDF(spark, data).match("?x", "rdfs:label", "A")
     with pytest.raises(ValueError, match="path object must be a variable"):
         q.path("?x", Path("pred", pred="http://e/knows"), "<http://e/x>")
+
+
+def test_bind_plain_literal_is_escaped(spark, data):
+    # a bound plain literal is encoded like any other term: a quote in the
+    # value must not end the encoded lexical form early
+    q = RDFQueryDF(spark, data).match("?s", "rdfs:label", None).limit(1)
+    nodes = q.bind("?x", F.lit('say "hi"')).node_array("?x")
+    assert [(t.value, t.datatype) for t in nodes] == [
+        ('say "hi"', "http://www.w3.org/2001/XMLSchema#string")
+    ]

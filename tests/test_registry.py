@@ -131,3 +131,26 @@ ex:b a ex:T ; ex:v "nope" .
     # ex:a ('Matches') conforms ONLY if sh:flags "i" reached the custom
     # validator through the inherited built-in parameter binding
     assert [r.focusNode() for r in report.results()] == ["http://e/b"]
+
+
+def test_value_validator_reports_literal_focus_term(spark):
+    # a kind='value' validator's violation keeps the whole focus term: a
+    # typed literal target node is reported with its datatype
+    from shacl_js_spark import Engine, LocalGraph, parse_turtle, triples_df
+
+    ttl = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
+@prefix ex: <http://e/> .
+ex:FailComponent a sh:ConstraintComponent ;
+  sh:parameter [ sh:path ex:fail ] ;
+  sh:validator [ a sh:JSValidator ; sh:jsFunctionName "alwaysFail" ] .
+ex:S a sh:NodeShape ; sh:targetNode "5"^^xsd:integer ; ex:fail true .
+"""
+    reg = ValidatorRegistry()
+    reg.register("alwaysFail", lambda values, params: [False] * len(values), kind="value")
+    trips, prefixes = parse_turtle(ttl)
+    eng = Engine(spark, triples_df(spark, trips), LocalGraph(trips, prefixes), registry=reg)
+    rows = eng.report_df().select("focus", "focus_v", "focus_kind", "focus_dt").collect()
+    xsd_int = "http://www.w3.org/2001/XMLSchema#integer"
+    assert [tuple(r) for r in rows] == [(f'"5"^^<{xsd_int}>', "5", "literal", xsd_int)]

@@ -2,6 +2,7 @@ from shacl_js_spark.terms import (
     T,
     XSD_BOOLEAN,
     XSD_INTEGER,
+    XSD_STRING,
     bnode,
     compare_nodes,
     compare_terms,
@@ -64,3 +65,32 @@ def test_compare_nodes_incomparable():
 def test_local_name():
     assert local_name("http://www.w3.org/ns/shacl#minCount") == "minCount"
     assert local_name("http://ex.org/path/leaf") == "leaf"
+
+
+CODEC_VALUES = ["plain", 'a"b', "back\\slash", "tab\there", "lf\nhere", "cr\rhere", "naïve 日本語"]
+
+
+def test_literal_cols_is_the_column_twin_of_encode_term(spark):
+    # every form of every escapable value: the Spark-side encoding equals the
+    # driver's, and decodes back to the same (value, datatype, lang)
+    from pyspark.sql import functions as F
+
+    from shacl_js_spark.graph import literal_cols
+
+    dt = "http://ex/dt"
+    forms = [(XSD_STRING, None), (dt, None), (XSD_STRING, "en")]
+    df = spark.createDataFrame([(v,) for v in CODEC_VALUES], "v string")
+    cols = [
+        c.alias(f"{i}_{j}")
+        for i, (d, lang) in enumerate(forms)
+        for j, c in enumerate(literal_cols(F.col("v"), d, lang))
+    ]
+    rows = df.select("v", *cols).collect()
+    assert sorted(r["v"] for r in rows) == sorted(CODEC_VALUES)
+    for r in rows:
+        for i, (d, lang) in enumerate(forms):
+            want = literal(r["v"], datatype=d, lang=lang)
+            enc, v, kind, odt, olang = (r[f"{i}_{j}"] for j in range(5))
+            assert enc == encode_term(r["v"], "literal", want.datatype, lang)
+            assert (v, kind, odt, olang) == (want.value, "literal", want.datatype, lang)
+            assert decode_term(enc) == want

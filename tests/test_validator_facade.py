@@ -167,6 +167,25 @@ def test_report_triples_stable_across_runs(spark):
     assert any(s.startswith("_:r") and len(s) > 10 for s, _p, _o in first)
 
 
+
+def test_report_lines_escape_multiline_message(spark):
+    # a multi-line sh:message is one escaped literal on one N-Triples line
+    from shacl_js_spark.graph import ntriples_lines
+    from shacl_js_spark.terms import decode_term
+
+    shapes = SHAPES.replace(
+        "sh:minCount 1 ]", 'sh:minCount 1 ; sh:message """name is\nmissing\r\tnow""" ]'
+    )
+    v = SHACLValidator(spark)
+    v.update_data_graph(DATA_BAD)
+    v.update_shapes_graph(shapes)
+    rt = report_triples_df(spark, v.report_df())
+    lines = [r["line"] for r in ntriples_lines(rt).collect()]
+    assert lines and not any(("\n" in ln) or ("\r" in ln) for ln in lines)
+    msgs = [r["o"] for r in rt.collect() if r["p"].endswith("#resultMessage>")]
+    assert [decode_term(o).value for o in msgs] == ["name is\nmissing\r\tnow"]
+
+
 INDEX_SHAPES = """
 @prefix sh: <http://www.w3.org/ns/shacl#> .
 @prefix ex: <http://e/> .
