@@ -1766,6 +1766,14 @@ _RDF_TYPE_IRI = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 _RDFS_LABEL_IRI = "<http://www.w3.org/2000/01/rdf-schema#label>"
 
 
+def _lex_sql(x: str) -> str:
+    """DuckDB escaping of a literal's lexical form inside an encoded term
+    (README §1): backslash, double quote, LF, CR and tab, in that order."""
+    for code, esc in ((92, "\\\\"), (34, '\\"'), (10, "\\n"), (13, "\\r"), (9, "\\t")):
+        x = f"replace({x}, chr({code}), '{esc}')"
+    return x
+
+
 def _kg_full_sql() -> str:
     """DuckDB replica of the FULL production pipeline (pipeline/{synth,
     extract,link,emit,canonicalize}.py): md5-affinity linker argmax,
@@ -1819,7 +1827,7 @@ def _kg_full_sql() -> str:
                  '<{_KG}Document>' AS o, 'iri' AS o_kind FROM meta
           UNION ALL
           SELECT '<{_KG}doc/' || doc_id || '>', '<{_KG}language>',
-                 '"' || lang || '"', 'literal' FROM meta
+                 '"' || {_lex_sql("lang")} || '"', 'literal' FROM meta
           UNION ALL
           SELECT '<{_KG}doc/' || doc_id || '>', '<{_KG}source>',
                  '<{_KG}source/' || source || '>', 'iri' FROM meta
@@ -1832,7 +1840,7 @@ def _kg_full_sql() -> str:
                  '<{_KG}Entity>', 'iri' FROM (SELECT DISTINCT entity_id FROM cl)
           UNION ALL
           SELECT '<{_KG}entity/' || entity_id || '>', '{_RDFS_LABEL_IRI}',
-                 '"' || surface || '"', 'literal'
+                 '"' || {_lex_sql("surface")} || '"', 'literal'
           FROM (SELECT DISTINCT entity_id, surface FROM cl)
           UNION ALL
           SELECT '<{_KG}doc/' || doc_id || '>', '<{_KG}hasMedia>',

@@ -4,16 +4,16 @@ metrics").
 
 Layout under ``out_dir``:
     <stage>/            parquet output of the stage
-    _lineage/<stage>/   parquet: one row per non-empty partition with stage,
-                        partition_id, output_rows, checksum, wall_ms, status
-                        ("SUCCESS"), run_id
+    _lineage/<stage>/   parquet: one row per non-empty part file, with stage,
+                        partition_id (its write task), output_rows, wall_ms,
+                        status ("SUCCESS"), run_id
     _metrics/<stage>/   parquet: exactly one row of stage totals (stage,
                         output_rows, checksum, wall_ms, run_id); an empty
                         stage records 0 rows and checksum "0"
 
-A stage is its write plus one stats aggregation (``write_stage``; a shuffle
-and a result job under AQE); ``_lineage`` and ``_metrics`` are derived from
-its rows on the driver and written by pyarrow.
+A stage costs only its own write (``write_stage``): the stage totals are
+observed on the write job itself, and ``_lineage`` comes from the committed
+part files' parquet footers.  Both bookkeeping tables are written by pyarrow.
 ``_metrics/<stage>`` is written last and renamed into place: it is the commit
 marker.  Resume contract: a stage whose output, ``_lineage`` and ``_metrics``
 dirs all exist is NOT recomputed (a filesystem check) — ``run()`` reads the
@@ -32,43 +32,35 @@ import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # the column types Spark gave these tables when it wrote them
 LINEAGE_SCHEMA = pa.schema([
     ("stage", pa.string()), ("partition_id", pa.int32()), ("output_rows", pa.int64()),
-    ("checksum", pa.string()), ("wall_ms", pa.int32()), ("status", pa.string()),
-    ("run_id", pa.string()),
+    ("wall_ms", pa.int32()), ("status", pa.string()), ("run_id", pa.string()),
 ])
-METRICS_SCHEMA = pa.schema(
-    [LINEAGE_SCHEMA.field(c) for c in ("stage", "output_rows", "checksum", "wall_ms", "run_id")]
-)
+METRICS_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("output_rows", pa.int64()), ("checksum", pa.string()),
+    ("wall_ms", pa.int32()), ("run_id", pa.string()),
+])
 
 
-def write_stage(df: DataFrame, path: str, mode: str) -> tuple[DataFrame, list[Row]]:
+def write_stage(df: DataFrame, path: str, mode: str) -> tuple[DataFrame, int, str]:
     """Write `df` as parquet at `path`; return it read back with the schema
-    it was written with (no inference job) and its (partition_id,
-    output_rows, checksum) rows, one per non-empty partition, from a single
-    aggregation."""
-    df.write.mode(mode).parquet(path)
+    it was written with (no inference job), its row count and its checksum.
+    The two totals are observed on the write job itself; an empty stage gets
+    (0, "0"), so every committed stage has a comparable total."""
+    obs = Observation()
+    df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        # decimal accumulator: overflow-safe at any row count (ANSI mode)
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).cast("string").alias("checksum"),
+    ).write.mode(mode).parquet(path)
     out = df.sparkSession.read.schema(df.schema).parquet(path)
-    parts = (
-        out.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count("*").alias("output_rows"),
-            # decimal accumulator: overflow-safe at any row count (ANSI mode)
-            F.sum(F.xxhash64(*out.columns).cast("decimal(38,0)")).cast("string").alias("checksum"),
-        )
-        .collect()
-    )
-    return out, parts
-
-
-def stage_totals(parts: list[Row]) -> tuple[int, str]:
-    """(rows, checksum) of a stage from its ``write_stage`` rows; an empty
-    stage gets (0, "0"), so every committed stage has a comparable total."""
-    return sum(p["output_rows"] for p in parts), str(sum(int(p["checksum"]) for p in parts))
+    stats = obs.get  # filled in by the write job
+    return out, stats["rows"], stats["checksum"] or "0"
 
 
 def _replace_parquet(rows: list[dict], schema: pa.Schema, path: str) -> None:
@@ -99,19 +91,22 @@ class PipelineRunner:
     def run(self, stage: str, build, force: bool = False) -> DataFrame:
         """Execute `build() -> DataFrame` unless the stage is already
         committed; returns the committed DataFrame either way.  wall_ms
-        covers the build, the write and the stats aggregation."""
+        covers the build and the write."""
         if not force and self.stage_committed(stage):
             return self.spark.read.parquet(self._path(stage))
         # un-commit first: a crash while rewriting must not leave the old
         # marker vouching for a half-written stage
         shutil.rmtree(self._path("_metrics", stage), ignore_errors=True)
         t0 = time.time()
-        out, parts = write_stage(build(), self._path(stage), "overwrite")
+        out, rows, checksum = write_stage(build(), self._path(stage), "overwrite")
         wall_ms = int((time.time() - t0) * 1000)
         common = {"stage": stage, "wall_ms": wall_ms, "status": "SUCCESS", "run_id": self.run_id}
-        lineage = [{**p.asDict(), **common} for p in parts]
+        # one row per non-empty part file, from its footer (no Spark job);
+        # part-NNNNN-... names the write task that wrote it
+        files = [f for f in sorted(os.listdir(self._path(stage))) if f.startswith("part-")]
+        lineage = [{**common, "partition_id": int(f.split("-")[1]), "output_rows": n}
+                   for f in files if (n := pq.read_metadata(self._path(stage, f)).num_rows)]
         _replace_parquet(lineage, LINEAGE_SCHEMA, self._path("_lineage", stage))
-        rows, checksum = stage_totals(parts)
         total = {**common, "output_rows": rows, "checksum": checksum}
         _replace_parquet([total], METRICS_SCHEMA, self._path("_metrics", stage))
         return out

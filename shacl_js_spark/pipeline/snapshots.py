@@ -26,9 +26,10 @@ snapshot chain.  A reader never sees a half-written table because `current`
 is only ever swapped onto a fully-written manifest.
 
 On a real cluster this maps 1:1 onto Iceberg snapshot commits (the catalog
-swap becomes the metastore/REST-catalog CAS).  The data is written and its
-stats taken by the same ``write_stage`` as PipelineRunner's stages; the
-manifest keeps only the stage totals, not the per-partition lineage.
+swap becomes the metastore/REST-catalog CAS).  The data is written by the
+same ``write_stage`` as PipelineRunner's stages; the manifest keeps only the
+totals observed on that write, and ``read`` uses its schema, so a snapshot
+stage costs only its write job.
 """
 
 from __future__ import annotations
@@ -39,8 +40,9 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from .materialize import stage_totals, write_stage
+from .materialize import write_stage
 
 
 class SnapshotError(RuntimeError):
@@ -85,7 +87,8 @@ class SnapshotCatalog:
     def read(self, table: str, snapshot_id: str | None = None) -> DataFrame:
         """Current table state, or time travel to any retained snapshot."""
         m = self.manifest(table, snapshot_id)
-        return self.spark.read.parquet(m["data_path"])
+        schema = StructType.fromJson(m["schema"])  # no inference job
+        return self.spark.read.schema(schema).parquet(m["data_path"])
 
     def history(self, table: str) -> list[dict]:
         """Snapshot chain, newest first, by walking parent pointers."""
@@ -111,8 +114,7 @@ class SnapshotCatalog:
         data_path = self._data(table, snap)
         os.makedirs(self._meta(table), exist_ok=True)
         t0 = time.time()
-        out, parts = write_stage(df, data_path, "errorifexists")  # immutable dir
-        rows, checksum = stage_totals(parts)
+        out, rows, checksum = write_stage(df, data_path, "errorifexists")  # immutable dir
         manifest = {
             "snapshot_id": snap,
             "parent": self.current_snapshot(table),

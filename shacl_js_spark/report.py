@@ -139,7 +139,6 @@ def report_triples_df(spark, report_df):
     rows = (
         report_df.dropDuplicates(_ID_FIELDS)
         .withColumn("_rid", F.concat(F.lit("_:r"), F.md5(rid_src)))
-        .persist()
     )
 
     def trip(df, s_enc, p_iri, o_cols):

@@ -3,10 +3,12 @@ triple P/R vs a pure-pandas oracle of the same extraction rules, connected
 components vs a union-find oracle, idempotent resume, and that the SHACL
 validate stage actually rejects corrupt graphs."""
 
+import os
 import shutil
 import time
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,7 +22,13 @@ from shacl_js_spark.pipeline.canonicalize import (
 from shacl_js_spark.pipeline.emit import EX, emit_triples
 from shacl_js_spark.pipeline.extract import explode_spans, extract_mentions
 from shacl_js_spark.pipeline.link import link_entities
-from shacl_js_spark.pipeline.materialize import KG_SHAPES_TTL, PipelineRunner, run_pipeline
+from shacl_js_spark.pipeline.materialize import (
+    KG_SHAPES_TTL,
+    PipelineRunner,
+    run_pipeline,
+    write_stage,
+)
+from shacl_js_spark.pipeline.snapshots import SnapshotRunner
 from shacl_js_spark.pipeline.synth import ENTITY_LEXICON, interleaved_documents
 from shacl_js_spark.validation import Engine
 
@@ -169,6 +177,27 @@ def test_connected_components_vs_union_find(spark):
     assert got == expected
 
 
+def _jobs(spark, group: str, action):
+    """(result of `action()`, ids of the Spark jobs it launched), counted by
+    job group; `group` must be unique to the call."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+        # control job: the status listener handles jobs in order, so once it
+        # sees this one it has seen every job `action` launched
+        sc.setJobGroup(f"{group}-control", "control")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-control") and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup(f"{group}-control")
+    return result, list(tracker.getJobIdsForGroup(group))
+
+
 def test_resume_skips_committed_stages(spark, tmp_path):
     out = str(tmp_path / "kg")
     res1 = run_pipeline(spark, SF, out, validate=False)
@@ -180,7 +209,7 @@ def test_resume_skips_committed_stages(spark, tmp_path):
     # Spark itself wrote them
     assert spark.read.parquet(f"{out}/_lineage/triples").dtypes == [
         ("stage", "string"), ("partition_id", "int"), ("output_rows", "bigint"),
-        ("checksum", "string"), ("wall_ms", "int"), ("status", "string"), ("run_id", "string"),
+        ("wall_ms", "int"), ("status", "string"), ("run_id", "string"),
     ]
     assert runner.metrics("triples").dtypes == [
         ("stage", "string"), ("output_rows", "bigint"), ("checksum", "string"),
@@ -188,7 +217,17 @@ def test_resume_skips_committed_stages(spark, tmp_path):
     ]
     lineage = spark.read.parquet(f"{out}/_lineage/triples").collect()
     assert sum(r["output_rows"] for r in lineage) == n1
-    assert str(sum(int(r["checksum"]) for r in lineage)) == chk1
+    # every stage: one lineage row per part file that holds rows, keyed by
+    # the write task in its name, summing to the stage's metrics total
+    for stage in res1:
+        files = [f for f in os.listdir(f"{out}/{stage}") if f.startswith("part-")]
+        by_file = [(int(f.split("-")[1]), pq.read_table(f"{out}/{stage}/{f}").num_rows) for f in files]
+        lineage = pq.read_table(f"{out}/_lineage/{stage}").to_pylist()
+        assert sorted((r["partition_id"], r["output_rows"]) for r in lineage) == sorted(
+            p for p in by_file if p[1]
+        ), stage
+        total = runner.metrics(stage).collect()[0]["output_rows"]
+        assert sum(r["output_rows"] for r in lineage) == total == res1[stage].count(), stage
     # re-run: all stages committed -> must read back, not recompute
     calls = {"n": 0}
     def must_not_run():
@@ -215,29 +254,59 @@ def test_empty_stage_commits_and_resumes(spark, tmp_path):
     assert [tuple(r) for r in runner.metrics("empty").select("output_rows", "checksum").collect()] == [
         (0, "0")
     ]
-    sc = spark.sparkContext
-    sc.setJobGroup("test-stage-committed", "stage_committed")
-    try:
-        committed = runner.stage_committed("empty")
-        # control job: the status listener handles jobs in order, so once it
-        # sees this one it has seen any job stage_committed launched
-        sc.setJobGroup("test-stage-committed-control", "control")
-        spark.range(1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup("test-stage-committed-control") and time.time() < deadline:
-        time.sleep(0.1)
-    assert tracker.getJobIdsForGroup("test-stage-committed-control")
+    committed, jobs = _jobs(spark, "test-stage-committed", lambda: runner.stage_committed("empty"))
     assert committed
-    assert tracker.getJobIdsForGroup("test-stage-committed") == []
+    assert jobs == []
 
     def must_not_run():
         raise AssertionError("committed empty stage rebuilt")
 
     df = PipelineRunner(spark, out).run("empty", must_not_run)
     assert df.columns == ["id", "v"] and df.count() == 0
+
+
+def test_stage_commit_is_one_write_job(spark, tmp_path):
+    """A shuffle-free stage commits with its write job alone: the totals
+    are observed on the write, the lineage is read from the file footers
+    and the committed frame is read back with the written schema."""
+    def build():
+        return spark.range(0, 400, 1, 4).withColumn("v", (F.col("id") % 7).cast("string"))
+
+    out = str(tmp_path / "kg")
+    df, jobs = _jobs(spark, "test-commit-pipeline", lambda: PipelineRunner(spark, out).run("s", build))
+    assert len(jobs) == 1
+    assert df.count() == 400
+    assert pq.read_table(f"{out}/_lineage/s").num_rows == 4
+    snap = str(tmp_path / "snap")
+    df, jobs = _jobs(spark, "test-commit-snapshot", lambda: SnapshotRunner(spark, snap).run("s", build))
+    assert len(jobs) == 1
+    assert df.count() == 400
+
+
+def test_observed_totals_equal_read_back_aggregation(spark, tmp_path):
+    """The (rows, checksum) observed on the write equal an aggregation over
+    the written files, for a multi-partition frame with nulls and for an
+    empty one (whose sum is null, recorded as "0")."""
+    frames = {
+        "multi": spark.range(0, 1000, 1, 7)
+        .filter(F.col("id") % 3 != 0)
+        .select(
+            "id",
+            F.when(F.col("id") % 5 == 0, None).otherwise(F.concat(F.lit("v"), F.col("id"))).alias("s"),
+            (F.col("id") / 7).alias("x"),
+        ),
+        "empty": spark.createDataFrame([], "id long, v string"),
+    }
+    for name, df in frames.items():
+        path = str(tmp_path / name)
+        _, rows, checksum = write_stage(df, path, "overwrite")
+        back = spark.read.parquet(path)
+        agg = back.agg(
+            F.count(F.lit(1)),
+            F.sum(F.xxhash64(*back.columns).cast("decimal(38,0)")).cast("string"),
+        ).collect()[0]
+        assert (rows, checksum) == (agg[0], agg[1] or "0"), name
+    assert rows == 0 and checksum == "0"
 
 
 def test_validation_catches_corrupt_graph(spark, docs):

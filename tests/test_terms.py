@@ -94,3 +94,16 @@ def test_literal_cols_is_the_column_twin_of_encode_term(spark):
             assert enc == encode_term(r["v"], "literal", want.datatype, lang)
             assert (v, kind, odt, olang) == (want.value, "literal", want.datatype, lang)
             assert decode_term(enc) == want
+
+
+def test_oracle_lexical_escape_matches_escape_lex():
+    # the DuckDB oracle escapes kg literals as the engine's codec does
+    import duckdb
+
+    import __spark_entry__ as entry
+    from shacl_js_spark.terms import escape_lex
+
+    values = ["plain", 'say "hi"', "back\\slash", "tab\there", "a\nb\r\nc", '\\"\t\n\r']
+    with duckdb.connect() as con:
+        got = [con.execute(f"SELECT {entry._lex_sql('?')}", [v]).fetchone()[0] for v in values]
+    assert got == [escape_lex(v) for v in values]

@@ -186,6 +186,18 @@ def test_report_lines_escape_multiline_message(spark):
     assert [decode_term(o).value for o in msgs] == ["name is\nmissing\r\tnow"]
 
 
+def test_report_triples_pin_no_cache(spark):
+    # the report graph is a plan over the report rows: collecting it leaves
+    # nothing persisted for the rest of the session
+    v = SHACLValidator(spark)
+    v.update_data_graph(DATA_BAD)
+    v.update_shapes_graph(SHAPES)
+    report = v.report_df()
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert report_triples_df(spark, report).collect()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 INDEX_SHAPES = """
 @prefix sh: <http://www.w3.org/ns/shacl#> .
 @prefix ex: <http://e/> .
