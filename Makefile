@@ -16,7 +16,7 @@ define need_round
 $(if $(ROUND),,$(error ROUND is not set: run e.g. `make $@ ROUND=<tag>`; the log goes to BENCH/ under that tag))
 endef
 
-.PHONY: gate gate-shacl bench verify test dist submit-smoke many-shapes
+.PHONY: gate gate-shacl bench verify test dist submit-smoke many-shapes perf-pairs
 
 # Package the engine for spark-submit --py-files (north rule: the pipeline
 # must run via spark-submit on a multi-executor cluster).  Single zip
@@ -56,6 +56,17 @@ bench:
 many-shapes:
 	$(need_round)
 	python scripts/many_shapes_bench.py 2>&1 | tail -1 | tee BENCH/many_shapes_$(ROUND).json
+
+# alternating parent/change perfbench runs of one workload, written to
+# BENCH/perfbench_$(ROUND)_$(WORKLOAD)_pairs.jsonl and summarized
+# (make perf-pairs ROUND=<tag> PARENT=<parent checkout> WORKLOAD=<name>)
+PAIRS ?= 10
+perf-pairs:
+	$(need_round)
+	$(if $(PARENT),,$(error PARENT is not set: give the parent checkout, e.g. PARENT=../parent))
+	$(if $(WORKLOAD),,$(error WORKLOAD is not set: e.g. WORKLOAD=shacl_incremental))
+	python scripts/perf_pairs.py --parent $(PARENT) --change . --workload $(WORKLOAD) \
+	  --tag $(ROUND) --pairs $(PAIRS)
 
 # the tier-1 command of ROADMAP.md: the whole suite, run past failures and
 # collection errors, with one Spark core per host core

@@ -29,8 +29,10 @@ with a prefix: {x}, {x}_v, {x}_kind, {x}_dt, {x}_lang.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .terms import (
@@ -134,6 +136,19 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:
+    """A frame of driver-side `rows` (tuples; `schema` a StructType or DDL).
+    Built from an Arrow table it is a LocalRelation, which needs no job and
+    no Python worker; `createDataFrame(list)` is an RDD that starts Python
+    workers on every action over it."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = zip(*rows) if rows else ([] for _ in arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(list(c), f.type) for c, f in zip(cols, arrow)], schema=arrow))
+
+
 def term_to_row_parts(t: Term) -> tuple[str, str, str, str | None, str | None]:
     """(enc, v, kind, dt, lang) for a term."""
     return (t.encoded(), t.value, t.kind, t.datatype, t.lang)
@@ -161,7 +176,7 @@ def triples_df(spark: SparkSession, triples: list[Triple], g: str = DEFAULT_GRAP
         if key not in seen:
             seen.add(key)
             rows.append(r)
-    df = spark.createDataFrame(rows, TRIPLE_SCHEMA)
+    df = local_frame(spark, rows, TRIPLE_SCHEMA)
     if num_partitions:
         df = df.repartition(num_partitions)
     return df
@@ -254,8 +269,7 @@ def t_triples(df: DataFrame) -> DataFrame:
 
 def terms_frame(spark: SparkSession, terms: list[Term], prefix: str = "focus") -> DataFrame:
     schema = StructType([StructField(n, StringType(), True) for n in term_cols(prefix)])
-    rows = [term_to_row_parts(t) for t in terms]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, [term_to_row_parts(t) for t in terms], schema)
 
 
 def ntriples_lines(df: DataFrame) -> DataFrame:

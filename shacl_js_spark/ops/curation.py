@@ -177,7 +177,7 @@ def pack_sequences_partitioned(
     # persist the partitioned frame: spark_partition_id() must be observed by
     # exactly one materialization so the totals job and the output job see
     # the same pid assignment (and the range shuffle runs once)
-    from ..graph import cut_lineage
+    from ..graph import cut_lineage, local_frame
 
     parted = (
         _sized(df)
@@ -192,9 +192,7 @@ def pack_sequences_partitioned(
         for row in sorted(totals, key=lambda r: r["_pid"]):
             offsets.append((int(row["_pid"]), run))
             run += int(row["tot"])
-        off_df = df.sparkSession.createDataFrame(
-            offsets or [(0, 0)], "_pid int, _off long"
-        )
+        off_df = local_frame(df.sparkSession, offsets or [(0, 0)], "_pid int, _off long")
         w = Window.partitionBy("_pid").orderBy("doc_id").rowsBetween(
             Window.unboundedPreceding, 0
         )

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph import cut_lineage, iri_cols
+from ..graph import cut_lineage, iri_cols, local_frame
 from .synth import ENTITY_LEXICON
 
 
@@ -99,7 +99,7 @@ def connected_components(
         for n in list(parent):
             comp.setdefault(find(n), []).append(n)
         out = [(n, min(members)) for root, members in comp.items() for n in members]
-        return spark.createDataFrame(out, "entity_id string, canonical_id string")
+        return local_frame(spark, out, "entity_id string, canonical_id string")
 
     und = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -17,8 +17,9 @@ part files' parquet footers.  Both bookkeeping tables are written by pyarrow.
 ``_metrics/<stage>`` is written last and renamed into place: it is the commit
 marker.  Resume contract: a stage whose output, ``_lineage`` and ``_metrics``
 dirs all exist is NOT recomputed (a filesystem check) — ``run()`` reads the
-committed parquet back instead.  Checksums (sum of xxhash64 over all columns)
-make cross-run equality auditable without re-reading inputs.
+committed parquet back instead, with the schema in a part file's footer.
+Checksums (sum of xxhash64 over all columns) make cross-run equality
+auditable without re-reading inputs.
 
 Written as plain parquet directories; on a cluster these map 1:1 onto Iceberg
 tables (an atomic snapshot commit replaces the renamed marker).
@@ -26,6 +27,7 @@ tables (an atomic snapshot commit replaces the renamed marker).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -34,6 +36,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # the column types Spark gave these tables when it wrote them
 LINEAGE_SCHEMA = pa.schema([
@@ -93,7 +96,11 @@ class PipelineRunner:
         committed; returns the committed DataFrame either way.  wall_ms
         covers the build and the write."""
         if not force and self.stage_committed(stage):
-            return self.spark.read.parquet(self._path(stage))
+            # Spark's footer schema: no job infers it (an empty stage has a part file too)
+            part = min(f for f in os.listdir(self._path(stage)) if f.startswith("part-"))
+            meta = pq.read_schema(self._path(stage, part)).metadata
+            schema = json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+            return self.spark.read.schema(StructType.fromJson(schema)).parquet(self._path(stage))
         # un-commit first: a crash while rewriting must not leave the old
         # marker vouching for a half-written stage
         shutil.rmtree(self._path("_metrics", stage), ignore_errors=True)

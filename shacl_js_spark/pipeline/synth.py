@@ -25,12 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph import local_frame
 from ..ops.dedup import md5_int
 
 TOKENS_PER_SPAN = 8
 MEDIA_EVERY = 2  # a media span after every 2nd text span
 MEDIA_KINDS = ["image", "audio", "video"]
 
+# documents.parquet (TESTDATA.md), read with it so that no job infers it
+DOCUMENTS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 SPAN_SCHEMA = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 # Fixed entity lexicon over the synthetic corpus vocabulary (TESTDATA.md).
@@ -51,7 +54,7 @@ for _i, _w in enumerate(_VOCAB):
 
 def interleaved_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read <sf_dir>/documents.parquet -> interleaved spans table."""
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    raw = spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
     return raw_to_interleaved(raw)
 
 
@@ -147,7 +150,7 @@ def lexicon_df(spark: SparkSession) -> DataFrame:
         for surface, cands in ENTITY_LEXICON.items()
         for (ent, prior) in cands
     ]
-    return spark.createDataFrame(rows, "surface string, entity_id string, prior double")
+    return local_frame(spark, rows, "surface string, entity_id string, prior double")
 
 
 def lexicon_grouped_df(spark: SparkSession) -> DataFrame:
@@ -156,7 +159,6 @@ def lexicon_grouped_df(spark: SparkSession) -> DataFrame:
     aggregation would add a pointless exchange to every plan that broadcasts
     it (the link stage asserts zero non-broadcast exchanges)."""
     rows = [(surface, cands) for surface, cands in ENTITY_LEXICON.items()]
-    return spark.createDataFrame(
-        rows,
-        "surface string, _cands array<struct<entity_id:string, prior:double>>",
+    return local_frame(
+        spark, rows, "surface string, _cands array<struct<entity_id:string, prior:double>>"
     )

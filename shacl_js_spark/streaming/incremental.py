@@ -14,32 +14,50 @@ subject that reaches an affected node within that many hops.  It defaults to
 0: a batch's objects include the classes it types nodes with, so one hop
 adds every instance of each such class to the batch.
 
-Plumbing: foreachBatch (exactly-once per epoch with checkpointing), graph
-accumulates as parquet (Iceberg append at cluster scale), report maintained
-as per-focus upserts keyed on the bubble (target focus) string.
+A batch is one append, one small driver step and one fused validate-and-
+upsert write:
+
+- RDF set semantics are kept at append time: the batch's distinct triples
+  that `graph/` does not hold yet are appended (a left anti-join on
+  (s, p, o); an Iceberg MERGE at cluster scale), so `graph/` is distinct by
+  construction and every read of it is a plain scan.  A replayed batch
+  (at-least-once delivery) appends nothing.
+- The append job also observes the report buckets of the batch's terms.
+  Every re-validated target is one of those terms, so no job runs only to
+  find the touched buckets; with `extra_hops` one more job collects the
+  buckets of the widened terms.
+- One Engine, restricted to the batch's terms (`Engine(focus=...)`), plans
+  every shape in one pass; its rows are upserted keyed on the bubble (the
+  target focus).
 
 Report store layout: `report/bucket=K/` with K = pmod(hash(bubble),
-n_buckets) — a batch rewrites ONLY the buckets its re-validated targets hash
-into (staged write + per-bucket directory swap); unaffected buckets' files
-are untouched, so per-batch report I/O is O(affected buckets), not O(full
-report).  A crash mid-swap leaves some buckets old and some new; the
-foreachBatch replay re-runs the same bubble-keyed upsert, which is
-idempotent, so mixed states heal (Iceberg MERGE replaces the swap at cluster
-scale).
+n_buckets) — a batch rewrites ONLY the buckets of its terms (staged write +
+per-bucket directory swap); other buckets' files are untouched, so
+per-batch report I/O is O(affected buckets), not O(full report).  A crash
+mid-swap leaves some buckets old and some new; the foreachBatch replay
+re-runs the same bubble-keyed upsert, which is idempotent, so mixed states
+heal (Iceberg MERGE replaces the swap at cluster scale).
 """
 
 from __future__ import annotations
 
+import functools
+import json
+import logging
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..graph import subject_decomposed, object_decomposed
+from ..graph import local_frame, t_triples
 from ..localgraph import LocalGraph
-from ..validation import VIOL_COLS, Engine
+from ..validation import VIOL_COLS, VIOL_SCHEMA, Engine
+
+# a report bucket's rows: the violation columns and the bucket partition
+REPORT_SCHEMA = StructType([*VIOL_SCHEMA.fields, StructField("bucket", IntegerType())])
 
 
 class IncrementalValidator:
@@ -57,21 +75,15 @@ class IncrementalValidator:
         # that no batch ever rewrites, so an existing store's value wins
         meta_path = os.path.join(work_dir, "report_meta.json")
         if os.path.isfile(meta_path):
-            import json
-
             with open(meta_path) as fh:
                 stored = json.load(fh)["n_buckets"]
             if stored != n_buckets:
-                import logging
-
                 logging.getLogger(__name__).warning(
                     "report store was created with n_buckets=%d; ignoring "
                     "requested n_buckets=%d", stored, n_buckets,
                 )
             self.n_buckets = stored
         else:
-            import json
-
             with open(meta_path, "w") as fh:
                 json.dump({"n_buckets": n_buckets}, fh)
             self.n_buckets = n_buckets
@@ -95,12 +107,11 @@ class IncrementalValidator:
         report() may be called concurrently with an in-flight batch, and
         sweeping there would delete that batch's staging dir mid-swap and
         lose its buckets."""
-        if sweep_staging:
+        if sweep_staging:  # their parent is the work dir, made in __init__
             parent, base = os.path.split(os.path.abspath(self.report_dir))
-            if os.path.isdir(parent):
-                for entry in os.listdir(parent):
-                    if entry.startswith(base + ".staging-"):
-                        shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+            for entry in os.listdir(parent):
+                if entry.startswith(base + ".staging-"):
+                    shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
         if not os.path.isdir(self.report_dir):
             return
         for entry in os.listdir(self.report_dir):
@@ -116,92 +127,60 @@ class IncrementalValidator:
     # -- the foreachBatch callback -------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self._recover_buckets(sweep_staging=True)
-        batch_df.write.mode("append").parquet(self.graph_dir)
-        # RDF set semantics over the accumulated graph: replayed batches
-        # (at-least-once delivery) re-append the same triples; without the
-        # dedup they inflate counts and duplicate report rows (at cluster
-        # scale this is an Iceberg MERGE instead of append+dropDuplicates)
-        full = self.spark.read.parquet(self.graph_dir).dropDuplicates(["s", "p", "o"])
-        engine = Engine(self.spark, full, self.shapes, registry=self.registry)
+        # append the absent distinct triples, observing the batch's buckets
+        obs = Observation()
+        new = batch_df.observe(
+            obs,
+            F.collect_set(self._bucket(F.col("s"))).alias("s"),
+            F.collect_set(self._bucket(F.col("o"))).alias("o"),
+        ).dropDuplicates(["s", "p", "o"])
+        if os.path.isdir(self.graph_dir):
+            graph = self.spark.read.schema(batch_df.schema).parquet(self.graph_dir)
+            new = new.join(graph, ["s", "p", "o"], "left_anti")
+        new.write.mode("append").parquet(self.graph_dir)
+        buckets = set(obs.get["s"]) | set(obs.get["o"])
+        full = self.spark.read.schema(batch_df.schema).parquet(self.graph_dir)
 
-        affected = (
-            batch_df.select(*subject_decomposed("s", "focus"))
-            .unionByName(batch_df.select(*object_decomposed("focus")))
-            .dropDuplicates(["focus"])
+        # the batch's terms, also on a replay (which heals a crash before
+        # the swap), plus any subject reaching one within extra_hops
+        focus = batch_df.select(F.col("s").alias("focus")).unionByName(
+            batch_df.select(F.col("o").alias("focus"))
         )
-        # widen by n hops for deep paths: any subject that can reach an
-        # affected node within extra_hops is also affected
-        frontier = affected
-        for _ in range(self.extra_hops):
-            trips = engine.trips()
-            frontier = (
-                trips.join(frontier, trips["t_o"] == frontier["focus"], "left_semi")
-                .select(*subject_decomposed("t_s", "focus"))
-                .dropDuplicates(["focus"])
-            )
-            affected = affected.unionByName(frontier).dropDuplicates(["focus"])
+        if self.extra_hops:
+            frontier, hops = focus, []
+            for _ in range(self.extra_hops):
+                trips = t_triples(full)
+                frontier = (trips.join(frontier, trips["t_o"] == frontier["focus"], "left_semi")
+                            .select(F.col("t_s").alias("focus")))
+                hops.append(frontier)
+            widened = functools.reduce(DataFrame.unionByName, hops)
+            # the widened terms are graph terms: one job collects their buckets
+            buckets |= set(widened.agg(F.collect_set(self._bucket(F.col("focus")))).first()[0])
+            focus = focus.unionByName(widened)
 
-        out = None
-        revalidated = None
-        for shape in engine.ir.shapes_with_target():
-            targets = engine.targets_frame(shape).join(
-                affected.select("focus"), "focus", "left_semi"
-            )
-            revalidated = (
-                targets.select("focus")
-                if revalidated is None
-                else revalidated.unionByName(targets.select("focus"))
-            )
-            # keep the bubble column (the shape's TARGET focus): nested
-            # property violations are recorded under the child focus, so
-            # the report upsert must key on bubble — deleting by recorded
-            # focus left stale grandchild rows to duplicate across batches
-            v = engine.shape_violations(shape, targets).select(*VIOL_COLS)
-            out = v if out is None else out.unionByName(v)
-        if out is None:
+        engine = Engine(self.spark, full, self.shapes, registry=self.registry, focus=focus)
+        shapes = engine.ir.shapes_with_target()
+        if not shapes or not buckets:
             return
-        # only the staged write reads new_rows; reval is read twice (the
-        # bucket collect below and the upsert's anti-join), so it is pinned
-        new_rows = out.withColumn("bucket", self._bucket(F.col("bubble")))
-        reval = (
-            revalidated.dropDuplicates(["focus"])
-            .withColumnRenamed("focus", "bubble")
-            .withColumn("bucket", self._bucket(F.col("bubble")))
-            .persist()
-        )
+        # one fused plan over every shape; rows keep the bubble column (the
+        # shape's TARGET focus): nested property violations are recorded
+        # under the child focus, so the upsert must key on bubble
+        new_rows = engine._all_violations().withColumn("bucket", self._bucket(F.col("bubble")))
+        # the re-validated targets: the same memoized frames the plan scans
+        reval = functools.reduce(DataFrame.unionByName, [
+            engine.targets_frame(shape).select(F.col("focus").alias("bubble"))
+            for shape in shapes
+        ])
 
-        # buckets this batch touches: those of the re-validated targets (rows
-        # to delete) — new rows are a subset (every new row's bubble is a
-        # re-validated target).  Bounded by n_buckets, so collect is safe.
-        affected = sorted(
-            r["bucket"] for r in reval.select("bucket").dropDuplicates().collect()
-        )
-
-        if not affected:  # batch touched no target of any shape
-            reval.unpersist()
-            return
-
-        # upsert only the affected buckets: read them (partition-pruned),
+        # upsert only the touched buckets: read them (partition-pruned),
         # drop rows keyed by a re-validated bubble, append the fresh rows
-        if os.path.isdir(self.report_dir) and affected:
-            prev = (
-                self.spark.read.option("basePath", self.report_dir)
-                .parquet(*[f"{self.report_dir}/bucket={b}" for b in affected
-                           if os.path.isdir(f"{self.report_dir}/bucket={b}")])
-                if any(os.path.isdir(f"{self.report_dir}/bucket={b}") for b in affected)
-                else None
-            )
-            # select: buckets written before the _batch column was retired
-            # still carry it, and the union below matches columns by name
-            kept = (
-                prev.select(*VIOL_COLS, "bucket")
-                .join(reval.select("bubble"), "bubble", "left_anti")
-                if prev is not None
-                else None
-            )
-        else:
-            kept = None
-        merged = new_rows if kept is None else kept.unionByName(new_rows)
+        buckets = sorted(buckets)
+        present = [d for b in buckets if os.path.isdir(d := f"{self.report_dir}/bucket={b}")]
+        merged = new_rows
+        if present:
+            prev = (self.spark.read.schema(REPORT_SCHEMA)
+                    .option("basePath", self.report_dir).parquet(*present))
+            merged = prev.join(reval, "bubble", "left_anti").unionByName(new_rows)
 
         # staged write + per-bucket swap: unaffected buckets are never
         # rewritten (their files stay byte-identical across the batch).
@@ -212,7 +191,7 @@ class IncrementalValidator:
         staging = f"{self.report_dir}.staging-{uuid.uuid4().hex[:8]}"
         merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
         os.makedirs(self.report_dir, exist_ok=True)
-        for b in affected:
+        for b in buckets:
             dst = f"{self.report_dir}/bucket={b}"
             src = f"{staging}/bucket={b}"
             aside = dst + ".old"
@@ -224,7 +203,6 @@ class IncrementalValidator:
             if os.path.isdir(aside):
                 shutil.rmtree(aside)
         shutil.rmtree(staging, ignore_errors=True)
-        reval.unpersist()
 
     # -- stream wiring ---------------------------------------------------
     def start(self, stream_df: DataFrame, checkpoint_dir: str, trigger_available_now: bool = True):
@@ -241,12 +219,8 @@ class IncrementalValidator:
             e.startswith("bucket=") for e in os.listdir(self.report_dir)
         )
         if not has_data:
-            from pyspark.sql.types import StringType, StructField, StructType
-
-            schema = StructType(
-                [StructField(c, StringType(), True) for c in VIOL_COLS]
-            )
-            return self.spark.createDataFrame([], schema)
-        # select, not drop("bucket"): stores written before the _batch
-        # column was retired still carry it
-        return self.spark.read.parquet(self.report_dir).select(*VIOL_COLS)
+            return local_frame(self.spark, [], VIOL_SCHEMA)
+        # read with the report schema (no job infers it); select, not
+        # drop("bucket"): stores written before the _batch column was
+        # retired still carry it
+        return self.spark.read.schema(REPORT_SCHEMA).parquet(self.report_dir).select(*VIOL_COLS)

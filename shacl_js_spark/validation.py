@@ -47,6 +47,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from .graph import (
     cut_lineage,
     js_number,
+    local_frame,
     object_decomposed,
     subject_decomposed,
     t_triples,
@@ -245,7 +246,10 @@ class Engine:
 
     Precondition: `data` holds distinct (s, p, o) triples.  eval_path
     dedups only seq-path results, and _count_frame counts a simple path's
-    values on the triple side; both rely on it."""
+    values on the triple side; both rely on it.
+
+    `focus`, a one-column frame of encoded terms, restricts every shape's
+    targets to those terms (incremental re-validation)."""
 
     def __init__(
         self,
@@ -257,9 +261,11 @@ class Engine:
         subclass_edges: dict | None = None,
         max_driver_results: int = 100_000,
         max_shape_recursion: int = 25,
+        focus: DataFrame | None = None,
     ):
         self.spark = spark
         self.data = data
+        self.focus = focus
         self.shapes = shapes
         self.registry = registry
         self.ir = ShapesIR(shapes, registry)
@@ -421,10 +427,7 @@ class Engine:
                         F.col("s").alias("focus")
                     )
                 )
-            out = enc_pieces[0]
-            for p in enc_pieces[1:]:
-                out = out.unionByName(p)
-            return out.dropDuplicates(["focus"]).select(
+            return self._focused(enc_pieces).dropDuplicates(["focus"]).select(
                 *subject_decomposed("focus", "focus")
             )
         pieces: list[DataFrame] = []
@@ -445,13 +448,15 @@ class Engine:
                 )
             )
         if not pieces:
-            return self.spark.createDataFrame(
-                [], StructType([StructField(c, StringType(), True) for c in term_cols("focus")])
-            )
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        return out.dropDuplicates(["focus"])
+            return terms_frame(self.spark, [], "focus")
+        return self._focused(pieces).dropDuplicates(["focus"])
+
+    def _focused(self, pieces: list[DataFrame]) -> DataFrame:
+        """The union of target pieces, kept to the `focus` terms if given."""
+        out = functools.reduce(DataFrame.unionByName, pieces)
+        if self.focus is None:
+            return out
+        return out.join(self.focus, "focus", "left_semi")
 
     # ----------------------------------------------------------------- paths
     def eval_path(self, path: Path, focus_df: DataFrame) -> DataFrame:
@@ -546,7 +551,7 @@ class Engine:
         must not OOM the driver because someone called the convenience API.
         report.truncated flags the cap; the full set stays distributed via
         report_df()."""
-        out = self._all_violations()
+        out = self._all_violations().select(*RECORD_COLS)
         cap = self.error_batch if self.error_batch >= 0 else self.max_driver_results
         rows = out.limit(cap + 1).collect()
         truncated = len(rows) > cap
@@ -575,17 +580,18 @@ class Engine:
 
     def report_df(self) -> DataFrame:
         """Full report as a DataFrame (for writing to parquet/Iceberg)."""
-        return self._all_violations()
+        return self._all_violations().select(*RECORD_COLS)
 
     def _all_violations(self) -> DataFrame:
         """Report rows for every shape-with-target: all shapes compile into
         one check list, so checks of different shapes that scan the same
         memoized value or count frame (the common case in wide shape sets —
         many property shapes over the same target class and path) share
-        one fused pass instead of one scan per shape."""
+        one fused pass instead of one scan per shape.  The rows keep
+        `bubble`, the target focus each row was found under."""
         checks = [chk for shape in self.ir.shapes_with_target()
                   for chk in self._compile(shape, self._targets_key(shape))]
-        return self._union_viols(self._plan(checks)).select(*RECORD_COLS)
+        return self._union_viols(self._plan(checks))
 
     def shape_violations(self, shape: Shape, focus_df: DataFrame) -> DataFrame:
         """All violation rows for `shape` over the given focus frame
@@ -1293,16 +1299,15 @@ def _impl_closedbytypes(eng, shape, c, targets, values, key):
             preds.update(cls_props.get(sup, ()))
         for pe in preds:
             type_allowed.append((t, pe))
-    if type_allowed:
-        allowed_df = eng.spark.createDataFrame(type_allowed, ["_t", "_pred"])
-        focus_allowed = (
-            targets.join(typed, targets["focus"] == typed["_n"], "inner")
-            .join(F.broadcast(allowed_df), "_t", "inner")
-            .select("focus", "_pred")
-            .dropDuplicates()
-        )
-    else:
-        focus_allowed = eng.spark.createDataFrame([], "focus string, _pred string")
+    # an empty allowed set is an empty LocalRelation: the optimizer folds
+    # the joins over it away
+    allowed_df = local_frame(eng.spark, type_allowed, "_t string, _pred string")
+    focus_allowed = (
+        targets.join(typed, targets["focus"] == typed["_n"], "inner")
+        .join(F.broadcast(allowed_df), "_t", "inner")
+        .select("focus", "_pred")
+        .dropDuplicates()
+    )
     trips = eng.trips()
     fa = focus_allowed.select(
         F.col("focus").alias("_fa_focus"), F.col("_pred").alias("_fa_pred")

@@ -309,6 +309,68 @@ def test_observed_totals_equal_read_back_aggregation(spark, tmp_path):
     assert rows == 0 and checksum == "0"
 
 
+def test_resume_reads_committed_stage_without_a_job(spark, tmp_path):
+    """A resumed stage is read with the schema from its part file's footer,
+    so resuming runs no Spark job, for a stage with rows and an empty one."""
+    out = str(tmp_path / "kg")
+    runner = PipelineRunner(spark, out)
+    built = {
+        "rows": spark.range(0, 50, 1, 3).select("id", F.col("id").cast("string").alias("v")),
+        "empty": spark.range(0).select(F.col("id").cast("int").alias("n"), F.lit(1.5).alias("x")),
+    }
+    for stage, df in built.items():
+        runner.run(stage, lambda: df)
+
+    def must_not_run():
+        raise AssertionError("committed stage rebuilt")
+
+    for stage, df in built.items():
+        back, jobs = _jobs(spark, f"test-resume-{stage}", lambda: PipelineRunner(spark, out).run(stage, must_not_run))
+        assert jobs == [], stage
+        assert back.dtypes == df.dtypes, stage
+    assert PipelineRunner(spark, out).run("rows", must_not_run).count() == 50
+
+
+def test_documents_stage_is_one_job(spark, tmp_path):
+    """documents.parquet is read with its declared schema: the documents
+    stage commits in its write job alone, with no schema-inference job."""
+    runner = PipelineRunner(spark, str(tmp_path / "kg"))
+    df, jobs = _jobs(spark, "test-documents-stage",
+                     lambda: runner.run("documents", lambda: interleaved_documents(spark, SF)))
+    assert len(jobs) == 1
+    assert df.count() == pq.read_metadata(f"{SF}/documents.parquet").num_rows
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+def test_driver_built_frames_are_local_relations(spark):
+    """Frames built from driver-side rows analyze to a LocalRelation, which
+    needs no job and no Python worker (createDataFrame(list) is an RDD)."""
+    from shacl_js_spark.graph import local_frame, terms_frame, triples_df
+    from shacl_js_spark.pipeline.synth import lexicon_df, lexicon_grouped_df
+    from shacl_js_spark.terms import iri
+    from shacl_js_spark.turtle import parse_turtle
+
+    trips, _ = parse_turtle("@prefix ex: <http://e/> .\nex:a ex:p ex:b .")
+    frames = {
+        "lexicon_df": lexicon_df(spark),
+        "lexicon_grouped_df": lexicon_grouped_df(spark),
+        "cc_mapping": connected_components(spark, [("e1", "e2"), ("e2", "e3")]),
+        "terms_frame": terms_frame(spark, [iri("http://e/a")]),
+        "triples_df": triples_df(spark, trips),
+        "empty": local_frame(spark, [], "a string, b array<int>"),
+    }
+    for name, df in frames.items():
+        assert _analyzed(df) == "LocalRelation", name
+    assert frames["lexicon_grouped_df"].count() == len(ENTITY_LEXICON)
+    assert sorted(tuple(r) for r in frames["cc_mapping"].collect()) == [
+        ("e1", "e1"), ("e2", "e1"), ("e3", "e1")
+    ]
+    assert frames["empty"].dtypes == [("a", "string"), ("b", "array<int>")]
+
+
 def test_validation_catches_corrupt_graph(spark, docs):
     mentions = extract_mentions(spark, docs.limit(30))
     links = link_entities(spark, mentions)

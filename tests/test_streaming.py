@@ -2,6 +2,7 @@
 
 import os
 import shutil
+from collections import Counter
 
 from shacl_js_spark.graph import TRIPLE_SCHEMA, triples_df
 from shacl_js_spark.localgraph import LocalGraph
@@ -125,6 +126,26 @@ def test_incremental_extra_hops_retracts_class_violation(spark, tmp_path):
     assert iv.report().count() == full.count() == 0
 
 
+def test_incremental_two_hops_reach_a_path_referrer(spark, tmp_path):
+    # a two-step path's value node is typed in a later batch: its referrer
+    # is two hops back, so extra_hops=2 widens the foci over the graph twice
+    from shacl_js_spark.validation import Engine
+
+    shapes = LocalGraph.from_turtle("""
+    @prefix sh: <http://www.w3.org/ns/shacl#> .
+    @prefix ex: <http://e/> .
+    ex:S a sh:NodeShape ; sh:targetClass ex:Doc ;
+      sh:property [ sh:path (ex:m ex:n) ; sh:class ex:Ent ] .
+    """)
+    iv = IncrementalValidator(spark, shapes, str(tmp_path / "hops2"), extra_hops=2)
+    iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\n"
+                                      "ex:d a ex:Doc ; ex:m ex:x . ex:x ex:n ex:e ."), 0)
+    assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/d"}
+    iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\nex:e a ex:Ent ."), 1)
+    full = Engine(spark, spark.read.parquet(iv.graph_dir), shapes).report_df()
+    assert iv.report().count() == full.count() == 0
+
+
 def test_incremental_bucketed_upsert_leaves_other_buckets_untouched(spark, tmp_path):
     # the report store is bucket-partitioned by hash(bubble); a batch must
     # rewrite ONLY the buckets its re-validated targets hash into — every
@@ -208,6 +229,93 @@ def test_incremental_n_buckets_sticky_across_restart(spark, tmp_path):
     assert iv2.n_buckets == 8
     iv2.process_batch(_batch_df(spark, BATCH2), 1)
     assert {r["focus_v"] for r in iv2.report().collect()} == {"http://e/c"}
+
+
+KG_BATCHES = [
+    # documents d1, d2 with the entities they mention first: e2 lacks a
+    # label, d2 a language, and x1 is never typed
+    """ex:d1 a ex:Document ; ex:language "en" ; ex:mentions ex:e1, ex:e2 ; ex:hasMedia ex:m1 .
+    ex:e1 a ex:Entity ; rdfs:label "one" .
+    ex:e2 a ex:Entity .
+    ex:d2 a ex:Document ; ex:mentions ex:x1 .""",
+    # d3 repeats (e1 a Entity) of batch 0, has two languages and a literal
+    # medium; e3's label is lang-tagged and it co-occurs with a literal
+    """ex:d3 a ex:Document ; ex:language "en", "fr" ; ex:mentions ex:e1, ex:e3 ;
+      ex:hasMedia "lit" .
+    ex:e3 a ex:Entity ; rdfs:label "three"@en ; ex:coOccursWith ex:e1, "x" .
+    ex:e1 a ex:Entity .""",
+    # late triples retract the d2 and e2 violations
+    """ex:d2 ex:language "de" .
+    ex:e2 rdfs:label "two" .
+    ex:d4 a ex:Document ; ex:language "en" ; ex:mentions ex:e2 .""",
+]
+
+
+def _kg_batch(spark, body):
+    return _batch_df(spark, "@prefix ex: <http://example.org/kg#> .\n"
+                            "@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .\n" + body)
+
+
+def test_incremental_replay_matches_full_validation(spark, tmp_path):
+    # document batches, then batch 1 re-sent with every triple twice: after
+    # each batch graph/ holds each (s, p, o) once and the incremental report
+    # equals a full re-validation of it, row for row
+    from shacl_js_spark.pipeline.materialize import KG_SHAPES_TTL
+    from shacl_js_spark.validation import RECORD_COLS, Engine
+
+    shapes = LocalGraph.from_turtle(KG_SHAPES_TTL)
+    iv = IncrementalValidator(spark, shapes, str(tmp_path / "kg"))
+    batches = [_kg_batch(spark, b) for b in KG_BATCHES]
+    batches.append(batches[1].unionByName(batches[1]))
+    for k, batch in enumerate(batches):
+        iv.process_batch(batch, k)
+        graph = spark.read.parquet(iv.graph_dir)
+        assert graph.count() == graph.select("s", "p", "o").distinct().count(), k
+        full = Engine(spark, graph, shapes).report_df().collect()
+        assert full, k
+        assert Counter(tuple(r) for r in iv.report().select(*RECORD_COLS).collect()) == Counter(
+            tuple(r) for r in full
+        ), k
+
+
+def test_incremental_warm_batch_job_count(spark, tmp_path):
+    # a warm batch is one append, the subclass-edge collect and one fused
+    # validate-and-upsert write, each adaptive query stage a job: 17 Spark
+    # jobs here, 31 when each shape was planned on its own over a graph
+    # de-duplicated on every read and the buckets were collected first
+    from test_pipeline import _jobs
+
+    from shacl_js_spark.pipeline.materialize import KG_SHAPES_TTL
+
+    iv = IncrementalValidator(spark, LocalGraph.from_turtle(KG_SHAPES_TTL), str(tmp_path / "jobs"))
+    batches = [_kg_batch(spark, b) for b in KG_BATCHES]
+    iv.process_batch(batches[0], 0)
+    iv.process_batch(batches[1], 1)
+    _, jobs = _jobs(spark, "test-incremental-batch", lambda: iv.process_batch(batches[2], 2))
+    assert len(jobs) <= 17, len(jobs)
+
+
+def test_engine_and_report_empty_frames_are_local(spark, tmp_path):
+    # empty and driver-built frames are LocalRelations, never Python RDDs
+    from test_pipeline import _analyzed
+
+    from shacl_js_spark.graph import turtle_df
+    from shacl_js_spark.validation import Engine
+
+    shapes = LocalGraph.from_turtle("""
+    @prefix sh: <http://www.w3.org/ns/shacl#> .
+    @prefix dash: <http://datashapes.org/dash#> .
+    @prefix ex: <http://e/> .
+    ex:S a sh:NodeShape ; sh:targetSubjectsOf ex:p ; dash:closedByTypes true .
+    ex:T sh:property [ sh:path ex:p ] .
+    """)
+    for ttl in ("ex:a ex:p ex:b .", "ex:a ex:p ex:b ; a ex:T ."):
+        eng = Engine(spark, turtle_df(spark, "@prefix ex: <http://e/> .\n" + ttl), shapes)
+        assert _analyzed(eng._targets_frame_uncached((), (), (), ())) == "LocalRelation"
+        plan = eng.report_df()._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, ttl
+    iv = IncrementalValidator(spark, LocalGraph.from_turtle(SHAPES), str(tmp_path / "empty"))
+    assert _analyzed(iv.report()) == "LocalRelation"
 
 
 def test_incremental_via_stream_source(spark, tmp_path):
