@@ -65,7 +65,7 @@ perf-pairs:
 	$(need_round)
 	$(if $(PARENT),,$(error PARENT is not set: give the parent checkout, e.g. PARENT=../parent))
 	$(if $(WORKLOAD),,$(error WORKLOAD is not set: e.g. WORKLOAD=shacl_incremental))
-	python scripts/perf_pairs.py --parent $(PARENT) --change . --workload $(WORKLOAD) \
+	python scripts/perf_pairs.py --parent $(PARENT) --workload $(WORKLOAD) \
 	  --tag $(ROUND) --pairs $(PAIRS)
 
 # the tier-1 command of ROADMAP.md: the whole suite, run past failures and

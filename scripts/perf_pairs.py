@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Alternating parent/change perfbench runs, and their summary.
 
-    python scripts/perf_pairs.py --parent ../parent --change . \\
+    python scripts/perf_pairs.py --parent ../parent \\
         --workload shacl_incremental --tag demo --pairs 10
 
-Pair k runs `perfbench/run.py --seed k --trace 0` in both checkouts, the
+Pair k runs `perfbench/run.py --seed k --trace 0` for BENCHMARK.json's
+run_seconds in the parent checkout and in this one (the change), the
 parent first on odd seeds and the change first on even ones, and appends
 one line per run, {"side", "seed", "res"} with `res` the run's last JSON
 line (null if it failed), to BENCH/perfbench_<tag>_<workload>_pairs.jsonl
@@ -23,7 +24,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run(checkout: str, workload: str, seed: int, seconds: float) -> dict | None:
+def run(checkout: str, workload: str, seed: int, seconds: int) -> dict | None:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "0"]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
@@ -34,9 +35,7 @@ def run(checkout: str, workload: str, seed: int, seconds: float) -> dict | None:
     return json.loads(lines[-1])
 
 
-def summarize(path: str) -> None:
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        metrics = json.load(fh)["end_to_end"]
+def summarize(path: str, metrics: list[dict]) -> None:
     with open(path) as fh:
         recs = [json.loads(line) for line in fh]
     by = {(r["side"], r["seed"]): r["res"] for r in recs}
@@ -59,21 +58,21 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__,
                                  formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--parent", required=True)
-    ap.add_argument("--change", default=ROOT)
     ap.add_argument("--workload", required=True)
     ap.add_argument("--tag", required=True)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=24)
     a = ap.parse_args()
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    checkouts = {"parent": a.parent, "change": ROOT}
     path = os.path.join(ROOT, "BENCH", f"perfbench_{a.tag}_{a.workload}_pairs.jsonl")
-    for seed in range(a.first_seed, a.first_seed + a.pairs):
+    for seed in range(1, a.pairs + 1):
         order = ["parent", "change"] if seed % 2 else ["change", "parent"]
         for side in order:
-            res = run(getattr(a, side), a.workload, seed, a.seconds)
+            res = run(checkouts[side], a.workload, seed, bench["run_seconds"])
             with open(path, "a") as fh:
                 fh.write(json.dumps({"side": side, "seed": seed, "res": res}) + "\n")
-    summarize(path)
+    summarize(path, bench["end_to_end"])
 
 
 if __name__ == "__main__":

@@ -176,7 +176,7 @@ def triples_df(spark: SparkSession, triples: list[Triple], g: str = DEFAULT_GRAP
         if key not in seen:
             seen.add(key)
             rows.append(r)
-    df = local_frame(spark, rows, TRIPLE_SCHEMA)
+    df = spark.createDataFrame(rows, TRIPLE_SCHEMA)
     if num_partitions:
         df = df.repartition(num_partitions)
     return df

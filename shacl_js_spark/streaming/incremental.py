@@ -15,25 +15,22 @@ subject that reaches an affected node within that many hops.  It defaults to
 adds every instance of each such class to the batch.
 
 A batch is one append, one small driver step and one fused validate-and-
-upsert write:
-
-- RDF set semantics are kept at append time: the batch's distinct triples
-  that `graph/` does not hold yet are appended (a left anti-join on
-  (s, p, o); an Iceberg MERGE at cluster scale), so `graph/` is distinct by
-  construction and every read of it is a plain scan.  A replayed batch
-  (at-least-once delivery) appends nothing.
-- The append job also observes the report buckets of the batch's terms.
-  Every re-validated target is one of those terms, so no job runs only to
-  find the touched buckets; with `extra_hops` one more job collects the
-  buckets of the widened terms.
-- One Engine, restricted to the batch's terms (`Engine(focus=...)`), plans
-  every shape in one pass; its rows are upserted keyed on the bubble (the
-  target focus).
+upsert write.  The append keeps RDF set semantics: only the batch's distinct
+triples that `graph/` lacks are appended (a left anti-join on (s, p, o); an
+Iceberg MERGE at cluster scale), so `graph/` is distinct, every read of it
+is a plain scan, and a replayed batch appends nothing.  The append job also
+observes the report buckets of all the batch's terms (with `extra_hops`, one
+more job adds the widened terms'), a superset of the re-validated targets'
+buckets that needs no job of its own.  One Engine restricted to those terms
+(`Engine(focus=...)`) plans every shape in one pass.
 
 Report store layout: `report/bucket=K/` with K = pmod(hash(bubble),
 n_buckets) — a batch rewrites ONLY the buckets of its terms (staged write +
 per-bucket directory swap); other buckets' files are untouched, so
-per-batch report I/O is O(affected buckets), not O(full report).  A crash
+per-batch report I/O is O(affected buckets), not O(full report).  Only
+buckets holding rows are written, so the superset costs few: perfbench's
+shacl_incremental at n_buckets=256 (seeds 1, 2; 4 cores) rewrote 8.5 and 5
+buckets per batch where the targets' own buckets were 7 and 4.  A crash
 mid-swap leaves some buckets old and some new; the foreachBatch replay
 re-runs the same bubble-keyed upsert, which is idempotent, so mixed states
 heal (Iceberg MERGE replaces the swap at cluster scale).
@@ -74,19 +71,30 @@ class IncrementalValidator:
         # with a different n_buckets would strand rows in old-hash buckets
         # that no batch ever rewrites, so an existing store's value wins
         meta_path = os.path.join(work_dir, "report_meta.json")
+        meta = {"n_buckets": n_buckets}
         if os.path.isfile(meta_path):
             with open(meta_path) as fh:
-                stored = json.load(fh)["n_buckets"]
-            if stored != n_buckets:
+                meta = json.load(fh)
+            if meta["n_buckets"] != n_buckets:
                 logging.getLogger(__name__).warning(
                     "report store was created with n_buckets=%d; ignoring "
-                    "requested n_buckets=%d", stored, n_buckets,
+                    "requested n_buckets=%d", meta["n_buckets"], n_buckets,
                 )
-            self.n_buckets = stored
-        else:
+        self.n_buckets = meta["n_buckets"]
+        # format 2: graph/ holds each (s, p, o) once.  A store without it
+        # appended replayed batches raw (its reads de-duplicated), so graph/
+        # is rewritten distinct once; a crash after the delete leaves only
+        # the rewritten copy, which the next start moves in
+        if meta.get("format") != 2:
+            distinct = self.graph_dir + ".distinct"
+            if os.path.isdir(self.graph_dir):
+                (spark.read.parquet(self.graph_dir).dropDuplicates(["s", "p", "o"])
+                 .write.mode("overwrite").parquet(distinct))
+                shutil.rmtree(self.graph_dir)
+            if os.path.isdir(distinct):
+                os.rename(distinct, self.graph_dir)
             with open(meta_path, "w") as fh:
-                json.dump({"n_buckets": n_buckets}, fh)
-            self.n_buckets = n_buckets
+                json.dump({**meta, "format": 2}, fh)
 
     def _bucket(self, col):
         # Murmur3 with Spark's fixed seed: stable across batches and runs
@@ -107,11 +115,12 @@ class IncrementalValidator:
         report() may be called concurrently with an in-flight batch, and
         sweeping there would delete that batch's staging dir mid-swap and
         lose its buckets."""
-        if sweep_staging:  # their parent is the work dir, made in __init__
+        if sweep_staging:
             parent, base = os.path.split(os.path.abspath(self.report_dir))
-            for entry in os.listdir(parent):
-                if entry.startswith(base + ".staging-"):
-                    shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+            if os.path.isdir(parent):
+                for entry in os.listdir(parent):
+                    if entry.startswith(base + ".staging-"):
+                        shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
         if not os.path.isdir(self.report_dir):
             return
         for entry in os.listdir(self.report_dir):
@@ -174,7 +183,6 @@ class IncrementalValidator:
 
         # upsert only the touched buckets: read them (partition-pruned),
         # drop rows keyed by a re-validated bubble, append the fresh rows
-        buckets = sorted(buckets)
         present = [d for b in buckets if os.path.isdir(d := f"{self.report_dir}/bucket={b}")]
         merged = new_rows
         if present:
@@ -215,12 +223,9 @@ class IncrementalValidator:
 
     def report(self) -> DataFrame:
         self._recover_buckets()
-        has_data = os.path.isdir(self.report_dir) and any(
-            e.startswith("bucket=") for e in os.listdir(self.report_dir)
-        )
-        if not has_data:
+        if not (os.path.isdir(self.report_dir)
+                and any(e.startswith("bucket=") for e in os.listdir(self.report_dir))):
             return local_frame(self.spark, [], VIOL_SCHEMA)
-        # read with the report schema (no job infers it); select, not
-        # drop("bucket"): stores written before the _batch column was
-        # retired still carry it
+        # the report schema, so no job infers it; select, not drop("bucket"):
+        # stores written before the _batch column was retired still carry it
         return self.spark.read.schema(REPORT_SCHEMA).parquet(self.report_dir).select(*VIOL_COLS)

@@ -454,9 +454,7 @@ class Engine:
     def _focused(self, pieces: list[DataFrame]) -> DataFrame:
         """The union of target pieces, kept to the `focus` terms if given."""
         out = functools.reduce(DataFrame.unionByName, pieces)
-        if self.focus is None:
-            return out
-        return out.join(self.focus, "focus", "left_semi")
+        return out if self.focus is None else out.join(self.focus, "focus", "left_semi")
 
     # ----------------------------------------------------------------- paths
     def eval_path(self, path: Path, focus_df: DataFrame) -> DataFrame:

@@ -348,18 +348,15 @@ def _analyzed(df) -> str:
 def test_driver_built_frames_are_local_relations(spark):
     """Frames built from driver-side rows analyze to a LocalRelation, which
     needs no job and no Python worker (createDataFrame(list) is an RDD)."""
-    from shacl_js_spark.graph import local_frame, terms_frame, triples_df
+    from shacl_js_spark.graph import local_frame, terms_frame
     from shacl_js_spark.pipeline.synth import lexicon_df, lexicon_grouped_df
     from shacl_js_spark.terms import iri
-    from shacl_js_spark.turtle import parse_turtle
 
-    trips, _ = parse_turtle("@prefix ex: <http://e/> .\nex:a ex:p ex:b .")
     frames = {
         "lexicon_df": lexicon_df(spark),
         "lexicon_grouped_df": lexicon_grouped_df(spark),
         "cc_mapping": connected_components(spark, [("e1", "e2"), ("e2", "e3")]),
         "terms_frame": terms_frame(spark, [iri("http://e/a")]),
-        "triples_df": triples_df(spark, trips),
         "empty": local_frame(spark, [], "a string, b array<int>"),
     }
     for name, df in frames.items():

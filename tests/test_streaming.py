@@ -231,6 +231,40 @@ def test_incremental_n_buckets_sticky_across_restart(spark, tmp_path):
     assert {r["focus_v"] for r in iv2.report().collect()} == {"http://e/c"}
 
 
+def test_incremental_store_without_format_is_made_distinct(spark, tmp_path):
+    # a store from before format 2 appended a replayed batch raw: its graph/
+    # holds a triple twice.  Opening it rewrites graph/ distinct once, so
+    # sh:maxCount counts the name once, as a full validation does
+    import json
+
+    from shacl_js_spark.validation import RECORD_COLS, Engine
+
+    shapes = LocalGraph.from_turtle("""
+    @prefix sh: <http://www.w3.org/ns/shacl#> .
+    @prefix ex: <http://e/> .
+    ex:S a sh:NodeShape ; sh:targetClass ex:Person ;
+      sh:property [ sh:path ex:name ; sh:maxCount 1 ] .
+    """)
+    work = tmp_path / "old"
+    old = _batch_df(spark, '@prefix ex: <http://e/> .\nex:a a ex:Person ; ex:name "A" .')
+    for _ in range(2):
+        old.write.mode("append").parquet(str(work / "graph"))
+    (work / "report_meta.json").write_text(json.dumps({"n_buckets": 4}))
+    iv = IncrementalValidator(spark, shapes, str(work))
+    assert json.loads((work / "report_meta.json").read_text()) == {"n_buckets": 4, "format": 2}
+    assert spark.read.parquet(iv.graph_dir).count() == 2
+    iv.process_batch(_batch_df(spark, '@prefix ex: <http://e/> .\nex:a ex:age 3 .'), 0)
+    graph = spark.read.parquet(iv.graph_dir)
+    assert graph.count() == graph.select("s", "p", "o").distinct().count() == 3
+    full = Engine(spark, graph, shapes).report_df().collect()
+    assert iv.report().select(*RECORD_COLS).collect() == full == []
+    # a crash between the delete and the move leaves only the rewritten copy
+    os.rename(iv.graph_dir, iv.graph_dir + ".distinct")
+    (work / "report_meta.json").write_text(json.dumps({"n_buckets": 4}))
+    IncrementalValidator(spark, shapes, str(work))
+    assert spark.read.parquet(iv.graph_dir).count() == 3
+
+
 KG_BATCHES = [
     # documents d1, d2 with the entities they mention first: e2 lacks a
     # label, d2 a language, and x1 is never typed
@@ -281,14 +315,18 @@ def test_incremental_replay_matches_full_validation(spark, tmp_path):
 def test_incremental_warm_batch_job_count(spark, tmp_path):
     # a warm batch is one append, the subclass-edge collect and one fused
     # validate-and-upsert write, each adaptive query stage a job: 17 Spark
-    # jobs here, 31 when each shape was planned on its own over a graph
-    # de-duplicated on every read and the buckets were collected first
+    # jobs here, 33 when each shape was planned on its own over a graph
+    # de-duplicated on every read and the buckets were collected first.
+    # The batches are parquet scans, as a file stream source delivers them
     from test_pipeline import _jobs
 
     from shacl_js_spark.pipeline.materialize import KG_SHAPES_TTL
 
     iv = IncrementalValidator(spark, LocalGraph.from_turtle(KG_SHAPES_TTL), str(tmp_path / "jobs"))
-    batches = [_kg_batch(spark, b) for b in KG_BATCHES]
+    batches = []
+    for k, body in enumerate(KG_BATCHES):
+        _kg_batch(spark, body).write.parquet(str(tmp_path / f"in{k}"))
+        batches.append(spark.read.parquet(str(tmp_path / f"in{k}")))
     iv.process_batch(batches[0], 0)
     iv.process_batch(batches[1], 1)
     _, jobs = _jobs(spark, "test-incremental-batch", lambda: iv.process_batch(batches[2], 2))
@@ -309,8 +347,11 @@ def test_engine_and_report_empty_frames_are_local(spark, tmp_path):
     ex:S a sh:NodeShape ; sh:targetSubjectsOf ex:p ; dash:closedByTypes true .
     ex:T sh:property [ sh:path ex:p ] .
     """)
-    for ttl in ("ex:a ex:p ex:b .", "ex:a ex:p ex:b ; a ex:T ."):
-        eng = Engine(spark, turtle_df(spark, "@prefix ex: <http://e/> .\n" + ttl), shapes)
+    for k, ttl in enumerate(("ex:a ex:p ex:b .", "ex:a ex:p ex:b ; a ex:T .")):
+        # the data is a parquet scan, so any LogicalRDD would be an engine frame
+        path = str(tmp_path / f"data{k}")
+        turtle_df(spark, "@prefix ex: <http://e/> .\n" + ttl).write.parquet(path)
+        eng = Engine(spark, spark.read.parquet(path), shapes)
         assert _analyzed(eng._targets_frame_uncached((), (), (), ())) == "LocalRelation"
         plan = eng.report_df()._jdf.queryExecution().analyzed().toString()
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, ttl

@@ -501,13 +501,6 @@ def test_jsonld_prefix_map_skips_keyword_aliases(spark):
     assert pmap == {"ex": "http://e/"}
 
 
-def _scanned(df):
-    """`df` as an RDD-backed frame, as a scan is to the optimizer: over a
-    LocalRelation it evaluates filters and projections at planning time,
-    which would fold away the plan shapes these tests pin."""
-    return df.sparkSession.createDataFrame(df.rdd, df.schema)
-
-
 def test_cross_shape_fusion_parity(spark):
     # report_df() groups row-wise and count checks from shapes sharing a
     # value (or count) frame into one fused pass per frame; the emitted row
@@ -517,13 +510,13 @@ def test_cross_shape_fusion_parity(spark):
     from shacl_js_spark.localgraph import LocalGraph
     from shacl_js_spark.validation import RECORD_COLS, Engine
 
-    data = _scanned(turtle_df(spark, """
+    data = turtle_df(spark, """
     @prefix ex: <http://e/> .
     @prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
     ex:a a ex:T ; ex:p "abc" ; ex:p "Xyz" ; ex:q 5 .
     ex:b a ex:T ; ex:p 12 ; ex:q "no"@en .
     ex:c a ex:T ; ex:q 3 .
-    """))
+    """)
     shapes_ttl = """
     @prefix sh: <http://www.w3.org/ns/shacl#> .
     @prefix ex: <http://e/> .
@@ -609,11 +602,11 @@ def test_single_check_filter_pushed_below_path_join(spark):
     from shacl_js_spark.localgraph import LocalGraph
     from shacl_js_spark.validation import Engine
 
-    data = _scanned(turtle_df(spark, """
+    data = turtle_df(spark, """
     @prefix ex: <http://e/> .
     ex:a a ex:T ; ex:p "abcdef" .
     ex:b a ex:T ; ex:p "ab" .
-    """))
+    """)
     shapes = LocalGraph.from_turtle("""
     @prefix sh: <http://www.w3.org/ns/shacl#> .
     @prefix ex: <http://e/> .
@@ -815,11 +808,11 @@ def test_count_aggregates_triple_side_below_target_join(spark):
     from shacl_js_spark.localgraph import LocalGraph
     from shacl_js_spark.validation import Engine
 
-    data = _scanned(turtle_df(spark, """
+    data = turtle_df(spark, """
     @prefix ex: <http://e/> .
     ex:a a ex:T ; ex:p "x" .
     ex:b a ex:T .
-    """))
+    """)
     shapes = LocalGraph.from_turtle("""
     @prefix sh: <http://www.w3.org/ns/shacl#> .
     @prefix ex: <http://e/> .
