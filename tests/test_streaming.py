@@ -250,7 +250,7 @@ def test_incremental_store_without_format_is_made_distinct(spark, tmp_path):
     for _ in range(2):
         old.write.mode("append").parquet(str(work / "graph"))
     (work / "report_meta.json").write_text(json.dumps({"n_buckets": 4}))
-    iv = IncrementalValidator(spark, shapes, str(work))
+    iv = IncrementalValidator(spark, shapes, str(work), n_buckets=4)
     assert json.loads((work / "report_meta.json").read_text()) == {"n_buckets": 4, "format": 2}
     assert spark.read.parquet(iv.graph_dir).count() == 2
     iv.process_batch(_batch_df(spark, '@prefix ex: <http://e/> .\nex:a ex:age 3 .'), 0)
@@ -261,7 +261,7 @@ def test_incremental_store_without_format_is_made_distinct(spark, tmp_path):
     # a crash between the delete and the move leaves only the rewritten copy
     os.rename(iv.graph_dir, iv.graph_dir + ".distinct")
     (work / "report_meta.json").write_text(json.dumps({"n_buckets": 4}))
-    IncrementalValidator(spark, shapes, str(work))
+    IncrementalValidator(spark, shapes, str(work), n_buckets=4)
     assert spark.read.parquet(iv.graph_dir).count() == 3
 
 
