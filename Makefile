@@ -16,7 +16,7 @@ define need_round
 $(if $(ROUND),,$(error ROUND is not set: run e.g. `make $@ ROUND=<tag>`; the log goes to BENCH/ under that tag))
 endef
 
-.PHONY: gate gate-shacl bench verify test dist submit-smoke many-shapes perf-pairs
+.PHONY: gate gate-shacl bench verify test dist submit-smoke many-shapes perf-pairs cc-crosscheck
 
 # Package the engine for spark-submit --py-files (north rule: the pipeline
 # must run via spark-submit on a multi-executor cluster).  Single zip
@@ -56,6 +56,13 @@ bench:
 many-shapes:
 	$(need_round)
 	python scripts/many_shapes_bench.py 2>&1 | tail -1 | tee BENCH/many_shapes_$(ROUND).json
+
+# both connected-components paths (driver union-find, distributed fixpoint)
+# over the LSH candidate pairs of $(SF_DIR)'s documents: they must agree
+cc-crosscheck:
+	$(need_round)
+	SPARK_LOCAL_DIRS=/tmp/spark-local python scripts/cc_crosscheck.py $(SF_DIR) \
+	  | tail -1 | tee BENCH/cc_crosscheck_$(ROUND).json
 
 # alternating parent/change perfbench runs of one workload, written to
 # BENCH/perfbench_$(ROUND)_$(WORKLOAD)_pairs.jsonl and summarized

@@ -30,7 +30,7 @@ with a prefix: {x}, {x}_v, {x}_kind, {x}_dt, {x}_lang.
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
@@ -102,12 +102,13 @@ _warned_checkpoint_cleanup = False
 
 
 def cut_lineage(df: DataFrame) -> DataFrame:
-    """Truncate lineage inside an iterative fixpoint (zeroOrMore paths,
-    connected components).  Uses RELIABLE checkpointing — survives executor
-    loss, required for long fixpoints on a real cluster — whenever the
-    session has a checkpoint dir configured (sc.setCheckpointDir, typically
-    HDFS/object-store); falls back to fast localCheckpoint otherwise
-    (single-host / tests).
+    """Materialize `df` eagerly and truncate its lineage: each fixpoint round
+    (paths, recursive sh:node levels, connected components) and the eager
+    dedup and packing results.  Uses RELIABLE checkpointing — survives
+    executor loss, required for long fixpoints on a real cluster — whenever
+    the session has a checkpoint dir configured (sc.setCheckpointDir,
+    typically HDFS/object-store); falls back to fast localCheckpoint
+    otherwise (single-host / tests).  Either way each stage runs once.
 
     Storage hygiene: each fixpoint iteration leaves a checkpoint file behind;
     superseded iterations go out of scope, and Spark's context cleaner
@@ -134,6 +135,16 @@ def cut_lineage(df: DataFrame) -> DataFrame:
             _warned_checkpoint_cleanup = True
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def observed_cut(df: DataFrame, obs: Observation) -> tuple[DataFrame, dict]:
+    """cut_lineage(df) and the values of `obs`, an Observation the caller
+    attached (DataFrame.observe) to `df` or to a frame `df` is built from.
+    The checkpoint job fills them in, exactly under either checkpoint kind,
+    so a fixpoint learns its frontier size and a skew guard its drop count
+    without a probe job of their own."""
+    out = cut_lineage(df)
+    return out, obs.get
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:

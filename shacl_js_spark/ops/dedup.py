@@ -21,10 +21,10 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..graph import cut_lineage, ensure_object_agg_headroom, ordered_pairs
+from ..graph import cut_lineage, ensure_object_agg_headroom, observed_cut, ordered_pairs
 
 MINHASH_P = 2147483647  # 2^31 - 1
 N_HASHES = 16
@@ -88,8 +88,6 @@ def _bounded_groups(ids: DataFrame, group_col: str, max_exemplars: int) -> DataF
     can make one group corpus-sized; a plain collect_list would then build a
     corpus-sized array in a single task.  The row_number pre-cap bounds the
     aggregation buffer itself — n_docs/min/max stay exact over ALL members."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(group_col).orderBy("doc_id")
     capped = ids.withColumn("_rn", F.row_number().over(w))
     return (
@@ -151,21 +149,16 @@ MAX_LSH_BUCKET = 200  # per-(band,bucket) membership cap; bounds pairs at cap^2
 
 
 def _banded(sigs: DataFrame, bands: int, n_hashes: int) -> DataFrame:
+    """(doc_id, band, bucket): every band's bucket of every signature, from
+    one projection exploded map-side, so the signatures are read once."""
     rows_per_band = n_hashes // bands
-    pieces = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        pieces.append(
-            sigs.select(
-                "doc_id",
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("_", *[c.cast("string") for c in cols])).alias("bucket"),
-            )
-        )
-    banded = pieces[0]
-    for p in pieces[1:]:
-        banded = banded.unionByName(p)
-    return banded
+    buckets = [
+        F.md5(F.concat_ws("_", *[
+            F.col(f"mh_{b * rows_per_band + r}").cast("string") for r in range(rows_per_band)
+        ]))
+        for b in range(bands)
+    ]
+    return sigs.select("doc_id", F.posexplode(F.array(*buckets)).alias("band", "bucket"))
 
 
 def lsh_candidate_pairs(
@@ -173,11 +166,11 @@ def lsh_candidate_pairs(
     bands: int = LSH_BANDS,
     n_hashes: int = N_HASHES,
     max_bucket: int | None = MAX_LSH_BUCKET,
-    log_dropped: bool = True,
 ) -> DataFrame:
     """EAGER (runs a Spark job at call time, not at first action): bands the
     signature; docs colliding in any band become candidate pairs (a < b,
-    distinct).  The band bucket join is the only shuffle.  The lineage cut
+    distinct).  The signatures are read once, and the (band, bucket)
+    grouping is one shuffle shared by the cap and the pairing.  The lineage cut
     pins a (local)checkpoint per call until GC — callers that loop should
     enable spark.cleaner.referenceTracking.cleanCheckpoints (the session
     builders in bench.py / scripts/ already do).
@@ -189,66 +182,50 @@ def lsh_candidate_pairs(
     over-full bucket normally still collide in other, smaller buckets, and
     the downstream exact-jaccard verify filters false positives anyway.
     Pass max_bucket=None to disable.  Because the cap changes recall, dropped
-    buckets are LOGGED by default (one extra count action per call over the
-    persisted signatures); pass log_dropped=False to skip it.
-
-    The returned pairs frame is materialized eagerly (lineage cut) so the
-    per-band persisted signature frame can be unpersisted before return."""
-    # read once per band (avoids n_bands re-aggregations) — but only manage
-    # the cache we created: a caller who persisted sigs for reuse keeps it
+    buckets are LOGGED; the pairs' own checkpoint job counts them, so the
+    warning costs no job."""
     # bucket member lists are capped at max_bucket — keep the grouped pair
     # generation a real hash aggregation (see ensure_object_agg_headroom)
     ensure_object_agg_headroom(sigs.sparkSession)
-    own_sigs_cache = sigs.storageLevel.useMemory is False and sigs.storageLevel.useDisk is False
-    if own_sigs_cache:
-        sigs = sigs.persist()
-    counted = None
-    try:
-        banded = _banded(sigs, bands, n_hashes)
-        if max_bucket is not None:
-            # window count over (band,bucket) instead of groupBy + semi-join:
-            # one shuffle, and the downstream grouped pair generation reuses
-            # the same hash partitioning (no second exchange of the banded
-            # frame)
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("band", "bucket")
-            counted = banded.withColumn("_n", F.count("*").over(w))
-            if log_dropped:
-                # cache the post-window frame so the observability action and
-                # the pairs join share one shuffle+sort instead of two passes
-                counted = counted.persist()
-                n_dropped = (
-                    counted.filter(F.col("_n") > max_bucket)
-                    .select("band", "bucket").distinct().count()
-                )
-                if n_dropped:
-                    logging.getLogger(__name__).warning(
-                        "lsh_candidate_pairs: dropping %d buckets with > %d members"
-                        " (recall in those buckets relies on their other bands)",
-                        n_dropped, max_bucket,
-                    )
-            banded = counted.filter(F.col("_n") <= max_bucket).drop("_n")
-        # pair generation: group each bucket's member list (bounded by the
-        # cap filter above, so the collect_list buffer holds <= max_bucket
-        # ids; unbounded only when the caller explicitly disabled the cap)
-        # and explode ordered pairs map-side — same grouped idiom as
-        # ngram_jaccard_pairs, reusing the window's (band,bucket)
-        # partitioning instead of a second self-join shuffle + sort
-        grouped = banded.groupBy("band", "bucket").agg(
-            F.sort_array(F.collect_list("doc_id")).alias("docs")
+    banded = _banded(sigs, bands, n_hashes)
+    if max_bucket is not None:
+        # window count over (band,bucket) instead of groupBy + semi-join:
+        # one shuffle, and the downstream grouped pair generation reuses
+        # the same hash partitioning (no second exchange of the banded
+        # frame).  Each member row of an over-full bucket adds 1/_n, so
+        # the observed sum is the number of dropped buckets
+        w = Window.partitionBy("band", "bucket")
+        obs = Observation()
+        banded = (
+            banded.withColumn("_n", F.count("*").over(w))
+            .observe(obs, F.sum(F.when(F.col("_n") > max_bucket, 1 / F.col("_n"))).alias("dropped"))
+            .filter(F.col("_n") <= max_bucket)
+            .drop("_n")
         )
-        pairs = (
-            grouped.select(F.explode(ordered_pairs("docs")).alias("p"))
-            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .distinct()
-        )
+    # pair generation: group each bucket's member list (bounded by the
+    # cap filter above, so the collect_list buffer holds <= max_bucket
+    # ids; unbounded only when the caller explicitly disabled the cap)
+    # and explode ordered pairs map-side — same grouped idiom as
+    # ngram_jaccard_pairs, reusing the window's (band,bucket)
+    # partitioning instead of a second self-join shuffle + sort
+    grouped = banded.groupBy("band", "bucket").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("docs")
+    )
+    pairs = (
+        grouped.select(F.explode(ordered_pairs("docs")).alias("p"))
+        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .distinct()
+    )
+    if max_bucket is None:
         return cut_lineage(pairs)
-    finally:
-        if own_sigs_cache:
-            sigs.unpersist()
-        if counted is not None:
-            counted.unpersist()
+    pairs, seen = observed_cut(pairs, obs)
+    if n_dropped := round(seen["dropped"] or 0):
+        logging.getLogger(__name__).warning(
+            "lsh_candidate_pairs: dropping %d buckets with > %d members"
+            " (recall in those buckets relies on their other bands)",
+            n_dropped, max_bucket,
+        )
+    return pairs
 
 
 def minhash_jaccard_pairs(df: DataFrame, threshold: float = 0.5, shingle_n: int = 3) -> DataFrame:

@@ -17,8 +17,10 @@ large-star/small-star):
 
 Each round is one shuffle on the edge list; lineage is cut every round
 (cut_lineage: a reliable checkpoint when a checkpoint dir is set, else
-localCheckpoint).  Convergence in O(max component diameter) rounds — alias
-graphs are shallow (star-like), so 2-3 rounds in practice.
+localCheckpoint), and that checkpoint job also counts the labels that changed
+(observed_cut), so convergence costs no job of its own.  Convergence in
+O(max component diameter) rounds — alias graphs are shallow (star-like), so
+2-3 rounds in practice.
 
 Skew: a hot entity (one surface in 10% of docs) concentrates edges on one
 key.  Mitigations applied: (1) edges are deduplicated before iterating, so
@@ -31,10 +33,10 @@ aggregation to distinct entities.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph import cut_lineage, iri_cols, local_frame
+from ..graph import cut_lineage, iri_cols, local_frame, observed_cut
 from .synth import ENTITY_LEXICON
 
 
@@ -65,13 +67,16 @@ def connected_components(
     pairs.  A list is already on the driver and goes straight to the
     union-find, with no Spark job.  Alias-evidence graphs are usually
     entity-universe-sized (≪ corpus); when a DataFrame's edge list fits
-    comfortably on the driver, a union-find there beats paying ~2 Spark jobs
-    per propagation round.  Past `driver_threshold` edges the distributed
-    min-label fixpoint below takes over (the path a 10^12-doc corpus with
-    mined sameAs edges would exercise)."""
+    comfortably on the driver, a union-find there beats a distributed round
+    of three shuffles and a checkpoint, each adaptive query stage its own
+    Spark job (about 7 jobs a round on a 12-edge chain).  Past
+    `driver_threshold` edges the distributed min-label fixpoint below takes
+    over (the path a 10^12-doc corpus with mined sameAs edges would
+    exercise); it stops on the changed-label count its checkpoint job
+    observes and raises if round max_iter + 1 still changes a label."""
     if max_iter < 1:
-        # with no propagation round the function would silently return
-        # identity labels, skipping the non-convergence verifier entirely
+        # max_iter counts propagation rounds; the loop below adds one round
+        # that only verifies convergence
         raise ValueError(f"connected_components requires max_iter >= 1, got {max_iter}")
     # ONE collect decides the path AND feeds the union-find (was a count job
     # + a collect job): limit(threshold) bounds the driver transfer exactly
@@ -106,51 +111,32 @@ def connected_components(
     ).distinct()
     nodes = und.select(F.col("src").alias("entity_id")).distinct()
     labels = cut_lineage(nodes.withColumn("label", F.col("entity_id")))
-
-    def neighbor_min(lbls: DataFrame) -> DataFrame:
-        """One propagation message round: per node, min neighbor label.
-        Shared by the loop and the convergence verifier so they can't
-        drift apart."""
-        return (
-            und.join(lbls, und["src"] == lbls["entity_id"], "inner")
+    # round max_iter + 1 only verifies: labels that still change there mean
+    # the component diameter exceeds max_iter (silent non-convergence would
+    # corrupt the canonical mapping of chain-shaped alias graphs)
+    for _ in range(max_iter + 1):
+        msgs = (
+            und.join(labels, und["src"] == labels["entity_id"], "inner")
             .groupBy(F.col("dst").alias("entity_id"))
             .agg(F.min("label").alias("nbr_min"))
         )
-
-    changed = 0
-    for _ in range(max_iter):
-        msgs = neighbor_min(labels)
-        new_labels = cut_lineage(
+        obs = Observation()
+        labels, seen = observed_cut(
             labels.join(msgs, "entity_id", "left")
+            .observe(obs, F.count_if(F.col("nbr_min") < F.col("label")).alias("changed"))
             .select(
                 "entity_id",
                 F.least(F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))).alias("label"),
-                (F.col("nbr_min") < F.col("label")).alias("_changed"),
-            )
+            ),
+            obs,
         )
-        changed = new_labels.filter(F.col("_changed")).limit(1).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    if changed != 0:
-        # the final allowed round still flipped labels — it may have JUST
-        # converged; one verification round distinguishes that from a real
-        # truncation (silent non-convergence corrupts the canonical mapping
-        # for chain-shaped alias graphs with diameter > max_iter)
-        verify = (
-            neighbor_min(labels)
-            .join(labels, "entity_id", "inner")
-            .filter(F.col("nbr_min") < F.col("label"))
-            .limit(1)
-            .count()
-        )
-        if verify != 0:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds "
-                "(component diameter exceeds max_iter); raise max_iter or "
-                "pre-contract long chains"
-            )
-    return labels.withColumnRenamed("label", "canonical_id")
+        if not seen["changed"]:
+            return labels.withColumnRenamed("label", "canonical_id")
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        "(component diameter exceeds max_iter); raise max_iter or "
+        "pre-contract long chains"
+    )
 
 
 def canonicalize_triples(

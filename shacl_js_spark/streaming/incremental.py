@@ -21,8 +21,10 @@ Iceberg MERGE at cluster scale), so `graph/` is distinct, every read of it
 is a plain scan, and a replayed batch appends nothing.  The append job also
 observes the report buckets of all the batch's terms (with `extra_hops`, one
 more job adds the widened terms'), a superset of the re-validated targets'
-buckets that needs no job of its own.  One Engine restricted to those terms
-(`Engine(focus=...)`) plans every shape in one pass.
+buckets that needs no job of its own, and the batch's rdfs:subClassOf edges,
+which extend the class hierarchy collected once when the store is opened.
+One Engine restricted to those terms (`Engine(focus=...)`) plans every shape
+in one pass.
 
 Report store layout: `report/bucket=K/` with K = pmod(hash(bubble),
 n_buckets) — a batch rewrites ONLY the buckets of its terms (staged write +
@@ -51,7 +53,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..graph import local_frame, t_triples
 from ..localgraph import LocalGraph
-from ..validation import VIOL_COLS, VIOL_SCHEMA, Engine
+from ..validation import SUBCLASS_ENC, VIOL_COLS, VIOL_SCHEMA, Engine
 
 # a report bucket's rows: the violation columns and the bucket partition
 REPORT_SCHEMA = StructType([*VIOL_SCHEMA.fields, StructField("bucket", IntegerType())])
@@ -95,6 +97,19 @@ class IncrementalValidator:
                 os.rename(distinct, self.graph_dir)
             with open(meta_path, "w") as fh:
                 json.dump({**meta, "format": 2}, fh)
+        # parent -> children over graph/'s rdfs:subClassOf edges: collected
+        # once here and extended from each batch's edges, observed on its
+        # append, so a batch's Engine runs no subclass collect of its own
+        self.subclass_edges: dict[str, set[str]] = {}
+        if os.path.isdir(self.graph_dir):
+            self._add_subclass_edges(
+                spark.read.schema("s string, p string, o string").parquet(self.graph_dir)
+                .filter(F.col("p") == SUBCLASS_ENC).select("s", "o").collect()
+            )
+
+    def _add_subclass_edges(self, edges) -> None:
+        for child, parent in edges:
+            self.subclass_edges.setdefault(parent, set()).add(child)
 
     def _bucket(self, col):
         # Murmur3 with Spark's fixed seed: stable across batches and runs
@@ -137,17 +152,20 @@ class IncrementalValidator:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self._recover_buckets(sweep_staging=True)
         # append the absent distinct triples, observing the batch's buckets
+        # and subClassOf edges
         obs = Observation()
         new = batch_df.observe(
             obs,
             F.collect_set(self._bucket(F.col("s"))).alias("s"),
             F.collect_set(self._bucket(F.col("o"))).alias("o"),
+            F.collect_set(F.when(F.col("p") == SUBCLASS_ENC, F.array("s", "o"))).alias("sub"),
         ).dropDuplicates(["s", "p", "o"])
         if os.path.isdir(self.graph_dir):
             graph = self.spark.read.schema(batch_df.schema).parquet(self.graph_dir)
             new = new.join(graph, ["s", "p", "o"], "left_anti")
         new.write.mode("append").parquet(self.graph_dir)
         buckets = set(obs.get["s"]) | set(obs.get["o"])
+        self._add_subclass_edges(obs.get["sub"])
         full = self.spark.read.schema(batch_df.schema).parquet(self.graph_dir)
 
         # the batch's terms, also on a replay (which heals a crash before
@@ -167,7 +185,8 @@ class IncrementalValidator:
             buckets |= set(widened.agg(F.collect_set(self._bucket(F.col("focus")))).first()[0])
             focus = focus.unionByName(widened)
 
-        engine = Engine(self.spark, full, self.shapes, registry=self.registry, focus=focus)
+        engine = Engine(self.spark, full, self.shapes, registry=self.registry,
+                        subclass_edges=self.subclass_edges, focus=focus)
         shapes = engine.ir.shapes_with_target()
         if not shapes or not buckets:
             return

@@ -28,7 +28,8 @@ Scale notes (100 TB design):
     joins are 1-column equi-joins AQE can re-plan (skew → AQE skew join)
   * zeroOrMore/oneOrMore paths run as an iterative fixpoint that cuts
     lineage every round (cut_lineage: a reliable checkpoint when a
-    checkpoint dir is set, else localCheckpoint; SURVEY.md §4)
+    checkpoint dir is set, else localCheckpoint; SURVEY.md §4) and stops
+    when that checkpoint job counts an empty frontier (observed_cut)
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ from typing import NamedTuple
 
 import pandas as pd  # module-level: pandas_udf type hints resolve via globals
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -49,6 +50,7 @@ from .graph import (
     js_number,
     local_frame,
     object_decomposed,
+    observed_cut,
     subject_decomposed,
     t_triples,
     term_cols,
@@ -518,22 +520,22 @@ class Engine:
                 base = self._walk(child, df).dropDuplicates(["focus", "cur"])
             # iterative fixpoint join with per-round checkpointing
             # (SURVEY.md §4 custom machinery #1; cycle guard = the anti-join).
-            # r6: only FRONTIERS are checkpointed; acc stays a lazy union of
-            # already-checkpointed frontiers, so each round runs 1 checkpoint
-            # job + 1 cheap isEmpty over materialized partitions instead of
-            # also re-materializing the whole accumulated set per round
-            # (2 jobs/round saved; the union plan grows by one scan per
-            # round, bounded by the traversal depth, and every leg is a
-            # checkpoint scan so lineage stays flat).
+            # Only FRONTIERS are checkpointed, and the checkpoint job counts
+            # the frontier it materializes; acc stays a lazy union of
+            # already-checkpointed frontiers (one scan per round, bounded by
+            # the traversal depth, so lineage stays flat).
             frontier = cut_lineage(base)
             acc = frontier
             while True:
-                frontier = cut_lineage(
+                obs = Observation()
+                frontier, seen = observed_cut(
                     self._walk(child, frontier)
                     .dropDuplicates(["focus", "cur"])
                     .join(acc, ["focus", "cur"], "left_anti")
+                    .observe(obs, F.count(F.lit(1)).alias("n")),
+                    obs,
                 )
-                if frontier.isEmpty():
+                if not seen["n"]:
                     break
                 acc = acc.unionByName(frontier)
             return acc
@@ -799,16 +801,17 @@ class Engine:
         re-entry, an empty candidate frontier short-circuits (the recursion
         is well-founded on acyclic data and stops at the leaves), so e.g.
         PersonShape{ knows -> PersonShape } validates finite data exactly
-        like the reference. The isEmpty action runs only on re-entry, never
-        on the non-recursive fast path."""
+        like the reference. The frontier is checkpointed and counted by one
+        job, on re-entry only, never on the non-recursive fast path."""
         shape = self.ir.get_shape(shape_node)
         if shape.node in self._stack:
             # cut lineage at every recursion level: without this the logical
             # plan NESTS once per level and a ~30-deep chain OOMs the driver
             # during analysis before the depth cap can fire (observed:
             # java.lang.OutOfMemoryError in generateTreeString)
-            nodes_df = cut_lineage(nodes_df)
-            if nodes_df.isEmpty():
+            obs = Observation()
+            nodes_df, seen = observed_cut(nodes_df.observe(obs, F.count(F.lit(1)).alias("n")), obs)
+            if not seen["n"]:
                 return self.spark.range(0).select(
                     F.lit(None).cast("string").alias("node")
                 )

@@ -50,9 +50,15 @@ def test_recursive_shape_on_finite_data_validates(spark):
     # engine unrolls it to the data depth via the empty-frontier check.
     # c lacks a name -> c violates minCount; b's knows-value c nonconforms
     # -> b violates sh:node; a's knows-value b nonconforms -> a violates.
-    report = _engine(spark, RECURSIVE_PERSON_TTL).validate()
+    # Each re-entry checkpoints its frontier and counts it on that one job
+    # (35 jobs when a separate isEmpty probe followed every checkpoint).
+    from test_pipeline import _jobs
+
+    report, jobs = _jobs(spark, "test-recursive-person",
+                         lambda: _engine(spark, RECURSIVE_PERSON_TTL).validate())
     focuses = sorted(r.focusNode() for r in report.results())
     assert focuses == ["http://e/a", "http://e/b", "http://e/c"]
+    assert len(jobs) <= 32, len(jobs)
 
 
 def test_recursive_shape_on_cyclic_data_raises(spark):
@@ -186,9 +192,43 @@ def test_connected_components_nonconvergence_raises(spark):
     # force the distributed path with too few rounds for the diameter
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(spark, df, max_iter=2, driver_threshold=0)
-    # enough rounds: converges to the chain head
-    out = connected_components(spark, df, max_iter=15, driver_threshold=0)
-    assert {r["canonical_id"] for r in out.collect()} == {"n000"}
+    # enough rounds: converges to the chain head.  Each round's checkpoint
+    # job counts the labels that changed (120 jobs when a limit(1).count()
+    # probe followed every checkpoint and a separate round verified the last)
+    from test_pipeline import _jobs
+
+    out, jobs = _jobs(spark, "test-cc-chain", lambda: {
+        r["canonical_id"]
+        for r in connected_components(spark, df, max_iter=15, driver_threshold=0).collect()
+    })
+    assert out == {"n000"}
+    assert len(jobs) <= 95, len(jobs)
+
+
+def test_zero_or_more_fixpoint_counts_on_its_checkpoint(spark, tmp_path):
+    # a depth-8 chain: 9 rounds, each one checkpoint job that also counts
+    # the frontier, the last one empty (55 jobs with an isEmpty probe after
+    # every checkpoint)
+    from test_pipeline import _jobs
+
+    from shacl_js_spark.graph import TRIPLE_SCHEMA, terms_frame
+    from shacl_js_spark.shapes import Path
+    from shacl_js_spark.terms import iri
+
+    ttl = "@prefix ex: <http://e/> .\n" + "".join(
+        f"ex:n{i} ex:next ex:n{i + 1} .\n" for i in range(8)
+    )
+    trips, prefixes = parse_turtle(ttl)
+    triples_df(spark, trips).write.parquet(str(tmp_path / "g"))
+    data = spark.read.schema(TRIPLE_SCHEMA).parquet(str(tmp_path / "g"))
+    eng = Engine(spark, data, LocalGraph(trips, prefixes))
+    path = Path("zeroOrMore", children=(Path("pred", pred="http://e/next"),))
+    reach, jobs = _jobs(spark, "test-zero-or-more", lambda: {
+        r["value_v"]
+        for r in eng.eval_path(path, terms_frame(spark, [iri("http://e/n0")], "focus")).collect()
+    })
+    assert reach == {f"http://e/n{i}" for i in range(9)}
+    assert len(jobs) <= 50, len(jobs)
 
 
 def test_unsupported_path_rejected(spark):
@@ -203,19 +243,47 @@ def test_unsupported_path_rejected(spark):
 
 def test_cut_lineage_uses_reliable_checkpoint_when_configured(tmp_path):
     # subprocess: setCheckpointDir is sticky on the SparkContext and must not
-    # leak into the shared test session
+    # leak into the shared test session.  The fixpoints stop on values
+    # observed on their checkpoint jobs; under reliable checkpointing an
+    # adaptive shuffle makes a checkpoint 2 jobs, and the values (so the
+    # results) must still equal the localCheckpoint ones
+    import pathlib
     import subprocess
     import sys
 
+    repo = str(pathlib.Path(__file__).resolve().parents[1])
     code = f"""
-import os, sys; sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-from shacl_js_spark.graph import cut_lineage
+import os, sys; sys.path.insert(0, {repo!r})
+from pyspark.sql import Observation, SparkSession, functions as F
+from shacl_js_spark import Engine, LocalGraph, parse_turtle, triples_df
+from shacl_js_spark.graph import cut_lineage, observed_cut, terms_frame
+from shacl_js_spark.pipeline.canonicalize import connected_components
+from shacl_js_spark.shapes import Path
+from shacl_js_spark.terms import iri
 spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "8")
+         .config("spark.sql.adaptive.enabled", "true")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
+trips, prefixes = parse_turtle("@prefix ex: <http://e/> .\\n" + "".join(
+    f"ex:n{{i}} ex:next ex:n{{(i + 1) % 6}} .\\n" for i in range(6)))
+eng = Engine(spark, triples_df(spark, trips), LocalGraph(trips, prefixes))
+path = Path("oneOrMore", children=(Path("pred", pred="http://e/next"),))
+edges = spark.createDataFrame([(f"c{{i}}", f"c{{i + 1}}") for i in range(5)] + [("x", "y")],
+                              "src string, dst string")
+
+def results():
+    obs = Observation()
+    grouped = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    _, seen = observed_cut(grouped.observe(obs, F.count(F.lit(1)).alias("n")), obs)
+    reach = eng.eval_path(path, terms_frame(spark, [iri("http://e/n0")], "focus"))
+    cc = connected_components(spark, edges, driver_threshold=0)
+    return (seen["n"], sorted(r["value_v"] for r in reach.collect()),
+            sorted(tuple(r) for r in cc.collect()))
+
 ckpt = "{tmp_path}/ckpt"
 local = cut_lineage(spark.range(10))
+local_results = results()
 assert not os.path.isdir(ckpt)  # no dir configured -> localCheckpoint path
 spark.sparkContext.setCheckpointDir(ckpt)
 reliable = cut_lineage(spark.range(10))
@@ -223,12 +291,10 @@ reliable.count()
 # reliable checkpoint materializes RDD blocks under the configured dir
 files = [os.path.join(r, f) for r, _, fs in os.walk(ckpt) for f in fs]
 assert files, "no reliable checkpoint files written"
-# the fixpoint consumers still work under reliable checkpointing
-from shacl_js_spark.pipeline.canonicalize import connected_components
-edges = spark.createDataFrame([("a","b"),("b","c")], "src string, dst string")
-out = {{(r["entity_id"], r["canonical_id"]) for r in
-       connected_components(spark, edges, driver_threshold=0).collect()}}
-assert out == {{("a","a"),("b","a"),("c","a")}}, out
+reliable_results = results()
+assert reliable_results == local_results, (reliable_results, local_results)
+assert local_results[0] == 7 and len(local_results[1]) == 6, local_results
+assert {{c for _, c in local_results[2]}} == {{"c0", "x"}}, local_results
 print("CKPT-OK")
 """
     res = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, timeout=300)

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from shacl_js_spark.ops.dedup import (
+    LSH_BANDS,
     embedding_cosine_pairs,
     exact_dedup_groups,
     lsh_candidate_pairs,
@@ -51,18 +52,34 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_lsh_bucket_cap_bounds_degenerate_corpus(spark):
+def test_lsh_bucket_cap_bounds_degenerate_corpus(spark, caplog):
     # 1k identical docs share every band bucket; without the max_bucket guard
     # the bucketed self-join materializes ~500k pairs x bands. With the cap
     # the degenerate buckets are dropped entirely (0 candidate pairs), while
     # a distinct near-dup pair in its own small bucket survives.
+    from test_pipeline import _jobs
+
     rows = [(i, "same words everywhere in all of these documents forever") for i in range(1000)]
     rows += [(2001, "a genuinely different sentence about spark physical plans"),
              (2002, "a genuinely different sentence about spark physical plans")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(df)
-    capped = lsh_candidate_pairs(sigs, max_bucket=200, log_dropped=True)
+    sigs = minhash_signatures(df).persist()
+    sigs.count()
+    # over materialized signatures, the pairs and their dropped-bucket count
+    # come from one checkpoint (its adaptive stages each a job) and count()
+    # adds 2; a separate distinct().count() drop probe made it 8
+    def capped_and_count():
+        capped = lsh_candidate_pairs(sigs, max_bucket=200)
+        return capped, capped.count()
+
+    with caplog.at_level("WARNING", logger="shacl_js_spark.ops.dedup"):
+        (capped, n), jobs = _jobs(spark, "test-lsh-cap", capped_and_count)
+    sigs.unpersist()
+    assert len(jobs) <= 5, len(jobs)
+    # the 1,000 identical docs fill one bucket in every band
+    assert f"dropping {LSH_BANDS} buckets with > 200 members" in caplog.text
     pairs = {(r["a"], r["b"]) for r in capped.collect()}
+    assert len(pairs) == n
     assert (2001, 2002) in pairs
     assert not any(a < 2000 and b < 2000 for a, b in pairs)
     # uncapped on a small slice still yields the dense pairs (guard is opt-out)

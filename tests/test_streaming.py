@@ -313,10 +313,11 @@ def test_incremental_replay_matches_full_validation(spark, tmp_path):
 
 
 def test_incremental_warm_batch_job_count(spark, tmp_path):
-    # a warm batch is one append, the subclass-edge collect and one fused
-    # validate-and-upsert write, each adaptive query stage a job: 17 Spark
-    # jobs here, 33 when each shape was planned on its own over a graph
-    # de-duplicated on every read and the buckets were collected first.
+    # a warm batch is one append (which also observes the batch's buckets
+    # and subClassOf edges) and one fused validate-and-upsert write, each
+    # adaptive query stage a job: 16 Spark jobs here, 17 with a subclass-edge
+    # collect per batch, 33 when each shape was planned on its own over a
+    # graph de-duplicated on every read and the buckets were collected first.
     # The batches are parquet scans, as a file stream source delivers them
     from test_pipeline import _jobs
 
@@ -330,7 +331,41 @@ def test_incremental_warm_batch_job_count(spark, tmp_path):
     iv.process_batch(batches[0], 0)
     iv.process_batch(batches[1], 1)
     _, jobs = _jobs(spark, "test-incremental-batch", lambda: iv.process_batch(batches[2], 2))
-    assert len(jobs) <= 17, len(jobs)
+    assert len(jobs) <= 16, len(jobs)
+
+
+def test_incremental_subclass_edges_from_batches_and_reopen(spark, tmp_path):
+    # the class hierarchy comes from the batches (observed on their append)
+    # and, for a reopened validator, from graph/: a batch that declares
+    # ex:Person a subclass of ex:Entity makes its Person a target of the
+    # Entity shape and a valid sh:class ex:Entity value, and so does a later
+    # batch of a reopened validator that only mentions another Person
+    from shacl_js_spark.pipeline.materialize import KG_SHAPES_TTL
+    from shacl_js_spark.validation import RECORD_COLS, Engine
+
+    shapes = LocalGraph.from_turtle(KG_SHAPES_TTL)
+    work = str(tmp_path / "sub")
+    batches = [
+        _kg_batch(spark, """ex:Person rdfs:subClassOf ex:Entity .
+        ex:p1 a ex:Person .
+        ex:d1 a ex:Document ; ex:language "en" ; ex:mentions ex:p1 ."""),
+        _kg_batch(spark, """ex:p2 a ex:Person ; rdfs:label "two" .
+        ex:d2 a ex:Document ; ex:language "en" ; ex:mentions ex:p2, ex:x ."""),
+    ]
+    edges = {"<http://example.org/kg#Entity>": {"<http://example.org/kg#Person>"}}
+    for k, batch in enumerate(batches):
+        iv = IncrementalValidator(spark, shapes, work)
+        assert iv.subclass_edges == ({} if k == 0 else edges)
+        iv.process_batch(batch, k)
+        assert iv.subclass_edges == edges
+        full = Engine(spark, spark.read.parquet(iv.graph_dir), shapes).report_df().collect()
+        got = iv.report().select(*RECORD_COLS).collect()
+        assert Counter(tuple(r) for r in got) == Counter(tuple(r) for r in full), k
+    # p1 lacks a label; d2's ex:x is no Entity
+    assert sorted((r["focus_v"], r["component"]) for r in full) == [
+        ("http://example.org/kg#d2", "http://www.w3.org/ns/shacl#ClassConstraintComponent"),
+        ("http://example.org/kg#p1", "http://www.w3.org/ns/shacl#MinCountConstraintComponent"),
+    ]
 
 
 def test_engine_and_report_empty_frames_are_local(spark, tmp_path):
