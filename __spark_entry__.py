@@ -195,7 +195,7 @@ def _shacl_violations(spark, sf_dir, shapes_ttl: str) -> DataFrame:
     )
     engine = Engine(
         spark, data, LocalGraph.from_turtle(shapes_ttl),
-        subclass_edges={f"<{EX}BigCustomer>": [f"<{EX}VIP>"]},
+        subclass_edges={f"<{EX}BigCustomer>": {f"<{EX}VIP>"}},
     )
     return engine.report_df()
 

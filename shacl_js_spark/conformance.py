@@ -87,7 +87,7 @@ def run_fixture(spark: SparkSession, text: str, registry=None) -> tuple[Validati
 
     for (s, p, o) in trips:
         if p.is_iri and p.value == RDFS_SUBCLASSOF:
-            sub.setdefault(o.encoded(), []).append(s.encoded())
+            sub.setdefault(o.encoded(), set()).add(s.encoded())
     engine = Engine(spark, data, local, registry=registry, subclass_edges=sub)
     report = engine.validate()
     return report, extract_expected(local)

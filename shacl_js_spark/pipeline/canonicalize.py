@@ -106,11 +106,15 @@ def connected_components(
         out = [(n, min(members)) for root, members in comp.items() for n in members]
         return local_frame(spark, out, "entity_id string, canonical_id string")
 
-    und = edges.unionByName(
+    # every round joins the undirected edge set: cut it once, so no round
+    # rebuilds both directions and their distinct from the caller's frame;
+    # the labels stay lazy over it, and round 1's checkpoint cuts them
+    und = cut_lineage(edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    nodes = und.select(F.col("src").alias("entity_id")).distinct()
-    labels = cut_lineage(nodes.withColumn("label", F.col("entity_id")))
+    ).distinct())
+    labels = und.select(F.col("src").alias("entity_id")).distinct().withColumn(
+        "label", F.col("entity_id")
+    )
     # round max_iter + 1 only verifies: labels that still change there mean
     # the component diameter exceeds max_iter (silent non-convergence would
     # corrupt the canonical mapping of chain-shaped alias graphs)

@@ -34,7 +34,7 @@ from ..graph import (
     triple_cols,
 )
 from ..terms import T, Term, decode_term
-from ..validation import Engine, _tt_name
+from ..validation import _tt_name, eval_path
 
 
 def _as_term(arg) -> Term:
@@ -144,13 +144,11 @@ class RDFQueryDF:
         """Property-path traversal (ref PathQuery, rdfquery.js:780-859).
         `s` must be a bound var or term; `o` a fresh var.  Uses the engine's
         path algebra (fixpoint joins for zeroOrMore/oneOrMore)."""
-        from ..localgraph import LocalGraph
         from ..shapes import Path as PathAST
 
         if not (isinstance(o, str) and o.startswith("?")):
             raise ValueError(f"path object must be a variable, got {o!r}")
         ov = o[1:]
-        eng = Engine(self.spark, self.data, LocalGraph([]))
         if isinstance(s, str) and s.startswith("?"):
             sv = s[1:]
             focus = self.sols.select(
@@ -160,7 +158,7 @@ class RDFQueryDF:
             from ..graph import terms_frame
             focus = terms_frame(self.spark, [_as_term(s)], "focus")
             sv = None
-        pv = eng.eval_path(path if isinstance(path, PathAST) else PathAST("pred", pred=_as_term(path).value), focus)
+        pv = eval_path(self.data, path if isinstance(path, PathAST) else PathAST("pred", pred=_as_term(path).value), focus)
         pv = pv.select(
             F.col("focus").alias("_pf"),
             *[F.col(c).alias(n) for c, n in zip(term_cols("value"), term_cols(ov))],

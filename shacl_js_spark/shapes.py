@@ -18,6 +18,7 @@ from the user shapes graph; their validators come from the Python registry
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 from .localgraph import LocalGraph
@@ -46,26 +47,14 @@ class ComponentDef:
     custom: bool = False  # validator resolved via registry
 
 
-def _c(local: str, params: list[str], optionals: list[str] = (),
-       prop: str | None = GENERIC, node: str | None = GENERIC) -> ComponentDef:
-    return ComponentDef(
-        iri=SH + local + "ConstraintComponent",
-        params={p: SH + p for p in params},
-        optionals=frozenset(optionals),
-        property_style=prop,
-        node_style=node,
-    )
+def _comp(ns: str, local: str, params: list[str], optionals: list[str] = (),
+          prop: str | None = GENERIC, node: str | None = GENERIC) -> ComponentDef:
+    return ComponentDef(ns + local + "ConstraintComponent", {p: ns + p for p in params},
+                        frozenset(optionals), prop, node)
 
 
-def _d(local: str, params: list[str], optionals: list[str] = (),
-       prop: str | None = GENERIC, node: str | None = GENERIC) -> ComponentDef:
-    return ComponentDef(
-        iri=DASH + local + "ConstraintComponent",
-        params={p: DASH + p for p in params},
-        optionals=frozenset(optionals),
-        property_style=prop,
-        node_style=node,
-    )
+_c = functools.partial(_comp, SH)
+_d = functools.partial(_comp, DASH)
 
 
 # Static table of SHACL core + DASH components.  Parameter sets and validator

@@ -4,15 +4,17 @@ Behavioral reference: /root/reference/src/validation-engine.js (result
 creation/multiplicity, nested-result suppression) and /root/reference/shared/
 dash.js (per-component verdict logic).  Architecture is NOT a port of the
 per-node recursive walk.  A report runs in two steps:
-  * compile (Engine._compile): a driver-only walk over the ShapesIR, no
-    Spark call, flattens every shape-with-target into a list of checks —
-    one per constraint, sh:property expanded in place — each naming the
-    frame it scans by a content key and the chain of parent (focus ->
-    value) mappings that lifts its rows to the target focus;
-  * plan (Engine._plan): row-wise and count checks sharing (frame, bubble
-    chain) become ONE fused pass over that frame; every other check runs
-    its own lazy plan (joins/aggregations over the whole focus-node set at
-    once).  The report is the union of those legs, read by one action.
+  * compile (program.Program, no pyspark): a driver-only walk over the
+    ShapesIR flattens every shape-with-target into checks, one per
+    constraint with sh:property expanded in place, each naming the frames
+    it scans by content keys and the chain of parent (focus -> value)
+    mappings that lifts its rows to the target focus;
+  * plan (Engine._plan): the Engine builds each named frame once
+    (Engine._build), evaluates every group of row-wise and count checks
+    sharing (frame, bubble chain) in ONE fused pass (_fused_rows), runs
+    every other check as its own lazy plan (_dispatch: joins/aggregations
+    over the whole focus-node set at once) and lifts each chain's legs.
+    The report is the union of those legs, read by one action.
 Nested conformance (sh:and/or/not/xone/node/qualified*) counts, per value
 node, the member shapes whose non-conforming node set holds it (_rejected)
 — only that count escapes, mirroring the reference's recordErrorsLevel
@@ -37,7 +39,6 @@ from __future__ import annotations
 import functools
 import logging
 import re
-from typing import NamedTuple
 
 import pandas as pd  # module-level: pandas_udf type hints resolve via globals
 
@@ -57,6 +58,7 @@ from .graph import (
     terms_frame,
 )
 from .localgraph import RDFS_SUBCLASSOF, LocalGraph
+from .program import ROOT, Check, Program, ShaclValidationError, Unit, node_label
 from .shapes import DASH, SH, Constraint, Path, Shape, ShapesIR
 from .terms import (
     NAMESPACES,
@@ -87,9 +89,30 @@ def _NULL() -> Column:
     return F.lit(None).cast("string")
 
 
-class ShaclValidationError(RuntimeError):
-    """Mirrors the reference's thrown validation errors (e.g. 'Cannot find
-    validator for constraint component ...', validation-engine.js:301)."""
+def _reach(edges: dict[str, set[str]], start: str) -> set[str]:
+    """The nodes reachable from `start` over `edges` (node -> next nodes)."""
+    out, todo = set(), [start]
+    while todo:
+        for nxt in edges.get(todo.pop(), ()):
+            if nxt not in out:
+                out.add(nxt)
+                todo.append(nxt)
+    return out
+
+
+def _path_lit(shape: Shape) -> Column:
+    return F.lit(shape.path_node.encoded()) if shape.path_node is not None else _NULL()
+
+
+def _select_viols(df: DataFrame, value_cols: list[Column], *record: Column) -> DataFrame:
+    """`df`'s focus, `value_cols` and the (path, component, severity,
+    source shape, message) `record` Columns as VIOL_COLS rows."""
+    return df.select(
+        F.col("focus").alias("bubble"),
+        *term_cols("focus"),
+        *[c.alias(n) for c, n in zip(value_cols, term_cols("value"))],
+        *[c.alias(n) for c, n in zip(record, VIOL_COLS[-5:])],
+    )
 
 
 def _tt_name(kind_col: Column) -> Column:
@@ -210,41 +233,103 @@ PROPERTY_DEFAULT_MESSAGES: dict[str, str] = {
 }
 
 
-#: base key of an explicit focus frame (shape_violations' focus_df): frames
-#: keyed under it are never memoized on the engine
-_ROOT = ("root",)
+# ----------------------------------------------------------------- paths
+def trips(data: DataFrame, pred_enc: str | None = None) -> DataFrame:
+    """Triples projected to fresh attribute ids (t_*) so repeated
+    self-joins of the data graph stay unambiguous."""
+    return t_triples(data if pred_enc is None else data.filter(F.col("p") == pred_enc))
 
 
-def _rooted(key: tuple) -> bool:
-    while key[0] not in ("targets", "root"):
-        key = key[1]
-    return key == _ROOT
+def eval_path(data: DataFrame, path: Path, focus_df: DataFrame) -> DataFrame:
+    """focus frame -> (focus5, value5) over the triples `data` via
+    SPARQL-path algebra (ref: src/rdfquery.js:1024-1080; mapping SURVEY.md
+    §2.3)."""
+    start = focus_df.select(
+        *term_cols("focus"),
+        *[F.col(c).alias(c.replace("focus", "cur")) for c in term_cols("focus")],
+    )
+    out = _walk(data, path, start)
+    renamed = out.select(
+        *term_cols("focus"),
+        *[F.col(c.replace("value", "cur")).alias(c) for c in term_cols("value")],
+    )
+    # r6: only SEQ roots can emit duplicate (focus, value) pairs — two
+    # intermediate routes reaching the same value.  pred/inverse hops
+    # over a set-semantics triple frame are distinct per (focus, value)
+    # by triple uniqueness, and alt/zeroOrOne/zeroOrMore/oneOrMore each
+    # dedup inside _walk (the fixpoint accumulator is a disjoint union
+    # of deduped frontiers) — the old blanket dedup re-sorted an
+    # already-distinct frame for every non-pred path.
+    if path.kind == "seq":
+        renamed = renamed.dropDuplicates(["focus", "value"])
+    return renamed
 
 
-class _Check(NamedTuple):
-    """One compiled constraint: constraint `c` of `shape`, of kind "row"
-    (_OK_CONDS), "count" (_COUNT_OKS) or "other", over the focus frame
-    keyed `focus`.  `chain` holds the value-frame keys of its path-bearing
-    sh:property ancestors, innermost first; `stack` the shape nodes from
-    the outermost ancestor down to `shape` (the recursion guard)."""
+def _hop_pred(data: DataFrame, df: DataFrame, pred_iri: str, inverse: bool = False) -> DataFrame:
+    t = trips(data, f"<{pred_iri}>")
+    if not inverse:
+        joined = df.join(t, df["cur"] == t["t_s"], "inner")
+        new_cur = [t[c].alias(n) for c, n in zip(term_cols("t_o"), term_cols("cur"))]
+    else:
+        joined = df.join(t, df["cur"] == t["t_o"], "inner")
+        new_cur = subject_decomposed("t_s", "cur")
+    return joined.select(*[df[c] for c in term_cols("focus")], *new_cur)
 
-    shape: Shape
-    c: Constraint
-    kind: str
-    focus: tuple
-    chain: tuple
-    stack: tuple
+
+def _walk(data: DataFrame, path: Path, df: DataFrame) -> DataFrame:
+    if path.kind == "pred":
+        return _hop_pred(data, df, path.pred)
+    if path.kind == "inverse":
+        return _hop_pred(data, df, path.pred, inverse=True)
+    if path.kind == "seq":
+        cur = df
+        for child in path.children:
+            cur = _walk(data, child, cur)
+        return cur
+    if path.kind == "alt":
+        branches = [_walk(data, c, df) for c in path.children]
+        return functools.reduce(DataFrame.unionByName, branches).dropDuplicates(["focus", "cur"])
+    if path.kind == "zeroOrOne":
+        return df.unionByName(_walk(data, path.children[0], df)).dropDuplicates(
+            ["focus", "cur"]
+        )
+    if path.kind in ("zeroOrMore", "oneOrMore"):
+        child = path.children[0]
+        if path.kind == "zeroOrMore":
+            base = df.dropDuplicates(["focus", "cur"])
+        else:
+            base = _walk(data, child, df).dropDuplicates(["focus", "cur"])
+        # iterative fixpoint join with per-round checkpointing
+        # (SURVEY.md §4 custom machinery #1; cycle guard = the anti-join).
+        # Only FRONTIERS are checkpointed, and the checkpoint job counts
+        # the frontier it materializes; acc stays a lazy union of
+        # already-checkpointed frontiers (one scan per round, bounded by
+        # the traversal depth, so lineage stays flat).
+        frontier = cut_lineage(base)
+        acc = frontier
+        while True:
+            obs = Observation()
+            frontier, seen = observed_cut(
+                _walk(data, child, frontier)
+                .dropDuplicates(["focus", "cur"])
+                .join(acc, ["focus", "cur"], "left_anti")
+                .observe(obs, F.count(F.lit(1)).alias("n")),
+                obs,
+            )
+            if not seen["n"]:
+                break
+            acc = acc.unionByName(frontier)
+        return acc
+    raise ValueError(f"unknown path kind {path.kind}")
 
 
 class Engine:
-    """Compiles shapes to checks once per report, then plans them over the
-    data graph (module docstring).
+    """Plans a shapes graph's Program (program.py) over a data graph.
 
-    Shared frames live in one memo, `_frames`, keyed by what they compute;
-    the keys are fixed at compile time: ("targets", classes, nodes,
-    subjectsOf, objectsOf), ("values", focus key, path), ("candidates",
-    values key), ("counts", focus key, path), ("class_fail", values key,
-    class).  A frame under an explicit root (_ROOT) is never memoized.
+    The report unit's frames live in one memo, `_frames`, under the
+    Program's frame keys (targets, values, candidates, counts, class_fail);
+    a member unit's frames, planned over an explicit focus frame (ROOT),
+    live only as long as that one plan.
 
     Precondition: `data` holds distinct (s, p, o) triples.  eval_path
     dedups only seq-path results, and _count_frame counts a simple path's
@@ -271,16 +356,14 @@ class Engine:
         self.shapes = shapes
         self.registry = registry
         self.ir = ShapesIR(shapes, registry)
+        self.program = Program(self.ir, _KINDS, max_shape_recursion)
         self.error_batch = error_batch
         self.max_driver_results = max_driver_results
-        self.max_shape_recursion = max_shape_recursion
         # parent enc -> child encs; callers that already hold the graph
         # driver-side (fixture harness) can pass the edges to skip a collect
-        self._sub_children: dict[str, list[str]] | None = subclass_edges
+        self._sub_children: dict[str, set[str]] | None = subclass_edges
         self._distinct_types: list[str] | None = None  # cached once per Engine
-        # shape nodes of the check being planned (shape recursion guard)
-        self._stack: tuple = ()
-        # shared-scan memo (see _memo): many shapes target the same classes
+        # shared-scan memo (see _frame): many shapes target the same classes
         # and walk the same paths, so each distinct target, value,
         # candidate, count and class-fail frame is built once
         self._frames: dict[tuple, DataFrame] = {}
@@ -291,42 +374,27 @@ class Engine:
         keeps one engine across many reports can call it between them."""
         self._frames.clear()
 
-    def _memo(self, key: tuple, build) -> DataFrame:
-        """The frame named by `key`, built once per engine.  Never
-        persisted: a report is read by one action, and Spark's exchange
-        reuse already shares the memo's identical sub-plans within it.  A
-        key under an explicit root (a recursion-level focus frame from
-        nonconforming, an incremental affected-target frame) builds a fresh
-        frame: those identities never recur, and memoizing them would hold
-        dead frames per level."""
-        if _rooted(key):
-            return build()
-        df = self._frames.get(key)
+    def _frame(self, key: tuple, memo: dict) -> DataFrame:
+        """The frame named by `key`, built once per `memo` from the frames
+        the Program says it is built from.  Never persisted: a report is
+        read by one action, and Spark's exchange reuse already shares the
+        memo's identical sub-plans within it."""
+        df = memo.get(key)
         if df is None:
-            df = self._frames[key] = build()
+            parents = [self._frame(k, memo) for k in self.program.frames[key]]
+            df = memo[key] = self._build(key, *parents)
         return df
 
     # ------------------------------------------------------------------ data
-    def trips(self, pred_enc: str | None = None) -> DataFrame:
-        """Triples projected to fresh attribute ids (t_*) so repeated
-        self-joins of the data graph stay unambiguous."""
-        df = self.data if pred_enc is None else self.data.filter(F.col("p") == pred_enc)
-        return t_triples(df)
-
-    def _subclass_children(self) -> dict[str, list[str]]:
+    def _subclass_children(self) -> dict[str, set[str]]:
         """Collect rdfs:subClassOf edges from the DATA graph once (ontology is
         small even at 100 TB data; ref getSubClassesOf walks the store,
-        shapes-graph.js:54-58) -> parent -> [children]."""
+        shapes-graph.js:54-58) -> parent -> {children}.  The triples are
+        distinct, and the sets dedup anyway, so no shuffle precedes it."""
         if self._sub_children is None:
-            rows = (
-                self.data.filter(F.col("p") == SUBCLASS_ENC)
-                .select("s", "o")
-                .distinct()
-                .collect()
-            )
-            m: dict[str, list[str]] = {}
-            for r in rows:
-                m.setdefault(r["o"], []).append(r["s"])
+            m: dict[str, set[str]] = {}
+            for r in self.data.filter(F.col("p") == SUBCLASS_ENC).select("s", "o").collect():
+                m.setdefault(r["o"], set()).add(r["s"])
             self._sub_children = m
         return self._sub_children
 
@@ -356,55 +424,29 @@ class Engine:
 
     def data_subclasses(self, cls_enc: str) -> set[str]:
         """Transitive subclasses in the data graph (excludes cls itself)."""
-        children = self._subclass_children()
-        out: set[str] = set()
-        stack = [cls_enc]
-        while stack:
-            for ch in children.get(stack.pop(), ()):
-                if ch not in out:
-                    out.add(ch)
-                    stack.append(ch)
-        return out
+        return _reach(self._subclass_children(), cls_enc)
 
-    def class_instances_df(
-        self, cls: Term, prefix: str = "focus", dedup: bool = True
-    ) -> DataFrame:
+    def _typed(self, cls: Term) -> DataFrame:
+        """The rdf:type triples of `cls` and its data-graph subclasses."""
         encs = sorted(self.data_subclasses(cls.encoded()) | {cls.encoded()})
-        out = self.data.filter(
-            (F.col("p") == RDF_TYPE_ENC) & F.col("o").isin(encs)
-        )
-        # callers that union several target pieces dedup once at the end
-        # (dedup=False) — stacking a per-piece dedup under the union dedup
-        # costs an extra aggregate pass over the same rows.
+        return self.data.filter((F.col("p") == RDF_TYPE_ENC) & F.col("o").isin(encs))
+
+    def class_instances_df(self, cls: Term, prefix: str = "focus") -> DataFrame:
         # r6: dedup BEFORE decomposing — the 4 derived columns are pure
         # functions of the encoded subject, so deduping the single encoded
         # column (a HashAggregate with no aggregate buffers) and decomposing
         # after replaces a SortAggregate that carried 4 first(string) buffers
         # through a 5-column-wide exchange.
-        if dedup:
-            out = out.select(F.col("s").alias(prefix)).dropDuplicates([prefix])
-            return out.select(*subject_decomposed(prefix, prefix))
-        return out.select(*subject_decomposed("s", prefix))
+        out = self._typed(cls).select(F.col("s").alias(prefix)).dropDuplicates([prefix])
+        return out.select(*subject_decomposed(prefix, prefix))
 
     # --------------------------------------------------------------- targets
     def targets_frame(self, shape: Shape) -> DataFrame:
-        """Focus-node frame for the shape's targets.  MEMOIZED by the
-        target spec's content: real shape sets pile dozens of shapes onto
-        the same few target classes, and without the memo each shape
-        re-scanned rdf:type and re-deduped an identical frame (measured
-        ~linear wall growth in shape count at 50 shapes; the memo makes
-        the marginal shape pay only its own constraint joins).  Memoized
-        frames live for the Engine's life — call release() when done with
-        a long-lived engine."""
-        key = self._targets_key(shape)
-        return self._memo(key, lambda: self._targets_frame_uncached(*key[1:]))
-
-    def _targets_key(self, shape: Shape) -> tuple:
-        spec = self.ir.target_spec(shape.node)
-        return ("targets", *(
-            tuple(sorted(terms, key=Term.encoded))
-            for terms in (spec.classes, spec.nodes, spec.subjects_of, spec.objects_of)
-        ))
+        """Focus-node frame for the shape's targets, memoized by the target
+        spec's content: real shape sets pile dozens of shapes onto the same
+        few target classes (without the memo, wall grew ~linearly in shape
+        count at 50 shapes)."""
+        return self._frame(self.program.targets_key(shape.node), self._frames)
 
     def _targets_frame_uncached(self, classes, nodes, subjects_of, objects_of) -> DataFrame:
         # fast path (r6): when every target piece is subject-derived
@@ -414,41 +456,20 @@ class Engine:
         # first(string) buffers, narrow exchange), decompose once after.
         # Node/objectsOf targets carry literal dt/lang that cannot be
         # re-derived from the encoded form, so they keep the 5-column dedup.
+        # The pieces dedup once, after their union: a per-piece dedup under
+        # it would cost an extra aggregate pass over the same rows.
+        typed = [self._typed(cls) for cls in classes]
+        subjects = [self.data.filter(F.col("p") == pred.encoded()) for pred in subjects_of]
         if not nodes and not objects_of and (classes or subjects_of):
-            enc_pieces: list[DataFrame] = []
-            for cls in classes:
-                encs = sorted(self.data_subclasses(cls.encoded()) | {cls.encoded()})
-                enc_pieces.append(
-                    self.data.filter(
-                        (F.col("p") == RDF_TYPE_ENC) & F.col("o").isin(encs)
-                    ).select(F.col("s").alias("focus"))
-                )
-            for pred in subjects_of:
-                enc_pieces.append(
-                    self.data.filter(F.col("p") == pred.encoded()).select(
-                        F.col("s").alias("focus")
-                    )
-                )
-            return self._focused(enc_pieces).dropDuplicates(["focus"]).select(
-                *subject_decomposed("focus", "focus")
-            )
-        pieces: list[DataFrame] = []
-        for cls in classes:
-            pieces.append(self.class_instances_df(cls, dedup=False))
+            return self._focused(
+                [t.select(F.col("s").alias("focus")) for t in typed + subjects]
+            ).dropDuplicates(["focus"]).select(*subject_decomposed("focus", "focus"))
+        pieces = [t.select(*subject_decomposed("s", "focus")) for t in typed]
         if nodes:
             pieces.append(terms_frame(self.spark, nodes, "focus"))
-        for pred in subjects_of:
-            pieces.append(
-                self.data.filter(F.col("p") == pred.encoded()).select(
-                    *subject_decomposed("s", "focus")
-                )
-            )
-        for pred in objects_of:
-            pieces.append(
-                self.data.filter(F.col("p") == pred.encoded()).select(
-                    *object_decomposed("focus")
-                )
-            )
+        pieces += [t.select(*subject_decomposed("s", "focus")) for t in subjects]
+        pieces += [self.data.filter(F.col("p") == pred.encoded()).select(*object_decomposed("focus"))
+                   for pred in objects_of]
         if not pieces:
             return terms_frame(self.spark, [], "focus")
         return self._focused(pieces).dropDuplicates(["focus"])
@@ -457,89 +478,6 @@ class Engine:
         """The union of target pieces, kept to the `focus` terms if given."""
         out = functools.reduce(DataFrame.unionByName, pieces)
         return out if self.focus is None else out.join(self.focus, "focus", "left_semi")
-
-    # ----------------------------------------------------------------- paths
-    def eval_path(self, path: Path, focus_df: DataFrame) -> DataFrame:
-        """focus frame -> (focus5, value5) via SPARQL-path algebra
-        (ref: src/rdfquery.js:1024-1080; mapping SURVEY.md §2.3)."""
-        start = focus_df.select(
-            *term_cols("focus"),
-            *[F.col(c).alias(c.replace("focus", "cur")) for c in term_cols("focus")],
-        )
-        out = self._walk(path, start)
-        renamed = out.select(
-            *term_cols("focus"),
-            *[F.col(c.replace("value", "cur")).alias(c) for c in term_cols("value")],
-        )
-        # r6: only SEQ roots can emit duplicate (focus, value) pairs — two
-        # intermediate routes reaching the same value.  pred/inverse hops
-        # over a set-semantics triple frame are distinct per (focus, value)
-        # by triple uniqueness, and alt/zeroOrOne/zeroOrMore/oneOrMore each
-        # dedup inside _walk (the fixpoint accumulator is a disjoint union
-        # of deduped frontiers) — the old blanket dedup re-sorted an
-        # already-distinct frame for every non-pred path.
-        if path.kind == "seq":
-            renamed = renamed.dropDuplicates(["focus", "value"])
-        return renamed
-
-    def _hop_pred(self, df: DataFrame, pred_iri: str, inverse: bool = False) -> DataFrame:
-        trips = self.trips(f"<{pred_iri}>")
-        if not inverse:
-            joined = df.join(trips, df["cur"] == trips["t_s"], "inner")
-            new_cur = [trips[c].alias(n) for c, n in zip(term_cols("t_o"), term_cols("cur"))]
-        else:
-            joined = df.join(trips, df["cur"] == trips["t_o"], "inner")
-            new_cur = subject_decomposed("t_s", "cur")
-        return joined.select(*[df[c] for c in term_cols("focus")], *new_cur)
-
-    def _walk(self, path: Path, df: DataFrame) -> DataFrame:
-        if path.kind == "pred":
-            return self._hop_pred(df, path.pred)
-        if path.kind == "inverse":
-            return self._hop_pred(df, path.pred, inverse=True)
-        if path.kind == "seq":
-            cur = df
-            for child in path.children:
-                cur = self._walk(child, cur)
-            return cur
-        if path.kind == "alt":
-            branches = [self._walk(c, df) for c in path.children]
-            out = branches[0]
-            for b in branches[1:]:
-                out = out.unionByName(b)
-            return out.dropDuplicates(["focus", "cur"])
-        if path.kind == "zeroOrOne":
-            return df.unionByName(self._walk(path.children[0], df)).dropDuplicates(
-                ["focus", "cur"]
-            )
-        if path.kind in ("zeroOrMore", "oneOrMore"):
-            child = path.children[0]
-            if path.kind == "zeroOrMore":
-                base = df.dropDuplicates(["focus", "cur"])
-            else:
-                base = self._walk(child, df).dropDuplicates(["focus", "cur"])
-            # iterative fixpoint join with per-round checkpointing
-            # (SURVEY.md §4 custom machinery #1; cycle guard = the anti-join).
-            # Only FRONTIERS are checkpointed, and the checkpoint job counts
-            # the frontier it materializes; acc stays a lazy union of
-            # already-checkpointed frontiers (one scan per round, bounded by
-            # the traversal depth, so lineage stays flat).
-            frontier = cut_lineage(base)
-            acc = frontier
-            while True:
-                obs = Observation()
-                frontier, seen = observed_cut(
-                    self._walk(child, frontier)
-                    .dropDuplicates(["focus", "cur"])
-                    .join(acc, ["focus", "cur"], "left_anti")
-                    .observe(obs, F.count(F.lit(1)).alias("n")),
-                    obs,
-                )
-                if not seen["n"]:
-                    break
-                acc = acc.unionByName(frontier)
-            return acc
-        raise ValueError(f"unknown path kind {path.kind}")
 
     # ------------------------------------------------------------ validation
     def validate(self) -> ValidationReport:
@@ -562,128 +500,59 @@ class Engine:
                     "validation report truncated at max_driver_results=%d; "
                     "use report_df() for the full distributed report", cap,
                 )
-        return ValidationReport(
-            [
-                ValidationResult(
-                    focus=decode_term(r["focus"]) if r["focus"] else None,
-                    value=decode_term(r["value"]) if r["value"] else None,
-                    path=decode_term(r["path"]) if r["path"] else None,
-                    component=r["component"],
-                    severity=r["severity"],
-                    source_shape=decode_term(r["source_shape"]) if r["source_shape"] else None,
-                    message=r["message"],
-                )
-                for r in rows
-            ],
-            truncated=truncated,
-        )
+
+        def term(enc: str | None) -> Term | None:
+            return decode_term(enc) if enc else None
+
+        return ValidationReport([
+            ValidationResult(
+                focus=term(r["focus"]), value=term(r["value"]), path=term(r["path"]),
+                component=r["component"], severity=r["severity"],
+                source_shape=term(r["source_shape"]), message=r["message"],
+            )
+            for r in rows
+        ], truncated=truncated)
 
     def report_df(self) -> DataFrame:
         """Full report as a DataFrame (for writing to parquet/Iceberg)."""
         return self._all_violations().select(*RECORD_COLS)
 
     def _all_violations(self) -> DataFrame:
-        """Report rows for every shape-with-target: all shapes compile into
-        one check list, so checks of different shapes that scan the same
-        memoized value or count frame (the common case in wide shape sets —
-        many property shapes over the same target class and path) share
-        one fused pass instead of one scan per shape.  The rows keep
-        `bubble`, the target focus each row was found under."""
-        checks = [chk for shape in self.ir.shapes_with_target()
-                  for chk in self._compile(shape, self._targets_key(shape))]
-        return self._union_viols(self._plan(checks))
+        """Report rows for every shape-with-target: the Program's report
+        unit, so checks of different shapes that scan the same value or
+        count frame (the common case in wide shape sets — many property
+        shapes over the same target class and path) share one fused pass
+        instead of one scan per shape.  The rows keep `bubble`, the target
+        focus each row was found under."""
+        return self._union_viols(self._plan(self.program.report))
 
-    def shape_violations(self, shape: Shape, focus_df: DataFrame) -> DataFrame:
-        """All violation rows for `shape` over the given focus frame
-        (ref: validateNodeAgainstShape, validation-engine.js:201-218)."""
-        return self._union_viols(self._plan(self._compile(shape, _ROOT), focus_df))
+    def shape_violations(self, shape: Shape, focus_df: DataFrame, stack: tuple = ()) -> DataFrame:
+        """All violation rows for `shape` over the given focus frame, below
+        the ancestor shape nodes `stack` (ref: validateNodeAgainstShape,
+        validation-engine.js:201-218)."""
+        unit = self.program.member(shape.node, stack)
+        return self._union_viols(self._plan(unit, focus_df, stack))
 
-    def _compile(self, shape: Shape, focus: tuple, chain=(), stack=None) -> list[_Check]:
-        """Flatten `shape` over the focus frame keyed `focus` into checks —
-        a driver-only walk, no Spark call.  sh:property expands here: the
-        child's focus is the parent's value nodes (validation-engine.js:
-        224-232), and a path-bearing parent appends its value frame to the
-        child's bubble chain (a path-less parent's mapping is the identity
-        over its distinct focus set, so it adds none)."""
-        stack = self._stack if stack is None else stack
-        if shape.deactivated:
-            return []
-        if stack.count(shape.node) >= self.max_shape_recursion:
-            # A well-founded recursive schema (PersonShape -> sh:property ->
-            # sh:node PersonShape) bottoms out via the empty-frontier check
-            # in nonconforming() — but only once the data's recursion depth
-            # is exhausted.  Reaching this cap therefore means cyclic data, a
-            # path-free shape cycle (the reference would stack-overflow,
-            # index.js:82-92), OR acyclic data deeper than the cap — the
-            # error says so and names the knob.
-            raise ShaclValidationError(
-                f"recursive shape reference at {shape.node} exceeded "
-                f"max_shape_recursion={self.max_shape_recursion}; either the "
-                "data/shape graph is cyclic, or the acyclic recursion depth "
-                "exceeds the cap — raise Engine(max_shape_recursion=...) for "
-                "deeper finite data"
-            )
-        stack += (shape.node,)
-        values = ("values", focus, shape.path)
-        checks = []
-        for c in shape.constraints:
-            comp = c.component
-            if comp.iri == SH + "PropertyConstraintComponent":
-                checks += self._compile(
-                    self.ir.get_shape(c.param_value), ("candidates", values),
-                    chain if shape.path is None else (values, *chain), stack,
-                )
-                continue
-            # custom components and components invalid for this shape kind
-            # are "other": _dispatch runs the registry validator or raises
-            style = comp.property_style if shape.is_property_shape else comp.node_style
-            builtin = not comp.custom and style is not None
-            kind = (
-                "row" if builtin and comp.iri in _OK_CONDS
-                else "count" if builtin and comp.iri in _COUNT_OKS
-                else "other"
-            )
-            checks.append(_Check(shape, c, kind, focus, chain, stack))
-        return checks
-
-    def _plan(self, checks: list[_Check], root: DataFrame | None = None) -> list[DataFrame]:
-        """Violation frames for compiled checks (`root` is the frame of
-        _ROOT).  Row-wise and count checks group by (frame, bubble chain)
-        into one _fused_rows pass each; every other check is dispatched
-        with its ancestors on _stack, so recursion through nonconforming
-        sees the same depth as a nested walk.  All legs sharing a chain are
-        lifted through it once; the join distributes over the union, so the
-        row multiset equals a per-shape walk's.  Frames under _ROOT are
-        shared within this plan only."""
-        local = {} if root is None else {_ROOT: root}
-
-        def frame(key: tuple) -> DataFrame:
-            df = local.get(key)
-            if df is None:
-                df = local[key] = self._memo(key, lambda: self._build(key, frame))
-            return df
-
-        groups: dict[tuple, list] = {}
+    def _plan(self, unit: Unit, root: DataFrame | None = None, stack: tuple = ()) -> list[DataFrame]:
+        """Violation frames of a compiled unit (`root` is the frame of ROOT,
+        whose frames are shared within this plan only): one _fused_rows
+        pass per group, and every other check dispatched with its
+        ancestors, so recursion through nonconforming sees the same depth
+        as a nested walk.  All legs sharing a chain are lifted through it
+        once; the join distributes over the union, so the row multiset
+        equals a per-shape walk's."""
+        frame = functools.partial(self._frame, memo=self._frames if root is None else {ROOT: root})
         legs: dict[tuple, list[DataFrame]] = {}
-        saved = self._stack
-        try:
-            for chk in checks:
-                if chk.kind == "other":
-                    self._stack = chk.stack
-                    v = self._dispatch(chk, frame)
-                    if v is not None:
-                        legs.setdefault(chk.chain, []).append(v.select(*VIOL_COLS))
-                else:
-                    kind = "values" if chk.kind == "row" else "counts"
-                    ok = (_OK_CONDS if chk.kind == "row" else _COUNT_OKS)[chk.c.component.iri]
-                    groups.setdefault(((kind, chk.focus, chk.shape.path), chk.chain), []).append(
-                        (chk.shape, chk.c, ok(self, chk.shape, chk.c))
-                    )
-        finally:
-            self._stack = saved
-        for (key, chain), entries in groups.items():
-            rows = self._fused_rows(frame(key), entries, with_value=key[0] == "values")
-            legs.setdefault(chain, []).append(rows)
+        for chk in unit.others:
+            v = self._dispatch(chk, frame, stack + chk.stack)
+            if v is not None:
+                legs.setdefault(chk.chain, []).append(v.select(*VIOL_COLS))
+        for (key, chain), checks in unit.groups.items():
+            row = checks[0].kind == "row"
+            oks = _OK_CONDS if row else _COUNT_OKS
+            entries = [(chk.shape, chk.c, oks[chk.c.component.iri](self, chk.shape, chk.c))
+                       for chk in checks]
+            legs.setdefault(chain, []).append(self._fused_rows(frame(key), entries, with_value=row))
         out = []
         for chain, frames in legs.items():
             rows = self._union_viols(frames)
@@ -697,31 +566,32 @@ class Engine:
             out.append(rows)
         return out
 
-    def _build(self, key: tuple, frame) -> DataFrame:
-        """Build the frame named by `key`; `frame` resolves its parents."""
+    def _build(self, key: tuple, *parents: DataFrame) -> DataFrame:
+        """Build the frame named by `key` from its parent frames."""
         kind = key[0]
         if kind == "targets":
             return self._targets_frame_uncached(*key[1:])
         if kind == "values":  # node shapes use the focus itself (shapes-graph.js:348-355)
-            focus, path = frame(key[1]), key[2]
+            (focus,), path = parents, key[2]
             if path is None:
                 return focus.select(
                     *term_cols("focus"),
                     *[F.col(c).alias(c.replace("focus", "value")) for c in term_cols("focus")],
                 )
-            return self.eval_path(path, focus)
+            return eval_path(self.data, path, focus)
         if kind == "candidates":
-            values = frame(key[1])
-            if key[1][2] is None:
-                # node shape: values IS the focus frame, which is distinct by
-                # construction (targets_frame ends in a dedup) — renaming is
-                # enough, no third dedup pass over the same rows
-                return values.select(
-                    *[F.col(c).alias(c.replace("value", "focus")) for c in term_cols("value")]
-                )
-            return self._values_as_candidates(values)
+            return _values_as_candidates(*parents)
         if kind == "counts":
-            return _count_frame(self, frame(key[1]), frame(("values", *key[1:])), key[2])
+            return _count_frame(self, *parents, key[2])
+        if kind == "class_fail":
+            # validateClass (dash.js:27-29): instance-of incl. data-graph
+            # subclass closure — broadcast-joined type closure.  N shapes
+            # asserting the same class over the same value frame share it.
+            (values,) = parents
+            instances = self.class_instances_df(key[2], "node").select("node")
+            return values.join(
+                F.broadcast(instances), values["value"] == instances["node"], "left_anti"
+            )
         raise ValueError(f"unknown frame kind {kind}")
 
     def _union_viols(self, frames: list[DataFrame]) -> DataFrame:
@@ -733,12 +603,8 @@ class Engine:
         # every empty accumulator leg scheduled real (no-op) tasks per union.
         return self.spark.range(0).select(*[_NULL().alias(c) for c in VIOL_COLS])
 
-    def _fused_rows(
-        self,
-        values: DataFrame,
-        entries: list[tuple[Shape, Constraint, Column]],
-        with_value: bool = True,
-    ) -> DataFrame:
+    def _fused_rows(self, values: DataFrame, entries: list[tuple[Shape, Constraint, Column]],
+                    with_value: bool = True) -> DataFrame:
         """ONE pass over a value (or count) frame evaluates every check in
         `entries`: rows where any check fails are kept, each check's fail
         struct (component, message, severity, source shape, path) collects
@@ -751,51 +617,30 @@ class Engine:
         any_fail = None
         structs = []
         for shape, c, ok in entries:
-            path_col = (
-                F.lit(shape.path_node.encoded())
-                if shape.path_node is not None
-                else _NULL()
-            )
+            path_col = _path_lit(shape)
             fail = ~ok
             any_fail = fail if any_fail is None else any_fail | fail
-            structs.append(
-                F.when(
-                    fail,
-                    F.struct(
-                        F.lit(c.component.iri).alias("comp"),
-                        self._message_col(
-                            shape, c, self._shape_message(shape), path_col
-                        ).alias("msg"),
-                        F.lit(shape.severity.value).alias("sev"),
-                        F.lit(shape.node.encoded()).alias("src"),
-                        path_col.alias("pth"),
-                    ),
-                )
-            )
+            structs.append(F.when(fail, F.struct(
+                F.lit(c.component.iri).alias("comp"),
+                self._message_col(shape, c, self._shape_message(shape), path_col).alias("msg"),
+                F.lit(shape.severity.value).alias("sev"),
+                F.lit(shape.node.encoded()).alias("src"),
+                path_col.alias("pth"),
+            )))
         viol = F.explode(F.filter(F.array(*structs), lambda x: x.isNotNull()))
         exploded = values.filter(any_fail).select("*", viol.alias("_viol"))
         # count frames have no value columns (createResult parity with
         # _rows(with_value=False): value stays null on count violations)
-        value_cols = (
-            [F.col(cn) for cn in term_cols("value")]
-            if with_value
-            else [_NULL().alias(cn) for cn in term_cols("value")]
-        )
-        return exploded.select(
-            F.col("focus").alias("bubble"),
-            *[F.col(cn) for cn in term_cols("focus")],
-            *value_cols,
-            F.col("_viol.pth").alias("path"),
-            F.col("_viol.comp").alias("component"),
-            F.col("_viol.sev").alias("severity"),
-            F.col("_viol.src").alias("source_shape"),
-            F.col("_viol.msg").alias("message"),
+        return _select_viols(
+            exploded, [F.col(cn) if with_value else _NULL() for cn in term_cols("value")],
+            *[F.col(f"_viol.{f}") for f in ("pth", "comp", "sev", "src", "msg")],
         )
 
-    def nonconforming(self, shape_node: Term, nodes_df: DataFrame) -> DataFrame:
-        """DF['node'] of nodes NOT conforming to the shape — the distributed
-        analog of nodeConformsToShape (index.js:82-92); only the set
-        membership escapes (result suppression, validation-engine.js:74-81).
+    def nonconforming(self, shape_node: Term, nodes_df: DataFrame, stack: tuple = ()) -> DataFrame:
+        """DF['node'] of nodes NOT conforming to the shape, checked below
+        the ancestor shape nodes `stack` — the distributed analog of
+        nodeConformsToShape (index.js:82-92); only the set membership
+        escapes (result suppression, validation-engine.js:74-81).
 
         Recursive shapes (sh:node cycles) are unrolled DATA-DEPENDENTLY: on
         re-entry, an empty candidate frontier short-circuits (the recursion
@@ -804,7 +649,7 @@ class Engine:
         like the reference. The frontier is checkpointed and counted by one
         job, on re-entry only, never on the non-recursive fast path."""
         shape = self.ir.get_shape(shape_node)
-        if shape.node in self._stack:
+        if shape.node in stack:
             # cut lineage at every recursion level: without this the logical
             # plan NESTS once per level and a ~30-deep chain OOMs the driver
             # during analysis before the depth cap can fire (observed:
@@ -812,46 +657,22 @@ class Engine:
             obs = Observation()
             nodes_df, seen = observed_cut(nodes_df.observe(obs, F.count(F.lit(1)).alias("n")), obs)
             if not seen["n"]:
-                return self.spark.range(0).select(
-                    F.lit(None).cast("string").alias("node")
-                )
-        viols = self.shape_violations(shape, nodes_df)
+                return self.spark.range(0).select(_NULL().alias("node"))
+        viols = self.shape_violations(shape, nodes_df, stack)
         return viols.select(F.col("bubble").alias("node")).dropDuplicates(["node"])
 
     # --------------------------------------------------------------- helpers
-    def _rows(
-        self,
-        df: DataFrame,
-        shape: Shape,
-        comp_iri: str,
-        with_value: bool = True,
-        path_col: Column | None = None,
-        value_cols: list[Column] | None = None,
-        message_col: Column | None = None,
-    ) -> DataFrame:
+    def _rows(self, df: DataFrame, shape: Shape, comp_iri: str, with_value: bool = True,
+              path_col: Column | None = None, value_cols: list[Column] | None = None,
+              message_col: Column | None = None) -> DataFrame:
         """Normalize a failure frame into violation rows
         (ref: createResult, validation-engine.js:50-64)."""
-        if path_col is None:
-            path_col = (
-                F.lit(shape.path_node.encoded()) if shape.path_node is not None else _NULL()
-            )
         if value_cols is None:
-            if with_value:
-                value_cols = [F.col(c) for c in term_cols("value")]
-            else:
-                value_cols = [_NULL().alias(c) for c in term_cols("value")]
-        if message_col is None:
-            message_col = self._shape_message(shape)
-        return df.select(
-            F.col("focus").alias("bubble"),
-            *[F.col(c) for c in term_cols("focus")],
-            *[c.alias(n) if not isinstance(c, str) else F.col(c).alias(n)
-              for c, n in zip(value_cols, term_cols("value"))],
-            path_col.alias("path"),
-            F.lit(comp_iri).alias("component"),
-            F.lit(shape.severity.value).alias("severity"),
-            F.lit(shape.node.encoded()).alias("source_shape"),
-            message_col.alias("message"),
+            value_cols = [F.col(c) if with_value else _NULL() for c in term_cols("value")]
+        return _select_viols(
+            df, value_cols, _path_lit(shape) if path_col is None else path_col,
+            F.lit(comp_iri), F.lit(shape.severity.value), F.lit(shape.node.encoded()),
+            self._shape_message(shape) if message_col is None else message_col,
         )
 
     #: separates multiple sh:message values inside the single message column;
@@ -873,15 +694,11 @@ class Engine:
         except (TypeError, ValueError):
             return None
 
-    def _values_as_candidates(self, values: DataFrame) -> DataFrame:
-        return values.select(
-            *[F.col(c).alias(c.replace("value", "focus")) for c in term_cols("value")]
-        ).dropDuplicates(["focus"])
-
     # -------------------------------------------------------------- dispatch
-    def _dispatch(self, chk: _Check, frame) -> DataFrame | None:
-        """Violation frame of one "other" check: its _IMPLS entry, or the
-        registry validator of a custom component."""
+    def _dispatch(self, chk: Check, frame, stack: tuple) -> DataFrame | None:
+        """Violation frame of one "other" check over the frames it names:
+        its _IMPLS entry, or the registry validator of a custom component;
+        `stack` is the check's full ancestor stack."""
         shape, c, comp = chk.shape, chk.c, chk.c.component
         style = comp.property_style if shape.is_property_shape else comp.node_style
         impl = _IMPLS.get(comp.iri)
@@ -889,20 +706,17 @@ class Engine:
             raise ShaclValidationError(
                 f"Cannot find validator for constraint component {comp.iri}"
             )
-        key = ("values", chk.focus, shape.path)
-        targets, values = frame(chk.focus), frame(key)
+        frames = [frame(key) for key in chk.frames]
         if comp.custom:
-            return self._custom(shape, c, targets, values, style)
-        rows = impl(self, shape, c, targets, values, key)
+            return self._custom(shape, c, *frames, style)
+        rows = impl(self, shape, c, *frames, stack)
         if rows is None:
             return None
         return rows.withColumn(
             "message", self._message_col(shape, c, F.col("message"), F.col("path"))
         )
 
-    def _message_col(
-        self, shape: Shape, c: Constraint, message: Column, path: Column
-    ) -> Column:
+    def _message_col(self, shape: Shape, c: Constraint, message: Column, path: Column) -> Column:
         """`message` (the shape's sh:message, or a validator's own message),
         else the component default; a {?path} in the default becomes the
         row's path label — closed/closedByTypes record the OFFENDING
@@ -926,13 +740,13 @@ class Engine:
             except ValueError:
                 items = []  # a non-list bnode (e.g. an inline shape)
             if items:
-                return ", ".join(_node_label(t, self.shapes.prefixes) for t in items)
-        return _node_label(val, self.shapes.prefixes)
+                return ", ".join(node_label(t, self.shapes.prefixes) for t in items)
+        return node_label(val, self.shapes.prefixes)
 
     def _label_col(self, col: Column) -> Column:
         """Per-row nodeLabel for ENCODED terms ('<iri>' form): prefix-shorten
         against the shapes-graph namespaces, else keep the <iri> rendering.
-        The first declared matching prefix wins, as in _node_label."""
+        The first declared matching prefix wins, as in node_label."""
         bare = F.regexp_extract(col, "^<(.*)>$", 1)
         out = None
         for p, ns in self.shapes.prefixes.items():
@@ -945,42 +759,21 @@ class Engine:
         (ref: createResultMessages + withSubstitutions,
         validation-engine.js:149-173, 316-325); property-validator variants
         (dash.ttl:1245, :1157) win on property shapes."""
-        msg = None
-        if shape.is_property_shape:
-            msg = PROPERTY_DEFAULT_MESSAGES.get(c.component.iri)
-        if msg is None:
-            msg = DEFAULT_MESSAGES.get(c.component.iri)
-        if msg is None:
-            return None
-        for lname, val in c.params.items():
-            if val is None:
-                continue
-            label = self._param_label(val)
-            msg = msg.replace("{$" + lname + "}", label).replace("{?" + lname + "}", label)
-        return msg
+        msg = (shape.is_property_shape and PROPERTY_DEFAULT_MESSAGES.get(c.component.iri)
+               or DEFAULT_MESSAGES.get(c.component.iri))
+        return None if msg is None else _substitute(msg, c.params, self._param_label)
 
 # --------------------------------------------------------------------------
 # Constraint implementations (module-level for a flat dispatch table).  Each
-# _IMPLS entry takes (engine, shape, constraint, targets, values, key of
-# values) and returns a violation frame or None.  Citations point at the
-# verdict logic being reproduced (shared/dash.js).
+# _IMPLS entry takes (engine, shape, constraint, then the frames its check
+# names — targets and values — then the check's ancestor stack) and returns
+# a violation frame or None.  Citations point at the verdict logic being
+# reproduced (shared/dash.js).
 # --------------------------------------------------------------------------
 
-def _impl_class(eng: Engine, shape, c, targets, values, key):
-    # validateClass (dash.js:27-29): instance-of incl. data-graph subclass
-    # closure — broadcast-joined type closure.  The FAIL frame is memoized
-    # per (shared value frame, class): N shapes asserting the same class
-    # over the same (targets, path) — common in wide shape sets — share
-    # one anti-join instead of N scans of the value frame.
-    cls = c.param_value
-
-    def build():
-        instances = eng.class_instances_df(cls, "node").select("node")
-        return values.join(
-            F.broadcast(instances), values["value"] == instances["node"], "left_anti"
-        )
-
-    fail = eng._memo(("class_fail", key, cls), build)
+def _impl_class(eng: Engine, shape, c, targets, fail, stack):
+    # validateClass (dash.js:27-29): the check scans its class_fail frame,
+    # shared by every shape asserting the same class over the same values
     return eng._rows(fail, shape, c.component.iri)
 
 
@@ -1095,7 +888,7 @@ def _cond_stem(eng, shape, c):
     return (F.col("value_kind") == "iri") & F.col("value_v").startswith(c.param_value.value)
 
 
-def _impl_rootclass(eng, shape, c, targets, values, key):
+def _impl_rootclass(eng, shape, c, targets, values, stack):
     # validateRootClass (dash.js:365-367): zeroOrMore(subClassOf) reachability
     root = c.param_value.encoded()
     reach = sorted(eng.data_subclasses(root) | {root})
@@ -1104,20 +897,20 @@ def _impl_rootclass(eng, shape, c, targets, values, key):
 
 
 def _triple_impl(how: str):
-    def impl(eng, shape, c, targets, values, key):
+    def impl(eng, shape, c, targets, values, stack):
         # validateSubSetOf (dash.js:373-375): (focus, subSetOf, value) must
         # exist (left_anti); validateDisjoint (dash.js:101-103): violation if
         # (focus, disjoint, value) exists (left_semi)
-        trips = eng.trips(c.param_value.encoded())
+        t = trips(eng.data, c.param_value.encoded())
         fail = values.join(
-            trips, (values["focus"] == trips["t_s"]) & (values["value"] == trips["t_o"]), how
+            t, (values["focus"] == t["t_s"]) & (values["value"] == t["t_o"]), how
         )
         return eng._rows(fail, shape, c.component.iri)
 
     return impl
 
 
-def _impl_hasvalue(eng, shape, c, targets, values, key):
+def _impl_hasvalue(eng, shape, c, targets, values, stack):
     want = c.param_value.encoded()
     if shape.is_property_shape:
         # validateHasValueProperty (dash.js:151-154): ∃ path value == hasValue
@@ -1129,21 +922,25 @@ def _impl_hasvalue(eng, shape, c, targets, values, key):
     return eng._rows(fail, shape, c.component.iri, with_value=False)
 
 
-def _impl_hasvaluewithclass(eng, shape, c, targets, values, key):
+def _impl_hasvaluewithclass(eng, shape, c, targets, values, stack):
     # validateHasValueWithClass (dash.js:156-161)
     instances = eng.class_instances_df(c.param_value, "node").select("node")
-    have = (
-        values.join(F.broadcast(instances), values["value"] == instances["node"], "left_semi")
-        .select("focus")
-        .dropDuplicates()
-    )
+    have = values.join(
+        F.broadcast(instances), values["value"] == instances["node"], "left_semi"
+    ).select("focus").dropDuplicates()
     fail = targets.join(have, "focus", "left_anti")
     return eng._rows(fail, shape, c.component.iri, with_value=False)
 
 
+def _values_as_candidates(values: DataFrame) -> DataFrame:
+    return values.select(
+        *[F.col(c).alias(c.replace("value", "focus")) for c in term_cols("value")]
+    ).dropDuplicates(["focus"])
+
+
 def _count_frame(eng, targets: DataFrame, values: DataFrame, path: Path | None) -> DataFrame:
     """(focus5, _cnt) per target, where `values` is the value frame of
-    `path` over `targets`.  Memoized by callers under ("counts", focus key,
+    `path` over `targets`.  Built once per Program counts key (focus,
     path): minCount and maxCount shapes sharing them — e.g. "at least 1"
     and "at most 1" over the same property across a wide shape set — reuse
     one aggregation instead of re-shuffling the value frame each."""
@@ -1169,7 +966,7 @@ def _count_frame(eng, targets: DataFrame, values: DataFrame, path: Path | None) 
     )
 
 
-def _impl_uniquelang(eng, shape, c, targets, values, key):
+def _impl_uniquelang(eng, shape, c, targets, values, stack):
     # validateUniqueLangProperty (dash.js:377-404): per overused language one
     # violation with the exact message string; no value recorded.
     if c.param_value != TRUE:
@@ -1188,9 +985,9 @@ def _impl_uniquelang(eng, shape, c, targets, values, key):
     return eng._rows(langs, shape, c.component.iri, with_value=False, message_col=msg)
 
 
-def _impl_equals(eng, shape, c, targets, values, key):
+def _impl_equals(eng, shape, c, targets, values, stack):
     comp_iri = c.component.iri
-    other = eng.eval_path(Path("pred", pred=c.param_value.value), targets)
+    other = eval_path(eng.data, Path("pred", pred=c.param_value.value), targets)
     if shape.is_property_shape:
         # validateEqualsProperty (dash.js:105-125): symmetric difference,
         # one violation per missing member on either side.
@@ -1212,11 +1009,11 @@ def _impl_equals(eng, shape, c, targets, values, key):
 
 
 def _lessthan_impl(strict: bool):
-    def impl(eng, shape, c, targets, values, key):
+    def impl(eng, shape, c, targets, values, stack):
         # validateLessThan(/OrEquals)Property (dash.js:186-216): cross product
         # of path values × other-prop values per focus; incomparable (mixed
         # datatypes) or cmp >= 0 (> 0) is a violation; string comparison.
-        other = eng.eval_path(Path("pred", pred=c.param_value.value), targets).select(
+        other = eval_path(eng.data, Path("pred", pred=c.param_value.value), targets).select(
             F.col("focus").alias("_f2"),
             *[F.col(x).alias(x.replace("value", "_o")) for x in term_cols("value")],
         )
@@ -1230,7 +1027,7 @@ def _lessthan_impl(strict: bool):
     return impl
 
 
-def _impl_closed(eng, shape, c, targets, values, key):
+def _impl_closed(eng, shape, c, targets, values, stack):
     # validateClosed (dash.js:31-54): allowed = IRI paths of this shape's
     # property shapes + sh:ignoredProperties; one violation per offending
     # (predicate, object) with custom path/value. rdf:type NOT auto-ignored.
@@ -1244,20 +1041,13 @@ def _impl_closed(eng, shape, c, targets, values, key):
     ignored = c.params.get("ignoredProperties")
     if ignored is not None:
         allowed += [t.encoded() for t in eng.shapes.rdf_list(ignored)]
-    trips = eng.trips()
-    off = values.join(trips, values["value"] == trips["t_s"], "inner").filter(
-        ~trips["t_p"].isin(allowed)
-    )
-    return eng._rows(
-        off,
-        shape,
-        c.component.iri,
-        path_col=F.col("t_p"),
-        value_cols=[F.col(c) for c in term_cols("t_o")],
-    )
+    t = trips(eng.data)
+    off = values.join(t, values["value"] == t["t_s"], "inner").filter(~t["t_p"].isin(allowed))
+    return eng._rows(off, shape, c.component.iri, path_col=F.col("t_p"),
+                     value_cols=[F.col(c) for c in term_cols("t_o")])
 
 
-def _impl_closedbytypes(eng, shape, c, targets, values, key):
+def _impl_closedbytypes(eng, shape, c, targets, values, stack):
     # validateClosedByTypesNode (dash.js:56-83): allowed props come from the
     # focus node's rdf:type closure joined to shapes-graph property paths.
     if c.param_value != TRUE:
@@ -1271,35 +1061,21 @@ def _impl_closedbytypes(eng, shape, c, targets, values, key):
     # data side: focus -> direct types, then zeroOrMore(subClassOf) UP in
     # data. Invert the Engine-cached parent->children map (one collect per
     # Engine lifetime, shared with sh:class) instead of re-collecting here.
-    parents: dict[str, list[str]] = {}
+    parents: dict[str, set[str]] = {}
     for parent, children in eng._subclass_children().items():
         for child in children:
-            parents.setdefault(child, []).append(parent)
-
-    def super_closure(t: str) -> set[str]:
-        out = {t}
-        stack = [t]
-        while stack:
-            for par in parents.get(stack.pop(), ()):
-                if par not in out:
-                    out.add(par)
-                    stack.append(par)
-        return out
-
+            parents.setdefault(child, set()).add(parent)
     typed = eng.data.filter(F.col("p") == RDF_TYPE_ENC).select(
         F.col("s").alias("_n"), F.col("o").alias("_t")
     )
     # expand each focus's direct types to their superclosure driver-side map
     # via a broadcast mapping (type -> allowed preds over closure); the type
     # list is cached + size-capped on the Engine
-    all_types = eng.distinct_types()
-    type_allowed: list[tuple[str, str]] = []
-    for t in all_types:
-        preds: set[str] = set()
-        for sup in super_closure(t):
-            preds.update(cls_props.get(sup, ()))
-        for pe in preds:
-            type_allowed.append((t, pe))
+    type_allowed = [
+        (ty, pred)
+        for ty in eng.distinct_types()
+        for pred in {p for sup in _reach(parents, ty) | {ty} for p in cls_props.get(sup, ())}
+    ]
     # an empty allowed set is an empty LocalRelation: the optimizer folds
     # the joins over it away
     allowed_df = local_frame(eng.spark, type_allowed, "_t string, _pred string")
@@ -1309,72 +1085,56 @@ def _impl_closedbytypes(eng, shape, c, targets, values, key):
         .select("focus", "_pred")
         .dropDuplicates()
     )
-    trips = eng.trips()
+    t = trips(eng.data)
     fa = focus_allowed.select(
         F.col("focus").alias("_fa_focus"), F.col("_pred").alias("_fa_pred")
     )
     off = (
-        targets.join(trips, targets["focus"] == trips["t_s"], "inner")
-        .filter(trips["t_p"] != RDF_TYPE_ENC)
+        targets.join(t, targets["focus"] == t["t_s"], "inner")
+        .filter(t["t_p"] != RDF_TYPE_ENC)
         .join(
             fa,
-            (F.col("focus") == fa["_fa_focus"]) & (trips["t_p"] == fa["_fa_pred"]),
+            (F.col("focus") == fa["_fa_focus"]) & (t["t_p"] == fa["_fa_pred"]),
             "left_anti",
         )
     )
-    return eng._rows(
-        off,
-        shape,
-        c.component.iri,
-        path_col=F.col("t_p"),
-        value_cols=[F.col(c) for c in term_cols("t_o")],
-    )
+    return eng._rows(off, shape, c.component.iri, path_col=F.col("t_p"),
+                     value_cols=[F.col(c) for c in term_cols("t_o")])
 
 
-def _impl_coexistswith(eng, shape, c, targets, values, key):
+def _impl_coexistswith(eng, shape, c, targets, values, stack):
     # validateCoExistsWith (dash.js:85-90): (∃ path value) must equal (∃ coProp value)
     has1 = values.select("focus").dropDuplicates().withColumn("_h1", F.lit(1))
-    has2 = (
-        eng.data.filter(F.col("p") == c.param_value.encoded())
-        .select(F.col("s").alias("focus"))
-        .dropDuplicates()
-        .withColumn("_h2", F.lit(1))
-    )
+    has2 = (eng.data.filter(F.col("p") == c.param_value.encoded())
+            .select(F.col("s").alias("focus")).dropDuplicates().withColumn("_h2", F.lit(1)))
     flags = targets.join(has1, "focus", "left").join(has2, "focus", "left")
-    fail = flags.filter(
-        F.coalesce(F.col("_h1"), F.lit(0)) != F.coalesce(F.col("_h2"), F.lit(0))
-    )
+    fail = flags.filter(F.coalesce(F.col("_h1"), F.lit(0)) != F.coalesce(F.col("_h2"), F.lit(0)))
     return eng._rows(fail, shape, c.component.iri, with_value=False)
 
 
-def _impl_uniquevalueforclass(eng, shape, c, targets, values, key):
+def _impl_uniquevalueforclass(eng, shape, c, targets, values, stack):
     # validateUniqueValueForClass (dash.js:406-424): violation per (other
     # instance of the class sharing a path value, value) pair.  Self-join on
     # the value column — the skew-prone join SURVEY §2.6 flags; the instance
     # filter is applied BEFORE the join to bound the hot side.
     if shape.path is None or not shape.path.is_simple_pred:
-        raise ShaclValidationError(
-            "dash:uniqueValueForClass requires a simple predicate path"
-        )
+        raise ShaclValidationError("dash:uniqueValueForClass requires a simple predicate path")
     # instance frame is one row per class member — corpus-sized, NOT
     # broadcastable at scale (observed: 4g-driver heap OOM broadcasting
     # 1.5M instance IRIs at sf1); shuffle-hash keys both sides on the
     # subject and builds the per-partition hash from the instance rows
     instances = eng.class_instances_df(c.param_value, "node").select("node")
     others = (
-        eng.trips(f"<{shape.path.pred}>")
+        trips(eng.data, f"<{shape.path.pred}>")
         .join(instances.hint("shuffle_hash"), F.col("t_s") == F.col("node"), "left_semi")
         .select(F.col("t_s").alias("_other"), F.col("t_o").alias("_oval"))
     )
-    fail = values.join(
-        others,
-        (values["value"] == others["_oval"]) & (values["focus"] != others["_other"]),
-        "inner",
-    )
+    fail = values.join(others, (values["value"] == others["_oval"])
+                       & (values["focus"] != others["_other"]), "inner")
     return eng._rows(fail, shape, c.component.iri)
 
 
-def _impl_nonrecursive(eng, shape, c, targets, values, key):
+def _impl_nonrecursive(eng, shape, c, targets, values, stack):
     # validateNonRecursiveProperty (dash.js:280-289)
     if c.param_value != TRUE:
         return None
@@ -1396,14 +1156,12 @@ def _encode_uri_component(col):
     return out
 
 
-def _impl_primarykey(eng, shape, c, targets, values, key):
+def _impl_primarykey(eng, shape, c, targets, values, cnt, stack):
     # validatePrimaryKeyProperty (dash.js:313-325): three failure modes with
     # exact message strings; encodeURIComponent parity stays JVM-side
-    # (vectorized url_encode + finite fix-ups, no Python in the path).
+    # (vectorized url_encode + finite fix-ups, no Python in the path).  `cnt`
+    # is the counts frame min/maxCount over the same path share.
     uri_start = c.param_value.value
-    cnt = eng._memo(
-        ("counts", *key[1:]), lambda: _count_frame(eng, targets, values, shape.path)
-    )
     first_val = values.groupBy("focus").agg(F.min("value_v").alias("_val"))
     frame = cnt.join(first_val, "focus", "left")
     expected = F.concat(F.lit(uri_start), _encode_uri_component(F.col("_val")))
@@ -1419,14 +1177,15 @@ def _impl_primarykey(eng, shape, c, targets, values, key):
 
 # ---- nested conformance (rejection counts) ----
 
-def _rejected(eng: Engine, frame: DataFrame, members: list[Term], fails) -> DataFrame:
+def _rejected(eng: Engine, frame: DataFrame, members: list[Term], fails, stack: tuple) -> DataFrame:
     """Rows of `frame` whose value node fails `fails(n, k)`: n counts the
-    `members` shapes that reject the node, k = len(members) — the
-    reference's per-node count of conforming members (dash.js:17-25,
-    276-303, 426-435).  Each nonconforming set is distinct per node, so one
-    count over their union gives n; no members give an empty count."""
-    candidates = eng._values_as_candidates(frame)
-    rejects = [eng.nonconforming(m, candidates) for m in members]
+    `members` shapes that reject the node below the ancestor `stack`, k =
+    len(members) — the reference's per-node count of conforming members
+    (dash.js:17-25, 276-303, 426-435).  Each nonconforming set is distinct
+    per node, so one count over their union gives n; no members give an
+    empty count."""
+    candidates = _values_as_candidates(frame)
+    rejects = [eng.nonconforming(m, candidates, stack) for m in members]
     counts = functools.reduce(
         DataFrame.unionByName, rejects, eng.spark.range(0).select(_NULL().alias("node"))
     ).groupBy("node").agg(F.count("*").alias("_n"))
@@ -1438,35 +1197,28 @@ def _rejected(eng: Engine, frame: DataFrame, members: list[Term], fails) -> Data
     )
 
 
-def _logical_impl(fails, listed: bool = True):
+def _logical_impl(fails):
     """sh:and/or/xone (a list of member shapes) or sh:not/node (one)."""
-    def impl(eng, shape, c, targets, values, key):
-        members = eng.shapes.rdf_list(c.param_value) if listed else [c.param_value]
-        fail = _rejected(eng, values, members, fails)
+    def impl(eng, shape, c, targets, values, stack):
+        (members,) = eng.program.members(shape, c)
+        fail = _rejected(eng, values, members, fails, stack)
         return eng._rows(fail, shape, c.component.iri)
 
     return impl
 
 
 def _qualified_impl(is_min: bool):
-    def impl(eng, shape, c, targets, values, key):
+    def impl(eng, shape, c, targets, values, stack):
         # validateQualifiedMin/MaxCountProperty + helper (dash.js:327-363):
         # count the values conforming to the qualified shape and, when the
         # shapes are disjoint, to none of the sibling qualified shapes
-        qshape = c.params["qualifiedValueShape"]
         bound = eng._num_param(
             c.params["qualifiedMinCount" if is_min else "qualifiedMaxCount"]
         )
-        qualified = _rejected(eng, values, [qshape], lambda n, k: n == 0)
-        disjoint = c.params.get("qualifiedValueShapesDisjoint")
-        if disjoint == TRUE:
-            siblings = []
-            for parent in eng.shapes.subjects(iri(SH + "property"), shape.node):
-                for sib in eng.shapes.objects(parent, iri(SH + "property")):
-                    for sib_q in eng.shapes.objects(sib, iri(SH + "qualifiedValueShape")):
-                        if sib_q != qshape:
-                            siblings.append(sib_q)
-            qualified = _rejected(eng, qualified, siblings, lambda n, k: n == k)
+        qshape, *siblings = eng.program.members(shape, c)
+        qualified = _rejected(eng, values, qshape, lambda n, k: n == 0, stack)
+        for sibs in siblings:
+            qualified = _rejected(eng, qualified, sibs, lambda n, k: n == k, stack)
         counts = qualified.groupBy("focus").agg(F.count("*").alias("_cnt"))
         frame = targets.join(counts, "focus", "left").withColumn(
             "_cnt", F.coalesce(F.col("_cnt"), F.lit(0))
@@ -1520,9 +1272,9 @@ _IMPLS = {
     # n of k members reject the value (_rejected); dash.js:17-25, 276-303, 426-435
     SH + "AndConstraintComponent": _logical_impl(lambda n, k: n > 0),
     SH + "OrConstraintComponent": _logical_impl(lambda n, k: n == k),
-    SH + "NotConstraintComponent": _logical_impl(lambda n, k: n == 0, listed=False),
+    SH + "NotConstraintComponent": _logical_impl(lambda n, k: n == 0),
     SH + "XoneConstraintComponent": _logical_impl(lambda n, k: k - n != 1),
-    SH + "NodeConstraintComponent": _logical_impl(lambda n, k: n > 0, listed=False),
+    SH + "NodeConstraintComponent": _logical_impl(lambda n, k: n > 0),
     SH + "QualifiedMinCountConstraintComponent": _qualified_impl(is_min=True),
     SH + "QualifiedMaxCountConstraintComponent": _qualified_impl(is_min=False),
     DASH + "ClosedByTypesConstraintComponent": _impl_closedbytypes,
@@ -1536,20 +1288,12 @@ _IMPLS = {
 }
 
 
+#: the fused components' kinds, as the Program groups them
+_KINDS = {**dict.fromkeys(_OK_CONDS, "row"), **dict.fromkeys(_COUNT_OKS, "count")}
+
+
 # custom-component dispatch (registry.py) — attached to Engine here to keep
 # the impl table and the class in one module.
-def _node_label(t: Term, prefixes: dict) -> str:
-    """ref: nodeLabel (validation-engine.js:6-29)."""
-    if t.is_iri:
-        for p, ns in prefixes.items():
-            if t.value.startswith(ns):
-                return f"{p}:{t.value[len(ns):]}"
-        return f"<{t.value}>"
-    if t.is_bnode:
-        return "Blank node " + t.value
-    return t.value
-
-
 def _custom_default_message(self: Engine, shape, c) -> str | None:
     """Validator-level (then component-level) sh:message with {$param}/{?param}
     substitution (ref: createResultMessages + withSubstitutions,
@@ -1569,11 +1313,15 @@ def _custom_default_message(self: Engine, shape, c) -> str | None:
     if msg is None:
         m = self.shapes.object(comp_node, iri(SH + "message"))
         msg = m.value if m is not None else None
-    if msg is None:
-        return None
-    for lname, val in c.params.items():
-        label = _node_label(val, self.shapes.prefixes)
-        msg = msg.replace("{$" + lname + "}", label).replace("{?" + lname + "}", label)
+    return None if msg is None else _substitute(
+        msg, c.params, lambda val: node_label(val, self.shapes.prefixes))
+
+
+def _substitute(msg: str, params: dict, label) -> str:
+    """{$param}/{?param} replaced by `label` of the parameter's value."""
+    for lname, val in params.items():
+        if val is not None:
+            msg = msg.replace("{$" + lname + "}", label(val)).replace("{?" + lname + "}", label(val))
     return msg
 
 
@@ -1587,19 +1335,11 @@ def _custom(self: Engine, shape, c, targets, values, style):
     rows = validator(self, shape, c, targets, values, style)
     if rows is None:
         return None
-    shape_msg = (
-        Engine.MESSAGE_SEP.join(m.value for m in shape.messages)
-        if shape.messages else None
-    )
     default = _custom_default_message(self, shape, c)
-    return rows.withColumn(
-        "message",
-        F.coalesce(
-            F.col("message"),
-            F.lit(shape_msg) if shape_msg is not None else _NULL(),
-            F.lit(default) if default is not None else _NULL(),
-        ),
-    )
+    return rows.withColumn("message", F.coalesce(
+        F.col("message"), self._shape_message(shape),
+        F.lit(default) if default is not None else _NULL(),
+    ))
 
 
 Engine._custom = _custom

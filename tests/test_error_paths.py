@@ -214,18 +214,18 @@ def test_zero_or_more_fixpoint_counts_on_its_checkpoint(spark, tmp_path):
     from shacl_js_spark.graph import TRIPLE_SCHEMA, terms_frame
     from shacl_js_spark.shapes import Path
     from shacl_js_spark.terms import iri
+    from shacl_js_spark.validation import eval_path
 
     ttl = "@prefix ex: <http://e/> .\n" + "".join(
         f"ex:n{i} ex:next ex:n{i + 1} .\n" for i in range(8)
     )
-    trips, prefixes = parse_turtle(ttl)
+    trips, _ = parse_turtle(ttl)
     triples_df(spark, trips).write.parquet(str(tmp_path / "g"))
     data = spark.read.schema(TRIPLE_SCHEMA).parquet(str(tmp_path / "g"))
-    eng = Engine(spark, data, LocalGraph(trips, prefixes))
     path = Path("zeroOrMore", children=(Path("pred", pred="http://e/next"),))
     reach, jobs = _jobs(spark, "test-zero-or-more", lambda: {
         r["value_v"]
-        for r in eng.eval_path(path, terms_frame(spark, [iri("http://e/n0")], "focus")).collect()
+        for r in eval_path(data, path, terms_frame(spark, [iri("http://e/n0")], "focus")).collect()
     })
     assert reach == {f"http://e/n{i}" for i in range(9)}
     assert len(jobs) <= 50, len(jobs)
@@ -255,11 +255,12 @@ def test_cut_lineage_uses_reliable_checkpoint_when_configured(tmp_path):
     code = f"""
 import os, sys; sys.path.insert(0, {repo!r})
 from pyspark.sql import Observation, SparkSession, functions as F
-from shacl_js_spark import Engine, LocalGraph, parse_turtle, triples_df
+from shacl_js_spark import parse_turtle, triples_df
 from shacl_js_spark.graph import cut_lineage, observed_cut, terms_frame
 from shacl_js_spark.pipeline.canonicalize import connected_components
 from shacl_js_spark.shapes import Path
 from shacl_js_spark.terms import iri
+from shacl_js_spark.validation import eval_path
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.shuffle.partitions", "8")
          .config("spark.sql.adaptive.enabled", "true")
@@ -267,7 +268,7 @@ spark = (SparkSession.builder.master("local[2]")
 spark.sparkContext.setLogLevel("ERROR")
 trips, prefixes = parse_turtle("@prefix ex: <http://e/> .\\n" + "".join(
     f"ex:n{{i}} ex:next ex:n{{(i + 1) % 6}} .\\n" for i in range(6)))
-eng = Engine(spark, triples_df(spark, trips), LocalGraph(trips, prefixes))
+data = triples_df(spark, trips)
 path = Path("oneOrMore", children=(Path("pred", pred="http://e/next"),))
 edges = spark.createDataFrame([(f"c{{i}}", f"c{{i + 1}}") for i in range(5)] + [("x", "y")],
                               "src string, dst string")
@@ -276,7 +277,7 @@ def results():
     obs = Observation()
     grouped = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
     _, seen = observed_cut(grouped.observe(obs, F.count(F.lit(1)).alias("n")), obs)
-    reach = eng.eval_path(path, terms_frame(spark, [iri("http://e/n0")], "focus"))
+    reach = eval_path(data, path, terms_frame(spark, [iri("http://e/n0")], "focus"))
     cc = connected_components(spark, edges, driver_threshold=0)
     return (seen["n"], sorted(r["value_v"] for r in reach.collect()),
             sorted(tuple(r) for r in cc.collect()))

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from shacl_js_spark.graph import triples_df
 from shacl_js_spark.plans.query import RDFQueryDF
 from shacl_js_spark.shapes import Path
+from shacl_js_spark.terms import literal
 from shacl_js_spark.turtle import parse_turtle
 
 TTL = """
@@ -44,6 +45,9 @@ def test_filter_bind_limit(spark, data):
     got = {(r["l_v"], r["u_v"]) for r in q.sols.select("l_v", "u_v").collect()}
     assert got == {("C10", "C10"), ("C9", "C9")}
     assert q.limit(1).count() == 1
+    # exprEquals / exprNotEquals compare the encoded term
+    assert {r["l_v"] for r in q.filter_equals("?l", literal("C9")).sols.collect()} == {"C9"}
+    assert {r["l_v"] for r in q.filter_not_equals("?l", literal("C9")).sols.collect()} == {"C10"}
 
 
 def test_order_by_string_semantics(spark, data):

@@ -530,7 +530,8 @@ def test_engine_memoizes_targets_values_and_counts(spark):
     focus = sorted(r.focusNode() for r in report.results())
     assert focus == ["http://e/b", "http://e/c"]  # b: maxCount, c: minCount
     kinds = [key[0] for key in eng._frames]
-    assert {"targets", "values", "candidates", "counts", "class_fail"} <= set(kinds)
+    # a node shape's sh:property children scan its targets frame itself
+    assert {"targets", "values", "counts", "class_fail"} <= set(kinds)
     assert kinds.count("targets") == 1            # one spec, one frame
     # property shapes walk the same (targets, path): one shared value frame
     # and one shared count frame between the minCount and maxCount branches

@@ -1,7 +1,7 @@
 """SHACLValidator facade: validate / graph swap / JSON-LD input /
 nodeConformsToShape / report sinks (ref: index.js API surface)."""
 
-from shacl_js_spark.report import report_triples_df
+from shacl_js_spark.report import report_ntriples, report_triples_df
 from shacl_js_spark.terms import iri
 from shacl_js_spark.validator import SHACLValidator
 
@@ -150,6 +150,9 @@ def test_report_sinks(spark):
     assert "<http://www.w3.org/ns/shacl#conforms>" in preds
     conforms = [r for r in rows if r["p"].endswith("#conforms>")]
     assert conforms[0]["o_v"] == "false"
+    # the N-Triples sink serializes the same triples, one line each
+    lines = report_ntriples(spark, v.report_df())
+    assert sorted(lines) == sorted(f"{r['s']} {r['p']} {r['o']} ." for r in rows)
 
 
 def test_report_triples_stable_across_runs(spark):
