@@ -173,8 +173,7 @@ def triples_to_rows(triples: list[Triple], g: str = DEFAULT_GRAPH) -> list[tuple
     return rows
 
 
-def triples_df(spark: SparkSession, triples: list[Triple], g: str = DEFAULT_GRAPH,
-               num_partitions: int | None = None) -> DataFrame:
+def triples_df(spark: SparkSession, triples: list[Triple], g: str = DEFAULT_GRAPH) -> DataFrame:
     # RDF graphs have SET semantics (the reference's rdflib store dedups on
     # insert): a source document stating the same triple twice must not
     # inflate minCount/maxCount/uniqueLang/qualified counts. Dedup is cheap
@@ -187,10 +186,7 @@ def triples_df(spark: SparkSession, triples: list[Triple], g: str = DEFAULT_GRAP
         if key not in seen:
             seen.add(key)
             rows.append(r)
-    df = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    if num_partitions:
-        df = df.repartition(num_partitions)
-    return df
+    return spark.createDataFrame(rows, TRIPLE_SCHEMA)
 
 
 def turtle_df(spark: SparkSession, text: str, g: str = DEFAULT_GRAPH) -> DataFrame:

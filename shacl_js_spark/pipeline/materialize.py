@@ -204,6 +204,8 @@ def run_pipeline(
     }
     if validate:
         shapes = LocalGraph.from_turtle(KG_SHAPES_TTL)
-        engine = Engine(spark, triples, shapes)
+        # emit_triples writes no rdfs:subClassOf edge, so the class
+        # hierarchy is empty: no job collects it
+        engine = Engine(spark, triples, shapes, subclass_edges={})
         result["report"] = runner.run("validation_report", lambda: engine.report_df())
     return result

@@ -21,6 +21,22 @@ Row-wise and count checks sharing (frame, bubble chain) form one group, one
 fused pass; every other check runs alone.  The member shapes of sh:node,
 and, or, not, xone and qualified* compile once per shape node over ROOT
 (the reference's getShape cache, shapes-graph.js:396-403).
+
+The report's read set names every triple a target's result can depend on,
+as anchors (predicate or any, the side of the triple the check reads it at,
+the reversed path from that node back to the target focus): each path step
+(its predicate at the subject, or at the object for ^p), rdf:type at the
+value nodes of sh:class and dash:hasValueWithClass, the second predicate of
+sh:equals, disjoint, lessThan(OrEquals), dash:subSetOf and coExistsWith at
+the focus, any predicate at the nodes of sh:closed and dash:closedByTypes,
+member shapes' anchors under the parent's path, and target membership
+(rdf:type, or the subjectsOf/objectsOf predicate); sh:targetNode terms,
+targets whatever the data, are listed apart.  A triple matching no anchor
+changes no target's result, so incremental re-validation walks each new
+triple back along its anchors' paths.  A recursive shape reference,
+dash:uniqueValueForClass and registry validators have no bounded read set.
+rdfs:subClassOf triples are read by class closures everywhere and are no
+anchor: the caller re-validates every target when they change.
 """
 
 from __future__ import annotations
@@ -30,6 +46,7 @@ from typing import NamedTuple
 
 from .shapes import DASH, SH, Constraint, Path, Shape, ShapesIR
 from .terms import TRUE, Term, iri
+from .turtle import RDF_TYPE
 
 #: key of an explicit focus frame (Engine.shape_violations' focus_df)
 ROOT = ("root",)
@@ -56,6 +73,65 @@ class Check(NamedTuple):
     stack: tuple
 
 
+class Anchor(NamedTuple):
+    """A check reads the triples with predicate `pred` (an IRI; None: any
+    predicate) at their subject ("s") or object ("o") node, and `back`
+    walks from that node to the target focus (None: the node is the focus)."""
+
+    pred: str | None
+    side: str
+    back: Path | None
+
+
+class ReadSet(NamedTuple):
+    """The report's anchors and its sh:targetNode terms, targets whatever
+    the data, or, when `unbounded` names a check without a bounded read
+    set, neither: every target depends on any triple."""
+
+    anchors: tuple
+    nodes: tuple = ()
+    unbounded: str | None = None
+
+
+class _Unbounded(Exception):
+    pass
+
+
+def _reverse(path: Path) -> Path:
+    if path.kind in ("pred", "inverse"):
+        return Path("inverse" if path.kind == "pred" else "pred", pred=path.pred)
+    children = [_reverse(c) for c in path.children]
+    return Path(path.kind, children=tuple(children[::-1] if path.kind == "seq" else children))
+
+
+def _then(*paths: Path | None) -> Path | None:
+    """The walk of `paths` one after the other (None: no step)."""
+    steps = [c for p in paths if p is not None for c in (p.children if p.kind == "seq" else [p])]
+    if len(steps) < 2:
+        return steps[0] if steps else None
+    return Path("seq", children=tuple(steps))
+
+
+def _steps(path: Path, back: Path | None) -> list[Anchor]:
+    """The anchors of walking `path` from a node that `back` leads from."""
+    if path.kind == "pred":
+        return [Anchor(path.pred, "s", back)]
+    if path.kind == "inverse":
+        return [Anchor(path.pred, "o", back)]
+    if path.kind == "seq":
+        out = []
+        for child in path.children:
+            out += _steps(child, back)
+            back = _then(_reverse(child), back)
+        return out
+    if path.kind in ("alt", "zeroOrOne"):
+        return [a for child in path.children for a in _steps(child, back)]
+    # zeroOrMore, oneOrMore: the child's steps start at every node reached
+    # by repeating it zero or more times
+    (child,) = path.children
+    return _steps(child, _then(Path("zeroOrMore", children=(_reverse(child),)), back))
+
+
 class Unit:
     """The checks compiled from one root, in compile order, split into
     fused groups by (frame key, bubble chain) and the other checks."""
@@ -74,6 +150,14 @@ class Unit:
 _LISTED = {SH + n + "ConstraintComponent" for n in ("And", "Or", "Xone")}
 _SINGLE = {SH + "NotConstraintComponent", SH + "NodeConstraintComponent"}
 _QUALIFIED = {SH + f"Qualified{n}CountConstraintComponent" for n in ("Min", "Max")}
+# components that read rdf:type at the value nodes / their parameter
+# predicate at the focus / any predicate at the value nodes
+_VALUE_TYPE = {SH + "ClassConstraintComponent", DASH + "HasValueWithClassConstraintComponent"}
+_FOCUS_PRED = {SH + n + "ConstraintComponent" for n in
+               ("Equals", "Disjoint", "LessThan", "LessThanOrEquals")} | {
+    DASH + n + "ConstraintComponent" for n in ("SubSetOf", "CoExistsWith")}
+_VALUE_ANY = {SH + "ClosedConstraintComponent", DASH + "ClosedByTypesConstraintComponent"}
+_NO_READ_SET = {DASH + "UniqueValueForClassConstraintComponent"}
 
 
 class Program:
@@ -86,6 +170,7 @@ class Program:
         self.max_shape_recursion = max_shape_recursion
         self.frames: dict[tuple, tuple] = {ROOT: ()}
         self._units: dict[Term, Unit] = {}
+        self._member_anchors: dict[Term, list[Anchor]] = {}
 
     @functools.cached_property
     def report(self) -> Unit:
@@ -136,6 +221,63 @@ class Program:
                         for sib in g.objects(parent, prop)
                         for sib_q in g.objects(sib, qvs) if sib_q != qshape])
         return out
+
+    @functools.cached_property
+    def read_set(self) -> ReadSet:
+        """The report's anchors: target membership, then every check's
+        (see the module docstring), each once in first-seen order; and its
+        target nodes."""
+        anchors, nodes = {}, {}
+        for shape in self.ir.shapes_with_target():
+            spec = self.ir.target_spec(shape.node)
+            nodes.update(dict.fromkeys(spec.nodes))
+            if spec.classes:
+                anchors.setdefault(Anchor(RDF_TYPE, "s", None))
+            anchors.update(dict.fromkeys([Anchor(p.value, "s", None) for p in spec.subjects_of]
+                                         + [Anchor(p.value, "o", None) for p in spec.objects_of]))
+        try:
+            for chk in self.report.checks:
+                anchors.update(dict.fromkeys(self._reads(chk, frozenset())))
+        except _Unbounded as e:
+            return ReadSet((), unbounded=str(e))
+        return ReadSet(tuple(anchors), tuple(nodes))
+
+    def _reads(self, chk: Check, seen: frozenset) -> list[Anchor]:
+        """The anchors of one check, with back paths to its unit's root;
+        `seen` holds the member shapes being expanded above it."""
+        shape, c, comp = chk.shape, chk.c, chk.c.component
+        if comp.custom or comp.iri in _NO_READ_SET:
+            raise _Unbounded(f"{self._text(iri(comp.iri))} at {self._text(shape.node)}")
+        # the steps of its path-bearing sh:property ancestors' paths and its
+        # own, outermost first; `up` walks the check's focus back to the
+        # root, `values` its value nodes
+        out, up = [], None
+        for key in reversed(chk.chain):
+            out += _steps(key[2], up)
+            up = _then(_reverse(key[2]), up)
+        values = up if shape.path is None else _then(_reverse(shape.path), up)
+        if shape.path is not None:
+            out += _steps(shape.path, up)
+        if comp.iri in _VALUE_TYPE:
+            out.append(Anchor(RDF_TYPE, "s", values))
+        elif comp.iri in _FOCUS_PRED:
+            out.append(Anchor(c.param_value.value, "s", up))
+        elif comp.iri in _VALUE_ANY:
+            out.append(Anchor(None, "s", values))
+        for node in (m for ms in self.members(shape, c) for m in ms):
+            out += [a._replace(back=_then(a.back, values)) for a in self._member_reads(node, seen)]
+        return out
+
+    def _member_reads(self, node: Term, seen: frozenset) -> list[Anchor]:
+        """The anchors of member shape `node`'s unit, back to its root.  A
+        member reached again below itself is a recursive reference; one
+        that is not stays so under any other `seen`, so the result is kept."""
+        if node in seen:
+            raise _Unbounded(f"recursive {self._text(node)}")
+        if node not in self._member_anchors:
+            self._member_anchors[node] = [a for chk in self._unit(node).checks
+                                          for a in self._reads(chk, seen | {node})]
+        return self._member_anchors[node]
 
     def _frame(self, key: tuple, *parents: tuple) -> tuple:
         self.frames.setdefault(key, parents)
@@ -194,7 +336,8 @@ class Program:
     def describe(self) -> str:
         """The frames (each over the frames it is built from), then the
         report's and every reachable member shape's groups and other checks,
-        as one text that depends only on the shapes graph."""
+        then the report's read set, as one text that depends only on the
+        shapes graph."""
         units, seen, ids = [("report", self.report)], set(), {}
         for _, unit in units:  # grows while iterating: members breadth-first
             for chk in unit.others:
@@ -226,6 +369,14 @@ class Program:
                          f"{''.join(' via ' + fid(k) for k in chk.chain)}", check(chk)]
         frames = [f"  {ids[key]} = {key[0]}({', '.join(self._text(x, fid) for x in key[1:])})"
                   for key in ids]
+        reads = self.read_set
+        if reads.unbounded:
+            body.append(f"reads: unbounded ({reads.unbounded})")
+        else:
+            body += ["reads:", *(f"  {'*' if a.pred is None else self._text(iri(a.pred))} at {a.side}"
+                                 + (f" <- {self._text(a.back)}" if a.back else "")
+                                 for a in reads.anchors),
+                     *(f"  target node {self._text(n)}" for n in reads.nodes)]
         return "\n".join(["frames:", *frames, *body])
 
     def _text(self, x, fid=None) -> str:

@@ -3,39 +3,47 @@
 Semantics: the accumulated graph is the data graph; each micro-batch is a
 delta (new triples).  Rather than re-validating the world per batch (the
 reference's updateDataGraph does exactly that, index.js:235-248), each batch
-re-validates only the focus nodes it can affect — the subjects and objects
-appearing in the batch — against all target shapes, and upserts their report
-rows.  That covers a focus whose own triples changed.  It misses a focus
-whose result depends on triples of its value nodes: `sh:class` reads the
-value node's own rdf:type, so a node whose type arrives in a later batch
-leaves stale rows on its referrers unless `extra_hops >= 1`; deep paths and
-`sh:node` over k hops need `extra_hops >= k`.  `extra_hops` adds every
-subject that reaches an affected node within that many hops.  It defaults to
-0: a batch's objects include the classes it types nodes with, so one hop
-adds every instance of each such class to the batch.
+re-validates only the targets whose result its triples can change, and
+upserts their report rows.  Which those are is decided by the shapes'
+compiled read set (program.Program.read_set): a list of anchors (predicate
+or any, the triple side a check reads it at, the reversed path from that
+node back to the target focus).  For every anchor whose predicate the batch
+carries, the batch's nodes on that side are walked back along the path over
+the accumulated graph (validation.eval_path, its fixpoint included); the
+union is the focus of one Engine (`Engine(focus=...)`), which plans every
+shape in one pass over the targets among them.  So sh:class re-validates
+the referrers of a node whose rdf:type arrives late, and nested sh:node
+and multi-step paths the targets that reach a changed node, however many
+steps back.  The anchors come from the batch's own triples, not only the
+appended absent ones, so a replayed batch re-validates the same targets
+and heals a crash before the swap.  sh:targetNode terms are targets before
+any triple names them, so they are foci of every batch; a batch that
+matches no anchor and has no such term re-validates nothing.
+
+Every target is re-validated (`focus=None`) when the shapes have no
+bounded read set: a recursive shape reference, dash:uniqueValueForClass or
+a registry validator; and when the batch carries rdfs:subClassOf, which
+every class closure reads.
 
 A batch is one append, one small driver step and one fused validate-and-
 upsert write.  The append keeps RDF set semantics: only the batch's distinct
 triples that `graph/` lacks are appended (a left anti-join on (s, p, o); an
 Iceberg MERGE at cluster scale), so `graph/` is distinct, every read of it
 is a plain scan, and a replayed batch appends nothing.  The append job also
-observes the report buckets of all the batch's terms (with `extra_hops`, one
-more job adds the widened terms'), a superset of the re-validated targets'
-buckets that needs no job of its own, and the batch's rdfs:subClassOf edges,
-which extend the class hierarchy collected once when the store is opened.
-One Engine restricted to those terms (`Engine(focus=...)`) plans every shape
-in one pass.
+observes the batch's predicates, which select the anchors, and its
+rdfs:subClassOf edges, which extend the class hierarchy collected once when
+the store is opened.  The write observes the report buckets of the
+re-validated targets, so a walked-back focus costs no job of its own.
 
 Report store layout: `report/bucket=K/` with K = pmod(hash(bubble),
-n_buckets) — a batch rewrites ONLY the buckets of its terms (staged write +
-per-bucket directory swap); other buckets' files are untouched, so
-per-batch report I/O is O(affected buckets), not O(full report).  Only
-buckets holding rows are written, so the superset costs few: perfbench's
-shacl_incremental at n_buckets=256 (seeds 1, 2; 4 cores) rewrote 8.5 and 5
-buckets per batch where the targets' own buckets were 7 and 4.  A crash
-mid-swap leaves some buckets old and some new; the foreachBatch replay
-re-runs the same bubble-keyed upsert, which is idempotent, so mixed states
-heal (Iceberg MERGE replaces the swap at cluster scale).
+n_buckets) — a batch rewrites ONLY the buckets of its re-validated targets
+(staged write + per-bucket directory swap); other buckets' files are
+untouched, and the write reads only those buckets (their partitions are
+pruned at run time by the broadcast bucket set), so per-batch report I/O is
+O(affected buckets), not O(full report).  A crash mid-swap leaves some
+buckets old and some new; the foreachBatch replay re-runs the same
+bubble-keyed upsert, which is idempotent, so mixed states heal (Iceberg
+MERGE replaces the swap at cluster scale).
 """
 
 from __future__ import annotations
@@ -51,23 +59,32 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..graph import local_frame, t_triples
+from ..graph import local_frame, object_decomposed, subject_decomposed, terms_frame
 from ..localgraph import LocalGraph
-from ..validation import SUBCLASS_ENC, VIOL_COLS, VIOL_SCHEMA, Engine
+from ..program import Program
+from ..shapes import ShapesIR
+from ..validation import _KINDS, SUBCLASS_ENC, VIOL_COLS, VIOL_SCHEMA, Engine, eval_path
 
 # a report bucket's rows: the violation columns and the bucket partition
 REPORT_SCHEMA = StructType([*VIOL_SCHEMA.fields, StructField("bucket", IntegerType())])
 
 
+def _buckets(report_dir: str) -> set[str]:
+    """The K of the `bucket=K` dirs under `report_dir` (none if it is absent)."""
+    if not os.path.isdir(report_dir):
+        return set()
+    return {e[len("bucket="):] for e in os.listdir(report_dir) if e.startswith("bucket=")}
+
+
 class IncrementalValidator:
     def __init__(self, spark: SparkSession, shapes: LocalGraph, work_dir: str,
-                 registry=None, extra_hops: int = 0, n_buckets: int = 16):
+                 registry=None, n_buckets: int = 16):
         self.spark = spark
         self.shapes = shapes
         self.registry = registry
+        self.read_set = Program(ShapesIR(shapes, registry), _KINDS).read_set
         self.graph_dir = os.path.join(work_dir, "graph")
         self.report_dir = os.path.join(work_dir, "report")
-        self.extra_hops = extra_hops
         os.makedirs(work_dir, exist_ok=True)
         # bucket count is a property of the STORE, not the session: a restart
         # with a different n_buckets would strand rows in old-hash buckets
@@ -151,63 +168,60 @@ class IncrementalValidator:
     # -- the foreachBatch callback -------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self._recover_buckets(sweep_staging=True)
-        # append the absent distinct triples, observing the batch's buckets
-        # and subClassOf edges
+        # append the absent distinct triples, observing the batch's
+        # predicates and subClassOf edges
         obs = Observation()
         new = batch_df.observe(
             obs,
-            F.collect_set(self._bucket(F.col("s"))).alias("s"),
-            F.collect_set(self._bucket(F.col("o"))).alias("o"),
+            F.collect_set("p").alias("p"),
             F.collect_set(F.when(F.col("p") == SUBCLASS_ENC, F.array("s", "o"))).alias("sub"),
         ).dropDuplicates(["s", "p", "o"])
         if os.path.isdir(self.graph_dir):
             graph = self.spark.read.schema(batch_df.schema).parquet(self.graph_dir)
             new = new.join(graph, ["s", "p", "o"], "left_anti")
         new.write.mode("append").parquet(self.graph_dir)
-        buckets = set(obs.get["s"]) | set(obs.get["o"])
         self._add_subclass_edges(obs.get["sub"])
         full = self.spark.read.schema(batch_df.schema).parquet(self.graph_dir)
 
-        # the batch's terms, also on a replay (which heals a crash before
-        # the swap), plus any subject reaching one within extra_hops
-        focus = batch_df.select(F.col("s").alias("focus")).unionByName(
-            batch_df.select(F.col("o").alias("focus"))
-        )
-        if self.extra_hops:
-            frontier, hops = focus, []
-            for _ in range(self.extra_hops):
-                trips = t_triples(full)
-                frontier = (trips.join(frontier, trips["t_o"] == frontier["focus"], "left_semi")
-                            .select(F.col("t_s").alias("focus")))
-                hops.append(frontier)
-            widened = functools.reduce(DataFrame.unionByName, hops)
-            # the widened terms are graph terms: one job collects their buckets
-            buckets |= set(widened.agg(F.collect_set(self._bucket(F.col("focus")))).first()[0])
-            focus = focus.unionByName(widened)
-
+        # the foci: every target, or those reached from the batch's own
+        # triples (also on a replay, which heals a crash before the swap)
+        # along the read set
+        focus = None
+        if not (obs.get["sub"] or self.read_set.unbounded):
+            focus = self._walk_back(batch_df, full, set(obs.get["p"]))
+            if focus is None:
+                return
         engine = Engine(self.spark, full, self.shapes, registry=self.registry,
                         subclass_edges=self.subclass_edges, focus=focus)
-        shapes = engine.ir.shapes_with_target()
-        if not shapes or not buckets:
+        # a bare sh:target names no focus node (shapes-graph.js:317-345):
+        # its targets frame is empty, and a union of empty frames would let
+        # the optimizer drop the bucket observation below
+        shapes = [shape for shape in engine.ir.shapes_with_target()
+                  if any(engine.program.targets_key(shape.node)[1:])]
+        if not shapes:
             return
         # one fused plan over every shape; rows keep the bubble column (the
         # shape's TARGET focus): nested property violations are recorded
         # under the child focus, so the upsert must key on bubble
         new_rows = engine._all_violations().withColumn("bucket", self._bucket(F.col("bubble")))
-        # the re-validated targets: the same memoized frames the plan scans
-        reval = functools.reduce(DataFrame.unionByName, [
-            engine.targets_frame(shape).select(F.col("focus").alias("bubble"))
-            for shape in shapes
-        ])
-
-        # upsert only the touched buckets: read them (partition-pruned),
-        # drop rows keyed by a re-validated bubble, append the fresh rows
-        present = [d for b in buckets if os.path.isdir(d := f"{self.report_dir}/bucket={b}")]
-        merged = new_rows
-        if present:
-            prev = (self.spark.read.schema(REPORT_SCHEMA)
-                    .option("basePath", self.report_dir).parquet(*present))
-            merged = prev.join(reval, "bubble", "left_anti").unionByName(new_rows)
+        stored = _buckets(self.report_dir)
+        merged, touched = new_rows, None
+        if focus is not None and stored:
+            # a stored row's bubble was a target when it was written and
+            # still is (graph/ only grows), so it is re-validated iff it is
+            # a focus.  Keep the rows of the re-validated targets' buckets
+            # (the targets frames the plan scans; their partitions pruned at
+            # run time by this broadcast bucket set, observed on the write)
+            # whose bubble is no focus, and add the fresh rows
+            touched = Observation()
+            buckets = functools.reduce(DataFrame.unionByName, [
+                engine.targets_frame(shape).select(self._bucket(F.col("focus")).alias("bucket"))
+                for shape in shapes
+            ]).observe(touched, F.collect_set("bucket").alias("b"))
+            prev = self.spark.read.schema(REPORT_SCHEMA).parquet(self.report_dir)
+            merged = (prev.join(F.broadcast(buckets), "bucket", "left_semi")
+                      .join(focus, prev["bubble"] == focus["focus"], "left_anti")
+                      .unionByName(new_rows))
 
         # staged write + per-bucket swap: unaffected buckets are never
         # rewritten (their files stay byte-identical across the batch).
@@ -217,8 +231,12 @@ class IncrementalValidator:
         # replayed batch) or a completed swap, never a lost bucket.
         staging = f"{self.report_dir}.staging-{uuid.uuid4().hex[:8]}"
         merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+        if touched is not None:
+            touched_buckets = touched.get["b"]
+        else:  # every target re-validated: every bucket is new
+            touched_buckets = stored | _buckets(staging)
         os.makedirs(self.report_dir, exist_ok=True)
-        for b in buckets:
+        for b in touched_buckets:
             dst = f"{self.report_dir}/bucket={b}"
             src = f"{staging}/bucket={b}"
             aside = dst + ".old"
@@ -231,19 +249,40 @@ class IncrementalValidator:
                 shutil.rmtree(aside)
         shutil.rmtree(staging, ignore_errors=True)
 
+    def _walk_back(self, batch: DataFrame, full: DataFrame, preds: set[str]) -> DataFrame | None:
+        """The terms reached from the batch's triples along each anchor of
+        the read set whose predicate the batch carries (`preds`, encoded):
+        the nodes on the anchor's side, walked back to a focus over `full`;
+        and the sh:targetNode terms, which are targets before any triple
+        names them.  None when there are neither: the batch changes no
+        target's result."""
+        walks: dict[tuple, set] = {}
+        for a in self.read_set.anchors:
+            if a.pred is None or f"<{a.pred}>" in preds:
+                walks.setdefault((a.side, a.back), set()).add(a.pred)
+        frames = []
+        if self.read_set.nodes:
+            frames.append(terms_frame(self.spark, list(self.read_set.nodes)).select("focus"))
+        for (side, back), anchor_preds in walks.items():
+            trips = batch
+            if None not in anchor_preds:
+                trips = batch.filter(F.col("p").isin(sorted(f"<{p}>" for p in anchor_preds)))
+            nodes = trips.select(*(subject_decomposed("s", "focus") if side == "s"
+                                   else object_decomposed("focus")))
+            if back is not None:
+                nodes = eval_path(full, back, nodes).select(F.col("value").alias("focus"))
+            frames.append(nodes.select("focus"))
+        return functools.reduce(DataFrame.unionByName, frames) if frames else None
+
     # -- stream wiring ---------------------------------------------------
-    def start(self, stream_df: DataFrame, checkpoint_dir: str, trigger_available_now: bool = True):
-        writer = stream_df.writeStream.foreachBatch(self.process_batch).option(
-            "checkpointLocation", checkpoint_dir
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+    def start(self, stream_df: DataFrame, checkpoint_dir: str):
+        return (stream_df.writeStream.foreachBatch(self.process_batch)
+                .option("checkpointLocation", checkpoint_dir)
+                .trigger(availableNow=True).start())
 
     def report(self) -> DataFrame:
         self._recover_buckets()
-        if not (os.path.isdir(self.report_dir)
-                and any(e.startswith("bucket=") for e in os.listdir(self.report_dir))):
+        if not _buckets(self.report_dir):
             return local_frame(self.spark, [], VIOL_SCHEMA)
         # the report schema, so no job infers it; select, not drop("bucket"):
         # stores written before the _batch column was retired still carry it

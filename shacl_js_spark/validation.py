@@ -587,8 +587,10 @@ class Engine:
             # validateClass (dash.js:27-29): instance-of incl. data-graph
             # subclass closure — broadcast-joined type closure.  N shapes
             # asserting the same class over the same value frame share it.
+            # The typed subjects are broadcast as they are: an anti-join
+            # ignores duplicates, so a dedup would only add a shuffle
             (values,) = parents
-            instances = self.class_instances_df(key[2], "node").select("node")
+            instances = self._typed(key[2]).select(F.col("s").alias("node"))
             return values.join(
                 F.broadcast(instances), values["value"] == instances["node"], "left_anti"
             )

@@ -30,7 +30,7 @@ from shacl_js_spark.pipeline.materialize import (
 )
 from shacl_js_spark.pipeline.snapshots import SnapshotRunner
 from shacl_js_spark.pipeline.synth import ENTITY_LEXICON, interleaved_documents
-from shacl_js_spark.validation import Engine
+from shacl_js_spark.validation import SUBCLASS_ENC, Engine
 
 SF = "/root/testdata/sf0.001"
 
@@ -202,6 +202,9 @@ def test_resume_skips_committed_stages(spark, tmp_path):
     out = str(tmp_path / "kg")
     res1 = run_pipeline(spark, SF, out, validate=False)
     n1 = res1["triples"].count()
+    # the validate stage passes the Engine an empty class hierarchy, which
+    # holds as long as the pipeline emits no rdfs:subClassOf triple
+    assert res1["triples"].filter(F.col("p") == SUBCLASS_ENC).count() == 0
     runner = PipelineRunner(spark, out)
     assert runner.stage_committed("triples")
     chk1 = runner.metrics("triples").collect()[0]["checksum"]

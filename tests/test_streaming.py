@@ -4,7 +4,7 @@ import os
 import shutil
 from collections import Counter
 
-from shacl_js_spark.graph import TRIPLE_SCHEMA, triples_df
+from shacl_js_spark.graph import TRIPLE_SCHEMA, local_frame, triples_df, triples_to_rows
 from shacl_js_spark.localgraph import LocalGraph
 from shacl_js_spark.streaming import IncrementalValidator, windowed_counts
 from shacl_js_spark.turtle import parse_turtle
@@ -110,14 +110,14 @@ ex:DocShape a sh:NodeShape ; sh:targetClass ex:Doc ;
 """
 
 
-def test_incremental_extra_hops_retracts_class_violation(spark, tmp_path):
+def test_incremental_retracts_class_violation(spark, tmp_path):
     # sh:class reads the value node's own rdf:type: when ex:e's type arrives
     # in a later batch, its referrer ex:d is neither subject nor object of
-    # that batch, so only extra_hops=1 re-validates it
+    # that batch; the read set walks the type triple back over ^ex:mentions
     from shacl_js_spark.validation import Engine
 
     shapes = LocalGraph.from_turtle(CLASS_SHAPES)
-    iv = IncrementalValidator(spark, shapes, str(tmp_path / "hops"), extra_hops=1)
+    iv = IncrementalValidator(spark, shapes, str(tmp_path / "class"))
     iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\n"
                                       "ex:d a ex:Doc ; ex:mentions ex:e ."), 0)
     assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/d"}
@@ -126,9 +126,10 @@ def test_incremental_extra_hops_retracts_class_violation(spark, tmp_path):
     assert iv.report().count() == full.count() == 0
 
 
-def test_incremental_two_hops_reach_a_path_referrer(spark, tmp_path):
+def test_incremental_two_steps_reach_a_path_referrer(spark, tmp_path):
     # a two-step path's value node is typed in a later batch: its referrer
-    # is two hops back, so extra_hops=2 widens the foci over the graph twice
+    # is two hops back, reached by walking the type triple back over
+    # (^ex:n / ^ex:m)
     from shacl_js_spark.validation import Engine
 
     shapes = LocalGraph.from_turtle("""
@@ -137,7 +138,7 @@ def test_incremental_two_hops_reach_a_path_referrer(spark, tmp_path):
     ex:S a sh:NodeShape ; sh:targetClass ex:Doc ;
       sh:property [ sh:path (ex:m ex:n) ; sh:class ex:Ent ] .
     """)
-    iv = IncrementalValidator(spark, shapes, str(tmp_path / "hops2"), extra_hops=2)
+    iv = IncrementalValidator(spark, shapes, str(tmp_path / "steps"))
     iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\n"
                                       "ex:d a ex:Doc ; ex:m ex:x . ex:x ex:n ex:e ."), 0)
     assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/d"}
@@ -216,6 +217,24 @@ def test_incremental_bucket_swap_crash_recovery(spark, tmp_path):
     iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\nex:p0 ex:name \"n\" ."), 1)
     assert not os.path.isdir(victim + ".old")
     assert {r["focus_v"] for r in iv.report().collect()} == before - {"http://e/p0"}
+
+
+def test_incremental_bare_sh_target_reopens_a_store(spark, tmp_path):
+    # a store reopened with shapes whose only target is a bare sh:target,
+    # which names no focus node: a batch re-validates nothing and keeps the
+    # stored rows (the bucket observation must not be planned away)
+    work = str(tmp_path / "bare")
+    IncrementalValidator(spark, LocalGraph.from_turtle(SHAPES), work).process_batch(
+        _batch_df(spark, BATCH1), 0)
+    iv = IncrementalValidator(spark, LocalGraph.from_turtle("""
+    @prefix sh: <http://www.w3.org/ns/shacl#> .
+    @prefix dash: <http://datashapes.org/dash#> .
+    @prefix ex: <http://e/> .
+    ex:S a sh:NodeShape ; sh:target [ a dash:AllObjectsTarget ] ;
+      sh:property [ sh:path ex:name ; sh:minCount 1 ] .
+    """), work)
+    iv.process_batch(_batch_df(spark, BATCH2), 1)
+    assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/a"}
 
 
 def test_incremental_n_buckets_sticky_across_restart(spark, tmp_path):
@@ -312,12 +331,106 @@ def test_incremental_replay_matches_full_validation(spark, tmp_path):
         ), k
 
 
+# KG_SHAPES_TTL plus checks whose result depends on triples of other
+# subjects: a two-step path with sh:class (a series' editor is a Person),
+# objects of ex:mentions whose inverse-path values must be Documents, and
+# a nested sh:node (a mentioned entity has a label); and a target node that
+# no triple names, a target from the first batch on
+SLICED_SHAPES = """
+ex:RootShape a sh:NodeShape ; sh:targetNode ex:root ;
+  sh:property [ sh:path rdfs:label ; sh:minCount 1 ] .
+ex:SeriesShape a sh:NodeShape ; sh:targetClass ex:Document ;
+  sh:property [ sh:path ( ex:partOf ex:editor ) ; sh:class ex:Person ] .
+ex:MentionedShape a sh:NodeShape ; sh:targetObjectsOf ex:mentions ;
+  sh:property [ sh:path [ sh:inversePath ex:mentions ] ; sh:class ex:Document ] .
+ex:LabelledShape a sh:NodeShape ; sh:targetClass ex:Document ;
+  sh:property [ sh:path ex:mentions ; sh:node ex:Labelled ] .
+ex:Labelled a sh:NodeShape ; sh:property [ sh:path rdfs:label ; sh:minCount 1 ] .
+"""
+
+# one block per document, with the entities, series and editors it is the
+# first to name; e2's label and p2's type come with the last document, and
+# w1 mentions e3 without being a Document
+SLICED_DOCS = [
+    """ex:d1 a ex:Document ; ex:language "en" ; ex:mentions ex:e1, ex:e2 ; ex:hasMedia ex:m1 ;
+      ex:partOf ex:s1 .
+    ex:e1 a ex:Entity ; rdfs:label "one" ; ex:coOccursWith ex:e2 .
+    ex:e2 a ex:Entity .
+    ex:s1 ex:editor ex:p1 .
+    ex:p1 a ex:Person .""",
+    """ex:d2 a ex:Document ; ex:language "de" ; ex:mentions ex:e2, ex:e3 ; ex:partOf ex:s1 .
+    ex:e3 a ex:Entity ; rdfs:label "three"@en ; ex:coOccursWith ex:e1, "x" .""",
+    """ex:d3 a ex:Document ; ex:language "en", "fr" ; ex:mentions ex:x1 ; ex:hasMedia "lit" ;
+      ex:partOf ex:s2 .
+    ex:s2 ex:editor ex:p2 .""",
+    """ex:d4 a ex:Document ; ex:language "en" ; ex:mentions ex:e1 ; ex:partOf ex:s2 .
+    ex:e2 rdfs:label "two" .
+    ex:p2 a ex:Person .
+    ex:w1 ex:mentions ex:e3 .""",
+]
+
+
+def test_incremental_sliced_replays_match_full_validation(spark, tmp_path):
+    # the same KG fed by document, by subject hash (pmod(hash(s), 3)) and
+    # in a seeded random order: a batch re-validates the targets that its
+    # triples reach back along the shapes' read set, so after every batch
+    # the report equals a full re-validation, row for row, although a
+    # node's type or label often arrives after the triples that refer to it
+    import random
+
+    from pyspark.sql import functions as F
+
+    from shacl_js_spark.pipeline.materialize import KG_SHAPES_TTL
+    from shacl_js_spark.program import Program
+    from shacl_js_spark.shapes import ShapesIR
+    from shacl_js_spark.validation import _KINDS, RECORD_COLS, Engine
+
+    shapes = LocalGraph.from_turtle(KG_SHAPES_TTL + SLICED_SHAPES)
+    reads = Program(ShapesIR(shapes), _KINDS).describe().split("reads:\n")[1].splitlines()
+    rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+    for anchor in (f"{rdf_type} at s <- (^ex:editor / ^ex:partOf)", "ex:mentions at o",
+                   f"{rdf_type} at s <- ex:mentions", "rdfs:label at s <- ^ex:mentions",
+                   "target node ex:root"):
+        assert "  " + anchor in reads, reads
+    # batches are driver-built LocalRelations, so no batch starts a Python worker
+    prefixes = ("@prefix ex: <http://example.org/kg#> .\n"
+                "@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .\n")
+    docs = [triples_to_rows(parse_turtle(prefixes + body)[0]) for body in SLICED_DOCS]
+    rows = [r for doc in docs for r in doc]
+    kg = local_frame(spark, rows, TRIPLE_SCHEMA)
+    hashed = dict(kg.select("s", F.pmod(F.hash("s"), F.lit(3))).collect())
+    shuffled = random.Random(7).sample(rows, len(rows))
+    slicings = {
+        "document": docs,
+        "hash": [[r for r in rows if hashed[r[0]] == k] for k in range(3)],
+        "random": [shuffled[k::2] for k in range(2)],
+    }
+    for name, batches in slicings.items():
+        iv = IncrementalValidator(spark, shapes, str(tmp_path / name))
+        for k, batch in enumerate(batches):
+            iv.process_batch(local_frame(spark, batch, TRIPLE_SCHEMA), k)
+            full = Engine(spark, spark.read.parquet(iv.graph_dir), shapes).report_df().collect()
+            got = iv.report().select(*RECORD_COLS).collect()
+            assert Counter(map(tuple, got)) == Counter(map(tuple, full)), (name, k)
+    # the final report: d3's two languages, literal medium and untyped,
+    # unlabelled x1; e3's tagged label, literal co-occurrence and referrer
+    # w1, which is no Document; the unlabelled root
+    assert sorted((r["focus_v"].rsplit("#")[1], r["component"].rsplit("#")[1]) for r in full) == [
+        ("d3", "ClassConstraintComponent"), ("d3", "MaxCountConstraintComponent"),
+        ("d3", "NodeConstraintComponent"), ("d3", "NodeKindConstraintComponent"),
+        ("e3", "ClassConstraintComponent"), ("e3", "DatatypeConstraintComponent"),
+        ("e3", "NodeKindConstraintComponent"), ("root", "MinCountConstraintComponent"),
+    ]
+
+
 def test_incremental_warm_batch_job_count(spark, tmp_path):
-    # a warm batch is one append (which also observes the batch's buckets
-    # and subClassOf edges) and one fused validate-and-upsert write, each
-    # adaptive query stage a job: 16 Spark jobs here, 17 with a subclass-edge
-    # collect per batch, 33 when each shape was planned on its own over a
-    # graph de-duplicated on every read and the buckets were collected first.
+    # a warm batch is one append (which also observes the batch's
+    # predicates and subClassOf edges) and one fused validate-and-upsert
+    # write, which walks the batch's rdf:type triples back over ^ex:mentions
+    # and observes the re-validated buckets; each adaptive query stage is a
+    # job: 16 Spark jobs here, 17 with a subclass-edge collect per batch, 33
+    # when each shape was planned on its own over a graph de-duplicated on
+    # every read and the buckets were collected first.
     # The batches are parquet scans, as a file stream source delivers them
     from test_pipeline import _jobs
 
