@@ -32,8 +32,8 @@ Iceberg MERGE at cluster scale), so `graph/` is distinct, every read of it
 is a plain scan, and a replayed batch appends nothing.  The append job also
 observes the batch's predicates, which select the anchors, and its
 rdfs:subClassOf edges, which extend the class hierarchy collected once when
-the store is opened.  The write observes the report buckets of the
-re-validated targets, so a walked-back focus costs no job of its own.
+the store is opened.  The write observes, at its root, the report buckets
+of the re-validated targets, so a walked-back focus costs no job of its own.
 
 Report store layout: `report/bucket=K/` with K = pmod(hash(bubble),
 n_buckets) — a batch rewrites ONLY the buckets of its re-validated targets
@@ -129,8 +129,12 @@ class IncrementalValidator:
             self.subclass_edges.setdefault(parent, set()).add(child)
 
     def _bucket(self, col):
-        # Murmur3 with Spark's fixed seed: stable across batches and runs
-        return F.pmod(F.hash(col), F.lit(self.n_buckets)).cast("int")
+        # Murmur3 with Spark's fixed seed: stable across batches and runs.
+        # pmod by a positive literal is never null, but Spark types it
+        # nullable; the coalesce types it non-null, so a join on a bucket
+        # column infers no isnotnull filter, which pushed down into the
+        # targets frames would keep their shuffles from being reused
+        return F.coalesce(F.pmod(F.hash(col), F.lit(self.n_buckets)).cast("int"), F.lit(0))
 
     def _recover_buckets(self, sweep_staging: bool = False) -> None:
         """Finish any bucket swap interrupted by a crash: a `bucket=K.old`
@@ -193,35 +197,41 @@ class IncrementalValidator:
                 return
         engine = Engine(self.spark, full, self.shapes, registry=self.registry,
                         subclass_edges=self.subclass_edges, focus=focus)
-        # a bare sh:target names no focus node (shapes-graph.js:317-345):
-        # its targets frame is empty, and a union of empty frames would let
-        # the optimizer drop the bucket observation below
-        shapes = [shape for shape in engine.ir.shapes_with_target()
-                  if any(engine.program.targets_key(shape.node)[1:])]
+        shapes = engine.ir.shapes_with_target()
         if not shapes:
             return
         # one fused plan over every shape; rows keep the bubble column (the
         # shape's TARGET focus): nested property violations are recorded
         # under the child focus, so the upsert must key on bubble
         new_rows = engine._all_violations().withColumn("bucket", self._bucket(F.col("bubble")))
-        stored = _buckets(self.report_dir)
-        merged, touched = new_rows, None
-        if focus is not None and stored:
+        # the re-validated targets (the memoized frames the plan scans) and
+        # their buckets, which the write rewrites and the swap replaces
+        reval = functools.reduce(DataFrame.unionByName, [
+            engine.targets_frame(shape).select(F.col("focus").alias("bubble"))
+            for shape in shapes
+        ])
+        buckets = reval.select(self._bucket(F.col("bubble")).alias("bucket"))
+        rows = new_rows
+        if focus is not None and _buckets(self.report_dir):
             # a stored row's bubble was a target when it was written and
             # still is (graph/ only grows), so it is re-validated iff it is
-            # a focus.  Keep the rows of the re-validated targets' buckets
-            # (the targets frames the plan scans; their partitions pruned at
-            # run time by this broadcast bucket set, observed on the write)
-            # whose bubble is no focus, and add the fresh rows
-            touched = Observation()
-            buckets = functools.reduce(DataFrame.unionByName, [
-                engine.targets_frame(shape).select(self._bucket(F.col("focus")).alias("bucket"))
-                for shape in shapes
-            ]).observe(touched, F.collect_set("bucket").alias("b"))
+            # a focus (every stored row is, without one).  Keep the stored
+            # rows of the re-validated buckets (their partitions pruned at
+            # run time by this broadcast bucket set) whose bubble is no
+            # focus, and add the fresh rows
             prev = self.spark.read.schema(REPORT_SCHEMA).parquet(self.report_dir)
-            merged = (prev.join(F.broadcast(buckets), "bucket", "left_semi")
-                      .join(focus, prev["bubble"] == focus["focus"], "left_anti")
-                      .unionByName(new_rows))
+            rows = (prev.join(F.broadcast(buckets), "bucket", "left_semi")
+                    .join(focus, prev["bubble"] == focus["focus"], "left_anti")
+                    .unionByName(new_rows))
+        # the buckets are observed at the root of the write, which no
+        # empty-relation rewrite can remove (below it, a batch that reaches
+        # no target or a bare sh:target lost the observation): one marker
+        # row per target, its violation columns null, is counted and then
+        # filtered out (a violation row's bubble is never null)
+        touched = Observation()
+        merged = (rows.unionByName(buckets, allowMissingColumns=True)
+                  .observe(touched, F.collect_set("bucket").alias("b"))
+                  .filter(F.col("bubble").isNotNull()))
 
         # staged write + per-bucket swap: unaffected buckets are never
         # rewritten (their files stay byte-identical across the batch).
@@ -231,12 +241,8 @@ class IncrementalValidator:
         # replayed batch) or a completed swap, never a lost bucket.
         staging = f"{self.report_dir}.staging-{uuid.uuid4().hex[:8]}"
         merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        if touched is not None:
-            touched_buckets = touched.get["b"]
-        else:  # every target re-validated: every bucket is new
-            touched_buckets = stored | _buckets(staging)
         os.makedirs(self.report_dir, exist_ok=True)
-        for b in touched_buckets:
+        for b in touched.get["b"]:
             dst = f"{self.report_dir}/bucket={b}"
             src = f"{staging}/bucket={b}"
             aside = dst + ".old"

@@ -237,6 +237,19 @@ def test_incremental_bare_sh_target_reopens_a_store(spark, tmp_path):
     assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/a"}
 
 
+def test_incremental_batch_reaching_no_target_keeps_the_store(spark, tmp_path):
+    # a warm batch that matches an anchor (ex:name at its subject) but whose
+    # walked-back focus is no target: nothing is re-validated, no bucket is
+    # swapped, and the stored rows stay (the bucket observation must not be
+    # planned away with the empty targets frames)
+    iv = IncrementalValidator(spark, LocalGraph.from_turtle(SHAPES), str(tmp_path / "miss"))
+    iv.process_batch(_batch_df(spark, BATCH1), 0)
+    before = sorted(map(tuple, iv.report().collect()))
+    iv.process_batch(_batch_df(spark, '@prefix ex: <http://e/> . ex:z ex:name "x" .'), 1)
+    assert sorted(map(tuple, iv.report().collect())) == before
+    assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/a"}
+
+
 def test_incremental_n_buckets_sticky_across_restart(spark, tmp_path):
     # the store records its bucket count; a restart with a different value
     # must adopt the stored one (otherwise old-hash buckets go stale)
