@@ -16,7 +16,7 @@ define need_round
 $(if $(ROUND),,$(error ROUND is not set: run e.g. `make $@ ROUND=<tag>`; the log goes to BENCH/ under that tag))
 endef
 
-.PHONY: gate gate-shacl bench verify test dist submit-smoke many-shapes perf-pairs cc-crosscheck
+.PHONY: gate bench verify test dist submit-smoke many-shapes perf-pairs cc-crosscheck
 
 # Package the engine for spark-submit --py-files (north rule: the pipeline
 # must run via spark-submit on a multi-executor cluster).  Single zip
@@ -40,12 +40,6 @@ submit-smoke: dist
 gate:
 	$(need_round)
 	python scripts/check_oracle.py $(SF_DIR) 2>&1 | grep -v -E "WARN|FutureWarning|serializers.py" | tee BENCH/full_gate_$(ROUND).log
-
-# SHACL subset of the gate: every shacl_* and dash_* query against its
-# independent DuckDB reference (covers every Engine-backed constraint
-# component, built-in and DASH)
-gate-shacl:
-	python scripts/check_oracle.py $(SF_DIR) 'shacl_*' 'dash_*' 2>&1 | grep -v -E "WARN|FutureWarning|serializers.py"
 
 bench:
 	$(need_round)

@@ -5,7 +5,9 @@ row count + schema (column names) + order-insensitive value hash.
     python scripts/check_oracle.py SF_DIR [QUERY_OR_GLOB ...]
 
 Optional arguments select queries by name or fnmatch glob ('shacl_*').
-Exits 1 when any selected query mismatches or errors, or none is selected."""
+Exits 1 when any selected query mismatches or errors, or none is selected.
+tests/test_gate.py runs every query through the same `oracle_diff` at
+sf0.001 in tier-1."""
 
 from __future__ import annotations
 
@@ -62,6 +64,40 @@ def table_hash(cols, rows):
     return h.hexdigest()
 
 
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per testdata table of `sf_dir`."""
+    con = duckdb.connect()
+    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def oracle_result(con, sql: str):
+    """(column names, rows) of the oracle SQL on DuckDB."""
+    res = con.execute(sql)
+    return [d[0] for d in res.description], res.fetchall()
+
+
+def oracle_diff(cols, rows, ocols, orows) -> list[str]:
+    """Why Spark's (cols, rows) differ from the oracle's: row count, column
+    names, then the order-insensitive value hash with a few rows only one
+    side has.  Empty when they match."""
+    errs = []
+    if len(rows) != len(orows):
+        errs.append(f"rows {len(rows)} vs {len(orows)}")
+    if sorted(cols) != sorted(ocols):
+        errs.append(f"cols {sorted(cols)} vs {sorted(ocols)}")
+    if not errs and table_hash(cols, rows) != table_hash(ocols, orows):
+        errs.append("value-hash mismatch")
+        sset = {tuple(norm_cell(x) for x in r) for r in rows}
+        oset = {tuple(norm_cell(x) for x in r) for r in orows}
+        for d in list(sset - oset)[:3]:
+            errs.append(f"  spark-only: {d}")
+        for d in list(oset - sset)[:3]:
+            errs.append(f"  duck-only:  {d}")
+    return errs
+
+
 def main(sf_dir: str, only: list[str]):
     # defaults sized for the driver's sf0.01 gate; the sf1 scale-stress run
     # needs more cores/heap/shuffle width (OOMed at the 1g default heap) —
@@ -82,10 +118,7 @@ def main(sf_dir: str, only: list[str]):
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry
 
-    con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
+    con = oracle_connection(sf_dir)
     qs = entry.queries()
     oracles = entry.oracle_sql()
     ok = bad = 0
@@ -106,26 +139,12 @@ def main(sf_dir: str, only: list[str]):
             print(f"no-oracle {name}: {len(rows)} rows ({time.time()-t0:.1f}s)")
             continue
         try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
+            ocols, orows = oracle_result(con, oracles[name])
         except Exception as e:
             print(f"DUCK-ERR  {name}: {type(e).__name__} {str(e)[:300]}")
             bad += 1
             continue
-        errs = []
-        if len(rows) != len(orows):
-            errs.append(f"rows {len(rows)} vs {len(orows)}")
-        if sorted(cols) != sorted(ocols):
-            errs.append(f"cols {sorted(cols)} vs {sorted(ocols)}")
-        if not errs and table_hash(cols, rows) != table_hash(ocols, orows):
-            errs.append("value-hash mismatch")
-            sset = {tuple(norm_cell(x) for x in r) for r in rows}
-            oset = {tuple(norm_cell(x) for x in r) for r in orows}
-            for d in list(sset - oset)[:3]:
-                errs.append(f"  spark-only: {d}")
-            for d in list(oset - sset)[:3]:
-                errs.append(f"  duck-only:  {d}")
+        errs = oracle_diff(cols, rows, ocols, orows)
         if errs:
             print(f"MISMATCH  {name}: " + "; ".join(errs))
             bad += 1

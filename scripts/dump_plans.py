@@ -1,36 +1,28 @@
 """Write the formatted physical plan of oracle queries to text files.
 
-    python scripts/dump_plans.py --sf /path/to/sf0.1 --out plans/pr2 --tag after \
+    python scripts/dump_plans.py --sf /path/to/sf0.1 --out /tmp/plans --tag after \
         shacl_mincount 'shacl_qualified*'
 
 Queries are selected by name or fnmatch glob, as in check_oracle.py; a
 pattern that selects no query is an error (exit 1).  Each query's plan
 goes to <out>/<query>_<tag>.txt (`explain("formatted")` output), and one
-summary line per query reports its Exchange and join node counts, so two
-checkouts' plans can be compared without a diff tool.
+line per query prints its plan budget counts as tests/test_gate.py counts
+them, in the form of a tests/plan_budgets.json entry.
 """
 
 from __future__ import annotations
 
 import argparse
 import fnmatch
+import json
 import os
-import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from pyspark.sql import SparkSession
-
-
-def plan_counts(plan: str) -> dict[str, int]:
-    """Exchange and join operators in the plan's operator tree (the part
-    above the per-node detail sections)."""
-    tree = plan.split("\n\n(1)", 1)[0]
-    return {
-        "exchange": len(re.findall(r"Exchange\b", tree)),
-        "join": len(re.findall(r"Join\b", tree)),
-    }
 
 
 def main() -> None:
@@ -61,15 +53,17 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(args.out, exist_ok=True)
+    from test_gate import budget_counts, drop_cached_inputs
+
     for name in names:
+        drop_cached_inputs(spark)
         df = qs[name](spark, args.sf)
         plan = spark._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         with open(os.path.join(args.out, f"{name}_{args.tag}.txt"), "w") as f:
             f.write(plan)
-        counts = plan_counts(plan)
-        print(f"{name} {args.tag} exchange={counts['exchange']} join={counts['join']}")
+        print(f'"{name}": {json.dumps(budget_counts(df))},')
     spark.stop()
 
 

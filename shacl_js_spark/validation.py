@@ -22,8 +22,8 @@ suppression (validation-engine.js:251-282).
 
 Scale notes (100 TB design):
   * every constraint is built-in Column expressions + equi-joins — no
-    per-row Python in the hot path (pandas UDFs only for the rare
-    encodeURIComponent parity case and custom registry validators)
+    per-row Python in the hot path (pandas UDFs only for sh:pattern
+    patterns that java.util.regex rejects, and custom registry validators)
   * class/subclass closures are collected once (ontology ≪ data) and applied
     as broadcast joins — the "broadcast-joined type closure" of the north rule
   * focus/value frames key on a single encoded-term string column, so all
@@ -430,15 +430,6 @@ class Engine:
         """The rdf:type triples of `cls` and its data-graph subclasses."""
         encs = sorted(self.data_subclasses(cls.encoded()) | {cls.encoded()})
         return self.data.filter((F.col("p") == RDF_TYPE_ENC) & F.col("o").isin(encs))
-
-    def class_instances_df(self, cls: Term, prefix: str = "focus") -> DataFrame:
-        # r6: dedup BEFORE decomposing — the 4 derived columns are pure
-        # functions of the encoded subject, so deduping the single encoded
-        # column (a HashAggregate with no aggregate buffers) and decomposing
-        # after replaces a SortAggregate that carried 4 first(string) buffers
-        # through a 5-column-wide exchange.
-        out = self._typed(cls).select(F.col("s").alias(prefix)).dropDuplicates([prefix])
-        return out.select(*subject_decomposed(prefix, prefix))
 
     # --------------------------------------------------------------- targets
     def targets_frame(self, shape: Shape) -> DataFrame:
@@ -926,7 +917,8 @@ def _impl_hasvalue(eng, shape, c, targets, values, stack):
 
 def _impl_hasvaluewithclass(eng, shape, c, targets, values, stack):
     # validateHasValueWithClass (dash.js:156-161)
-    instances = eng.class_instances_df(c.param_value, "node").select("node")
+    # a semi-join ignores duplicate instance rows: no dedup shuffle
+    instances = eng._typed(c.param_value).select(F.col("s").alias("node"))
     have = values.join(
         F.broadcast(instances), values["value"] == instances["node"], "left_semi"
     ).select("focus").dropDuplicates()
@@ -1124,8 +1116,9 @@ def _impl_uniquevalueforclass(eng, shape, c, targets, values, stack):
     # instance frame is one row per class member — corpus-sized, NOT
     # broadcastable at scale (observed: 4g-driver heap OOM broadcasting
     # 1.5M instance IRIs at sf1); shuffle-hash keys both sides on the
-    # subject and builds the per-partition hash from the instance rows
-    instances = eng.class_instances_df(c.param_value, "node").select("node")
+    # subject and builds the per-partition hash from the instance rows (a
+    # semi-join ignores their duplicates)
+    instances = eng._typed(c.param_value).select(F.col("s").alias("node"))
     others = (
         trips(eng.data, f"<{shape.path.pred}>")
         .join(instances.hint("shuffle_hash"), F.col("t_s") == F.col("node"), "left_semi")

@@ -2,6 +2,10 @@ import os
 import pytest
 from pyspark.sql import SparkSession
 
+#: the smallest testdata scale factor (TESTDATA.md): the oracle gate and
+#: every test that reads the tpch/documents tables use it
+SF = "/root/testdata/sf0.001"
+
 
 @pytest.fixture(scope="session")
 def spark():

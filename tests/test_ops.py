@@ -17,7 +17,7 @@ from shacl_js_spark.ops.dedup import (
 from shacl_js_spark.ops.similarity import brute_force_topk, ivf_topk
 from shacl_js_spark.ops.text import fingerprint, lang_id, quality_score, token_stats
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF
 
 
 @pytest.fixture(scope="module")

@@ -32,7 +32,7 @@ from shacl_js_spark.pipeline.snapshots import SnapshotRunner
 from shacl_js_spark.pipeline.synth import ENTITY_LEXICON, interleaved_documents
 from shacl_js_spark.validation import SUBCLASS_ENC, Engine
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF
 
 
 @pytest.fixture(scope="module")

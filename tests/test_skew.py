@@ -7,7 +7,7 @@ from shacl_js_spark.pipeline.link import link_entities
 from shacl_js_spark.pipeline.skew import entity_mention_counts, salted_agg, salted_join
 from shacl_js_spark.pipeline.synth import interleaved_documents
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF
 
 
 def test_salted_agg_equals_plain(spark):

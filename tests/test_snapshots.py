@@ -13,6 +13,8 @@ from shacl_js_spark.pipeline.snapshots import (
     SnapshotRunner,
 )
 
+from conftest import SF
+
 ROOT = "/tmp/spark-graft-snapshots-test"
 
 
@@ -110,15 +112,14 @@ def test_full_pipeline_on_snapshot_catalog(spark, root):
     # with PipelineRunner's triples output)
     from shacl_js_spark.pipeline.materialize import run_pipeline
 
-    sf = "/root/testdata/sf0.001"
     out = os.path.join(root, "kg-snap")
-    res1 = run_pipeline(spark, sf, out, validate=False, snapshots=True)
+    res1 = run_pipeline(spark, SF, out, validate=False, snapshots=True)
     n1 = res1["triples"].count()
     assert n1 > 0
     cat = SnapshotCatalog(spark, out)
     first_snap = cat.current_snapshot("triples")
     assert first_snap is not None
-    res2 = run_pipeline(spark, sf, out, validate=False, snapshots=True)
+    res2 = run_pipeline(spark, SF, out, validate=False, snapshots=True)
     assert res2["triples"].count() == n1
     # resume did NOT commit a new snapshot
     assert cat.current_snapshot("triples") == first_snap

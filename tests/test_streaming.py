@@ -9,6 +9,8 @@ from shacl_js_spark.localgraph import LocalGraph
 from shacl_js_spark.streaming import IncrementalValidator, windowed_counts
 from shacl_js_spark.turtle import parse_turtle
 
+from conftest import SF
+
 SHAPES = """
 @prefix sh: <http://www.w3.org/ns/shacl#> .
 @prefix ex: <http://e/> .
@@ -535,7 +537,7 @@ def test_incremental_via_stream_source(spark, tmp_path):
 
 def test_windowed_counts_streaming(spark, tmp_path):
     src = str(tmp_path / "ev")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(500)
+    ev = spark.read.parquet(f"{SF}/events.parquet").limit(500)
     ev.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     agg = windowed_counts(stream)
@@ -560,7 +562,7 @@ def test_stateful_sessionization_stream_matches_batch(spark, tmp_path):
 
     from shacl_js_spark.streaming.sessions import sessionize_batch, sessionize_stream
 
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(2000)
+    ev = spark.read.parquet(f"{SF}/events.parquet").limit(2000)
     src = str(tmp_path / "evsrc")
     os.makedirs(src)
     ev.write.mode("overwrite").parquet(src)

@@ -682,11 +682,11 @@ def test_class_closure_in_list_sorted(spark):
     ex:x a ex:E .
     """)
     eng = Engine(spark, data, LocalGraph.from_turtle("@prefix ex: <http://e/> ."))
-    df = eng.class_instances_df(iri("http://e/A"))
+    df = eng._typed(iri("http://e/A"))
     plan = df._jdf.queryExecution().analyzed().toString()
     listed = re.search(r" IN \(([^)]*)\)", plan).group(1).split(",")
     assert listed == sorted(listed) and len(listed) == 5, plan
-    assert [r["focus_v"] for r in df.collect()] == ["http://e/x"]
+    assert [r["s"] for r in df.collect()] == ["<http://e/x>"]
 
 
 def test_nested_property_depth3_and_cycle(spark):
