@@ -91,11 +91,8 @@ def ensure_object_agg_headroom(spark: SparkSession, threshold: int = 65536) -> N
     is upgraded, so an operator-set value always wins.  UNBOUNDED-buffer
     aggregations must not rely on this helper."""
     key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    try:
-        if spark.conf.get(key, _OBJ_AGG_DEFAULT) == _OBJ_AGG_DEFAULT:
-            spark.conf.set(key, str(threshold))
-    except Exception:  # pragma: no cover - conf surface differences
-        pass
+    if spark.conf.get(key, _OBJ_AGG_DEFAULT) == _OBJ_AGG_DEFAULT:
+        spark.conf.set(key, str(threshold))
 
 
 _warned_checkpoint_cleanup = False

@@ -55,7 +55,7 @@ class ValidationReport:
     def __init__(self, results: list[ValidationResult], truncated: bool = False):
         self._results = results
         #: True when the driver-side result list was capped (Engine
-        #: max_driver_results); the full set is available via report_df()
+        #: MAX_DRIVER_RESULTS); the full set is available via report_df()
         self.truncated = truncated
 
     def conforms(self) -> bool:

@@ -32,32 +32,46 @@ Iceberg MERGE at cluster scale), so `graph/` is distinct, every read of it
 is a plain scan, and a replayed batch appends nothing.  The append job also
 observes the batch's predicates, which select the anchors, and its
 rdfs:subClassOf edges, which extend the class hierarchy collected once when
-the store is opened.  The write observes, at its root, the report buckets
-of the re-validated targets, so a walked-back focus costs no job of its own.
+the store is opened.  The walked-back focus is planned into the write, so
+it costs no job of its own.
 
-Report store layout: `report/bucket=K/` with K = pmod(hash(bubble),
-n_buckets) — a batch rewrites ONLY the buckets of its re-validated targets
-(staged write + per-bucket directory swap); other buckets' files are
-untouched, and the write reads only those buckets (their partitions are
-pruned at run time by the broadcast bucket set), so per-batch report I/O is
-O(affected buckets), not O(full report).  A crash mid-swap leaves some
-buckets old and some new; the foreachBatch replay re-runs the same
-bubble-keyed upsert, which is idempotent, so mixed states heal (Iceberg
-MERGE replaces the swap at cluster scale).
+Report store: `report/`, one parquet directory of violation rows.  A
+batch writes `prev ▷ reval ∪ fresh` to a sibling `report.staging-<uuid>`:
+`prev` is the stored report, read whenever `report/` exists; `reval` the
+re-validated targets (the union of the Engine's targets frames, already
+kept to the focus); `▷` a left anti-join on the row's bubble, the target
+it was recorded under; `fresh` the Engine's violations of those targets.
+A stored row whose bubble is no current target (the shapes changed when
+the store was reopened) is kept, whatever the focus.  The swap replaces
+the directory: `report` is renamed aside to `report.old`, the staging dir
+renamed to `report`, and `report.old` dropped.  A crash in a gap leaves
+`report.old` without `report` (restored when the next batch starts, and
+the replayed upsert is idempotent), or both (the leftover is dropped);
+a crash before the swap leaves only a staging dir, swept at the next
+batch start.  `report()` never writes: it reads `report/`, else
+`report.old`, else nothing, so it may run beside a batch (Iceberg MERGE
+replaces the swap at cluster scale).
+
+The store used to be 16 `bucket=K` dirs, K = pmod(hash(bubble), 16), and a
+batch swapped only its targets' buckets.  A traced perfbench
+shacl_incremental batch (seed 1, `local[4]`) still rewrote 11.5 of 16
+buckets, holding 24.5 report rows in 97.5 KB of mostly parquet file
+overhead, and a batch of 44 targets reaches about 15 of 16 in expectation:
+the buckets cost code and saved no I/O.  A store in that layout opens as
+it is: reading `report/` drops its partition column, and the next batch
+writes it flat.
 """
 
 from __future__ import annotations
 
 import functools
 import json
-import logging
 import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..graph import local_frame, object_decomposed, subject_decomposed, terms_frame
 from ..localgraph import LocalGraph
@@ -65,20 +79,9 @@ from ..program import Program
 from ..shapes import ShapesIR
 from ..validation import _KINDS, SUBCLASS_ENC, VIOL_COLS, VIOL_SCHEMA, Engine, eval_path
 
-# a report bucket's rows: the violation columns and the bucket partition
-REPORT_SCHEMA = StructType([*VIOL_SCHEMA.fields, StructField("bucket", IntegerType())])
-
-
-def _buckets(report_dir: str) -> set[str]:
-    """The K of the `bucket=K` dirs under `report_dir` (none if it is absent)."""
-    if not os.path.isdir(report_dir):
-        return set()
-    return {e[len("bucket="):] for e in os.listdir(report_dir) if e.startswith("bucket=")}
-
 
 class IncrementalValidator:
-    def __init__(self, spark: SparkSession, shapes: LocalGraph, work_dir: str,
-                 registry=None, n_buckets: int = 16):
+    def __init__(self, spark: SparkSession, shapes: LocalGraph, work_dir: str, registry=None):
         self.spark = spark
         self.shapes = shapes
         self.registry = registry
@@ -86,24 +89,16 @@ class IncrementalValidator:
         self.graph_dir = os.path.join(work_dir, "graph")
         self.report_dir = os.path.join(work_dir, "report")
         os.makedirs(work_dir, exist_ok=True)
-        # bucket count is a property of the STORE, not the session: a restart
-        # with a different n_buckets would strand rows in old-hash buckets
-        # that no batch ever rewrites, so an existing store's value wins
-        meta_path = os.path.join(work_dir, "report_meta.json")
-        meta = {"n_buckets": n_buckets}
-        if os.path.isfile(meta_path):
-            with open(meta_path) as fh:
-                meta = json.load(fh)
-            if meta["n_buckets"] != n_buckets:
-                logging.getLogger(__name__).warning(
-                    "report store was created with n_buckets=%d; ignoring "
-                    "requested n_buckets=%d", meta["n_buckets"], n_buckets,
-                )
-        self.n_buckets = meta["n_buckets"]
         # format 2: graph/ holds each (s, p, o) once.  A store without it
         # appended replayed batches raw (its reads de-duplicated), so graph/
         # is rewritten distinct once; a crash after the delete leaves only
-        # the rewritten copy, which the next start moves in
+        # the rewritten copy, which the next start moves in.  Other keys
+        # (the retired n_buckets) are ignored
+        meta_path = os.path.join(work_dir, "report_meta.json")
+        meta = {}
+        if os.path.isfile(meta_path):
+            with open(meta_path) as fh:
+                meta = json.load(fh)
         if meta.get("format") != 2:
             distinct = self.graph_dir + ".distinct"
             if os.path.isdir(self.graph_dir):
@@ -113,7 +108,7 @@ class IncrementalValidator:
             if os.path.isdir(distinct):
                 os.rename(distinct, self.graph_dir)
             with open(meta_path, "w") as fh:
-                json.dump({**meta, "format": 2}, fh)
+                json.dump({"format": 2}, fh)
         # parent -> children over graph/'s rdfs:subClassOf edges: collected
         # once here and extended from each batch's edges, observed on its
         # append, so a batch's Engine runs no subclass collect of its own
@@ -128,50 +123,32 @@ class IncrementalValidator:
         for child, parent in edges:
             self.subclass_edges.setdefault(parent, set()).add(child)
 
-    def _bucket(self, col):
-        # Murmur3 with Spark's fixed seed: stable across batches and runs.
-        # pmod by a positive literal is never null, but Spark types it
-        # nullable; the coalesce types it non-null, so a join on a bucket
-        # column infers no isnotnull filter, which pushed down into the
-        # targets frames would keep their shuffles from being reused
-        return F.coalesce(F.pmod(F.hash(col), F.lit(self.n_buckets)).cast("int"), F.lit(0))
-
-    def _recover_buckets(self, sweep_staging: bool = False) -> None:
-        """Finish any bucket swap interrupted by a crash: a `bucket=K.old`
-        dir whose `bucket=K` is missing means the crash hit between the
-        rename-aside and the move-in — restore the old data (the replayed
-        batch will re-upsert it); if `bucket=K` exists the swap completed,
-        drop the leftover.
-
-        `sweep_staging` additionally drops orphaned `<report_dir>.staging-*`
-        siblings left by a crash between the staged write and the swaps (a
-        repeatedly-crashing stream would otherwise accumulate them).  ONLY
-        the batch-start recovery path may sweep: batches run serially per
-        stream, so at batch start no staging dir can be live — whereas
-        report() may be called concurrently with an in-flight batch, and
-        sweeping there would delete that batch's staging dir mid-swap and
-        lose its buckets."""
-        if sweep_staging:
-            parent, base = os.path.split(os.path.abspath(self.report_dir))
-            if os.path.isdir(parent):
-                for entry in os.listdir(parent):
-                    if entry.startswith(base + ".staging-"):
-                        shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
-        if not os.path.isdir(self.report_dir):
-            return
-        for entry in os.listdir(self.report_dir):
-            if not entry.endswith(".old"):
-                continue
-            old = os.path.join(self.report_dir, entry)
-            final = os.path.join(self.report_dir, entry[: -len(".old")])
-            if os.path.isdir(final):
+    def _recover(self) -> None:
+        """Finish a swap a crash interrupted: drop orphaned staging dirs,
+        and restore `report.old` if `report` is missing (the crash hit
+        between the rename-aside and the move-in), else drop it.  Only a
+        batch start may do this: batches run serially per stream, so no
+        staging dir is live then."""
+        parent, base = os.path.split(os.path.abspath(self.report_dir))
+        for entry in os.listdir(parent):
+            if entry.startswith(base + ".staging-"):
+                shutil.rmtree(os.path.join(parent, entry))
+        old = self.report_dir + ".old"
+        if os.path.isdir(old):
+            if os.path.isdir(self.report_dir):
                 shutil.rmtree(old)
             else:
-                os.rename(old, final)
+                os.rename(old, self.report_dir)
+
+    def _read_report(self, path: str) -> DataFrame:
+        # the violation schema, so no job infers it; the select drops what
+        # older stores carry besides: the bucket partition column and the
+        # retired _batch column
+        return self.spark.read.schema(VIOL_SCHEMA).parquet(path).select(*VIOL_COLS)
 
     # -- the foreachBatch callback -------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._recover_buckets(sweep_staging=True)
+        self._recover()
         # append the absent distinct triples, observing the batch's
         # predicates and subClassOf edges
         obs = Observation()
@@ -202,58 +179,30 @@ class IncrementalValidator:
             return
         # one fused plan over every shape; rows keep the bubble column (the
         # shape's TARGET focus): nested property violations are recorded
-        # under the child focus, so the upsert must key on bubble
-        new_rows = engine._all_violations().withColumn("bucket", self._bucket(F.col("bubble")))
-        # the re-validated targets (the memoized frames the plan scans) and
-        # their buckets, which the write rewrites and the swap replaces
-        reval = functools.reduce(DataFrame.unionByName, [
-            engine.targets_frame(shape).select(F.col("focus").alias("bubble"))
-            for shape in shapes
-        ])
-        buckets = reval.select(self._bucket(F.col("bubble")).alias("bucket"))
-        rows = new_rows
-        if focus is not None and _buckets(self.report_dir):
-            # a stored row's bubble was a target when it was written and
-            # still is (graph/ only grows), so it is re-validated iff it is
-            # a focus (every stored row is, without one).  Keep the stored
-            # rows of the re-validated buckets (their partitions pruned at
-            # run time by this broadcast bucket set) whose bubble is no
-            # focus, and add the fresh rows
-            prev = self.spark.read.schema(REPORT_SCHEMA).parquet(self.report_dir)
-            rows = (prev.join(F.broadcast(buckets), "bucket", "left_semi")
-                    .join(focus, prev["bubble"] == focus["focus"], "left_anti")
-                    .unionByName(new_rows))
-        # the buckets are observed at the root of the write, which no
-        # empty-relation rewrite can remove (below it, a batch that reaches
-        # no target or a bare sh:target lost the observation): one marker
-        # row per target, its violation columns null, is counted and then
-        # filtered out (a violation row's bubble is never null)
-        touched = Observation()
-        merged = (rows.unionByName(buckets, allowMissingColumns=True)
-                  .observe(touched, F.collect_set("bucket").alias("b"))
-                  .filter(F.col("bubble").isNotNull()))
+        # under the child focus, so the upsert keys on bubble, and on the
+        # re-validated targets rather than the focus: a focus that is no
+        # current target keeps its stored rows
+        rows = engine._all_violations()
+        if os.path.isdir(self.report_dir):
+            reval = functools.reduce(DataFrame.unionByName, [
+                engine.targets_frame(shape).select(F.col("focus").alias("bubble"))
+                for shape in shapes
+            ])
+            rows = (self._read_report(self.report_dir).join(reval, "bubble", "left_anti")
+                    .unionByName(rows))
 
-        # staged write + per-bucket swap: unaffected buckets are never
-        # rewritten (their files stay byte-identical across the batch).
-        # Swap order is crash-safe: rename the old bucket ASIDE first, move
-        # the staged one in, then drop the aside copy — a crash in any gap
-        # leaves either the .old dir (restored by _recover_buckets on the
-        # replayed batch) or a completed swap, never a lost bucket.
+        # staged write, then the swap: rename the old report ASIDE, move the
+        # staged one in, drop the aside copy; a crash in any gap leaves the
+        # .old dir (restored by the next batch's _recover) or a completed
+        # swap, never a lost report
         staging = f"{self.report_dir}.staging-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        os.makedirs(self.report_dir, exist_ok=True)
-        for b in touched.get["b"]:
-            dst = f"{self.report_dir}/bucket={b}"
-            src = f"{staging}/bucket={b}"
-            aside = dst + ".old"
-            if os.path.isdir(dst):
-                os.rename(dst, aside)
-            if os.path.isdir(src):
-                shutil.move(src, dst)
-            # else: every row of this bucket was deleted and none added
-            if os.path.isdir(aside):
-                shutil.rmtree(aside)
-        shutil.rmtree(staging, ignore_errors=True)
+        rows.write.parquet(staging)
+        old = self.report_dir + ".old"
+        if os.path.isdir(self.report_dir):
+            os.rename(self.report_dir, old)
+        os.rename(staging, self.report_dir)
+        if os.path.isdir(old):
+            shutil.rmtree(old)
 
     def _walk_back(self, batch: DataFrame, full: DataFrame, preds: set[str]) -> DataFrame | None:
         """The terms reached from the batch's triples along each anchor of
@@ -287,9 +236,12 @@ class IncrementalValidator:
                 .trigger(availableNow=True).start())
 
     def report(self) -> DataFrame:
-        self._recover_buckets()
-        if not _buckets(self.report_dir):
-            return local_frame(self.spark, [], VIOL_SCHEMA)
-        # the report schema, so no job infers it; select, not drop("bucket"):
-        # stores written before the _batch column was retired still carry it
-        return self.spark.read.schema(REPORT_SCHEMA).parquet(self.report_dir).select(*VIOL_COLS)
+        """The stored report.  Read-only, so it may run beside a batch: a
+        batch between its rename-aside and its move-in leaves only
+        `report.old`, which holds the report before that batch.  The frame
+        reads the files it lists, which the next swap deletes: act on it
+        before the next batch."""
+        for path in (self.report_dir, self.report_dir + ".old"):
+            if os.path.isdir(path):
+                return self._read_report(path)
+        return local_frame(self.spark, [], VIOL_SCHEMA)

@@ -346,7 +346,6 @@ class Engine:
         registry=None,
         error_batch: int = -1,
         subclass_edges: dict | None = None,
-        max_driver_results: int = 100_000,
         max_shape_recursion: int = 25,
         focus: DataFrame | None = None,
     ):
@@ -358,7 +357,6 @@ class Engine:
         self.ir = ShapesIR(shapes, registry)
         self.program = Program(self.ir, _KINDS, max_shape_recursion)
         self.error_batch = error_batch
-        self.max_driver_results = max_driver_results
         # parent enc -> child encs; callers that already hold the graph
         # driver-side (fixture harness) can pass the edges to skip a collect
         self._sub_children: dict[str, set[str]] | None = subclass_edges
@@ -402,6 +400,8 @@ class Engine:
     # distinct rdf:type object set is unbounded in theory, so hard-cap it
     # rather than silently materializing millions of driver rows
     MAX_DISTINCT_TYPES = 100_000
+    # validate()'s driver-side row cap when no error_batch is set
+    MAX_DRIVER_RESULTS = 100_000
 
     def distinct_types(self) -> list[str]:
         """Distinct rdf:type objects in the data graph, collected once per
@@ -476,19 +476,19 @@ class Engine:
 
         Driver materialization is ALWAYS bounded: error_batch if set
         (validation-engine-configuration.js semantics), else
-        max_driver_results (default 100k) — a non-conforming 100 TB graph
+        MAX_DRIVER_RESULTS (100k) — a non-conforming 100 TB graph
         must not OOM the driver because someone called the convenience API.
         report.truncated flags the cap; the full set stays distributed via
         report_df()."""
         out = self._all_violations().select(*RECORD_COLS)
-        cap = self.error_batch if self.error_batch >= 0 else self.max_driver_results
+        cap = self.error_batch if self.error_batch >= 0 else self.MAX_DRIVER_RESULTS
         rows = out.limit(cap + 1).collect()
         truncated = len(rows) > cap
         if truncated:
             rows = rows[:cap]
             if self.error_batch < 0:
                 logging.getLogger(__name__).warning(
-                    "validation report truncated at max_driver_results=%d; "
+                    "validation report truncated at MAX_DRIVER_RESULTS=%d; "
                     "use report_df() for the full distributed report", cap,
                 )
 

@@ -46,11 +46,17 @@ def test_incremental_validation_batches(spark, tmp_path):
     iv.process_batch(_batch_df(spark, BATCH2), 1)
     r2 = {row["focus_v"] for row in iv.report().collect()}
     assert r2 == {"http://e/c"}
+    # the report is one flat parquet directory
+    assert not [e for e in os.listdir(iv.report_dir) if os.path.isdir(os.path.join(iv.report_dir, e))]
 
 
 def test_incremental_report_columns_fixed(spark, tmp_path):
     # report() has one schema whatever the store holds: exactly the
     # violation record columns, before and after the first batch
+    import json
+
+    from pyspark.sql import functions as F
+
     from shacl_js_spark.validation import VIOL_COLS
 
     iv = IncrementalValidator(spark, LocalGraph.from_turtle(SHAPES), str(tmp_path / "cols"))
@@ -59,18 +65,26 @@ def test_incremental_report_columns_fixed(spark, tmp_path):
     after = iv.report()
     assert before == after.columns == list(VIOL_COLS)
     assert after.count() == 1
-    # a store whose rows still carry the retired _batch column reads with
-    # the same columns, and a batch upserts into it
-    from pyspark.sql import functions as F
-
+    # a store in the previous layout: bucket=K dirs by pmod(hash(bubble), 16),
+    # rows with the retired _batch column, n_buckets in report_meta.json.
+    # It reads with the same columns and rows, and a batch writes it flat
+    rows = sorted(map(tuple, after.collect()))
     old = iv.report_dir + "-old-layout"
     (spark.read.parquet(iv.report_dir).withColumn("_batch", F.lit(0))
+     .withColumn("bucket", F.pmod(F.hash("bubble"), F.lit(16)))
      .write.partitionBy("bucket").parquet(old))
     shutil.rmtree(iv.report_dir)
     os.rename(old, iv.report_dir)
+    meta = tmp_path / "cols" / "report_meta.json"
+    meta.write_text(json.dumps({"n_buckets": 16, "format": 2}))
+    assert any(e.startswith("bucket=") for e in os.listdir(iv.report_dir))
+    iv = IncrementalValidator(spark, LocalGraph.from_turtle(SHAPES), str(tmp_path / "cols"))
     assert iv.report().columns == list(VIOL_COLS)
+    assert sorted(map(tuple, iv.report().collect())) == rows
     iv.process_batch(_batch_df(spark, BATCH2), 1)
+    assert not any(e.startswith("bucket=") for e in os.listdir(iv.report_dir))
     assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/c"}
+    assert json.loads(meta.read_text())["format"] == 2
 
 
 NESTED_SHAPES = """
@@ -149,82 +163,40 @@ def test_incremental_two_steps_reach_a_path_referrer(spark, tmp_path):
     assert iv.report().count() == full.count() == 0
 
 
-def test_incremental_bucketed_upsert_leaves_other_buckets_untouched(spark, tmp_path):
-    # the report store is bucket-partitioned by hash(bubble); a batch must
-    # rewrite ONLY the buckets its re-validated targets hash into — every
-    # other bucket's files stay byte-identical across the batch
-    import hashlib
-
+def test_incremental_swap_crash_recovery(spark, tmp_path):
+    # a crash between the rename-aside and the move-in leaves only
+    # report.old: report() reads it without touching the work dir, and the
+    # next batch restores it, applies its own rows and drops the leftover
     shapes = LocalGraph.from_turtle(SHAPES)
-    iv = IncrementalValidator(spark, shapes, str(tmp_path / "bkt"), n_buckets=8)
-    # batch 0: many persons without names -> violations spread over buckets
-    ttl0 = "@prefix ex: <http://e/> .\n" + "\n".join(
-        f"ex:p{i} a ex:Person ." for i in range(40)
-    )
-    iv.process_batch(_batch_df(spark, ttl0), 0)
-
-    def snapshot():
-        out = {}
-        for root, _dirs, files in os.walk(iv.report_dir):
-            for f in files:
-                p = os.path.join(root, f)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, iv.report_dir)] = hashlib.md5(
-                        fh.read()
-                    ).hexdigest()
-        return out
-
-    before = snapshot()
-    buckets_before = {p.split("/")[0] for p in before}
-    assert len(buckets_before) > 1, "need multiple buckets for the assertion"
-
-    # batch 1 touches a single person -> a single affected bucket
-    iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\nex:p0 ex:name \"late\" ."), 1)
-    after = snapshot()
-
-    from pyspark.sql import functions as F
-    touched = "bucket=%d" % (
-        spark.range(1)
-        .select(F.pmod(F.hash(F.lit("<http://e/p0>")), F.lit(8)).alias("b"))
-        .collect()[0]["b"]
-    )
-    for path, digest in before.items():
-        if path.split("/")[0] != touched:
-            assert after.get(path) == digest, f"unaffected file rewritten: {path}"
-    # and the retraction actually happened
-    assert "http://e/p0" not in {r["focus_v"] for r in iv.report().collect()}
-
-
-def test_incremental_bucket_swap_crash_recovery(spark, tmp_path):
-    # simulate a crash between rename-aside and move-in: the bucket dir is
-    # gone but its .old copy exists — report()/the replayed batch must
-    # restore it, not lose the cohabiting bubbles' rows
-    import shutil
-
-    shapes = LocalGraph.from_turtle(SHAPES)
-    iv = IncrementalValidator(spark, shapes, str(tmp_path / "crash"), n_buckets=2)
+    work = tmp_path / "crash"
+    iv = IncrementalValidator(spark, shapes, str(work))
     ttl0 = "@prefix ex: <http://e/> .\n" + "\n".join(
         f"ex:p{i} a ex:Person ." for i in range(10)
     )
     iv.process_batch(_batch_df(spark, ttl0), 0)
     before = {r["focus_v"] for r in iv.report().collect()}
     assert len(before) == 10
-    # crash injection: one bucket left aside, real dir missing
-    victims = [e for e in os.listdir(iv.report_dir) if e.startswith("bucket=")]
-    victim = os.path.join(iv.report_dir, victims[0])
-    shutil.move(victim, victim + ".old")
+    os.rename(iv.report_dir, iv.report_dir + ".old")
+    listing = sorted(os.listdir(work))
     assert {r["focus_v"] for r in iv.report().collect()} == before
-    # and a finished swap's leftover .old is cleaned, not restored
-    shutil.copytree(victim, victim + ".old")
+    assert sorted(os.listdir(work)) == listing
     iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\nex:p0 ex:name \"n\" ."), 1)
-    assert not os.path.isdir(victim + ".old")
+    assert sorted(os.listdir(work)) == ["graph", "report", "report_meta.json"]
     assert {r["focus_v"] for r in iv.report().collect()} == before - {"http://e/p0"}
+    # a crash after the move-in leaves both: the leftover is dropped, not
+    # restored
+    shutil.copytree(iv.report_dir, iv.report_dir + ".old")
+    iv.process_batch(_batch_df(spark, "@prefix ex: <http://e/> .\nex:p1 ex:name \"n\" ."), 2)
+    assert sorted(os.listdir(work)) == ["graph", "report", "report_meta.json"]
+    assert {r["focus_v"] for r in iv.report().collect()} == before - {"http://e/p0", "http://e/p1"}
 
 
 def test_incremental_bare_sh_target_reopens_a_store(spark, tmp_path):
     # a store reopened with shapes whose only target is a bare sh:target,
     # which names no focus node: a batch re-validates nothing and keeps the
-    # stored rows (the bucket observation must not be planned away)
+    # stored rows, although the walked-back focus holds a stored bubble
+    # (ex:a): the upsert replaces the rows of re-validated targets, not of
+    # the focus
     work = str(tmp_path / "bare")
     IncrementalValidator(spark, LocalGraph.from_turtle(SHAPES), work).process_batch(
         _batch_df(spark, BATCH1), 0)
@@ -241,28 +213,15 @@ def test_incremental_bare_sh_target_reopens_a_store(spark, tmp_path):
 
 def test_incremental_batch_reaching_no_target_keeps_the_store(spark, tmp_path):
     # a warm batch that matches an anchor (ex:name at its subject) but whose
-    # walked-back focus is no target: nothing is re-validated, no bucket is
-    # swapped, and the stored rows stay (the bucket observation must not be
-    # planned away with the empty targets frames)
+    # walked-back focus is no target: nothing is re-validated, and the
+    # rewritten report keeps the stored rows (the anti-join with the empty
+    # targets frames removes none)
     iv = IncrementalValidator(spark, LocalGraph.from_turtle(SHAPES), str(tmp_path / "miss"))
     iv.process_batch(_batch_df(spark, BATCH1), 0)
     before = sorted(map(tuple, iv.report().collect()))
     iv.process_batch(_batch_df(spark, '@prefix ex: <http://e/> . ex:z ex:name "x" .'), 1)
     assert sorted(map(tuple, iv.report().collect())) == before
     assert {r["focus_v"] for r in iv.report().collect()} == {"http://e/a"}
-
-
-def test_incremental_n_buckets_sticky_across_restart(spark, tmp_path):
-    # the store records its bucket count; a restart with a different value
-    # must adopt the stored one (otherwise old-hash buckets go stale)
-    shapes = LocalGraph.from_turtle(SHAPES)
-    work = str(tmp_path / "sticky")
-    iv1 = IncrementalValidator(spark, shapes, work, n_buckets=8)
-    iv1.process_batch(_batch_df(spark, BATCH1), 0)
-    iv2 = IncrementalValidator(spark, shapes, work, n_buckets=3)
-    assert iv2.n_buckets == 8
-    iv2.process_batch(_batch_df(spark, BATCH2), 1)
-    assert {r["focus_v"] for r in iv2.report().collect()} == {"http://e/c"}
 
 
 def test_incremental_store_without_format_is_made_distinct(spark, tmp_path):
@@ -283,9 +242,8 @@ def test_incremental_store_without_format_is_made_distinct(spark, tmp_path):
     old = _batch_df(spark, '@prefix ex: <http://e/> .\nex:a a ex:Person ; ex:name "A" .')
     for _ in range(2):
         old.write.mode("append").parquet(str(work / "graph"))
-    (work / "report_meta.json").write_text(json.dumps({"n_buckets": 4}))
-    iv = IncrementalValidator(spark, shapes, str(work), n_buckets=4)
-    assert json.loads((work / "report_meta.json").read_text()) == {"n_buckets": 4, "format": 2}
+    iv = IncrementalValidator(spark, shapes, str(work))
+    assert json.loads((work / "report_meta.json").read_text()) == {"format": 2}
     assert spark.read.parquet(iv.graph_dir).count() == 2
     iv.process_batch(_batch_df(spark, '@prefix ex: <http://e/> .\nex:a ex:age 3 .'), 0)
     graph = spark.read.parquet(iv.graph_dir)
@@ -294,8 +252,8 @@ def test_incremental_store_without_format_is_made_distinct(spark, tmp_path):
     assert iv.report().select(*RECORD_COLS).collect() == full == []
     # a crash between the delete and the move leaves only the rewritten copy
     os.rename(iv.graph_dir, iv.graph_dir + ".distinct")
-    (work / "report_meta.json").write_text(json.dumps({"n_buckets": 4}))
-    IncrementalValidator(spark, shapes, str(work), n_buckets=4)
+    (work / "report_meta.json").unlink()
+    IncrementalValidator(spark, shapes, str(work))
     assert spark.read.parquet(iv.graph_dir).count() == 3
 
 
@@ -442,10 +400,11 @@ def test_incremental_warm_batch_job_count(spark, tmp_path):
     # a warm batch is one append (which also observes the batch's
     # predicates and subClassOf edges) and one fused validate-and-upsert
     # write, which walks the batch's rdf:type triples back over ^ex:mentions
-    # and observes the re-validated buckets; each adaptive query stage is a
-    # job: 16 Spark jobs here, 17 with a subclass-edge collect per batch, 33
-    # when each shape was planned on its own over a graph de-duplicated on
-    # every read and the buckets were collected first.
+    # and rewrites the one-directory report; each adaptive query stage is a
+    # job: 16 Spark jobs here, as when the write swapped hash buckets it
+    # observed, 17 with a subclass-edge collect per batch, 33 when each
+    # shape was planned on its own over a graph de-duplicated on every read
+    # and the buckets were collected first.
     # The batches are parquet scans, as a file stream source delivers them
     from test_pipeline import _jobs
 
@@ -609,7 +568,7 @@ def test_stateful_sessionization_stream_matches_batch(spark, tmp_path):
 
 
 def test_incremental_staging_sweep_only_at_batch_start(spark, tmp_path):
-    # an orphaned staging dir (crash between staged write and swaps) must
+    # an orphaned staging dir (crash between staged write and swap) must
     # be swept when the replayed batch starts — but NOT by report(), which
     # may run concurrently with an in-flight batch whose staging dir is live
     shapes = LocalGraph.from_turtle(SHAPES)

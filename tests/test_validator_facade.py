@@ -45,20 +45,19 @@ def test_validate_and_swap(spark):
     assert v._ensure_engine().validate().conforms()
 
 
-def test_driver_materialization_is_bounded(spark):
-    # 60 violating persons but max_driver_results=10: validate() must cap
+def test_driver_materialization_is_bounded(spark, monkeypatch):
+    # 60 violating persons but MAX_DRIVER_RESULTS=10: validate() must cap
     # driver rows and flag truncation; report_df() keeps the full set
     from shacl_js_spark import Engine, LocalGraph, parse_turtle, triples_df
+
+    monkeypatch.setattr(Engine, "MAX_DRIVER_RESULTS", 10)
 
     data = "@prefix ex: <http://e/> .\n" + "\n".join(
         f"ex:p{i} a ex:Person ." for i in range(60)
     )
     trips, _ = parse_turtle(data)
     strips, sprefixes = parse_turtle(SHAPES)
-    eng = Engine(
-        spark, triples_df(spark, trips), LocalGraph(strips, sprefixes),
-        max_driver_results=10,
-    )
+    eng = Engine(spark, triples_df(spark, trips), LocalGraph(strips, sprefixes))
     report = eng.validate()
     assert report.truncated and len(report.results()) == 10
     assert not report.conforms()
@@ -66,7 +65,7 @@ def test_driver_materialization_is_bounded(spark):
     # error_batch keeps reference semantics and wins over the safety cap
     eng2 = Engine(
         spark, triples_df(spark, trips), LocalGraph(strips, sprefixes),
-        error_batch=5, max_driver_results=10,
+        error_batch=5,
     )
     assert len(eng2.validate().results()) == 5
 
